@@ -1,8 +1,12 @@
 package graft.pipeline
 
 import graft.pipeline.Extraction.ExtractedRow
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -60,10 +64,9 @@ object TableIO {
   def currentSnapshot(outDir: String): Long = {
     val p = Paths.get(outDir, "_SUCCESS.json")
     if (!Files.exists(p)) 0L
-    else {
-      val s = Files.readString(p)
-      "\"snapshot\":(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(0L)
-    }
+    else SnapRe.findFirstMatchIn(Files.readString(p)).map(_.group(1).toLong)
+      .getOrElse(throw new IllegalStateException(
+        s"$p has no parsable \"snapshot\" — refusing to restart at snapshot 0"))
   }
 
   private def manifestDir(outDir: String): Path = Paths.get(outDir, "manifests")
@@ -134,10 +137,45 @@ object TableIO {
         bloom)
     }
 
-  /** Data files of one just-written bucket, as outDir/data-relative paths. */
-  private def bucketFiles(outDir: String, bucket: Int): Seq[String] =
-    listNames(Paths.get(outDir, "data", s"bucket=$bucket"), "", ".parquet")
-      .sorted.map(n => s"bucket=$bucket/$n")
+  /** Data files of every uncommitted `data/bucket=<i>` dir, by bucket:
+    * the rows just written plus any stale dir a killed run left behind.
+    * Buckets without files are left out.
+    */
+  private def uncommittedFiles(spark: SparkSession, outDir: String,
+      done: Set[Int]): Map[Int, Seq[FileStatus]] = {
+    val data = new HPath(s"$outDir/data")
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(data)) Map.empty
+    else fs.listStatus(data).toSeq
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("bucket="))
+      .map(d => d.getPath.getName.stripPrefix("bucket=").toInt -> d.getPath)
+      .filterNot { case (b, _) => done(b) }
+      .map { case (b, d) => b -> fs.listStatus(d).toSeq
+        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName) }
+      .filter(_._2.nonEmpty).toMap
+  }
+
+  /** Rows of exactly the listed `files` under `outDir/data`, read with the
+    * known row schema. Spark is handed the listed statuses, so it neither
+    * infers a schema nor lists the files again (which, above 32 paths, it
+    * does with a Spark job of its own).
+    */
+  private def readListed(spark: SparkSession, outDir: String,
+      files: Seq[FileStatus]): DataFrame = {
+    val byPath = files.map(f => f.getPath -> Array(f)).toMap
+    val listed = new FileStatusCache {
+      override def getLeafFiles(p: HPath): Option[Array[FileStatus]] = byPath.get(p)
+      def putLeafFiles(p: HPath, l: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val schema = Encoders.product[ExtractedRow].schema
+    val index = new InMemoryFileIndex(spark, files.map(_.getPath),
+      Map("basePath" -> s"$outDir/data"), Some(schema), listed)
+    val parts = index.partitionSchema.fieldNames.toSet
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      StructType(schema.filterNot(f => parts(f.name))), None,
+      new ParquetFileFormat, Map.empty)(spark))
+  }
 
   /** Resumable bucketed write. Returns the number of buckets written this
     * run (0 on a fully-committed rerun — idempotent no-op).
@@ -145,14 +183,17 @@ object TableIO {
   def writeResumable(rows: Dataset[ExtractedRow], outDir: String): Int = {
     val spark = rows.sparkSession
     import spark.implicits._
+    import graft.operators.SketchOps
+    // read first: a table whose marker does not parse fails before any write
+    val snapshot = currentSnapshot(outDir) + 1
     val done = committedBuckets(outDir)
     val todo = if (done.isEmpty) rows
                else rows.filter(!$"bucket".isin(done.toSeq: _*))
     val t0 = System.nanoTime()
-    // Pass 1 — the extraction itself: dynamic partition overwrite replaces
-    // only buckets present in `todo`; committed buckets' data is untouched.
-    // (No .cache(): at 100 TB the stats pass below re-reads the *written*
-    // parquet with column pruning instead of holding the corpus in memory.)
+    // The write: dynamic partition overwrite replaces only buckets present
+    // in `todo`; committed buckets' data is untouched. (No .cache(): at
+    // 100 TB the stats below re-read the *written* parquet with column
+    // pruning instead of holding the corpus in memory.)
     // Cluster by bucket BEFORE partitionBy: without it every task opens a
     // writer per bucket (tasks × buckets tiny files — a small-file
     // explosion at scale); clustered, each task writes whole buckets.
@@ -162,51 +203,38 @@ object TableIO {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket")
       .parquet(s"$outDir/data")
-    // Pass 2 — lineage stats from the written output, pruned to 4 small
-    // columns (no markdown/spans IO), restricted to newly-written buckets.
-    val stats = spark.read.parquet(s"$outDir/data")
-      .filter(if (done.isEmpty) lit(true) else !$"bucket".isin(done.toSeq: _*))
-      .groupBy($"bucket".cast("int").as("bucket")).agg(
-        count(lit(1)).as("doc_count"),
-        sum($"span_count").cast("long").as("span_count"),
-        sum($"bytes").cast("long").as("bytes"),
-        // order-insensitive streamable checksum over per-doc FNV checksums
-        expr("bit_xor(checksum)").as("span_checksum"),
-        // per-bucket key bounds: the Iceberg column-stats analog that
-        // lets readCommittedPruned skip whole buckets by predicate
-        min($"doc_id").as("min_doc"), max($"doc_id").as("max_doc"))
-      .as[(Int, Long, Long, Long, Long, String, String)].collect()
-    // Pass 3 — per-bucket doc_id Bloom words (the Iceberg puffin-blob
-    // analog): lets readCommittedPrunedByIds skip buckets on POINT/id-set
-    // predicates even under the hash layout, where min/max bounds can't
-    // prune (every id range spreads across all buckets). A second
-    // column-pruned scan of (bucket, doc_id) only; the aggregation ships
-    // ≤ BloomWords longs per bucket. Same 64×63-bit non-negative word
-    // format and hash family as the bloom_semijoin filter, so the DuckDB
+    // One listing of the uncommitted bucket dirs supplies both the rows the
+    // stats read and the manifests' file lists, so the stats describe
+    // exactly the files a reader opens. Empty on a fully-committed rerun:
+    // no second Spark job, straight to the marker.
+    val pending = uncommittedFiles(spark, outDir, done)
+    // One aggregation over exactly those files, read with the known row
+    // schema (no inference) and pruned to the small columns: lineage
+    // counts, an order-insensitive checksum over per-doc FNV checksums,
+    // per-bucket key bounds (the Iceberg column-stats analog that lets
+    // readCommittedPruned skip buckets by range) and the doc_id Bloom
+    // words (the Iceberg puffin-blob analog: readCommittedPrunedByIds
+    // skips buckets on point/id-set predicates even under the hash
+    // layout, where bounds can't prune). The words share the 64×63-bit
+    // format and hash family of the bloom_semijoin filter, so the DuckDB
     // oracle replays membership bit-for-bit.
-    import graft.operators.SketchOps
-    val blooms: Map[Int, IndexedSeq[Long]] = spark.read
-      .parquet(s"$outDir/data")
-      .filter(if (done.isEmpty) lit(true) else !$"bucket".isin(done.toSeq: _*))
-      .select($"bucket".cast("int").as("bucket"),
-        explode(array((0 until SketchOps.BloomHashes).map(i =>
-          SketchOps.bloomPos(i, $"doc_id")): _*)).as("p"))
-      .groupBy($"bucket", expr(s"p div ${SketchOps.BitsPerWord}").as("w"))
-      .agg(expr(s"bit_or(shiftleft(1L, int(p % ${SketchOps.BitsPerWord})))").as("bits"))
-      .as[(Int, Long, Long)].collect()
-      .groupBy(_._1)
-      .map { case (b, ws) =>
-        val words = Array.fill(SketchOps.BloomWords)(0L)
-        ws.foreach { case (_, w, bits) => words(w.toInt) = bits }
-        b -> words.toIndexedSeq
-      }
+    val stats =
+      if (pending.isEmpty) Array.empty[(Int, Long, Long, Long, Long, String, String, Seq[Long])]
+      else readListed(spark, outDir, pending.values.flatten.toSeq)
+        .groupBy($"bucket").agg(
+          count(lit(1)).as("doc_count"),
+          sum($"span_count").cast("long").as("span_count"),
+          sum($"bytes").cast("long").as("bytes"),
+          expr("bit_xor(checksum)").as("span_checksum"),
+          min($"doc_id").as("min_doc"), max($"doc_id").as("max_doc"),
+          SketchOps.bloomWords($"doc_id").as("bloom"))
+        .as[(Int, Long, Long, Long, Long, String, String, Seq[Long])].collect()
     val wallMs = (System.nanoTime() - t0) / 1000000
-    val snapshot = currentSnapshot(outDir) + 1
-    stats.foreach { case (b, dc, sc, by, ck, lo, hi) =>
+    stats.foreach { case (b, dc, sc, by, ck, lo, hi, bloom) =>
       writeAtomic(manifestPath(outDir, b),
         manifestJson(BucketManifest(b, dc, sc, by, wallMs, ck,
-          bucketFiles(outDir, b), lo, hi,
-          blooms.getOrElse(b, IndexedSeq.empty)), snapshot))
+          pending(b).map(f => s"bucket=$b/${f.getPath.getName}"), lo, hi, bloom),
+          snapshot))
     }
     writeAtomic(Paths.get(outDir, "_SUCCESS.json"),
       s"""{"schema_version":$SchemaVersion,"snapshot":$snapshot,""" +

@@ -281,15 +281,128 @@ class ResumeSpec extends AnyFunSuite {
 
   test("manifest stats: doc/span counts and checksum match recomputation") {
     import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.operators.SketchOps
     val out = tmpDir()
     TableIO.writeResumable(rows, out)
     val back = TableIO.readCommitted(spark, out)
-    val totalDocs = back.count()
-    assert(totalDocs == spark.read.parquet(s"$sf/documents.parquet").count())
-    // committed manifests sum to the same totals
-    val manifests = spark.read.json(s"$out/manifests/*.json")
-    val mDocs = manifests.agg(org.apache.spark.sql.functions.sum("doc_count")).as[Long].head()
-    assert(mDocs == totalDocs)
+    assert(back.count() == spark.read.parquet(s"$sf/documents.parquet").count())
+    // per bucket, recomputed from the committed rows
+    val want = back.groupBy($"bucket").agg(count(lit(1)),
+        sum($"span_count").cast("long"), sum($"bytes").cast("long"),
+        expr("bit_xor(checksum)"), min($"doc_id"), max($"doc_id"))
+      .as[(Int, Long, Long, Long, Long, String, String)].collect()
+      .map(r => r._1 -> r).toMap
+    // Bloom words by the column-form hash: bit_or of each word's bit
+    // positions, so the manifest's driver-side hash must match it bit for bit
+    val wantBloom = back
+      .select($"bucket", explode(array((0 until SketchOps.BloomHashes).map(i =>
+        SketchOps.bloomPos(i, $"doc_id")): _*)).as("p"))
+      .groupBy($"bucket", expr(s"p div ${SketchOps.BitsPerWord}").as("w"))
+      .agg(expr(s"bit_or(shiftleft(1L, int(p % ${SketchOps.BitsPerWord})))"))
+      .as[(Int, Long, Long)].collect().groupBy(_._1)
+      .map { case (b, ws) =>
+        val words = Array.fill(SketchOps.BloomWords)(0L)
+        ws.foreach { case (_, w, bits) => words(w.toInt) = bits }
+        b -> words.toSeq
+      }
+    // manifests parsed independently of TableIO's reader
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val got = TableIO.committedBuckets(out).toSeq.sorted.map { b =>
+      val m = json.readTree(Path.of(out, "manifests", s"bucket-$b.json").toFile)
+      b -> ((b, m.get("doc_count").asLong, m.get("span_count").asLong,
+        m.get("bytes").asLong, m.get("span_checksum").asLong,
+        m.get("min_doc").asText, m.get("max_doc").asText),
+        m.get("bloom").elements().asScala.map(_.asLong).toSeq)
+    }.toMap
+    assert(got.keySet == want.keySet && want.size == Buckets)
+    got.foreach { case (b, (stats, bloom)) =>
+      assert(stats == want(b), s"bucket $b stats")
+      assert(bloom == wantBloom(b), s"bucket $b Bloom words")
+    }
+  }
+
+  test("a marker without a parsable snapshot fails the write; never snapshot 0") {
+    val out = tmpDir()
+    TableIO.writeResumable(rows, out)
+    val marker = Path.of(out, "_SUCCESS.json")
+    Files.writeString(marker, """{"schema_version":1,"snapshot":"one"}""")
+    val e = intercept[IllegalStateException](TableIO.writeResumable(rows, out))
+    assert(e.getMessage.contains(marker.toString))
+    assert(TableIO.committedManifests(out).forall(_.snapshot == 1L))
+    Files.writeString(marker, "")
+    intercept[IllegalStateException](TableIO.currentSnapshot(out))
+  }
+
+  test("real fault: a run whose kernel throws commits nothing; a clean rerun equals one clean run") {
+    import graft.extract.Kernel
+    import graft.schema.{Doc, ExtractedSpan}
+    val clean = tmpDir()
+    TableIO.writeResumable(rows, clean)
+    val expected = readAll(clean)
+
+    val out = tmpDir()
+    val victim = "d0000000042"
+    val faulty: Doc => IndexedSeq[ExtractedSpan] = d =>
+      if (d.doc_id == victim) throw new IllegalStateException(s"injected fault on $victim")
+      else Kernel.extractSpans(d)
+    val e = intercept[Exception](TableIO.writeResumable(
+      Extraction.extractRowsWith(CorpusDerive.derive(spark, sf), (_: Doc).doc_id, faulty, Buckets),
+      out))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected fault")))
+    assert(TableIO.committedBuckets(out).isEmpty)
+    assert(TableIO.currentSnapshot(out) == 0L, "a failed run must not advance the snapshot")
+
+    assert(TableIO.writeResumable(rows, out) == Buckets)
+    assert(TableIO.committedBuckets(out) == (0 until Buckets).toSet)
+    assert(TableIO.currentSnapshot(out) == 1L)
+    assert(readAll(out) == expected, "rerun after a fault differs from a single clean run")
+
+    // a fault after a partial commit: committed buckets stay, and the
+    // clean rerun writes only the uncommitted ones
+    val partial = tmpDir()
+    TableIO.writeResumable(rows.filter(_.bucket < 3), partial)
+    intercept[Exception](TableIO.writeResumable(
+      Extraction.extractRowsWith(CorpusDerive.derive(spark, sf), (_: Doc).doc_id, faulty, Buckets),
+      partial))
+    assert(TableIO.committedBuckets(partial) == Set(0, 1, 2))
+    assert(TableIO.writeResumable(rows, partial) == Buckets - 3)
+    assert(readAll(partial) == expected)
+  }
+
+  test("query count: a fresh write runs the write and one aggregation; a committed rerun only the write") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    assert(spark.streams.active.isEmpty, "a running stream would add queries")
+    val input = rows
+    val out = tmpDir()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.analyzed.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.analyzed.toString)
+    }
+    def queries[A](body: => A): (A, Seq[String]) = {
+      ListenerBusDrain(spark.sparkContext)
+      plans.clear()
+      val r = body
+      ListenerBusDrain(spark.sparkContext)
+      (r, plans.asScala.toSeq)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val (written, fresh) = queries(TableIO.writeResumable(input, out))
+      assert(written == Buckets)
+      assert(fresh.size == 2, fresh.mkString("\n---\n"))
+      assert(fresh.head.contains("InsertIntoHadoopFsRelationCommand"))
+      assert(fresh(1).contains("Aggregate"))
+      val (again, rerun) = queries(TableIO.writeResumable(input, out))
+      assert(again == 0)
+      assert(rerun.size == 1, rerun.mkString("\n---\n"))
+      assert(rerun.head.contains("InsertIntoHadoopFsRelationCommand"))
+      assert(TableIO.currentSnapshot(out) == 2L)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("manifest blooms: point reads skip buckets, never rows; legacy manifests read conservatively") {
