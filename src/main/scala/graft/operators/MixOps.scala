@@ -24,9 +24,6 @@ object MixOps {
     */
   val BudgetPerSource = 600L
 
-  /** Deterministic mixing order (engine-portable: md5i both sides). */
-  def mixOrd(docId: Long): Long = Hashing.md5i(s"mx|$docId")
-
   /** (doc_id, source, toks, start_tok, kept): kept = the whole doc fits
     * inside the source budget at its position in the mixing order.
     */

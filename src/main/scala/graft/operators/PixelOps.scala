@@ -41,7 +41,6 @@ object PixelOps {
 
   def ratioW(ref: String): Int = (Hashing.md5i(s"prw|$ref") % 2L + 1L).toInt
   def ratioH(ref: String): Int = (Hashing.md5i(s"prh|$ref") % 2L + 1L).toInt
-  def inSubset(ref: String): Boolean = Hashing.md5i(s"pxs|$ref") % SubsetMod == 0L
 
   /** Closed-form rule pixels (x right, y down, interleaved RGB):
     * r = (7x+13y+s) mod 256, g = (11x+3y+2s) mod 256, b = (x+y+3s) mod 256
@@ -216,7 +215,6 @@ object PixelOps {
 
   def gifRatioW(ref: String): Int = (Hashing.md5i(s"grw|$ref") % 2L + 1L).toInt
   def gifRatioH(ref: String): Int = (Hashing.md5i(s"grh|$ref") % 2L + 1L).toInt
-  def inGifSubset(ref: String): Boolean = Hashing.md5i(s"gxs|$ref") % SubsetMod == 0L
 
   /** GIF frames through the SAME pipeline as PNG (mm_pixels): rule
     * indices → REAL GIF encode (variable-width LZW, sub-blocks) → REAL

@@ -1,13 +1,17 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.pipeline.Extraction.ExtractedRow
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
@@ -36,10 +40,18 @@ import scala.util.Using
   *    table as of snapshot s. Snapshot ids are monotonic (+1 per
   *    writeResumable run), mirroring the reference's `seq_len decreased`
   *    cache guard (/root/reference/crates/core/src/transformer/cache.rs:204-258).
-  *  - SCHEMA VERSIONING: manifests embed `schema_version`; readers REJECT
-  *    manifests written by a NEWER schema than they understand
-  *    (forward-incompatibility fails loudly, the Iceberg
-  *    format-version discipline) and accept older ones.
+  *  - SCHEMA VERSIONING: every metadata file embeds `schema_version`;
+  *    readers REJECT files written by a NEWER schema than they understand
+  *    (forward-incompatibility fails loudly, the Iceberg format-version
+  *    discipline) and accept older ones.
+  *
+  * One codec ([[Meta]]) writes and reads all metadata: bucket and batch
+  * manifests, compaction journals, evolve records and `_SUCCESS.json`.
+  * Metadata that does not parse, or lacks a required field, raises
+  * IllegalStateException naming the file; it never reads as a default.
+  * Reads never infer a schema: every data read carries the known row
+  * schema (evolved columns included), so building one runs no inference
+  * job, and manifest-listed reads open the listed files without listing.
   *
   * Resume = anti-filter of input buckets against committed manifests; the
   * write uses dynamic partition overwrite so a bucket interrupted between
@@ -51,23 +63,65 @@ import scala.util.Using
   */
 object TableIO {
 
-  final case class BucketManifest(bucket: Int, doc_count: Long,
-      span_count: Long, bytes: Long, wall_ms: Long, span_checksum: Long,
-      files: Seq[String], min_doc: String = "", max_doc: String = "",
-      bloom: Seq[Long] = Seq.empty)
-
   val SchemaVersion = 1
+
+  /** The metadata codec. A file is one JSON object: `schema_version`
+    * first, then the given fields in the given order. Reads are strict.
+    */
+  private object Meta {
+    private val json = new ObjectMapper().registerModule(DefaultScalaModule)
+      .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+    def write(path: Path, fields: (String, Any)*): Unit =
+      writeAtomic(path, json.writeValueAsString(
+        ListMap(("schema_version" -> SchemaVersion) +: fields: _*)))
+
+    def read(path: Path): Doc = {
+      val node =
+        try json.readTree(path.toFile)
+        catch { case e: java.io.IOException =>
+          throw new IllegalStateException(s"$path is not JSON: ${e.getMessage}", e) }
+      val doc = new Doc(path, node)
+      val version = doc.long("schema_version")
+      if (version > SchemaVersion) throw new IllegalStateException(
+        s"$path has schema_version $version > reader's $SchemaVersion — upgrade the reader")
+      doc
+    }
+
+    /** Typed field access; a missing or mistyped field raises. */
+    final class Doc(path: Path, node: JsonNode) {
+      private def fail(msg: String): Nothing =
+        throw new IllegalStateException(s"$path: $msg")
+      if (node == null || !node.isObject) fail("not a JSON object")
+      private def field(key: String): JsonNode =
+        Option(node.get(key)).getOrElse(fail(s"no \"$key\""))
+      private def asLong(key: String, v: JsonNode): Long =
+        if (v.isIntegralNumber && v.canConvertToLong) v.longValue
+        else fail(s"\"$key\" holds $v, not an integer")
+      private def asString(key: String, v: JsonNode): String =
+        if (v.isTextual) v.textValue else fail(s"\"$key\" holds $v, not a string")
+      private def array(key: String): Seq[JsonNode] = field(key) match {
+        case v if v.isArray => v.elements().asScala.toSeq
+        case v => fail(s"\"$key\" holds $v, not an array")
+      }
+      def long(key: String): Long = asLong(key, field(key))
+      def string(key: String): String = asString(key, field(key))
+      def longs(key: String): Seq[Long] = array(key).map(asLong(key, _))
+      def strings(key: String): Seq[String] = array(key).map(asString(key, _))
+      /** A field older writers left out: `get(key)` when present. */
+      def opt[A](key: String)(get: String => A): Option[A] =
+        if (node.has(key)) Some(get(key)) else None
+    }
+  }
+
+  private def markerPath(outDir: String): Path = Paths.get(outDir, "_SUCCESS.json")
 
   /** Monotonic snapshot id (Iceberg-snapshot analog): 0 before any
     * commit, +1 per successful writeResumable run.
     */
-  def currentSnapshot(outDir: String): Long = {
-    val p = Paths.get(outDir, "_SUCCESS.json")
-    if (!Files.exists(p)) 0L
-    else SnapRe.findFirstMatchIn(Files.readString(p)).map(_.group(1).toLong)
-      .getOrElse(throw new IllegalStateException(
-        s"$p has no parsable \"snapshot\" — refusing to restart at snapshot 0"))
-  }
+  def currentSnapshot(outDir: String): Long =
+    if (Files.exists(markerPath(outDir))) Meta.read(markerPath(outDir)).long("snapshot")
+    else 0L
 
   private def manifestDir(outDir: String): Path = Paths.get(outDir, "manifests")
   private def manifestPath(outDir: String, bucket: Int): Path =
@@ -86,8 +140,7 @@ object TableIO {
     }
 
   def committedBuckets(outDir: String): Set[Int] =
-    listNames(manifestDir(outDir), "bucket-", ".json")
-      .map(_.stripPrefix("bucket-").stripSuffix(".json").toInt).toSet
+    committedManifests(outDir).map(_.bucket).toSet
 
   private def writeAtomic(path: Path, content: String): Unit = {
     Files.createDirectories(path.getParent)
@@ -96,45 +149,23 @@ object TableIO {
     Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private def manifestJson(m: BucketManifest, snapshot: Long): String =
-    s"""{"schema_version":$SchemaVersion,"snapshot":$snapshot,""" +
-    s""""bucket":${m.bucket},"doc_count":${m.doc_count},"span_count":${m.span_count},""" +
-    s""""bytes":${m.bytes},"wall_ms":${m.wall_ms},"span_checksum":${m.span_checksum},""" +
-    s""""min_doc":"${m.min_doc}","max_doc":"${m.max_doc}",""" +
-    (if (m.bloom.isEmpty) ""
-     else m.bloom.mkString("\"bloom\":[", ",", "],")) +
-    m.files.map(f => s""""$f"""").mkString("\"files\":[", ",", "]}")
-
   /** Parsed committed manifest: (bucket, snapshot, schema_version,
-    * data-file relative paths).
+    * data-file relative paths, key bounds, Bloom words). Manifests written
+    * before the stats existed carry no bounds or words: empty here.
     */
   final case class CommittedManifest(bucket: Int, snapshot: Long,
       schemaVersion: Int, files: Seq[String],
       minDoc: String = "", maxDoc: String = "",
       bloom: IndexedSeq[Long] = IndexedSeq.empty)
 
-  private val SnapRe = "\"snapshot\":(\\d+)".r
-  private val VerRe = "\"schema_version\":(\\d+)".r
-  private val FilesRe = "\"files\":\\[([^\\]]*)\\]".r
-  private val MinDocRe = "\"min_doc\":\"([^\"]*)\"".r
-  private val MaxDocRe = "\"max_doc\":\"([^\"]*)\"".r
-  private val BloomRe = "\"bloom\":\\[([^\\]]*)\\]".r
-
   def committedManifests(outDir: String): Seq[CommittedManifest] =
     listNames(manifestDir(outDir), "bucket-", ".json").sorted.map { name =>
-      val bucket = name.stripPrefix("bucket-").stripSuffix(".json").toInt
-      val s = Files.readString(manifestDir(outDir).resolve(name))
-      val snap = SnapRe.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(0L)
-      val ver = VerRe.findFirstMatchIn(s).map(_.group(1).toInt).getOrElse(1)
-      val files = FilesRe.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-        .split(',').toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty)
-      val bloom = BloomRe.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-        .split(',').toIndexedSeq.map(_.trim).filter(_.nonEmpty).map(_.toLong)
-      CommittedManifest(bucket, snap, ver, files,
-        MinDocRe.findFirstMatchIn(s).map(_.group(1)).getOrElse(""),
-        MaxDocRe.findFirstMatchIn(s).map(_.group(1)).getOrElse(""),
-        bloom)
+      val m = Meta.read(manifestDir(outDir).resolve(name))
+      CommittedManifest(m.long("bucket").toInt, m.long("snapshot"),
+        m.long("schema_version").toInt, m.strings("files"),
+        m.opt("min_doc")(m.string).getOrElse(""),
+        m.opt("max_doc")(m.string).getOrElse(""),
+        m.opt("bloom")(m.longs).getOrElse(Nil).toIndexedSeq)
     }
 
   /** Data files of every uncommitted `data/bucket=<i>` dir, by bucket:
@@ -155,6 +186,22 @@ object TableIO {
       .filter(_._2.nonEmpty).toMap
   }
 
+  private lazy val rowEncoder = Encoders.product[ExtractedRow]
+  private def baseSchema: StructType = rowEncoder.schema
+
+  private def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.List.of[Row](), schema)
+
+  /** Schema-order projection with the partition-typed bucket cast. */
+  private def projectTo(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fieldNames.map {
+      case "bucket" => col("bucket").cast("int").as("bucket")
+      case f        => col(f)
+    }.toSeq: _*)
+
+  private def typed(df: DataFrame): Dataset[ExtractedRow] =
+    projectTo(df, baseSchema).as(rowEncoder)
+
   /** Rows of exactly the listed `files` under `outDir/data`, read with the
     * known row schema. Spark is handed the listed statuses, so it neither
     * infers a schema nor lists the files again (which, above 32 paths, it
@@ -168,13 +215,30 @@ object TableIO {
       def putLeafFiles(p: HPath, l: Array[FileStatus]): Unit = ()
       def invalidateAll(): Unit = ()
     }
-    val schema = Encoders.product[ExtractedRow].schema
     val index = new InMemoryFileIndex(spark, files.map(_.getPath),
-      Map("basePath" -> s"$outDir/data"), Some(schema), listed)
+      Map("basePath" -> s"$outDir/data"), Some(baseSchema), listed)
     val parts = index.partitionSchema.fieldNames.toSet
     spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-      StructType(schema.filterNot(f => parts(f.name))), None,
+      StructType(baseSchema.filterNot(f => parts(f.name))), None,
       new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** The one manifest-listed read: rows of the committed manifests `keep`
+    * selects, narrowed by `rows`, with (manifests read, manifests total).
+    * File statuses are taken from the manifests' file lists, so a listed
+    * file that is gone fails the read.
+    */
+  private def readManifested(spark: SparkSession, outDir: String,
+      keep: CommittedManifest => Boolean,
+      rows: Column): (Dataset[ExtractedRow], Int, Int) = {
+    val manifests = committedManifests(outDir)
+    val live = manifests.filter(keep)
+    val data = new HPath(s"$outDir/data")
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = live.flatMap(_.files).map(f => fs.getFileStatus(new HPath(data, f)))
+    val df = if (files.isEmpty) emptyDf(spark, baseSchema)
+             else readListed(spark, outDir, files).filter(rows)
+    (typed(df), live.size, manifests.size)
   }
 
   /** Resumable bucketed write. Returns the number of buckets written this
@@ -184,7 +248,7 @@ object TableIO {
     val spark = rows.sparkSession
     import spark.implicits._
     import graft.operators.SketchOps
-    // read first: a table whose marker does not parse fails before any write
+    // read first: a table whose metadata does not parse fails before any write
     val snapshot = currentSnapshot(outDir) + 1
     val done = committedBuckets(outDir)
     val todo = if (done.isEmpty) rows
@@ -231,15 +295,14 @@ object TableIO {
         .as[(Int, Long, Long, Long, Long, String, String, Seq[Long])].collect()
     val wallMs = (System.nanoTime() - t0) / 1000000
     stats.foreach { case (b, dc, sc, by, ck, lo, hi, bloom) =>
-      writeAtomic(manifestPath(outDir, b),
-        manifestJson(BucketManifest(b, dc, sc, by, wallMs, ck,
-          pending(b).map(f => s"bucket=$b/${f.getPath.getName}"), lo, hi, bloom),
-          snapshot))
+      Meta.write(manifestPath(outDir, b), "snapshot" -> snapshot, "bucket" -> b,
+        "doc_count" -> dc, "span_count" -> sc, "bytes" -> by, "wall_ms" -> wallMs,
+        "span_checksum" -> ck, "min_doc" -> lo, "max_doc" -> hi, "bloom" -> bloom,
+        "files" -> pending(b).map(f => s"bucket=$b/${f.getPath.getName}"))
     }
-    writeAtomic(Paths.get(outDir, "_SUCCESS.json"),
-      s"""{"schema_version":$SchemaVersion,"snapshot":$snapshot,""" +
-      s""""buckets_committed":${committedBuckets(outDir).size},""" +
-      s""""last_run_buckets":${stats.length},"last_run_wall_ms":$wallMs}""")
+    Meta.write(markerPath(outDir), "snapshot" -> snapshot,
+      "buckets_committed" -> committedBuckets(outDir).size,
+      "last_run_buckets" -> stats.length, "last_run_wall_ms" -> wallMs)
     stats.length
   }
 
@@ -254,49 +317,18 @@ object TableIO {
     * Returns false when the batch was already committed (no-op replay).
     */
   def appendBatchIdempotent(rows: Dataset[ExtractedRow], outDir: String,
-                            batchId: Long): Boolean = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val mpath = manifestDir(outDir).resolve(s"batch-$batchId.json")
-    if (Files.exists(mpath)) return false
-    rows.repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite) // replay-safe: replace, never append
-      .partitionBy("bucket")
-      .parquet(s"$outDir/data/batch=$batchId")
-    // explicit schema: an empty micro-batch writes a file-less dir, which
-    // would fail schema inference
-    val (nd, ns) = spark.read
-      .schema(org.apache.spark.sql.Encoders.product[ExtractedRow].schema)
-      .parquet(s"$outDir/data/batch=$batchId")
-      .agg(count(lit(1)), coalesce(sum($"span_count").cast("long"), lit(0L)))
-      .as[(Long, Long)].head()
-    writeAtomic(mpath,
-      s"""{"schema_version":$SchemaVersion,"batch":$batchId,"doc_count":$nd,"span_count":$ns}""")
-    true
-  }
+                            batchId: Long): Boolean =
+    appendBatchDf(rows.toDF(), outDir, batchId)
 
   def committedBatches(outDir: String): Set[Long] =
     listNames(manifestDir(outDir), "batch-", ".json")
-      .map(_.stripPrefix("batch-").stripSuffix(".json").toLong).toSet
-
-  private def emptyRows(spark: SparkSession): Dataset[ExtractedRow] = {
-    import spark.implicits._
-    spark.emptyDataset[ExtractedRow]
-  }
+      .map(name => Meta.read(manifestDir(outDir).resolve(name)).long("batch")).toSet
 
   /** Read rows of manifest-committed micro-batches only; empty Dataset
     * (with the proper schema) before any batch commits.
     */
-  def readCommittedBatches(spark: SparkSession, outDir: String): Dataset[ExtractedRow] = {
-    import spark.implicits._
-    val done = committedBatches(outDir)
-    if (done.isEmpty) return emptyRows(spark)
-    spark.read.option("basePath", s"$outDir/data")
-      .parquet(done.toSeq.sorted.map(b => s"$outDir/data/batch=$b"): _*)
-      .select($"doc_id", $"spans", $"markdown", $"bucket".cast("int").as("bucket"),
-              $"span_count", $"bytes", $"checksum")
-      .as[ExtractedRow]
-  }
+  def readCommittedBatches(spark: SparkSession, outDir: String): Dataset[ExtractedRow] =
+    typed(readBatchDirsDf(spark, outDir, committedBatches(outDir).toSeq, baseSchema))
 
   // ------------------------------------------------------------------
   // Upsert: MERGE-on-read (the Iceberg MoR equality-delete analog).
@@ -316,20 +348,12 @@ object TableIO {
     * history; the wire carries each surviving version once.
     */
   def readMerged(spark: SparkSession, outDir: String,
-                 asOfBatch: Long = Long.MaxValue): Dataset[ExtractedRow] = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val done = committedBatches(outDir).filter(_ <= asOfBatch)
-    if (done.isEmpty) return emptyRows(spark)
-    spark.read.option("basePath", s"$outDir/data")
-      .parquet(done.toSeq.sorted.map(b => s"$outDir/data/batch=$b"): _*)
+                 asOfBatch: Long = Long.MaxValue): Dataset[ExtractedRow] =
+    typed(readBatchDirsDf(spark, outDir,
+        committedBatches(outDir).filter(_ <= asOfBatch).toSeq, baseSchema)
       .withColumn("__rn", row_number().over(
-        Window.partitionBy($"doc_id").orderBy($"batch".cast("long").desc)))
-      .filter($"__rn" === 1)
-      .select($"doc_id", $"spans", $"markdown", $"bucket".cast("int").as("bucket"),
-              $"span_count", $"bytes", $"checksum")
-      .as[ExtractedRow]
-  }
+        Window.partitionBy(col("doc_id")).orderBy(col("batch").desc)))
+      .filter(col("__rn") === 1))
 
   /** Materialize the merged view as ONE new batch (next monotone id) —
     * the Iceberg rewrite that converts merge-on-read debt back to plain
@@ -368,18 +392,11 @@ object TableIO {
 
   private def compactionPath(outDir: String, snapshot: Long): Path =
     manifestDir(outDir).resolve(s"compaction-$snapshot.json")
-  private val BatchesRe = "\"superseded\":\\[([^\\]]*)\\]".r
-  private val SnapsRe = "\"superseded_snapshots\":\\[([^\\]]*)\\]".r
-
-  private def longList(s: String, re: scala.util.matching.Regex): Option[Seq[Long]] =
-    re.findFirstMatchIn(s).map(_.group(1).split(',').toSeq
-      .map(_.trim).filter(_.nonEmpty).map(_.toLong))
 
   def compactions(outDir: String): Seq[Compaction] = {
     val raw = listNames(manifestDir(outDir), "compaction-", ".json").map { name =>
-      val snap = name.stripPrefix("compaction-").stripSuffix(".json").toLong
-      val s = Files.readString(manifestDir(outDir).resolve(name))
-      (snap, longList(s, BatchesRe).getOrElse(Seq.empty), longList(s, SnapsRe))
+      val j = Meta.read(manifestDir(outDir).resolve(name))
+      (j.long("snapshot"), j.longs("superseded"), j.opt("superseded_snapshots")(j.longs))
     }.sortBy(_._1)
     raw.map { case (snap, batches, snaps) =>
       // legacy journals (pre-binpack) lack superseded_snapshots; their
@@ -414,13 +431,10 @@ object TableIO {
       batches: Seq[Long], snaps: Seq[Long]): Unit = {
     // journal AFTER the data lands: the compaction becomes visible
     // atomically with this manifest write
-    writeAtomic(compactionPath(outDir, snapshot),
-      s"""{"schema_version":$SchemaVersion,"snapshot":$snapshot,""" +
-      batches.sorted.mkString("\"superseded\":[", ",", "],") +
-      snaps.sorted.mkString("\"superseded_snapshots\":[", ",", "]}"))
-    writeAtomic(Paths.get(outDir, "_SUCCESS.json"),
-      s"""{"schema_version":$SchemaVersion,"snapshot":$snapshot,""" +
-      s""""compacted_batches":${batches.length}}""")
+    Meta.write(compactionPath(outDir, snapshot), "snapshot" -> snapshot,
+      "superseded" -> batches.sorted, "superseded_snapshots" -> snaps.sorted)
+    Meta.write(markerPath(outDir), "snapshot" -> snapshot,
+      "compacted_batches" -> batches.length)
   }
 
   /** FULL rewrite: every currently-visible row (all visible compacted
@@ -471,42 +485,14 @@ object TableIO {
     if (small.length < 2) return None
     val snapshot = currentSnapshot(outDir) + 1
     // evolution-aware: binpack under the latest schema (see compact)
-    readBatchDirsDf(spark, outDir, small, tableSchemaAt(outDir))
+    val schema = tableSchemaAt(outDir)
+    projectTo(readBatchDirsDf(spark, outDir, small, schema), schema)
       .repartition(col("bucket"))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("bucket")
       .parquet(compactedDir(outDir, snapshot).toString)
     writeCompaction(outDir, snapshot, small, Seq.empty)
     Some(snapshot)
-  }
-
-  /** Live-batch rows read through explicit batch dirs. */
-  private def readBatchDirs(spark: SparkSession, outDir: String,
-      batches: Seq[Long]): Dataset[ExtractedRow] = {
-    import spark.implicits._
-    // explicit schema: an empty micro-batch's dir has no footers to infer
-    spark.read
-      .schema(org.apache.spark.sql.Encoders.product[ExtractedRow].schema
-        .add("batch", "long"))
-      .option("basePath", s"$outDir/data")
-      .parquet(batches.sorted.map(b => s"$outDir/data/batch=$b"): _*)
-      .select($"doc_id", $"spans", $"markdown",
-        $"bucket".cast("int").as("bucket"),
-        $"span_count", $"bytes", $"checksum")
-      .as[ExtractedRow]
-  }
-
-  private def readCompacted(spark: SparkSession, outDir: String,
-      snapshot: Long): Dataset[ExtractedRow] = {
-    import spark.implicits._
-    spark.read
-      .schema(org.apache.spark.sql.Encoders.product[ExtractedRow].schema)
-      .option("basePath", compactedDir(outDir, snapshot).toString)
-      .parquet(compactedDir(outDir, snapshot).toString)
-      .select($"doc_id", $"spans", $"markdown",
-        $"bucket".cast("int").as("bucket"),
-        $"span_count", $"bytes", $"checksum")
-      .as[ExtractedRow]
   }
 
   /** Table state as of `asOfSnapshot`: every visible compacted snapshot
@@ -518,16 +504,8 @@ object TableIO {
     * after the requested snapshot remain visible — same contract as before.)
     */
   def readTable(spark: SparkSession, outDir: String,
-                asOfSnapshot: Long = Long.MaxValue): Dataset[ExtractedRow] = {
-    val comps = visibleCompactions(outDir, asOfSnapshot)
-    if (comps.isEmpty) return readCommittedBatches(spark, outDir)
-    val live = committedBatches(outDir)
-      .diff(deadBatches(outDir, asOfSnapshot)).toSeq
-    val compacted = comps.map(c => readCompacted(spark, outDir, c.snapshot))
-      .reduce(_ unionByName _)
-    if (live.isEmpty) compacted
-    else compacted.unionByName(readBatchDirs(spark, outDir, live))
-  }
+                asOfSnapshot: Long = Long.MaxValue): Dataset[ExtractedRow] =
+    typed(readTableDf(spark, outDir, asOfSnapshot))
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
@@ -607,29 +585,19 @@ object TableIO {
       name: String, ddl: String)
 
   private def schemaDir(outDir: String): Path = Paths.get(outDir, "schemas")
-  private val ActiveRe = "\"active_from\":(\\d+)".r
-  private val ColNameRe = "\"column\":\"([^\"]*)\"".r
-  private val ColTypeRe = "\"type\":\"([^\"]*)\"".r
 
   def evolutions(outDir: String): Seq[Evolution] =
     listNames(schemaDir(outDir), "evolve-", ".json").map { name =>
-      val v = name.stripPrefix("evolve-").stripSuffix(".json").toInt
-      val s = Files.readString(schemaDir(outDir).resolve(name))
-      Evolution(v,
-        ActiveRe.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(0L),
-        ColNameRe.findFirstMatchIn(s).map(_.group(1)).getOrElse(""),
-        ColTypeRe.findFirstMatchIn(s).map(_.group(1)).getOrElse("string"))
+      val e = Meta.read(schemaDir(outDir).resolve(name))
+      Evolution(e.long("table_schema").toInt, e.long("active_from"),
+        e.string("column"), e.string("type"))
     }.sortBy(_.version)
-
-  private def baseSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.Encoders.product[ExtractedRow].schema
 
   /** Table schema as of `asOf` (default latest): base ExtractedRow
     * columns plus every evolved column whose activation snapshot ≤ asOf,
     * in evolution order.
     */
-  def tableSchemaAt(outDir: String,
-      asOf: Long = Long.MaxValue): org.apache.spark.sql.types.StructType =
+  def tableSchemaAt(outDir: String, asOf: Long = Long.MaxValue): StructType =
     evolutions(outDir).filter(_.activeFrom <= asOf)
       .foldLeft(baseSchema)((s, e) => s.add(e.name, e.ddl, nullable = true))
 
@@ -646,37 +614,31 @@ object TableIO {
     require(!current.fieldNames.contains(name),
       s"column '$name' already exists in table schema")
     // validate the DDL parses before committing anything
-    org.apache.spark.sql.types.DataType.fromDDL(ddl)
+    DataType.fromDDL(ddl)
     val version = currentTableSchemaVersion(outDir) + 1
     val activeFrom = currentSnapshot(outDir) + 1
-    writeAtomic(schemaDir(outDir).resolve(s"evolve-$version.json"),
-      s"""{"schema_version":$SchemaVersion,"table_schema":$version,""" +
-      s""""active_from":$activeFrom,"column":"$name","type":"$ddl"}""")
-    writeAtomic(Paths.get(outDir, "_SUCCESS.json"),
-      s"""{"schema_version":$SchemaVersion,"snapshot":$activeFrom,""" +
-      s""""evolved_column":"$name"}""")
+    Meta.write(schemaDir(outDir).resolve(s"evolve-$version.json"),
+      "table_schema" -> version, "active_from" -> activeFrom,
+      "column" -> name, "type" -> ddl)
+    Meta.write(markerPath(outDir), "snapshot" -> activeFrom, "evolved_column" -> name)
     activeFrom
   }
 
-  /** Schema-order projection with the partition-typed bucket cast. */
-  private def projectTo(df: org.apache.spark.sql.DataFrame,
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    df.select(schema.fieldNames.map {
-      case "bucket" => col("bucket").cast("int").as("bucket")
-      case f        => col(f)
-    }.toSeq: _*)
-
+  /** Rows of the given batch dirs under `schema`, plus their `batch`
+    * partition column. The schema is given, never inferred: an empty
+    * micro-batch's dir has no footers to infer it from.
+    */
   private def readBatchDirsDf(spark: SparkSession, outDir: String,
-      batches: Seq[Long],
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    projectTo(spark.read
-      .schema(schema.add("batch", "long"))
+      batches: Seq[Long], schema: StructType): DataFrame = {
+    val withBatch = schema.add("batch", "long")
+    if (batches.isEmpty) emptyDf(spark, withBatch)
+    else spark.read.schema(withBatch)
       .option("basePath", s"$outDir/data")
-      .parquet(batches.sorted.map(b => s"$outDir/data/batch=$b"): _*), schema)
+      .parquet(batches.sorted.map(b => s"$outDir/data/batch=$b"): _*)
+  }
 
   private def readCompactedDf(spark: SparkSession, outDir: String,
-      snapshot: Long,
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+      snapshot: Long, schema: StructType): DataFrame =
     projectTo(spark.read
       .schema(schema)
       .option("basePath", compactedDir(outDir, snapshot).toString)
@@ -689,18 +651,14 @@ object TableIO {
     * them.
     */
   def readTableDf(spark: SparkSession, outDir: String,
-      asOfSnapshot: Long = Long.MaxValue): org.apache.spark.sql.DataFrame = {
+      asOfSnapshot: Long = Long.MaxValue): DataFrame = {
     val schema = tableSchemaAt(outDir, asOfSnapshot)
-    val comps = visibleCompactions(outDir, asOfSnapshot)
     val live = committedBatches(outDir)
       .diff(deadBatches(outDir, asOfSnapshot)).toSeq
-    val parts =
-      comps.map(c => readCompactedDf(spark, outDir, c.snapshot, schema)) ++
-      (if (live.isEmpty) Nil
-       else Seq(readBatchDirsDf(spark, outDir, live, schema)))
-    if (parts.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    else parts.reduce(_ unionByName _)
+    (visibleCompactions(outDir, asOfSnapshot)
+      .map(c => readCompactedDf(spark, outDir, c.snapshot, schema)) :+
+      projectTo(readBatchDirsDf(spark, outDir, live, schema), schema))
+      .reduce(_ unionByName _)
   }
 
   /** Evolution-aware idempotent batch append: rows must carry exactly
@@ -709,8 +667,7 @@ object TableIO {
     * written under. Same replay-safe protocol as
     * [[appendBatchIdempotent]].
     */
-  def appendBatchDf(rows: org.apache.spark.sql.DataFrame, outDir: String,
-                    batchId: Long): Boolean = {
+  def appendBatchDf(rows: DataFrame, outDir: String, batchId: Long): Boolean = {
     val spark = rows.sparkSession
     import spark.implicits._
     val schema = tableSchemaAt(outDir)
@@ -721,18 +678,14 @@ object TableIO {
     val mpath = manifestDir(outDir).resolve(s"batch-$batchId.json")
     if (Files.exists(mpath)) return false
     rows.repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite)
+      .write.mode(SaveMode.Overwrite) // replay-safe: replace, never append
       .partitionBy("bucket")
       .parquet(s"$outDir/data/batch=$batchId")
-    val (nd, ns) = spark.read
-      .schema(schema)
-      .parquet(s"$outDir/data/batch=$batchId")
+    val (nd, ns) = readBatchDirsDf(spark, outDir, Seq(batchId), schema)
       .agg(count(lit(1)), coalesce(sum($"span_count").cast("long"), lit(0L)))
       .as[(Long, Long)].head()
-    writeAtomic(mpath,
-      s"""{"schema_version":$SchemaVersion,""" +
-      s""""table_schema":${currentTableSchemaVersion(outDir)},""" +
-      s""""batch":$batchId,"doc_count":$nd,"span_count":$ns}""")
+    Meta.write(mpath, "table_schema" -> currentTableSchemaVersion(outDir),
+      "batch" -> batchId, "doc_count" -> nd, "span_count" -> ns)
     true
   }
 
@@ -743,23 +696,8 @@ object TableIO {
     * written by a newer schema version.
     */
   def readCommitted(spark: SparkSession, outDir: String,
-                    asOfSnapshot: Long = Long.MaxValue): Dataset[ExtractedRow] = {
-    import spark.implicits._
-    val manifests = committedManifests(outDir)
-    manifests.filter(_.schemaVersion > SchemaVersion).foreach { m =>
-      throw new IllegalStateException(
-        s"bucket ${m.bucket} manifest has schema_version ${m.schemaVersion} " +
-        s"> reader's $SchemaVersion — upgrade the reader")
-    }
-    val files = manifests.filter(_.snapshot <= asOfSnapshot)
-      .flatMap(_.files).map(f => s"$outDir/data/$f")
-    if (files.isEmpty) return emptyRows(spark)
-    spark.read.option("basePath", s"$outDir/data")
-      .parquet(files: _*)
-      .select($"doc_id", $"spans", $"markdown", $"bucket".cast("int").as("bucket"),
-              $"span_count", $"bytes", $"checksum")
-      .as[ExtractedRow]
-  }
+                    asOfSnapshot: Long = Long.MaxValue): Dataset[ExtractedRow] =
+    readManifested(spark, outDir, _.snapshot <= asOfSnapshot, lit(true))._1
 
   /** Manifest-stats scan pruning (the Iceberg partition/file-skipping
     * analog): read ONLY the buckets whose [min_doc, max_doc] key bounds
@@ -774,25 +712,11 @@ object TableIO {
     */
   def readCommittedPruned(spark: SparkSession, outDir: String,
                           loDoc: String, hiDoc: String):
-      (Dataset[ExtractedRow], Int, Int) = {
-    import spark.implicits._
-    val manifests = committedManifests(outDir)
-    val live = manifests.filter { m =>
-      m.minDoc.isEmpty || m.maxDoc.isEmpty ||
-        (m.minDoc <= hiDoc && m.maxDoc >= loDoc)
-    }
-    val files = live.flatMap(_.files).map(f => s"$outDir/data/$f")
-    val rows =
-      if (files.isEmpty) emptyRows(spark)
-      else spark.read.option("basePath", s"$outDir/data")
-        .parquet(files: _*)
-        .filter($"doc_id" >= loDoc && $"doc_id" <= hiDoc)
-        .select($"doc_id", $"spans", $"markdown",
-                $"bucket".cast("int").as("bucket"),
-                $"span_count", $"bytes", $"checksum")
-        .as[ExtractedRow]
-    (rows, live.size, manifests.size)
-  }
+      (Dataset[ExtractedRow], Int, Int) =
+    readManifested(spark, outDir,
+      m => m.minDoc.isEmpty || m.maxDoc.isEmpty ||
+        (m.minDoc <= hiDoc && m.maxDoc >= loDoc),
+      col("doc_id").between(loDoc, hiDoc))
 
   /** Manifest-Bloom scan pruning for POINT / bounded-id-set predicates —
     * the skipping index the HASH layout gets (range bounds can't prune it;
@@ -808,24 +732,9 @@ object TableIO {
     */
   def readCommittedPrunedByIds(spark: SparkSession, outDir: String,
                                ids: Seq[String]):
-      (Dataset[ExtractedRow], Int, Int) = {
-    import spark.implicits._
-    import graft.operators.SketchOps
-    val manifests = committedManifests(outDir)
-    val live = manifests.filter { m =>
-      m.bloom.isEmpty ||
-        ids.exists(id => SketchOps.bloomMaybeContains(m.bloom, id))
-    }
-    val files = live.flatMap(_.files).map(f => s"$outDir/data/$f")
-    val rows =
-      if (files.isEmpty) emptyRows(spark)
-      else spark.read.option("basePath", s"$outDir/data")
-        .parquet(files: _*)
-        .filter($"doc_id".isin(ids: _*))
-        .select($"doc_id", $"spans", $"markdown",
-                $"bucket".cast("int").as("bucket"),
-                $"span_count", $"bytes", $"checksum")
-        .as[ExtractedRow]
-    (rows, live.size, manifests.size)
-  }
+      (Dataset[ExtractedRow], Int, Int) =
+    readManifested(spark, outDir,
+      m => m.bloom.isEmpty ||
+        ids.exists(id => graft.operators.SketchOps.bloomMaybeContains(m.bloom, id)),
+      col("doc_id").isin(ids: _*))
 }

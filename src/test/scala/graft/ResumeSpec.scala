@@ -332,6 +332,70 @@ class ResumeSpec extends AnyFunSuite {
     assert(TableIO.committedManifests(out).forall(_.snapshot == 1L))
     Files.writeString(marker, "")
     intercept[IllegalStateException](TableIO.currentSnapshot(out))
+
+    // every other metadata file is read as strictly, and the error names it
+    def rejects(path: Path, content: String)(read: => Any): Unit = {
+      val saved = Files.readString(path)
+      Files.writeString(path, content)
+      val e = intercept[IllegalStateException](read)
+      assert(e.getMessage.contains(path.toString), e.getMessage)
+      Files.writeString(path, saved)
+    }
+    val bucket = Path.of(out, "manifests", "bucket-0.json")
+    val manifest = Files.readString(bucket)
+    rejects(bucket, manifest.replaceAll(",\"files\":\\[[^\\]]*\\]", ""))(
+      TableIO.readCommitted(spark, out))
+    rejects(bucket, manifest.replace("\"snapshot\":1,", "\"snapshot\":\"1\","))(
+      TableIO.readCommitted(spark, out))
+
+    val batches = tmpDir()
+    assert(TableIO.appendBatchIdempotent(rows, batches, 0L))
+    val snap = TableIO.compact(spark, batches)
+    // a column name that needs escaping reads back unchanged
+    val quoted = "say \"hi\""
+    TableIO.evolveAddColumn(batches, quoted, "string")
+    assert(TableIO.evolutions(batches).map(_.name) == Seq(quoted))
+    assert(TableIO.tableSchemaAt(batches).fieldNames.last == quoted)
+    rejects(Path.of(batches, "manifests", "batch-0.json"), "batch 0 committed")(
+      TableIO.readCommittedBatches(spark, batches))
+    val journal = Path.of(batches, "manifests", s"compaction-$snap.json")
+    rejects(journal, Files.readString(journal).replaceAll("\"superseded\":\\[[^\\]]*\\],", ""))(
+      TableIO.readTable(spark, batches))
+    val evolve = Path.of(batches, "schemas", "evolve-2.json")
+    rejects(evolve, Files.readString(evolve).replaceAll("\"active_from\":\\d+,", ""))(
+      TableIO.tableSchemaAt(batches))
+  }
+
+  test("reads plan with the known schema: building a read starts no Spark job") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    assert(spark.streams.active.isEmpty, "a running stream would add jobs")
+    val table = tmpDir()
+    TableIO.writeResumable(rows, table)
+    val batches = tmpDir()
+    assert(TableIO.appendBatchIdempotent(rows, batches, 0L))
+    assert(TableIO.appendBatchIdempotent(rows.filter(_.bucket < 3), batches, 1L))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsToBuild(read: => Any): Int = {
+      ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      read
+      ListenerBusDrain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(jobsToBuild(TableIO.readCommitted(spark, table)) == 0, "readCommitted")
+      assert(jobsToBuild(TableIO.readCommittedPruned(
+        spark, table, "d0000000000", "d0000000099")) == 0, "readCommittedPruned")
+      assert(jobsToBuild(TableIO.readCommittedPrunedByIds(
+        spark, table, Seq("d0000000007"))) == 0, "readCommittedPrunedByIds")
+      assert(jobsToBuild(TableIO.readCommittedBatches(spark, batches)) == 0, "readCommittedBatches")
+      assert(jobsToBuild(TableIO.readMerged(spark, batches)) == 0, "readMerged")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("real fault: a run whose kernel throws commits nothing; a clean rerun equals one clean run") {

@@ -2,6 +2,7 @@
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB over the sf parquet tables and compare (rows, schema names, sorted
 value multiset) against the Spark parquet dumps produced by graft.Verify.
+Every query in oracle_sql.json must have a dump: a missing one is a FAIL.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 """
@@ -23,9 +24,13 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
+    dirs = {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
+    for name in sorted(dirs | oracle.keys()):
         d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
+        if name not in dirs:
+            # a query that threw wrote no output: a failure, not a skip
+            print(f"  [FAIL] {name}: no output")
+            n_fail += 1
             continue
         files = glob.glob(f"{d}/*.parquet")
         got = con.execute(f"SELECT * FROM read_parquet({files!r})").fetchall()
