@@ -1,40 +1,14 @@
 package graft
 
-import graft.operators.{ClusterOps, CurateOps, DedupOps, MediaOps, SimilarityOps, TextOps}
+import graft.gates.Gate
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Conventions:
-  *  - every query takes (spark, sfDir) and reads the driver-generated
-  *    parquet tables under sfDir (TESTDATA.md);
-  *  - aggregate outputs derived from doubles are made *integer-exact*
-  *    (cents / counts) so the DuckDB oracle hash-compare is bit-stable;
-  *  - ext_* queries run the full extraction pipeline (corpus derivation →
-  *    salt → repartitionByRange → mapPartitions kernel) and are checked by
-  *    DuckDB oracles that recompute expected outputs from documents.parquet
-  *    via the derivation rules (graft.corpus.CorpusDerive).
+/** The query contract. Each query and its DuckDB oracle are defined once,
+  * side by side, as a [[graft.gates.Gate]] in the domain objects under
+  * `graft.gates`; `queries` and `oracleSql` are two views of that one
+  * registry, so their names cannot drift apart.
   */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** Extracted spans, exploded: (doc_id, kind, text, media_ref, order). */
-  private def extractedSpans(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = graft.corpus.CorpusDerive.derive(s, dir)
-    graft.pipeline.Extraction.pipeline(docs)
-      .select($"doc_id", explode($"spans").as("s"))
-      .select($"doc_id", $"s.kind".as("kind"), $"s.text".as("text"),
-              $"s.media_ref".as("media_ref"), $"s.order".as("order"))
-  }
-
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
-    extractedSpans(spark, "/root/testdata/sf0.001")
-      .groupBy("kind").agg(count(lit(1)).as("cnt"))
 
   /** tio_prune_hash probe set (spec constant shared with the oracle):
     * three existing ids — present at every SF (ids are 0-based and every
@@ -44,3504 +18,19 @@ object SparkEntry {
   val PruneHashProbeIds: Seq[String] =
     Seq(0L, 7L, 42L).map(i => f"d$i%010d") :+ "d9999999998"
 
+  private lazy val gates: Map[String, Gate] = Gate.byName(Gate.all)
+
+  /** Flagship query: the ext_kind_counts gate over the sf0.001 tables;
+    * a smoke check expects rows > 0. */
+  def entry(spark: SparkSession): DataFrame =
+    gates("ext_kind_counts").run(spark, "/root/testdata/sf0.001")
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- extraction pipeline (north rule core) ----
-    "ext_kind_counts" -> ((s, dir) =>
-      extractedSpans(s, dir).groupBy("kind").agg(count(lit(1)).as("cnt"))),
-
-    // THE north-rule gate: full span-sequence equality (kind, text,
-    // media_ref, order) for every doc, end-to-end through the salted +
-    // range-repartitioned mapPartitions pipeline.
-    "ext_spans_full" -> ((s, dir) => {
-      import s.implicits._
-      extractedSpans(s, dir)
-        .select($"doc_id", $"kind", $"text", $"media_ref",
-                $"order".cast("long").as("ord"))
-    }),
-
-    // XY-cut reading-order recovery over 2-D span boxes (SURVEY §7.3(d),
-    // the PDF-layout analog of the reference's grid tile reorder): boxes
-    // are synthesized per doc on a deterministic 2-column geometry, the
-    // recursive cut runs in a narrow kernel, and the oracle replays the
-    // resulting order in closed form (column-major (col, y0, idx) — the
-    // provable XY-cut outcome on this geometry; XyCutSpec covers layouts
-    // where no closed form exists).
-    "ext_xycut" -> ((s, dir) => {
-      import s.implicits._
-      import graft.extract.XyCut
-      import graft.functions.Hashing
-      t(s, dir, "documents").select($"doc_id").as[Long].flatMap { id =>
-        val n = (id % 4 + 3).toInt
-        val boxes = (0 until n).map { i =>
-          val col = (Hashing.md5i(s"xc|$id|$i") % 2L).toInt
-          val y0 = (Hashing.md5i(s"xy|$id|$i") % 900L).toInt
-          XyCut.Box(col * 550, y0, col * 550 + 450, y0 + 40)
-        }.toIndexedSeq
-        XyCut.order(boxes).zipWithIndex.map { case (boxIdx, pos) =>
-          (id, boxIdx.toLong, pos.toLong)
-        }
-      }.toDF("doc_id", "box_i", "ord")
-    }),
-
-    // PDF content-stream parsing (north-star layout stage): a REAL
-    // tokenizer + text-object interpreter (BT/ET, Tm/Td, Tj/TJ with
-    // escapes and kerning arrays, bottom-up y flip) over spec-conformant
-    // synthesized streams, then XY-cut ordering. The oracle replays ONLY
-    // the synthesis rule — hash equality proves the parser inverts it.
-    "ext_pdf_stream" -> ((s, dir) => {
-      import s.implicits._
-      import graft.extract.PdfStream
-      t(s, dir, "documents").select($"doc_id").as[Long].flatMap { id =>
-        PdfStream.readingOrder(PdfStream.synthesize(id)).map {
-          case (r, pos) =>
-            (id, r.text, r.x.toLong, (PdfStream.PageH - r.y).toLong, pos.toLong)
-        }
-      }.toDF("doc_id", "text", "x", "y", "ord")
-    }),
-
-    // Post-decode grounding-markup parsing (capture_baseline.py:762-780
-    // analog): extract <|ref|>/<|det|> pairs from synthesized decoded
-    // text, rewrite image refs to ![](images/N.jpg) with the running
-    // index, order refs by XY-cut over their det boxes. Oracle replays
-    // the synthesis rule only.
-    "ext_grounding" -> ((s, dir) => {
-      import s.implicits._
-      import graft.extract.Grounding
-      t(s, dir, "documents").select($"doc_id").as[Long].flatMap { id =>
-        Grounding.readingOrder(Grounding.synthesize(id)).map {
-          case (r, _, pos) =>
-            (id, r.text, r.x1.toLong, r.y1.toLong,
-             if (r.isImage) 1L else 0L, r.frag, pos.toLong)
-        }
-      }.toDF("doc_id", "ref_text", "x1", "y1", "is_image", "frag", "ord")
-    }),
-
-    // Streaming HTML/DOM tokenizer + link-density boilerplate strip (the
-    // north star's first pillar): synthesize spec-idiom HTML (comments
-    // with markup, script raw-text with fake closers, quoted '>' attrs,
-    // entities, mixed-case tags), lex it with the REAL single-pass
-    // tokenizer, classify blocks into heading/paragraph/table/figure.
-    // The oracle replays only the closed-form rule — hash parity proves
-    // the lexer inverted the markup.
-    "ext_html" -> ((s, dir) => {
-      import s.implicits._
-      import graft.extract.Html
-      t(s, dir, "documents").select($"doc_id").as[Long].flatMap { id =>
-        Html.extract(Html.synthesize(id)).zipWithIndex.map { case (b, pos) =>
-          (id, b.kind, b.text, b.mediaRef, b.denMilli, b.level.toLong, pos.toLong)
-        }
-      }.toDF("doc_id", "kind", "text", "media_ref", "den_milli", "lvl", "ord")
-    }),
-
-    // WARC front door (ISO 28500 — the framing web corpora arrive in):
-    // docs are packed in 64-doc chunks into real `.warc.gz` bytes
-    // (Content-Length framing, CRLF headers, one gzip MEMBER per record
-    // — CommonCrawl's wire format), then parsed back through the
-    // STREAMING iterator parser (one payload live at a time — never a
-    // whole partition in memory), and the recovered payloads run the
-    // SAME HTML extraction. Output must hash-equal ext_html, proving
-    // the payloads survive framing + compression byte-exactly; record
-    // count / URI / type invariants are asserted in-kernel.
-    // Exchange-free: blobs never cross partitions.
-    "ext_warc" -> ((s, dir) => {
-      import s.implicits._
-      import graft.extract.{Html, Warc}
-      t(s, dir, "documents").select($"doc_id").as[Long].mapPartitions { ids =>
-        ids.grouped(64).flatMap { chunk =>
-          val gz = Warc.buildGz(chunk.map { id =>
-            Warc.Record("response", s"http://synth.test/$id",
-              Html.synthesize(id).getBytes("UTF-8"))
-          })
-          var n = 0
-          val rows = Warc.recordsGz(new java.io.ByteArrayInputStream(gz))
-            .flatMap { r =>
-              require(r.recordType == "response", s"bad type ${r.recordType}")
-              n += 1
-              val id = r.uri.substring(r.uri.lastIndexOf('/') + 1).toLong
-              Html.extract(new String(r.payload, "UTF-8")).zipWithIndex.map {
-                case (b, pos) =>
-                  (id, b.kind, b.text, b.mediaRef, b.denMilli, b.level.toLong,
-                    pos.toLong)
-              }
-            }.toArray // one 64-doc chunk of rows, not the partition
-          require(n == chunk.length,
-            s"WARC framing lost records: $n != ${chunk.length}")
-          rows
-        }
-      }.toDF("doc_id", "kind", "text", "media_ref", "den_milli", "lvl", "ord")
-    }),
-
-    // CDX point reads into `.warc.gz`: the write path emits a member
-    // index (offset/length per record — the cdx sidecar CommonCrawl
-    // ships), and point reads slice ONLY the indexed member byte ranges,
-    // each an independently-decompressible gzip member — never scanning
-    // or inflating the archive. In-kernel accounting proves the skip
-    // (bytes read < archive bytes whenever the sample is a strict
-    // subset) and each slice must parse to exactly its own record.
-    // Oracle: the shared ext_html closed form restricted to the same
-    // deterministic sample predicate.
-    "ext_warc_cdx" -> ((s, dir) => {
-      import s.implicits._
-      import graft.extract.{Html, Warc}
-      import graft.functions.Hashing
-      t(s, dir, "documents").select($"doc_id").as[Long].mapPartitions { ids =>
-        ids.grouped(64).flatMap { chunk =>
-          val (gz, idx) = Warc.buildGzIndexed(chunk.map { id =>
-            Warc.Record("response", s"http://synth.test/$id",
-              Html.synthesize(id).getBytes("UTF-8"))
-          })
-          require(idx.map(_.length).sum == gz.length,
-            "cdx index must cover the archive exactly")
-          val wanted = idx.filter { e =>
-            val id = e.uri.substring(e.uri.lastIndexOf('/') + 1)
-            Hashing.md5i("cdx|" + id) % 8 == 0
-          }
-          require(wanted.size == chunk.length ||
-              wanted.map(_.length).sum < gz.length,
-            "point reads must touch fewer bytes than the archive")
-          wanted.iterator.flatMap { e =>
-            val slice = java.util.Arrays.copyOfRange(
-              gz, e.offset.toInt, (e.offset + e.length).toInt)
-            val rs = Warc.recordsGz(
-              new java.io.ByteArrayInputStream(slice)).toList
-            require(rs.size == 1 && rs.head.uri == e.uri,
-              s"member slice mis-framed for ${e.uri}")
-            val id = e.uri.substring(e.uri.lastIndexOf('/') + 1).toLong
-            Html.extract(new String(rs.head.payload, "UTF-8")).zipWithIndex
-              .map { case (b, pos) =>
-                (id, b.kind, b.text, b.mediaRef, b.denMilli,
-                  b.level.toLong, pos.toLong)
-              }
-          }
-        }
-      }.toDF("doc_id", "kind", "text", "media_ref", "den_milli", "lvl", "ord")
-    }),
-
-    // The HTML tokenizer as a DISTRIBUTED pipeline: same salt + sketch-
-    // routed range placement + single exchange as the span pipeline
-    // (Extraction.pipelineWith), with Html.extract as the narrow kernel.
-    // Span-sequence equality (kind, text, media_ref, order) per doc —
-    // the north-rule contract over the HTML front door.
-    "ext_html_pipeline" -> ((s, dir) => {
-      import s.implicits._
-      val htmlDocs = t(s, dir, "documents").select($"doc_id").as[Long]
-        .map(id => (id.toString, graft.extract.Html.synthesize(id)))
-      graft.pipeline.Extraction.pipelineHtml(htmlDocs)
-        .select($"doc_id", explode($"spans").as("sp"))
-        .select($"doc_id", $"sp.kind".as("kind"), $"sp.text".as("text"),
-                $"sp.media_ref".as("media_ref"),
-                $"sp.order".cast("long").as("ord"))
-    }),
-
-    // Rendered markdown for the HTML pipeline (the result.mmd analog of
-    // ext_markdown, over the HTML front door) — every doc, including
-    // ones whose blocks are all boilerplate (empty markdown).
-    "ext_html_md" -> ((s, dir) => {
-      import s.implicits._
-      val htmlDocs = t(s, dir, "documents").select($"doc_id").as[Long]
-        .map(id => (id.toString, graft.extract.Html.synthesize(id)))
-      graft.pipeline.Extraction.pipelineHtml(htmlDocs)
-        .select($"doc_id", $"markdown".as("md"))
-    }),
-
-    // Rendered page markdown (analog of result.mmd equality,
-    // /root/reference/crates/core/tests/baseline.rs:700-705).
-    "ext_markdown" -> ((s, dir) => {
-      import s.implicits._
-      val docs = graft.corpus.CorpusDerive.derive(s, dir)
-      graft.pipeline.Extraction.pipeline(docs)
-        .select($"doc_id", $"markdown")
-    }),
-
-    "ext_headings" -> ((s, dir) => {
-      import s.implicits._
-      extractedSpans(s, dir).filter($"order" === 0)
-        .select($"doc_id", $"text")
-    }),
-
-    "ext_doc_span_counts" -> ((s, dir) => {
-      import s.implicits._
-      extractedSpans(s, dir).groupBy($"doc_id")
-        .agg(count(lit(1)).cast("long").as("n_spans"),
-             max($"order").cast("long").as("max_order"))
-    }),
-
-    // ST coverage for the DOC pipeline: extractStream (3 real
-    // micro-batches, AvailableNow) → idempotent batch commits →
-    // manifest-listed read-back, with a poisoned batch-0 replay asserted
-    // inside the query.
-    "ext_stream_counts" -> ((s, dir) =>
-      graft.streaming.StreamingExtract.streamExtractCounts(s, dir)),
-
-    // The HTML front door under continuous ingestion: 3 staged HTML
-    // files → 3 real micro-batches through the streaming tokenizer →
-    // idempotent commits → manifest read-back (poisoned batch-0 replay
-    // asserted in-query).
-    "ext_html_stream" -> ((s, dir) =>
-      graft.streaming.StreamingExtract.streamHtmlCounts(s, dir)),
-
-    // Progress-callback / bench-recorder surface (SURVEY §2.10) under the
-    // hash gate: doc/span totals — n_docs, spans_in (derived spans
-    // entering the kernel), spans_out (spans surviving boilerplate
-    // strip), dropped (= the nav+footer pair/doc). The gated row is a
-    // plan-level aggregation (exactly-once under retries); the named
-    // LongAccumulators are updated in the same kernel loop as the live
-    // observability surface (at-least-once — see Extraction.Metrics).
-    "ext_metrics" -> ((s, dir) => {
-      val m = graft.pipeline.Extraction.metrics(s)
-      graft.pipeline.Extraction
-        .metricsRow(graft.corpus.CorpusDerive.derive(s, dir), Some(m))
-    }),
-
-    "ext_media_refs" -> ((s, dir) => {
-      import s.implicits._
-      extractedSpans(s, dir).filter($"kind" === "figure")
-        .select($"doc_id", $"media_ref", $"order".cast("long").as("ord"))
-    }),
-
-    // ---- relational operators over the TPC-H-ish tables (SURVEY §2.4/2.6) ----
-    "q1_agg" -> ((s, dir) => {
-      import s.implicits._
-      t(s, dir, "lineitem").groupBy($"l_returnflag", $"l_linestatus").agg(
-        sum($"l_quantity").cast("long").as("sum_qty"),
-        sum(round($"l_extendedprice" * 100).cast("long")).as("sum_price_cents"),
-        sum(round($"l_extendedprice" * (lit(1) - $"l_discount") * 10000).cast("long"))
-          .as("sum_disc_price_c4"),
-        count(lit(1)).as("n_rows"))
-    }),
-
-    "q6_filter" -> ((s, dir) => {
-      import s.implicits._
-      t(s, dir, "lineitem")
-        .filter($"l_discount" >= 0.05 && $"l_discount" <= 0.07 && $"l_quantity" < 24)
-        .agg(sum(round($"l_extendedprice" * $"l_discount" * 10000).cast("long"))
-               .as("revenue_c4"),
-             count(lit(1)).as("n_rows"))
-    }),
-
-    // ---- joins (broadcast dims + shuffle fact joins), top-k, windows,
-    //      set ops, JSON — SURVEY.md §2.3/2.5/2.6/2.7/2.8 analogs ----
-    "q3_topk" -> ((s, dir) => {
-      import s.implicits._
-      // customer SCALES with the corpus — no forced broadcast (Catalyst/
-      // AQE broadcasts while it fits, shuffle-joins at 100 TB); the
-      // segment filter is pushed to its scan either way
-      val cust = t(s, dir, "customer")
-        .filter($"c_mktsegment" === "BUILDING").select("c_custkey")
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
-        .join(cust, $"o_custkey" === $"c_custkey")
-        .groupBy($"l_orderkey", unix_micros($"o_orderdate".cast("timestamp_ltz")).as("o_odate_us"))
-        .agg(sum(round($"l_extendedprice" * (lit(1) - $"l_discount") * 10000)
-          .cast("long")).as("revenue_c4"))
-        .orderBy($"revenue_c4".desc, $"l_orderkey")
-        .limit(10)
-        .select($"l_orderkey", $"revenue_c4", $"o_odate_us")
-    }),
-
-    "q5_region_rev" -> ((s, dir) => {
-      import s.implicits._
-      // broadcast ONLY the fixed-cardinality dims (nation/region);
-      // customer scales with the corpus and joins by shuffle at scale
-      val geo = t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")), $"c_nationkey" === $"n_nationkey")
-        .join(broadcast(t(s, dir, "region")), $"n_regionkey" === $"r_regionkey")
-        .select($"c_custkey", $"n_name", $"r_name")
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
-        .join(geo, $"o_custkey" === $"c_custkey")
-        .groupBy($"r_name", $"n_name")
-        .agg(sum(round($"l_extendedprice" * (lit(1) - $"l_discount") * 10000)
-          .cast("long")).as("revenue_c4"),
-          count(lit(1)).as("n_rows"))
-    }),
-
-    "w_events" -> ((s, dir) => {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      t(s, dir, "events")
-        .withColumn("value_c", floor($"value" * 100).cast("long"))
-        .select($"event_id", $"user_id",
-          row_number().over(w).cast("long").as("rnk"),
-          $"value_c",
-          ($"value_c" - lag($"value_c", 1, 0L).over(w)).as("delta_c"),
-          sum($"value_c").over(w.rowsBetween(Window.unboundedPreceding,
-            Window.currentRow)).as("run_c"))
-    }),
-
-    "ev_sessions" -> ((s, dir) => {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      // 30-min-gap sessionization: batch mirror of the streaming
-      // flatMapGroupsWithState path (graft.streaming.Sessionize)
-      val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      t(s, dir, "events")
-        .withColumn("gap_us",
-          unix_micros($"ts".cast("timestamp_ltz")) - lag(unix_micros($"ts".cast("timestamp_ltz")), 1, 0L).over(w))
-        .withColumn("new_sess",
-          when(lag($"ts", 1).over(w).isNull || $"gap_us" > 1800L * 1000000L, 1L)
-            .otherwise(0L))
-        .groupBy($"user_id")
-        .agg(sum($"new_sess").as("n_sessions"), count(lit(1)).as("n_events"))
-    }),
-
-    "ev_window_agg" -> ((s, dir) =>
-      graft.streaming.StreamingExtract.eventWindowAgg(t(s, dir, "events"))),
-
-    // REAL Structured Streaming executions (Trigger.AvailableNow over
-    // time-ordered micro-batches) — the streaming engine itself is under
-    // the driver's oracle gate, not just its batch mirror:
-    "ev_stream_window" -> ((s, dir) =>
-      graft.streaming.StreamingExtract.streamWindowQuery(s, t(s, dir, "events"))),
-    "ev_stream_sessions" -> ((s, dir) =>
-      graft.streaming.StreamingExtract.streamSessionsQuery(s, t(s, dir, "events"))),
-    "ev_stream_late" -> ((s, dir) =>
-      graft.streaming.StreamingExtract.streamLateReconcileQuery(s, t(s, dir, "events"))),
-
-    // REAL stream-stream interval join (purchase attribution): two
-    // watermarked file streams, append mode, state bounded by the
-    // watermark horizon on both sides; final table equals the batch
-    // join bit-for-bit.
-    "ev_stream_join" -> ((s, dir) =>
-      graft.streaming.StreamingExtract.streamJoinQuery(s, t(s, dir, "events"))),
-
-    // dropDuplicatesWithinWatermark under a REAL replayed-duplicate
-    // stream (the at-least-once-source shape): the 5th micro-batch
-    // replays recent rows; watermark-bounded state dedups them and the
-    // final aggregate equals the duplicate-free batch closed form.
-    "ev_stream_dedup" -> ((s, dir) =>
-      graft.streaming.StreamingExtract.streamDedupQuery(s, t(s, dir, "events"))),
-
-    // Pivot (counts per event_type column, one row per hour): the §2.4
-    // wide-aggregation family over an explicit pivot value list. Spark
-    // plans pivot as two aggregates (group-by-(win,type) → pivot-by-win),
-    // i.e. two exchanges — but BOTH carry map-side-collapsed partial
-    // counts (≤ windows×types rows per partition), never the event
-    // stream, so the shape holds at corpus scale.
-    "ev_pivot" -> ((s, dir) => {
-      import s.implicits._
-      t(s, dir, "events")
-        .withColumn("win_us",
-          unix_micros(date_trunc("hour", $"ts").cast("timestamp_ltz")))
-        .groupBy($"win_us")
-        .pivot("event_type", Seq("view", "click", "purchase", "signup", "error"))
-        .agg(count(lit(1)))
-        .select($"win_us",
-          coalesce($"view", lit(0L)).as("n_view"),
-          coalesce($"click", lit(0L)).as("n_click"),
-          coalesce($"purchase", lit(0L)).as("n_purchase"),
-          coalesce($"signup", lit(0L)).as("n_signup"),
-          coalesce($"error", lit(0L)).as("n_error"))
-    }),
-
-    // As-of join (latest prior view per purchase) via union-tag + window
-    // carry-forward: ONE exchange, no inequality-join pair explosion.
-    "ev_asof_join" -> ((s, dir) =>
-      graft.operators.AsofOps.asofLatestPrior(t(s, dir, "events"),
-        leftType = "purchase", rightType = "view")),
-
-    "ev_json" -> ((s, dir) => {
-      import s.implicits._
-      t(s, dir, "events")
-        .select($"event_type", get_json_object($"props", "$.k").cast("long").as("k"))
-        .groupBy($"event_type")
-        .agg(sum($"k").as("sum_k"), count(lit(1)).as("n"))
-    }),
-
-    "set_viewers_no_purchase" -> ((s, dir) => {
-      import s.implicits._
-      // hours with views but no purchases: distinct + anti join (EXCEPT)
-      val ev = t(s, dir, "events").withColumn("hr",
-        unix_micros(date_trunc("hour", $"ts").cast("timestamp_ltz")))
-      val viewed = ev.filter($"event_type" === "view").select($"hr").distinct()
-      val bought = ev.filter($"event_type" === "purchase").select($"hr").distinct()
-      viewed.join(bought, Seq("hr"), "left_anti")
-    }),
-
-    // Bloom-filter semi-join (runtime-filter pattern): the purchaser
-    // filter crosses the cluster as 64 longs instead of a shuffle;
-    // exact-vs-candidate accounting and the exact bit pattern gated.
-    "bloom_semijoin" -> ((s, dir) =>
-      graft.operators.SketchOps.bloomSemiJoin(t(s, dir, "events"))),
-
-    // Mergeable fixed-bin histogram quantile: p50/p95 per event_type
-    // from a constant-size count aggregation (the streaming quantile
-    // sketch when the value domain is known).
-    "agg_hist_quantile" -> ((s, dir) =>
-      graft.operators.SketchOps.histQuantiles(t(s, dir, "events"))),
-
-    "agg_median" -> ((s, dir) => {
-      import s.implicits._
-      // exact interpolating median over integer cents; ×2 keeps the
-      // midpoint case (.5) integer-exact across engines
-      t(s, dir, "events")
-        .withColumn("value_c", floor($"value" * 100).cast("long"))
-        .groupBy($"event_type")
-        .agg(floor(expr("percentile(value_c, 0.5)") * 2).cast("long").as("med2"),
-             count(lit(1)).as("n"))
-    }),
-
-    // CUBE (all 2^2 grouping sets in one pass — partial-aggregable like
-    // any hash aggregate, the §2.4 wide-grouping sibling of q_rollup).
-    "q_cube" -> ((s, dir) => {
-      import s.implicits._
-      t(s, dir, "lineitem")
-        .cube($"l_returnflag", $"l_linestatus")
-        .agg(count(lit(1)).as("n"),
-             sum(round($"l_quantity" * 100).cast("long")).as("qty_c"))
-        .select(coalesce($"l_returnflag", lit("(all)")).as("l_returnflag"),
-                coalesce($"l_linestatus", lit("(all)")).as("l_linestatus"),
-                $"n", $"qty_c")
-    }),
-
-    "q_rollup" -> ((s, dir) => {
-      import s.implicits._
-      val geo = t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")), $"c_nationkey" === $"n_nationkey")
-        .select($"c_custkey", $"n_name")
-      t(s, dir, "orders")
-        .join(geo, $"o_custkey" === $"c_custkey")
-        .rollup($"n_name")
-        .agg(count(lit(1)).as("n_orders"),
-             sum(round($"o_totalprice" * 100).cast("long")).as("total_cents"))
-        .select(coalesce($"n_name", lit("(all)")).as("n_name"),
-                $"n_orders", $"total_cents")
-    }),
-
-    // Custom whole-operator plan (LogicalPlan + Rule + Strategy +
-    // SparkPlan via extensions): the rank-filter window re-plans as two
-    // sort-free bounded-heap TopKPerKeyExec passes around one exchange.
-    "topk_native" -> ((s, dir) => {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      graft.plans.TopKPerKeyPlans.TopKPerKeyExtension.install(s)
-      t(s, dir, "events")
-        .withColumn("value_c", floor($"value" * 100).cast("long"))
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy($"user_id")
-            .orderBy($"value_c".desc, $"event_id")).cast("long"))
-        .filter($"rnk" <= 3)
-        .select($"user_id", $"event_id", $"value_c", $"rnk")
-    }),
-
-    "topk_brands" -> ((s, dir) => {
-      import s.implicits._
-      t(s, dir, "part").groupBy($"p_brand")
-        .agg(count(lit(1)).as("n"))
-        .orderBy($"n".desc, $"p_brand")
-        .limit(5)
-    }),
-
-    // ---- text analysis over documents (training-data ops) ----
-    "ta_tokens" -> ((s, dir) => {
-      import s.implicits._
-      t(s, dir, "documents")
-        .select($"doc_id",
-          size(split($"text", " ")).cast("long").as("n_tokens"),
-          length($"text").cast("long").as("n_chars_q"))
-    }),
-
-    "dedup_exact" -> ((s, dir) => {
-      import s.implicits._
-      t(s, dir, "documents")
-        .groupBy(md5($"text").as("fp"))
-        .agg(count(lit(1)).as("n"), min($"doc_id").as("keep_id"))
-        .agg(count(lit(1)).as("n_unique"),
-             sum($"n" - 1).cast("long").as("n_dup_rows"))
-    }),
-
-    // ---- text analysis (training-data ops) ----
-    // (renamed from ta_bpe: this is regex tokenization counts, not BPE —
-    // the real BPE surfaces are tok_bpe / tok_bpe_learn below)
-    "ta_tokens_re" -> ((s, dir) => TextOps.tokenCounts(t(s, dir, "documents"))),
-
-    // Real BPE, fixture ranks (tokenizer.json analog — ref
-    // cli/app.rs:80-85): broadcast merge table learned at build time
-    // from the fixed spec seed, greedy rank-order encode in one narrow
-    // scan with a per-partition word memo. The oracle replays the merge
-    // loop EXACTLY (rank-ordered replace chain over a separator-marked
-    // segmentation) and hash-gates the exact id sequences via the
-    // order-sensitive fingerprint plus the lossless decode flag.
-    "tok_bpe" -> ((s, dir) =>
-      graft.operators.BpeOps.encodeDocs(s, t(s, dir, "documents"))),
-
-    // Real BPE, corpus-learned ranks: merge table learned from the
-    // corpus's own bounded top-V word-frequency table (driver collect
-    // bounded by V — dictionary-scale), broadcast, applied identically.
-    // The oracle RE-LEARNS the merges from the documents table in SQL
-    // (32 unrolled iterations — BpeOps.learnOracleSql) and hash-gates
-    // the exact order-sensitive id fingerprints AND per-doc lossless
-    // decode∘encode identity; the learned table is also pinned by BpeSpec.
-    "tok_bpe_learn" -> ((s, dir) =>
-      graft.operators.BpeOps.learnAndEncode(s, t(s, dir, "documents"))),
-    "ta_quality" -> ((s, dir) => TextOps.quality(t(s, dir, "documents"))),
-    "ta_langid" -> ((s, dir) => TextOps.langId(t(s, dir, "documents"))),
-    "ta_fingerprint" -> ((s, dir) => TextOps.fingerprint(t(s, dir, "documents"))),
-
-    // KMV distinct-count sketch: per-source vocabulary cardinality where
-    // the exchange carries <= k longs per source, not the token stream.
-    "corpus_vocab_kmv" -> ((s, dir) => TextOps.vocabKmv(t(s, dir, "documents"))),
-
-    // HyperLogLog register sketch per source: constant 256-byte partial
-    // state below ONE exchange regardless of group size (KMV's
-    // complement — holds its error at any cardinality). Registers,
-    // fingerprint, and the integer HLL estimate are all replayed
-    // bit-for-bit by the oracle from the shared md5i hash.
-    "corpus_vocab_hll" -> ((s, dir) => TextOps.vocabHll(t(s, dir, "documents"))),
-
-    // ---- corpus curation (training-data ops) ----
-    // Gopher-style duplicate-2-gram stats: in-row sort+fold, zero exchanges.
-    "ta_repetition" -> ((s, dir) => CurateOps.repetition(t(s, dir, "documents"))),
-    // Deterministic PII injection + redaction; oracle re-verifies the exact
-    // scrubbed bytes via md5, not just the match counts.
-    "pii_scrub" -> ((s, dir) => CurateOps.piiScrub(t(s, dir, "documents"))),
-    // Per-source cap on the TopKPerKey native rank-filter shape.
-    "curate_src_cap" -> ((s, dir) => {
-      graft.plans.TopKPerKeyPlans.TopKPerKeyExtension.install(s)
-      CurateOps.sourceCap(t(s, dir, "documents"), cap = 20)
-    }),
-    // End-to-end keep/drop: quality >= 70 x lang = en x drop non-rep dup
-    // cluster members x per-source cap 15 — one declarative plan.
-    "curate_pipeline" -> ((s, dir) => {
-      graft.plans.TopKPerKeyPlans.TopKPerKeyExtension.install(s)
-      CurateOps.curate(s, t(s, dir, "documents"))
-    }),
-    // Sequence packing (concat-and-chunk): per-source token streams cut
-    // into 256-token training windows via a DISTRIBUTED two-pass prefix
-    // sum (per-partition totals + broadcast offsets) — never a
-    // per-source window funnel. Oracle uses the window formulation.
-    "pack_chunks" -> ((s, dir) =>
-      graft.operators.PackOps.packChunks(s, t(s, dir, "documents"))),
-    // Token-budget corpus mixing: per-source quota sampling in a
-    // deterministic md5i order, running total via the same distributed
-    // prefix-sum scan (PrefixSum.exclusive) as pack_chunks.
-    "mix_budget" -> ((s, dir) =>
-      graft.operators.MixOps.tokenBudget(s, t(s, dir, "documents"))),
-
-    // ---- near-duplicate detection ----
-    "dedup_minhash" -> ((s, dir) => DedupOps.minhashPairs(s, t(s, dir, "documents"))),
-    "dedup_simhash" -> ((s, dir) => DedupOps.simhashDf(s, t(s, dir, "documents"))),
-    "dedup_ngram" -> ((s, dir) => DedupOps.ngramJaccardPairs(s, t(s, dir, "documents"))),
-    // banded candidate stage (8× fewer reduce groups, in-buffer doc
-    // dedup, band-granular viral cut — ~20% faster measured; see
-    // DedupOps.ngramJaccardPairsBanded)
-    "dedup_ngram_banded" -> ((s, dir) =>
-      DedupOps.ngramJaccardPairsBanded(s, t(s, dir, "documents"))),
-    // ExactSubstr dedup (Lee et al. 2022): every maximal ≥8-word run
-    // that appears verbatim in ≥2 docs, as (doc_id, span_start,
-    // span_len) word-offset spans — windowed key postings through ONE
-    // bounded-collect exchange, gaps-and-islands merge per doc (see
-    // DedupOps.exactSubstrSpans).
-    "dedup_substr" -> ((s, dir) =>
-      DedupOps.exactSubstrSpans(s, t(s, dir, "documents"))),
-    // The curation ACTION over those spans: cut every duplicated run
-    // out of the text (one compact span-array join + a codegen'd HOF
-    // pass — no re-tokenize of the corpus; see DedupOps.exactSubstrCut).
-    "curate_substr" -> ((s, dir) =>
-      DedupOps.exactSubstrCut(s, t(s, dir, "documents"))),
-    "dedup_embedding" -> ((s, dir) =>
-      DedupOps.embeddingNearDupPairs(s, t(s, dir, "embeddings"))),
-    // Multiprobe LSH: each band also probes its Hamming-1 neighbor
-    // values, recovering near-threshold pairs banding misses; exact
-    // cosine verification unchanged (extra probes add recall only).
-    "dedup_embedding_mp" -> ((s, dir) =>
-      DedupOps.embeddingNearDupPairsProbed(s, t(s, dir, "embeddings"))),
-    // Incremental dedup over a REAL 3-micro-batch ingestion: each batch's
-    // band keys probe the accumulated committed index (never a history
-    // re-scan), pairs commit idempotently per batch, flood tails degrade
-    // to a representative star under the streaming prefix cap. The
-    // oracle replays arrival-order (= doc_id-order) prefix semantics.
-    "dedup_stream" -> ((s, dir) =>
-      graft.streaming.StreamDedup.streamingMinhashPairs(s, t(s, dir, "documents"))),
-    // Connected components over the verified minhash pairs (alternating
-    // large-star/small-star): the actionable dedup output — one cluster
-    // label + size per near-dup doc. Oracle replays it as a recursive-CTE
-    // transitive closure with min-label components.
-    "dedup_clusters" -> ((s, dir) =>
-      ClusterOps.minhashClusters(s, t(s, dir, "documents"))),
-
-    // ---- similarity search over embeddings ----
-    "ann_topk" -> ((s, dir) =>
-      SimilarityOps.bruteForceTopK(s, t(s, dir, "embeddings"), nQueries = 8, k = 5)
-        .withColumnRenamed("rank", "rnk")),
-    "ann_lsh_sketch" -> ((s, dir) => SimilarityOps.lshSketch(s, t(s, dir, "embeddings"))),
-    // IVF coarse-quantizer scale path: 16 cells, one integer-exact Lloyd
-    // step, 4-cell probe funnel — the oracle replays build+probe+rank.
-    "ann_ivf" -> ((s, dir) =>
-      SimilarityOps.ivfTopK(s, t(s, dir, "embeddings"), nCentroids = 16,
-        nProbe = 4, nQueries = 8, k = 5)
-        .withColumnRenamed("rank", "rnk")),
-
-    // ---- deterministic sampling / dataset splits ----
-    "sample_stratified" -> ((s, dir) =>
-      graft.operators.SampleOps.sampleStats(t(s, dir, "documents"), "source", pct = 10)),
-    "split_assign" -> ((s, dir) =>
-      graft.operators.SampleOps.splitStats(t(s, dir, "documents"), "lang")),
-    // Integer-exact A-ES-style weighted sample (k per source, weight =
-    // n_chars) on the native TopKPerKey rank-filter shape.
-    "sample_weighted" -> ((s, dir) =>
-      graft.operators.SampleOps.weightedSample(t(s, dir, "documents"), k = 10)),
-
-    // ---- multimodal binary-column plumbing (real header decode) ----
-    "mm_decode" -> ((s, dir) => MediaOps.decodeMeta(s, t(s, dir, "documents")).toDF()),
-    "mm_frames" -> ((s, dir) => MediaOps.frameSample(s, t(s, dir, "documents"))),
-    // S3's base64 half: data:image/<fmt>;base64 URLs decoded via the
-    // codegen'd unbase64 and header-parsed; non-data schemes rejected
-    // like the reference rejects local paths (server generation.rs).
-    "mm_data_url" -> ((s, dir) => MediaOps.dataUrlDecode(s, t(s, dir, "documents"))),
-    "mm_tiling" -> ((s, dir) =>
-      graft.operators.TilingOps.tilingPlan(s, t(s, dir, "documents"))),
-    // crop_mode = false: no tiles, image_size-grid placeholders (111).
-    "mm_tiling_nocrop" -> ((s, dir) =>
-      graft.operators.TilingOps.tilingPlanNoCrop(s, t(s, dir, "documents"))),
-
-    // REAL pixel decode end-to-end: rule pixels → compressed PNG (all 5
-    // row filters) → Inflater decode → ratio resize + tile crops +
-    // letterboxed global view (Pillow-exact fixed-point bicubic) →
-    // normalized-tensor checksums. The oracle replays every stage.
-    "mm_pixels" -> ((s, dir) =>
-      graft.operators.PixelOps.pixelParts(s, t(s, dir, "documents"))),
-
-    // mm_pixels at the reference's SHIPPED geometry (base 1024 /
-    // image 640, ref config.rs:89-90): the same real encode → decode →
-    // tiles → full-size bicubic global view, on a 1-per-2000-docs
-    // subset, hash-gated on every-64th-row slice checksums (the full
-    // fold is gated byte-complete by mm_pixels at small geometry; the
-    // slice keeps the DuckDB convolution replay tractable).
-    "mm_pixels_ref" -> ((s, dir) =>
-      graft.operators.PixelOps.pixelPartsRefGeom(s, t(s, dir, "documents"))),
-
-    // mm_pixels_ref with EVERY pixel under the gate: order-free modular
-    // checksums (Σ (pos+1)·h(v) mod P over all ~3.1M positions per
-    // part) replace the row-sliced polynomial fold, so the oracle
-    // aggregates full frames with a plain sum() over generated grids —
-    // no list materialization — closing the slice caveat at the
-    // reference's shipped 1024/640 geometry.
-    "mm_pixels_full" -> ((s, dir) =>
-      graft.operators.PixelOps.pixelPartsRefGeomFull(s, t(s, dir, "documents"))),
-
-    // PNG profile space (round-4 verdict "what's missing" #2): the same
-    // closed-form content encoded through twelve real spec profiles —
-    // palette (8/4-bit), grayscale (1/4/8/16-bit), gray+alpha, RGBA,
-    // 16-bit truecolor, Adam7 interlace — each REALLY decoded (per-pass
-    // unfilter, bit unpack, palette expand, alpha drop, 16-bit strip)
-    // and checksummed against the oracle's closed-form replay.
-    "mm_png_profiles" -> ((s, dir) =>
-      graft.operators.PixelOps.pngProfileParts(s, t(s, dir, "documents"))),
-
-    // Real GIF decode (variable-width LZW, sub-blocks, 256-entry global
-    // palette — pure JVM like the PNG Inflater path) feeding the SAME
-    // resize/tile/letterbox/normalize pipeline; checksums gate every
-    // decoded byte, so any LZW/bit-unpacking bug hash-fails.
-    "mm_gif_pixels" -> ((s, dir) =>
-      graft.operators.PixelOps.gifPixelParts(s, t(s, dir, "documents"))),
-
-    // Interlace gate: the SAME frames transmitted in GIF89a 4-pass
-    // interlace row order — the decoder's de-interlace scatter must land
-    // every pixel back in place, so this hash-equals mm_gif_pixels'
-    // oracle verbatim (the mm_jpeg_prog pattern).
-    "mm_gif_interlace" -> ((s, dir) =>
-      graft.operators.PixelOps.gifInterlacePixelParts(s, t(s, dir, "documents"))),
-
-    // Small-code gate: 16-color frames through 4-bit LZW minimum code
-    // size (codes start at 5 bits and widen through boundaries the
-    // 8-bit stream never crosses) AND interlace; the oracle replays the
-    // mod-16 closed-form rule.
-    "mm_gif_small" -> ((s, dir) =>
-      graft.operators.PixelOps.gifSmallPixelParts(s, t(s, dir, "documents"))),
-
-    // REAL animated-GIF frame sampling (upgrades the mm_frames metadata
-    // stub to a real codec path): multi-frame GIF89a with sub-rectangle
-    // patch frames, per-pixel transparency, per-frame interlace, and
-    // graphic-control extensions — decoded by compositing onto the
-    // logical screen, every 3rd canvas checksummed. The oracle replays
-    // "last opaque writer ≤ f per pixel" in closed form.
-    "mm_gif_frames" -> ((s, dir) =>
-      graft.operators.PixelOps.gifFramesParts(s, t(s, dir, "documents"))),
-
-    // Real baseline JPEG decode (canonical Huffman per T.81 Annex C/F,
-    // byte unstuffing, restart markers, dequant + exact IDCT — pure JVM
-    // like the PNG/GIF paths) feeding the SAME resize/tile/letterbox/
-    // normalize pipeline. Block-constant rule images make the lossy
-    // codec bit-exact (DC-only blocks, step-8 DC quant), so the oracle
-    // replays decoded pixels from the closed-form rule while the engine
-    // runs the full entropy decode; general-coefficient paths are pinned
-    // by JpegSpec against the JDK ImageIO codec.
-    "mm_jpeg_pixels" -> ((s, dir) =>
-      graft.operators.PixelOps.jpegPixelParts(s, t(s, dir, "documents"))),
-
-    // PROGRESSIVE (SOF2) JPEG decode (round-4 verdict "what's missing"
-    // #1 — the highest-frequency codec a real WARC crawl contains): the
-    // same rule images through spectral selection, DC successive
-    // approximation, EOB-run band scans, and restart markers. The DC
-    // point transform is integer-exact, so the oracle is mm_jpeg_pixels'
-    // closed-form replay VERBATIM — any progressive entropy bug
-    // hash-fails. General-content progressive (incl. AC refinement) is
-    // pinned by JpegSpec against ImageIO-written libjpeg scan scripts.
-    "mm_jpeg_prog" -> ((s, dir) =>
-      graft.operators.PixelOps.jpegProgPixelParts(s, t(s, dir, "documents"))),
-
-    // Adobe CMYK (4-component + APP14) decode — the JPEG family
-    // PDF-embedded print images use: four block-constant inverted-ink
-    // planes through the real 4:4:4 interleaved entropy codec, folded
-    // to RGB with the exact integer rule R=(2·c·k+255)/510 that the
-    // oracle replays in closed form. ImageIO readRaster cross-checks
-    // the wire format in JpegSpec.
-    "mm_jpeg_cmyk" -> ((s, dir) =>
-      graft.operators.PixelOps.jpegCmykPixelParts(s, t(s, dir, "documents"))),
-
-    // Audio modality: REAL RIFF/WAVE PCM-16 codec (chunk walk, LE byte
-    // order) → windowed integer energy features; the closed-form sample
-    // rule lets the oracle replay every window exactly.
-    "mm_audio_energy" -> ((s, dir) =>
-      graft.operators.AudioOps.audioParts(s, t(s, dir, "documents"))),
-
-    // S1 source end-to-end: media items materialized as real image files
-    // (PNG/JPEG/GIF headers), scanned back via the binaryFile DataSource,
-    // dims parsed from the scanned bytes.
-    "bin_source" -> ((s, dir) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-bin-source").toString
-      MediaOps.binaryFileRoundTrip(s, t(s, dir, "documents"), out).toDF()
-    }),
-
-    // End-to-end resumable-write round-trip: extract → bucketed manifest
-    // write (TableIO) → read back COMMITTED buckets only → per-bucket
-    // stats. The oracle recomputes bucket membership and span counts from
-    // documents.parquet, so the manifest/commit/read layer itself is
-    // driver-verified.
-    "tio_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-tio-verify").toString
-      val rows = graft.pipeline.Extraction.extractRows(
-        graft.corpus.CorpusDerive.derive(s, dir), buckets = 16)
-      graft.pipeline.TableIO.writeResumable(rows, out)
-      graft.pipeline.TableIO.readCommitted(s, out)
-        .groupBy($"bucket".cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-             sum($"span_count").cast("long").as("n_spans"))
-    }),
-
-    // Manifest-stats scan pruning (Iceberg file-skipping analog): range-
-    // clustered resumable write, then a narrow id-range read that must
-    // touch only the overlapping buckets (require(read < total)) while
-    // returning exactly the full-scan filter's rows; bucket bounds and
-    // totals replayed closed-form.
-    "tio_prune" -> ((s, dir) => {
-      import s.implicits._
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-tio-prune").toString
-      val maxId = t(s, dir, "documents").agg(max($"doc_id")).as[Long].head()
-      val rows = graft.pipeline.Extraction.extractRowsClustered(
-        graft.corpus.CorpusDerive.derive(s, dir), buckets = 16, maxId = maxId)
-      graft.pipeline.TableIO.writeResumable(rows, out)
-      val lo = maxId * 2 / 5; val hi = maxId * 3 / 5
-      val (pruned, read, total) = graft.pipeline.TableIO.readCommittedPruned(
-        s, out, f"d$lo%010d", f"d$hi%010d")
-      require(read < total, s"pruning must skip buckets ($read/$total read)")
-      pruned.agg(count(lit(1)).as("n_docs"),
-          sum($"span_count").cast("long").as("n_spans"))
-        .withColumn("buckets_read", lit(read.toLong))
-        .withColumn("buckets_total", lit(total.toLong))
-    }),
-
-    // Bloom-pruned point reads on the HASH layout (round-4 verdict item
-    // 10): min/max bounds can't prune hash buckets (every id range
-    // spreads across all of them), so each bucket manifest carries a
-    // 64×63-bit doc_id Bloom; a bounded id-set probe reads only the
-    // buckets whose Bloom maybe-contains a queried id. False positives
-    // are deterministic — the oracle replays the words bit-for-bit and
-    // predicts buckets_read EXACTLY, FPs included.
-    "tio_prune_hash" -> ((s, dir) => {
-      import s.implicits._
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-tio-prune-hash").toString
-      val rows = graft.pipeline.Extraction.extractRows(
-        graft.corpus.CorpusDerive.derive(s, dir), buckets = 16)
-      graft.pipeline.TableIO.writeResumable(rows, out)
-      val ids = PruneHashProbeIds
-      val (pruned, read, total) = graft.pipeline.TableIO
-        .readCommittedPrunedByIds(s, out, ids)
-      require(read < total,
-        s"bloom pruning must skip buckets ($read/$total read)")
-      pruned.agg(count(lit(1)).as("n_docs"),
-          sum($"span_count").cast("long").as("n_spans"))
-        .withColumn("buckets_read", lit(read.toLong))
-        .withColumn("buckets_total", lit(total.toLong))
-    }),
-
-    // Upsert / MERGE-on-read (Iceberg v2 equality-delete analog): base
-    // batch + an upsert batch rewriting every doc_id % 3 == 0 row down
-    // to one span; latest-batch-wins read, poisoned-replay no-op,
-    // batch-id time travel, and the compactMerged fixpoint all asserted
-    // in-query; final per-bucket totals hash-gated against the closed
-    // form.
-    "tio_upsert" -> ((s, dir) => {
-      import s.implicits._
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-tio-upsert").toString
-      val rows = graft.pipeline.Extraction.extractRows(
-        graft.corpus.CorpusDerive.derive(s, dir), buckets = 16)
-      require(graft.pipeline.TableIO.appendBatchIdempotent(rows, out, 0L))
-      val upd = rows
-        .filter(substring($"doc_id", 2, 10).cast("long") % 3 === 0)
-        .map(r => r.copy(spans = r.spans.take(1), span_count = 1))
-      require(graft.pipeline.TableIO.appendBatchIdempotent(upd, out, 1L))
-      // poisoned replay: a second commit of batch 1 is a no-op
-      require(!graft.pipeline.TableIO.appendBatchIdempotent(upd, out, 1L))
-      // time travel: as-of batch 0 shows the pre-upsert span totals
-      val pre = graft.pipeline.TableIO.readMerged(s, out, asOfBatch = 0L)
-        .agg(sum($"span_count")).as[Long].head()
-      val post = graft.pipeline.TableIO.readMerged(s, out)
-        .agg(sum($"span_count")).as[Long].head()
-      require(pre > post, s"upsert must shrink span totals ($pre -> $post)")
-      // merge-compaction must be a fixpoint of the merged view
-      graft.pipeline.TableIO.compactMerged(s, out)
-      graft.pipeline.TableIO.readMerged(s, out)
-        .groupBy($"bucket".cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-             sum($"span_count").cast("long").as("n_spans"))
-    }),
-
-    // Compaction lifecycle (Iceberg rewrite_data_files/expire_snapshots
-    // analog) under the hash gate: stream-style commits (3 tiny + 1 bulk)
-    // → binpack folds ONLY the small tail → full rewrite supersedes all →
-    // snapshot expiry physically removes dead state. Row-equality is
-    // asserted at every stage in-query; the returned per-bucket totals
-    // must still match the same closed form as tio_roundtrip, so any
-    // row lost or duplicated across the rewrites hash-fails.
-    "tio_compact" -> ((s, dir) => {
-      import s.implicits._
-      import graft.pipeline.TableIO
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-tio-compact").toString
-      val rows = graft.pipeline.Extraction.extractRows(
-        graft.corpus.CorpusDerive.derive(s, dir), buckets = 16)
-      val slice = (i: Int) =>
-        rows.filter(expr(s"CAST(substring(doc_id, 2) AS BIGINT) % 100 = $i"))
-      (0 until 3).foreach(i =>
-        TableIO.appendBatchIdempotent(slice(i), out, i.toLong))
-      TableIO.appendBatchIdempotent(
-        rows.filter(expr("CAST(substring(doc_id, 2) AS BIGINT) % 100 >= 3")),
-        out, 3L)
-      val nBefore = TableIO.readTable(s, out).count()
-      val filesBefore = TableIO.visibleDataFiles(out).size
-      // threshold = the bulk batch's on-disk size: strictly-smaller (the
-      // tiny commits) folds, the bulk batch itself does not — robust to
-      // the sf under test
-      val bulkBytes = {
-        val p = java.nio.file.Paths.get(out, "data", "batch=3")
-        scala.util.Using.resource(java.nio.file.Files.walk(p)) { st =>
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala
-            .filter(java.nio.file.Files.isRegularFile(_))
-            .map(java.nio.file.Files.size).sum
-        }
-      }
-      val snap1 = TableIO.compactSmall(s, out, smallBytes = bulkBytes)
-        .getOrElse(sys.error("binpack found no small tail to fold"))
-      val folded = TableIO.compactions(out)
-        .find(_.snapshot == snap1).get.supersededBatches.sorted
-      require(folded == Seq(0L, 1L, 2L),
-        s"binpack must fold exactly the tiny commits, got $folded")
-      require(TableIO.readTable(s, out).count() == nBefore,
-        "rows changed across binpack")
-      require(TableIO.visibleDataFiles(out).size < filesBefore,
-        "binpack must shrink the visible file count")
-      // time travel to the pre-binpack state still sees the raw batches
-      require(TableIO.readTable(s, out, asOfSnapshot = snap1 - 1)
-        .count() == nBefore, "time travel to pre-binpack state broken")
-      val snap2 = TableIO.compact(s, out)
-      require(snap2 > snap1, "full rewrite must advance the snapshot")
-      require(TableIO.readTable(s, out).count() == nBefore,
-        "rows changed across full compaction")
-      require(TableIO.expireSnapshots(out) > 0,
-        "expiry must remove superseded state")
-      require(TableIO.committedBatches(out).isEmpty,
-        "all batch dirs were superseded; expiry must drop their manifests")
-      TableIO.readTable(s, out)
-        .groupBy($"bucket".cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-             sum($"span_count").cast("long").as("n_spans"))
-    }),
-
-    // Schema evolution lifecycle (Iceberg add-column analog) under the
-    // hash gate: v1 batch (base schema) → evolveAddColumn("lang") → v2
-    // batch written WITH the column → full compaction. In-query
-    // invariants: time travel to the pre-evolution snapshot keeps the
-    // old shape; a post-evolution write missing the column is rejected;
-    // compaction preserves the evolved column. The returned per-lang
-    // totals make v1 rows surface as NULL-lang ('none') and v2 rows
-    // carry their written values — any loss of the column across the
-    // rewrite, or evolved values bleeding into old rows, hash-fails.
-    "tio_evolve" -> ((s, dir) => {
-      import s.implicits._
-      import graft.pipeline.TableIO
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-tio-evolve").toString
-      val rows = graft.pipeline.Extraction.extractRows(
-        graft.corpus.CorpusDerive.derive(s, dir), buckets = 16)
-      val idNum = expr("CAST(substring(doc_id, 2) AS BIGINT)")
-      TableIO.appendBatchDf(rows.filter(idNum % 2 === 0).toDF(), out, 0L)
-      val preSnap = TableIO.currentSnapshot(out)
-      val evoSnap = TableIO.evolveAddColumn(out, "lang", "string")
-      require(evoSnap > preSnap, "evolution must advance the snapshot")
-      val v2 = rows.filter(idNum % 2 === 1).toDF()
-        .withColumn("lang", when(idNum % 3 === 0, lit("en")).otherwise(lit("xx")))
-      TableIO.appendBatchDf(v2, out, 1L)
-      require(!TableIO.readTableDf(s, out, asOfSnapshot = preSnap)
-        .columns.contains("lang"),
-        "time travel to pre-evolution snapshot must keep the old schema")
-      require(scala.util.Try(
-        TableIO.appendBatchDf(rows.limit(1).toDF(), out, 9L)).isFailure,
-        "post-evolution write missing the evolved column must be rejected")
-      TableIO.compact(s, out)
-      val df = TableIO.readTableDf(s, out)
-      require(df.columns.contains("lang"),
-        "compaction must preserve the evolved column")
-      df.groupBy(coalesce($"lang", lit("none")).as("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-             sum($"span_count").cast("long").as("n_spans"))
-    }),
-
-    // S7 fixture scan end-to-end: golden span fixtures serialized as
-    // JSON, read back via spark.read.json with an EXPLICIT schema and a
-    // schema_version gate (the reference's fixture loader asserts
-    // schema_version == 1 — baselines/README.md:20-21), and digested
-    // per doc. The DuckDB oracle recomputes the digest from raw
-    // documents, so any corruption in the JSON round-trip hash-fails.
-    "fix_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      import org.apache.spark.sql.types._
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-fixtures").toString
-      graft.pipeline.Extraction
-        .extractDs(graft.corpus.CorpusDerive.derive(s, dir))
-        .select($"doc_id", $"spans", lit(1).as("schema_version"))
-        .write.mode("overwrite").json(out)
-      val schema = StructType(Seq(
-        StructField("doc_id", StringType),
-        StructField("spans", ArrayType(StructType(Seq(
-          StructField("kind", StringType),
-          StructField("text", StringType),
-          StructField("media_ref", StringType),
-          StructField("order", IntegerType))))),
-        StructField("schema_version", IntegerType)))
-      s.read.schema(schema).json(out)
-        .filter($"schema_version" === 1)
-        .select($"doc_id", size($"spans").cast("long").as("n_spans"),
-          md5(array_join(transform($"spans", sp =>
-            concat_ws("|", sp("kind"), sp("text"), sp("media_ref"),
-              sp("order"))), "\u0001")).as("digest"))
-    }),
-
-    // Native codegen'd Catalyst expression (SparkSessionExtensions tier):
-    // normalize noisy text (CRLF + EOS sentinel + padding) back to the
-    // clean original — oracle is simply the original column.
-    "ext_normalize_expr" -> ((s, dir) => {
-      import s.implicits._
-      graft.functions.NormalizeText.register(s)
-      t(s, dir, "documents").select($"doc_id",
-        expr("graft_normalize_text(concat('  ', text, '\r\n', " +
-             "'<｜end▁of▁sentence｜>'))").as("norm"))
-    }),
-
-    // ---- token-stream build (P1-P3/J1/A2 analogs) + expert routing (J3/T1) ----
-    "tok_stream" -> ((s, dir) => graft.operators.TokenOps.tokenAccounting(s, dir)),
-    "tok_valid" -> ((s, dir) => graft.operators.TokenOps.tokenValidity(s, dir)),
-    "tok_dict" -> ((s, dir) =>
-      graft.operators.TokenOps.dictTokenize(s, t(s, dir, "documents"))),
-    // ids → text inverse decode (the reference's display round trip):
-    // encode through the broadcast vocab, decode through its inverse,
-    // report per-doc fidelity + decoded-text digest.
-    "tok_roundtrip" -> ((s, dir) =>
-      graft.operators.TokenOps.dictRoundTrip(s, t(s, dir, "documents"))),
-    "moe_route" -> ((s, dir) =>
-      graft.operators.RouteOps.routeTopK(s, t(s, dir, "embeddings"))),
-    // J3's gather/compute/scatter-back stage: routed rows grouped by
-    // expert, a deterministic per-expert affine applied batched, results
-    // keyed back by (vec_id, expert_idx).
-    "moe_apply" -> ((s, dir) =>
-      graft.operators.RouteOps.applyPerExpert(
-        graft.operators.RouteOps.routeTopK(s, t(s, dir, "embeddings")))(
-        graft.operators.RouteOps.expertAffine)),
-
-    // ---- driver verification of the spec-only components: greedy
-    //      decoder (A3/T4/ST1), window partition (W2), layered config (J4) ----
-    // Per-doc greedy decode over a deterministic per-position score table
-    // (vocab 16, eos=0, budget 8): exercises argmax tie-breaking, the EOS
-    // early stop (EOS never emitted), and the token budget at corpus
-    // scale. Scores depend on (doc, position) only, so the DuckDB oracle
-    // replays the loop in closed form.
-    "dec_greedy" -> ((s, dir) => {
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long].map { id =>
-          val res = graft.extract.Decoder.decodeGreedy(
-            Seq.empty, eos = 0L, maxNewTokens = 8) { seq =>
-            val pos = seq.length
-            (0 until 16).map(t =>
-              (t.toLong, graft.functions.Hashing.md5i(s"dec|$id|$pos|$t").toDouble))
-          }()
-          (id, res.generated.length.toLong,
-            if (res.stoppedByEos) 1L else 0L,
-            res.steps.toLong, res.generated.sum)
-        }.toDF("doc_id", "n_gen", "stopped", "steps", "gen_sum")
-    }),
-
-    // dec_greedy plus the no-repeat-ngram guard the reference's fixture
-    // capture decodes with (no_repeat_ngram_size — capture_baseline.py:
-    // 744). Small geometry (vocab 8, budget 12, n=2) so suppression
-    // actually fires inside the budget; the oracle replays the stateful
-    // ban-then-argmax loop with a recursive CTE over the generated
-    // sequence — a genuinely different replay path than dec_greedy's
-    // closed-form per-position argmax.
-    "dec_greedy_norepeat" -> ((s, dir) => {
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long].map { id =>
-          val res = graft.extract.Decoder.decodeGreedyNoRepeat(
-            Seq.empty, eos = 0L, maxNewTokens = 12, noRepeatNgramSize = 2) { seq =>
-            val pos = seq.length
-            (0 until 8).map(t =>
-              (t.toLong, graft.functions.Hashing.md5i(s"decnr|$id|$pos|$t").toDouble))
-          }()
-          (id, res.generated.length.toLong,
-            if (res.stoppedByEos) 1L else 0L,
-            res.steps.toLong, res.generated.sum)
-        }.toDF("doc_id", "n_gen", "stopped", "steps", "gen_sum")
-    }),
-
-    // Window partition/unpartition invariants over each doc's token
-    // stream (pad to multiples of 14, block, exact inverse).
-    "wp_windows" -> ((s, dir) => {
-      import s.implicits._
-      graft.corpus.CorpusDerive.derive(s, dir).map { doc =>
-        val ts = graft.operators.TokenOps.buildTokenStream(doc)
-        val ids = ts.ids.toSeq
-        val (blocks, n) =
-          graft.operators.WindowPartition.partition(ids)(pad = -2L)
-        val ok = graft.operators.WindowPartition.unpartition(blocks, n) == ids
-        (doc.doc_id, n.toLong, blocks.length.toLong,
-          (blocks.length.toLong * graft.operators.WindowPartition.DefaultWindow - n),
-          if (ok) 1L else 0L)
-      }.toDF("doc_id", "n_tokens", "n_blocks", "pad_len", "roundtrip_ok")
-    }),
-
-    // Layered config resolution table: per doc, an override layer (present
-    // on even ids), a file layer (ids % 3 == 0), and defaults — emitted as
-    // (key, value, winning layer) rows.
-    "conf_resolve" -> ((s, dir) => {
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long].flatMap { id =>
-          val overrides =
-            if (id % 2 == 0) Map("quality.min_words" -> (id % 5).toString)
-            else Map.empty[String, String]
-          val file =
-            if (id % 3 == 0) Map("quality.min_words" -> s"f${id % 7}",
-                                 "tiling.max" -> "9")
-            else Map.empty[String, String]
-          val defaults = Map("quality.min_words" -> "50",
-            "tiling.max" -> "6", "lang.allow" -> "en")
-          graft.functions.LayeredConfig.resolveWithProvenance(
-              "override" -> overrides, "file" -> file, "default" -> defaults)
-            .toSeq.sortBy(_._1)
-            .map { case (k, (v, layer)) => (id, k, v, layer) }
-        }.toDF("doc_id", "key", "value", "layer")
-    }),
-
-    // Tolerance-banded stage parity (A7): tokenizer + quality stages vs
-    // goldens/closed forms, per-stage bands.
-    "parity_stats" -> ((s, dir) => graft.verify.Parity.parityStats(s, dir)),
-
-    // ---- chat-history collapse (P8+T5) + template render (§2.10) ----
-    "msg_collapse" -> ((s, dir) =>
-      graft.conversation.Collapse.collapseQuery(s, dir)),
-
-    "conv_render" -> ((s, dir) => {
-      import s.implicits._
-      val tmpl = graft.conversation.Templates.deepseekTemplate
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .map { case (id, text) =>
-          val ws = text.split(" ").filter(_.nonEmpty)
-          def w(i: Int) = if (i < ws.length) ws(i) else ""
-          val t = tmpl.withSystemMessage(s"doc ${w(0)}")
-          val msgs = Seq(
-            (t.roles._1, Some(s"q ${w(3)}")),
-            (t.roles._2, Some(s"a ${w(1)}")),
-            (t.roles._1, Some("and now?")),
-            (t.roles._2, Option.empty[String]))
-          (id, t.prompt(msgs))
-        }.toDF("conv_id", "prompt")
-    }),
-  )
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map { case (name, g) => name -> g.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  /** Closed-form replay of the synthesized-HTML block stream — shared by
-    * ext_html (direct extraction) and ext_warc (extraction after WARC
-    * framing), which must emit identical rows.
-    */
-  /** Shared GIF rule-replay oracle, parameterized on the index rule:
-    * `saltKey` seeds the per-ref offset s and `mod` is the palette-index
-    * modulus — ("gx", 256) replays the 8-bit rule shared verbatim by
-    * mm_gif_pixels (straight scan) and mm_gif_interlace (4-pass
-    * interlace transmission, which must decode to identical pixels);
-    * ("gc", 16) replays the 16-color rule for mm_gif_small's 4-bit LZW
-    * code path. Geometry/subset salts (grw/grh/gxs) are shared so all
-    * three gates cover the same frame set.
-    */
-  private def mmGifOracleSql(saltKey: String, mod: Int): String =
-    s"""WITH refs AS (
-       |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents WHERE doc_id % 2 = 0
-       |  UNION ALL
-       |  SELECT 'img://' || doc_id || '/1' FROM documents WHERE doc_id % 4 = 0),
-       |meta0 AS (
-       |  SELECT media_ref,
-       |    (${md5iSql("'grw|' || media_ref")} % 2 + 1)::BIGINT AS rw,
-       |    (${md5iSql("'grh|' || media_ref")} % 2 + 1)::BIGINT AS rh,
-       |    (${md5iSql(s"'$saltKey|' || media_ref")} % 251)::BIGINT AS s
-       |  FROM refs
-       |  WHERE ${md5iSql("'gxs|' || media_ref")} % ${graft.operators.PixelOps.SubsetMod} = 0),
-       |meta AS (
-       |  SELECT media_ref, rw, rh, s, 16*rw AS sw, 16*rh AS sh,
-       |    16*rw // greatest(rw,rh) AS nw, 16*rh // greatest(rw,rh) AS nh
-       |  FROM meta0),
-       |gl AS (SELECT *, (16 - nw) // 2 AS xoff, (16 - nh) // 2 AS yoff FROM meta),
-       |src AS (
-       |  SELECT m.media_ref, gx.x, gy.y, ch.c,
-       |    CASE ch.c WHEN 0 THEN (3*gx.x + 5*gy.y + m.s) % $mod
-       |              WHEN 1 THEN (7*((3*gx.x + 5*gy.y + m.s) % $mod) + 11) % 256
-       |              ELSE (13*((3*gx.x + 5*gy.y + m.s) % $mod) + 17) % 256 END AS val
-       |  FROM meta m,
-       |    LATERAL (SELECT unnest(generate_series(0, m.sw - 1)) AS x) gx,
-       |    LATERAL (SELECT unnest(generate_series(0, m.sh - 1)) AS y) gy,
-       |    (SELECT unnest([0,1,2]) AS c) ch),
-       |coef(insz, outsz, oi, si, w) AS (VALUES ${graft.operators.PixelOps.coeffSqlValues}),
-       |hp AS (
-       |  SELECT s.media_ref, t.oi AS x, s.y, s.c,
-       |    greatest(0, least(255, CAST(floor((2097152 + sum(s.val * t.w)) / 4194304.0) AS BIGINT))) AS val
-       |  FROM src s
-       |  JOIN gl g ON s.media_ref = g.media_ref
-       |  JOIN coef t ON t.insz = g.sw AND t.outsz = g.nw AND t.si = s.x
-       |  GROUP BY s.media_ref, t.oi, s.y, s.c),
-       |vp AS (
-       |  SELECT h.media_ref, h.x, t.oi AS y, h.c,
-       |    greatest(0, least(255, CAST(floor((2097152 + sum(h.val * t.w)) / 4194304.0) AS BIGINT))) AS val
-       |  FROM hp h
-       |  JOIN gl g ON h.media_ref = g.media_ref
-       |  JOIN coef t ON t.insz = g.sh AND t.outsz = g.nh AND t.si = h.y
-       |  GROUP BY h.media_ref, h.x, t.oi, h.c),
-       |grid16 AS (
-       |  SELECT gx.x, gy.y, ch.c
-       |  FROM (SELECT unnest(generate_series(0,15)) AS x) gx,
-       |       (SELECT unnest(generate_series(0,15)) AS y) gy,
-       |       (SELECT unnest([0,1,2]) AS c) ch),
-       |canvas AS (
-       |  SELECT g.media_ref, p.x, p.y, p.c, coalesce(v.val, 127) AS val
-       |  FROM gl g CROSS JOIN grid16 p
-       |  LEFT JOIN vp v ON v.media_ref = g.media_ref AND v.x = p.x - g.xoff
-       |    AND v.y = p.y - g.yoff AND v.c = p.c),
-       |tiles AS (
-       |  SELECT m.media_ref, t.ti, (t.ti % m.rw) * 16 AS x0, (t.ti // m.rw) * 16 AS y0
-       |  FROM meta m,
-       |    LATERAL (SELECT unnest(generate_series(0, m.rw*m.rh - 1)) AS ti) t),
-       |tile_vals AS (
-       |  SELECT t.media_ref, t.ti, s.x - t.x0 AS x, s.y - t.y0 AS y, s.c, s.val
-       |  FROM tiles t
-       |  JOIN src s ON s.media_ref = t.media_ref
-       |    AND s.x >= t.x0 AND s.x < t.x0 + 16
-       |    AND s.y >= t.y0 AND s.y < t.y0 + 16),
-       |tile_parts AS (
-       |  SELECT media_ref, 'tile_' || ti AS part,
-       |    CAST(list_reduce(list(val ORDER BY y, x, c), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS pix_fp,
-       |    CAST(list_reduce(list(2*val ORDER BY c, y, x), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS norm_fp
-       |  FROM tile_vals GROUP BY media_ref, ti),
-       |global_parts AS (
-       |  SELECT media_ref, 'global' AS part,
-       |    CAST(list_reduce(list(val ORDER BY y, x, c), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS pix_fp,
-       |    CAST(list_reduce(list(2*val ORDER BY c, y, x), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS norm_fp
-       |  FROM canvas GROUP BY media_ref)
-       |SELECT media_ref, part, 16::BIGINT AS width, 16::BIGINT AS height, pix_fp, norm_fp
-       |FROM (SELECT * FROM tile_parts UNION ALL SELECT * FROM global_parts)""".stripMargin
-
-  /** Shared CTE chain of the ExactSubstr oracles (dedup_substr selects
-    * spans straight off it; curate_substr extends it to rebuild the
-    * cleaned text): tokenize, hash every k-word window, keep windows
-    * with ≥2 distinct docs and ≤ SubstrMaxOcc postings, then merge
-    * duplicated positions (gap ≤ k) into islands. One definition so the
-    * two replays can never drift apart.
-    */
-  private lazy val substrSpanChainSql: String =
-    s"""words AS (
-       |  SELECT doc_id, string_split(text,' ') AS ws FROM documents
-       |  WHERE len(string_split(text,' ')) >= ${graft.operators.DedupOps.SubstrK}
-       |    AND len(string_split(text,' ')) < ${1L << graft.operators.DedupOps.SubstrPosBits}),
-       |occ AS (
-       |  SELECT w.doc_id, g.p,
-       |    ${md5iSql(s"concat_ws(' ', list_slice(w.ws, g.p+1, g.p+${graft.operators.DedupOps.SubstrK}))")} AS key
-       |  FROM words w,
-       |    LATERAL (SELECT unnest(generate_series(0, len(w.ws)-${graft.operators.DedupOps.SubstrK})) AS p) g),
-       |st AS (SELECT key, count(*) AS occs, count(DISTINCT doc_id) AS docs
-       |       FROM occ GROUP BY key),
-       |dup AS (SELECT o.doc_id, o.p FROM occ o JOIN st ON st.key = o.key
-       |        WHERE st.docs >= 2 AND st.occs <= ${graft.operators.DedupOps.SubstrMaxOcc}),
-       |isl AS (SELECT doc_id, p,
-       |  CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p)
-       |         <= ${graft.operators.DedupOps.SubstrK} THEN 0 ELSE 1 END AS brk FROM dup),
-       |grp AS (SELECT doc_id, p,
-       |  sum(brk) OVER (PARTITION BY doc_id ORDER BY p) AS g FROM isl)""".stripMargin
-
-  /** CMYK rule-replay oracle (mm_jpeg_cmyk): four per-channel
-    * inverted-ink block rules (salts jc0..jc3) folded to RGB with the
-    * exact integer rule rgb_c = (2·v_c·v_k + 255) // 510, then the
-    * identical convolution/letterbox/tile machinery as the other
-    * pixel gates. Geometry/subset salts (jrw/jrh/jxs) are shared with
-    * mm_jpeg_pixels so every JPEG gate covers the same frame set.
-    */
-  private lazy val mmJpegCmykOracleSql: String =
-    s"""WITH refs AS (
-       |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents WHERE doc_id % 2 = 0
-       |  UNION ALL
-       |  SELECT 'img://' || doc_id || '/1' FROM documents WHERE doc_id % 4 = 0),
-       |meta0 AS (
-       |  SELECT media_ref,
-       |    (${md5iSql("'jrw|' || media_ref")} % 2 + 1)::BIGINT AS rw,
-       |    (${md5iSql("'jrh|' || media_ref")} % 2 + 1)::BIGINT AS rh,
-       |    (${md5iSql("'jc0|' || media_ref")} % 251)::BIGINT AS s0,
-       |    (${md5iSql("'jc1|' || media_ref")} % 251)::BIGINT AS s1,
-       |    (${md5iSql("'jc2|' || media_ref")} % 251)::BIGINT AS s2,
-       |    (${md5iSql("'jc3|' || media_ref")} % 251)::BIGINT AS s3
-       |  FROM refs
-       |  WHERE ${md5iSql("'jxs|' || media_ref")} % ${graft.operators.PixelOps.SubsetMod} = 0),
-       |meta AS (
-       |  SELECT media_ref, rw, rh, s0, s1, s2, s3, 16*rw AS sw, 16*rh AS sh,
-       |    16*rw // greatest(rw,rh) AS nw, 16*rh // greatest(rw,rh) AS nh
-       |  FROM meta0),
-       |gl AS (SELECT *, (16 - nw) // 2 AS xoff, (16 - nh) // 2 AS yoff FROM meta),
-       |src AS (
-       |  SELECT m.media_ref, gx.x, gy.y, ch.c,
-       |    (2 * ((5*(gx.x // 8) + 9*(gy.y // 8) +
-       |           CASE ch.c WHEN 0 THEN m.s0 WHEN 1 THEN m.s1 ELSE m.s2 END) % 256)
-       |       * ((5*(gx.x // 8) + 9*(gy.y // 8) + m.s3) % 256) + 255) // 510 AS val
-       |  FROM meta m,
-       |    LATERAL (SELECT unnest(generate_series(0, m.sw - 1)) AS x) gx,
-       |    LATERAL (SELECT unnest(generate_series(0, m.sh - 1)) AS y) gy,
-       |    (SELECT unnest([0,1,2]) AS c) ch),
-       |coef(insz, outsz, oi, si, w) AS (VALUES ${graft.operators.PixelOps.coeffSqlValues}),
-       |hp AS (
-       |  SELECT s.media_ref, t.oi AS x, s.y, s.c,
-       |    greatest(0, least(255, CAST(floor((2097152 + sum(s.val * t.w)) / 4194304.0) AS BIGINT))) AS val
-       |  FROM src s
-       |  JOIN gl g ON s.media_ref = g.media_ref
-       |  JOIN coef t ON t.insz = g.sw AND t.outsz = g.nw AND t.si = s.x
-       |  GROUP BY s.media_ref, t.oi, s.y, s.c),
-       |vp AS (
-       |  SELECT h.media_ref, h.x, t.oi AS y, h.c,
-       |    greatest(0, least(255, CAST(floor((2097152 + sum(h.val * t.w)) / 4194304.0) AS BIGINT))) AS val
-       |  FROM hp h
-       |  JOIN gl g ON h.media_ref = g.media_ref
-       |  JOIN coef t ON t.insz = g.sh AND t.outsz = g.nh AND t.si = h.y
-       |  GROUP BY h.media_ref, h.x, t.oi, h.c),
-       |grid16 AS (
-       |  SELECT gx.x, gy.y, ch.c
-       |  FROM (SELECT unnest(generate_series(0,15)) AS x) gx,
-       |       (SELECT unnest(generate_series(0,15)) AS y) gy,
-       |       (SELECT unnest([0,1,2]) AS c) ch),
-       |canvas AS (
-       |  SELECT g.media_ref, p.x, p.y, p.c, coalesce(v.val, 127) AS val
-       |  FROM gl g CROSS JOIN grid16 p
-       |  LEFT JOIN vp v ON v.media_ref = g.media_ref AND v.x = p.x - g.xoff
-       |    AND v.y = p.y - g.yoff AND v.c = p.c),
-       |tiles AS (
-       |  SELECT m.media_ref, t.ti, (t.ti % m.rw) * 16 AS x0, (t.ti // m.rw) * 16 AS y0
-       |  FROM meta m,
-       |    LATERAL (SELECT unnest(generate_series(0, m.rw*m.rh - 1)) AS ti) t),
-       |tile_vals AS (
-       |  SELECT t.media_ref, t.ti, s.x - t.x0 AS x, s.y - t.y0 AS y, s.c, s.val
-       |  FROM tiles t
-       |  JOIN src s ON s.media_ref = t.media_ref
-       |    AND s.x >= t.x0 AND s.x < t.x0 + 16
-       |    AND s.y >= t.y0 AND s.y < t.y0 + 16),
-       |tile_parts AS (
-       |  SELECT media_ref, 'tile_' || ti AS part,
-       |    CAST(list_reduce(list(val ORDER BY y, x, c), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS pix_fp,
-       |    CAST(list_reduce(list(2*val ORDER BY c, y, x), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS norm_fp
-       |  FROM tile_vals GROUP BY media_ref, ti),
-       |global_parts AS (
-       |  SELECT media_ref, 'global' AS part,
-       |    CAST(list_reduce(list(val ORDER BY y, x, c), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS pix_fp,
-       |    CAST(list_reduce(list(2*val ORDER BY c, y, x), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS norm_fp
-       |  FROM canvas GROUP BY media_ref)
-       |SELECT media_ref, part, 16::BIGINT AS width, 16::BIGINT AS height, pix_fp, norm_fp
-       |FROM (SELECT * FROM tile_parts UNION ALL SELECT * FROM global_parts)""".stripMargin
-
-  /** Shared JPEG rule-replay oracle: mm_jpeg_pixels (baseline codec)
-    * and mm_jpeg_prog (progressive codec) must land on the SAME
-    * closed-form pixels, so they share this SQL verbatim.
-    */
-  private lazy val mmJpegOracleSql: String =
-    s"""WITH refs AS (
-         |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents WHERE doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT 'img://' || doc_id || '/1' FROM documents WHERE doc_id % 4 = 0),
-         |meta0 AS (
-         |  SELECT media_ref,
-         |    (${md5iSql("'jrw|' || media_ref")} % 2 + 1)::BIGINT AS rw,
-         |    (${md5iSql("'jrh|' || media_ref")} % 2 + 1)::BIGINT AS rh,
-         |    (${md5iSql("'jx|' || media_ref")} % 251)::BIGINT AS s
-         |  FROM refs
-         |  WHERE ${md5iSql("'jxs|' || media_ref")} % ${graft.operators.PixelOps.SubsetMod} = 0),
-         |meta AS (
-         |  SELECT media_ref, rw, rh, s, 16*rw AS sw, 16*rh AS sh,
-         |    16*rw // greatest(rw,rh) AS nw, 16*rh // greatest(rw,rh) AS nh
-         |  FROM meta0),
-         |gl AS (SELECT *, (16 - nw) // 2 AS xoff, (16 - nh) // 2 AS yoff FROM meta),
-         |src AS (
-         |  SELECT m.media_ref, gx.x, gy.y, ch.c,
-         |    (5*(gx.x // 8) + 9*(gy.y // 8) + m.s) % 256 AS val
-         |  FROM meta m,
-         |    LATERAL (SELECT unnest(generate_series(0, m.sw - 1)) AS x) gx,
-         |    LATERAL (SELECT unnest(generate_series(0, m.sh - 1)) AS y) gy,
-         |    (SELECT unnest([0,1,2]) AS c) ch),
-         |coef(insz, outsz, oi, si, w) AS (VALUES ${graft.operators.PixelOps.coeffSqlValues}),
-         |hp AS (
-         |  SELECT s.media_ref, t.oi AS x, s.y, s.c,
-         |    greatest(0, least(255, CAST(floor((2097152 + sum(s.val * t.w)) / 4194304.0) AS BIGINT))) AS val
-         |  FROM src s
-         |  JOIN gl g ON s.media_ref = g.media_ref
-         |  JOIN coef t ON t.insz = g.sw AND t.outsz = g.nw AND t.si = s.x
-         |  GROUP BY s.media_ref, t.oi, s.y, s.c),
-         |vp AS (
-         |  SELECT h.media_ref, h.x, t.oi AS y, h.c,
-         |    greatest(0, least(255, CAST(floor((2097152 + sum(h.val * t.w)) / 4194304.0) AS BIGINT))) AS val
-         |  FROM hp h
-         |  JOIN gl g ON h.media_ref = g.media_ref
-         |  JOIN coef t ON t.insz = g.sh AND t.outsz = g.nh AND t.si = h.y
-         |  GROUP BY h.media_ref, h.x, t.oi, h.c),
-         |grid16 AS (
-         |  SELECT gx.x, gy.y, ch.c
-         |  FROM (SELECT unnest(generate_series(0,15)) AS x) gx,
-         |       (SELECT unnest(generate_series(0,15)) AS y) gy,
-         |       (SELECT unnest([0,1,2]) AS c) ch),
-         |canvas AS (
-         |  SELECT g.media_ref, p.x, p.y, p.c, coalesce(v.val, 127) AS val
-         |  FROM gl g CROSS JOIN grid16 p
-         |  LEFT JOIN vp v ON v.media_ref = g.media_ref AND v.x = p.x - g.xoff
-         |    AND v.y = p.y - g.yoff AND v.c = p.c),
-         |tiles AS (
-         |  SELECT m.media_ref, t.ti, (t.ti % m.rw) * 16 AS x0, (t.ti // m.rw) * 16 AS y0
-         |  FROM meta m,
-         |    LATERAL (SELECT unnest(generate_series(0, m.rw*m.rh - 1)) AS ti) t),
-         |tile_vals AS (
-         |  SELECT t.media_ref, t.ti, s.x - t.x0 AS x, s.y - t.y0 AS y, s.c, s.val
-         |  FROM tiles t
-         |  JOIN src s ON s.media_ref = t.media_ref
-         |    AND s.x >= t.x0 AND s.x < t.x0 + 16
-         |    AND s.y >= t.y0 AND s.y < t.y0 + 16),
-         |tile_parts AS (
-         |  SELECT media_ref, 'tile_' || ti AS part,
-         |    CAST(list_reduce(list(val ORDER BY y, x, c), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS pix_fp,
-         |    CAST(list_reduce(list(2*val ORDER BY c, y, x), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS norm_fp
-         |  FROM tile_vals GROUP BY media_ref, ti),
-         |global_parts AS (
-         |  SELECT media_ref, 'global' AS part,
-         |    CAST(list_reduce(list(val ORDER BY y, x, c), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS pix_fp,
-         |    CAST(list_reduce(list(2*val ORDER BY c, y, x), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS norm_fp
-         |  FROM canvas GROUP BY media_ref)
-         |SELECT media_ref, part, 16::BIGINT AS width, 16::BIGINT AS height, pix_fp, norm_fp
-         |FROM (SELECT * FROM tile_parts UNION ALL SELECT * FROM global_parts)""".stripMargin
-
-  private lazy val extHtmlOracleSql: String = extHtmlOracleSqlWhere("")
-
-  /** The shared closed-form HTML block stream, optionally restricted to a
-    * doc_id subset — ext_warc_cdx gates its point reads against the same
-    * rule ext_html/ext_warc replay, just filtered to the sampled ids.
-    */
-  private def extHtmlOracleSqlWhere(where: String): String =
-    s"""WITH r AS (
-       |  SELECT doc_id, i,
-       |    ${md5iSql("'hk|' || doc_id || '|' || i")} % 7 AS k,
-       |    ${md5iSql("'hl|' || doc_id || '|' || i")} % 3 + 1 AS lvl
-       |  FROM (SELECT doc_id,
-       |          unnest(generate_series(0, CAST(doc_id % 4 + 2 AS INT))) AS i
-       |        FROM documents$where)),
-       |b AS (
-       |  SELECT doc_id, i, 0 AS cell,
-       |    CASE WHEN k = 0 THEN 'heading' WHEN k IN (1, 2) THEN 'paragraph'
-       |         WHEN k = 5 THEN 'figure' ELSE 'table' END AS kind,
-       |    CASE WHEN k = 0 THEN 'h' || doc_id || '_' || i || ' A&B'
-       |         WHEN k = 1 THEN 'p' || doc_id || '_' || i || ' x!'
-       |         WHEN k = 2 THEN 'see L' || doc_id || '_' || i || ' t' || i || ' of ordinary running prose end'
-       |         WHEN k = 5 THEN 'fig ' || i
-       |         ELSE 'c' || doc_id || '_' || i || '_0' END AS text,
-       |    CASE WHEN k = 5 THEN 'images/' || doc_id || '_' || i || '.png'
-       |         ELSE '' END AS media_ref,
-       |    CASE WHEN k = 2 THEN
-       |      (1000 * length('L' || doc_id || '_' || i))
-       |        // length('see L' || doc_id || '_' || i || ' t' || i || ' of ordinary running prose end')
-       |      ELSE 0 END AS den,
-       |    CASE WHEN k = 0 THEN lvl ELSE 0 END AS lvl_out
-       |  FROM r WHERE k IN (0, 1, 2, 5, 6)
-       |  UNION ALL
-       |  SELECT doc_id, i, 1, 'table', 'c' || doc_id || '_' || i || '_1', '', 0, 0
-       |  FROM r WHERE k = 6)
-       |SELECT doc_id, kind, text, media_ref,
-       |  den::BIGINT AS den_milli, lvl_out::BIGINT AS lvl,
-       |  (row_number() OVER (PARTITION BY doc_id ORDER BY i, cell) - 1)::BIGINT AS ord
-       |FROM b""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "ext_kind_counts" ->
-      """SELECT 'heading' AS kind, count(*)::BIGINT AS cnt FROM documents
-        |UNION ALL
-        |SELECT 'paragraph', CAST(sum(CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT)) AS BIGINT) FROM documents
-        |UNION ALL
-        |SELECT 'table', count(*)::BIGINT FROM documents WHERE doc_id % 3 = 0
-        |UNION ALL
-        |SELECT 'figure', ((SELECT count(*) FROM documents WHERE doc_id % 2 = 0) + (SELECT count(*) FROM documents WHERE doc_id % 4 = 0))::BIGINT""".stripMargin,
-
-    "ext_xycut" ->
-      s"""WITH b AS (
-         |  SELECT doc_id, i,
-         |    ${md5iSql("'xc|' || doc_id || '|' || i")} % 2 AS col,
-         |    ${md5iSql("'xy|' || doc_id || '|' || i")} % 900 AS y0
-         |  FROM (SELECT doc_id,
-         |          unnest(generate_series(0, CAST(doc_id % 4 + 2 AS INT))) AS i
-         |        FROM documents))
-         |SELECT doc_id, i::BIGINT AS box_i,
-         |  (row_number() OVER (PARTITION BY doc_id ORDER BY col, y0, i) - 1)::BIGINT AS ord
-         |FROM b""".stripMargin,
-
-    "ext_pdf_stream" ->
-      s"""WITH r AS (
-         |  SELECT doc_id, i,
-         |    ${md5iSql("'pc|' || doc_id || '|' || i")} % 2 AS col,
-         |    ${md5iSql("'py|' || doc_id || '|' || i")} % 900 AS y0,
-         |    ${md5iSql("'pe|' || doc_id || '|' || i")} % 3 = 0 AS esc,
-         |    ${md5iSql("'pj|' || doc_id || '|' || i")} % 2 = 0 AS tj
-         |  FROM (SELECT doc_id,
-         |          unnest(generate_series(0, CAST(doc_id % 4 + 2 AS INT))) AS i
-         |        FROM documents)),
-         |t AS (
-         |  SELECT doc_id, i, col, y0,
-         |    (CASE WHEN esc THEN '(' || 'w' || doc_id || '_' || i || ')'
-         |          ELSE 'w' || doc_id || '_' || i END)
-         |    || (CASE WHEN tj THEN '_tj' ELSE '' END) AS text
-         |  FROM r)
-         |SELECT doc_id, text,
-         |  (col * ${graft.extract.PdfStream.ColPitch})::BIGINT AS x,
-         |  y0::BIGINT AS y,
-         |  (row_number() OVER (PARTITION BY doc_id ORDER BY col, y0, i) - 1)::BIGINT AS ord
-         |FROM t""".stripMargin,
-
-    "ext_grounding" ->
-      s"""WITH r AS (
-         |  SELECT doc_id, i,
-         |    ${md5iSql("'gk|' || doc_id || '|' || i")} % 4 AS kind_i,
-         |    ${md5iSql("'gc|' || doc_id || '|' || i")} % 2 AS col,
-         |    ${md5iSql("'gy|' || doc_id || '|' || i")} % 900 AS y0
-         |  FROM (SELECT doc_id,
-         |          unnest(generate_series(0, CAST(doc_id % 3 + 1 AS INT))) AS i
-         |        FROM documents)),
-         |t AS (
-         |  SELECT doc_id, i, col, y0, kind_i,
-         |    CASE WHEN kind_i = 2 THEN 'image' ELSE 's' || doc_id || '_' || i END AS ref_text,
-         |    coalesce(CAST(sum(CASE WHEN kind_i = 2 THEN 1 ELSE 0 END) OVER (
-         |      PARTITION BY doc_id ORDER BY i
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS img_before
-         |  FROM r)
-         |SELECT doc_id, ref_text,
-         |  (col * 550)::BIGINT AS x1, y0::BIGINT AS y1,
-         |  (CASE WHEN kind_i = 2 THEN 1 ELSE 0 END)::BIGINT AS is_image,
-         |  CASE WHEN kind_i = 2 THEN '![](images/' || img_before || '.jpg)'
-         |       ELSE ref_text END AS frag,
-         |  (row_number() OVER (PARTITION BY doc_id ORDER BY col, y0, i) - 1)::BIGINT AS ord
-         |FROM t""".stripMargin,
-
-    "ext_html" -> extHtmlOracleSql,
-
-    // Same closed-form rule: ext_warc's output is the ext_html block
-    // stream — hash parity proves the HTML payloads survived the WARC
-    // framing byte-exactly (framing invariants asserted in-query).
-    "ext_warc" -> extHtmlOracleSql,
-
-    // The same rule restricted to the cdx sample predicate: hash parity
-    // proves the indexed member slices decompress to exactly the right
-    // payloads (byte-skipping asserted in-kernel).
-    "ext_warc_cdx" -> extHtmlOracleSqlWhere(
-      s" WHERE ${md5iSql("'cdx|' || doc_id")} % 8 = 0"),
-
-    "ext_html_pipeline" ->
-      s"""WITH r AS (
-         |  SELECT doc_id, i,
-         |    ${md5iSql("'hk|' || doc_id || '|' || i")} % 7 AS k
-         |  FROM (SELECT doc_id,
-         |          unnest(generate_series(0, CAST(doc_id % 4 + 2 AS INT))) AS i
-         |        FROM documents)),
-         |b AS (
-         |  SELECT doc_id, i, 0 AS cell,
-         |    CASE WHEN k = 0 THEN 'heading' WHEN k IN (1, 2) THEN 'paragraph'
-         |         WHEN k = 5 THEN 'figure' ELSE 'table' END AS kind,
-         |    CASE WHEN k = 0 THEN 'h' || doc_id || '_' || i || ' A&B'
-         |         WHEN k = 1 THEN 'p' || doc_id || '_' || i || ' x!'
-         |         WHEN k = 2 THEN 'see L' || doc_id || '_' || i || ' t' || i || ' of ordinary running prose end'
-         |         WHEN k = 5 THEN 'fig ' || i
-         |         ELSE 'c' || doc_id || '_' || i || '_0' END AS text,
-         |    CASE WHEN k = 5 THEN 'images/' || doc_id || '_' || i || '.png'
-         |         ELSE '' END AS media_ref
-         |  FROM r WHERE k IN (0, 1, 2, 5, 6)
-         |  UNION ALL
-         |  SELECT doc_id, i, 1, 'table', 'c' || doc_id || '_' || i || '_1', ''
-         |  FROM r WHERE k = 6)
-         |SELECT doc_id::VARCHAR AS doc_id, kind, text, media_ref,
-         |  (row_number() OVER (PARTITION BY doc_id ORDER BY i, cell) - 1)::BIGINT AS ord
-         |FROM b""".stripMargin,
-
-    "ext_html_md" ->
-      s"""WITH r AS (
-         |  SELECT doc_id, i,
-         |    ${md5iSql("'hk|' || doc_id || '|' || i")} % 7 AS k
-         |  FROM (SELECT doc_id,
-         |          unnest(generate_series(0, CAST(doc_id % 4 + 2 AS INT))) AS i
-         |        FROM documents)),
-         |b AS (
-         |  SELECT doc_id, i, 0 AS cell,
-         |    CASE WHEN k = 5 THEN '![](images/' || doc_id || '_' || i || '.png)'
-         |         WHEN k = 0 THEN 'h' || doc_id || '_' || i || ' A&B'
-         |         WHEN k = 1 THEN 'p' || doc_id || '_' || i || ' x!'
-         |         WHEN k = 2 THEN 'see L' || doc_id || '_' || i || ' t' || i || ' of ordinary running prose end'
-         |         ELSE 'c' || doc_id || '_' || i || '_0' END AS frag
-         |  FROM r WHERE k IN (0, 1, 2, 5, 6)
-         |  UNION ALL
-         |  SELECT doc_id, i, 1, 'c' || doc_id || '_' || i || '_1'
-         |  FROM r WHERE k = 6),
-         |m AS (
-         |  SELECT doc_id,
-         |    string_agg(frag, chr(10) || chr(10) ORDER BY i, cell) AS md
-         |  FROM b GROUP BY doc_id)
-         |SELECT d.doc_id::VARCHAR AS doc_id, coalesce(m.md, '') AS md
-         |FROM documents d LEFT JOIN m ON m.doc_id = d.doc_id""".stripMargin,
-
-    "ext_spans_full" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text,' ') AS words,
-        |         CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT) AS p
-        |  FROM documents)
-        |SELECT printf('d%010d', doc_id) AS doc_id, 'heading' AS kind,
-        |       '# ' || array_to_string(list_slice(words,1,3),' ') AS text,
-        |       '' AS media_ref, 0::BIGINT AS ord
-        |FROM w
-        |UNION ALL
-        |SELECT printf('d%010d', doc_id), 'paragraph',
-        |       array_to_string(list_slice(words, 4+(i-1)*12, 3+i*12), ' '),
-        |       '', i::BIGINT
-        |FROM (SELECT doc_id, words, unnest(generate_series(1, p)) AS i FROM w)
-        |UNION ALL
-        |SELECT printf('d%010d', doc_id), 'table',
-        |       '| k | v |' || chr(10) || '| r' || doc_id || ' | c' || doc_id || ' |',
-        |       '', (1 + p)::BIGINT
-        |FROM w WHERE doc_id % 3 = 0
-        |UNION ALL
-        |SELECT printf('d%010d', doc_id), 'figure', '',
-        |       'img://' || doc_id || '/0',
-        |       (1 + p + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END)::BIGINT
-        |FROM w WHERE doc_id % 2 = 0
-        |UNION ALL
-        |SELECT printf('d%010d', doc_id), 'figure', '',
-        |       'img://' || doc_id || '/1',
-        |       (2 + p + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END)::BIGINT
-        |FROM w WHERE doc_id % 4 = 0""".stripMargin,
-
-    "ext_markdown" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text,' ') AS words,
-        |         CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT) AS p
-        |  FROM documents)
-        |SELECT printf('d%010d', doc_id) AS doc_id,
-        |  array_to_string(
-        |    ['# ' || array_to_string(list_slice(words,1,3),' ')]
-        |    || list_transform(generate_series(1, p),
-        |         i -> array_to_string(list_slice(words, 4+(i-1)*12, 3+i*12), ' '))
-        |    || (CASE WHEN doc_id % 3 = 0
-        |         THEN ['| k | v |' || chr(10) || '| r' || doc_id || ' | c' || doc_id || ' |']
-        |         ELSE []::VARCHAR[] END)
-        |    || (CASE WHEN doc_id % 2 = 0 THEN ['![](img://' || doc_id || '/0)']
-        |         ELSE []::VARCHAR[] END)
-        |    || (CASE WHEN doc_id % 4 = 0 THEN ['![](img://' || doc_id || '/1)']
-        |         ELSE []::VARCHAR[] END),
-        |    chr(10) || chr(10)) AS markdown
-        |FROM w""".stripMargin,
-
-    "fix_roundtrip" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text,' ') AS words,
-        |         CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT) AS p
-        |  FROM documents),
-        |spans AS (
-        |  SELECT printf('d%010d', doc_id) AS doc_id, 'heading' AS kind,
-        |         '# ' || array_to_string(list_slice(words,1,3),' ') AS text,
-        |         '' AS media_ref, 0::BIGINT AS ord
-        |  FROM w
-        |  UNION ALL
-        |  SELECT printf('d%010d', doc_id), 'paragraph',
-        |         array_to_string(list_slice(words, 4+(i-1)*12, 3+i*12), ' '),
-        |         '', i::BIGINT
-        |  FROM (SELECT doc_id, words, unnest(generate_series(1, p)) AS i FROM w)
-        |  UNION ALL
-        |  SELECT printf('d%010d', doc_id), 'table',
-        |         '| k | v |' || chr(10) || '| r' || doc_id || ' | c' || doc_id || ' |',
-        |         '', (1 + p)::BIGINT
-        |  FROM w WHERE doc_id % 3 = 0
-        |  UNION ALL
-        |  SELECT printf('d%010d', doc_id), 'figure', '',
-        |         'img://' || doc_id || '/0',
-        |         (1 + p + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END)::BIGINT
-        |  FROM w WHERE doc_id % 2 = 0
-        |  UNION ALL
-        |  SELECT printf('d%010d', doc_id), 'figure', '',
-        |         'img://' || doc_id || '/1',
-        |         (2 + p + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END)::BIGINT
-        |  FROM w WHERE doc_id % 4 = 0)
-        |SELECT doc_id, count(*)::BIGINT AS n_spans,
-        |  md5(string_agg(kind || '|' || text || '|' || media_ref || '|' || ord,
-        |                 chr(1) ORDER BY ord)) AS digest
-        |FROM spans GROUP BY doc_id""".stripMargin,
-
-    "ext_stream_counts" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT) AS p
-        |  FROM documents)
-        |SELECT printf('d%010d', doc_id) AS doc_id,
-        |       (1 + p + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
-        |          + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-        |          + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_spans
-        |FROM w""".stripMargin,
-
-    "ext_html_stream" ->
-      s"""WITH r AS (
-         |  SELECT doc_id, i,
-         |    ${md5iSql("'hk|' || doc_id || '|' || i")} % 7 AS k
-         |  FROM (SELECT doc_id,
-         |          unnest(generate_series(0, CAST(doc_id % 4 + 2 AS INT))) AS i
-         |        FROM documents))
-         |SELECT doc_id::VARCHAR AS doc_id,
-         |  CAST(sum(CASE WHEN k IN (0, 1, 2, 5) THEN 1
-         |                WHEN k = 6 THEN 2 ELSE 0 END) AS BIGINT) AS n_spans
-         |FROM r GROUP BY doc_id""".stripMargin,
-
-    "ext_headings" ->
-      """SELECT printf('d%010d', doc_id) AS doc_id,
-        |       '# ' || array_to_string(list_slice(string_split(text,' '), 1, 3), ' ') AS text
-        |FROM documents""".stripMargin,
-
-    "ext_metrics" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT) AS p
-        |  FROM documents)
-        |SELECT count(*)::BIGINT AS n_docs,
-        |       CAST(sum(3 + p
-        |          + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
-        |          + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-        |          + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS spans_in,
-        |       CAST(sum(1 + p
-        |          + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
-        |          + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-        |          + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS spans_out,
-        |       (2 * count(*))::BIGINT AS dropped
-        |FROM w""".stripMargin,
-
-    "ext_doc_span_counts" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT) AS p
-        |  FROM documents)
-        |SELECT printf('d%010d', doc_id) AS doc_id,
-        |       (1 + p + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
-        |          + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-        |          + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_spans,
-        |       (p + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
-        |          + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-        |          + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END)::BIGINT AS max_order
-        |FROM w""".stripMargin,
-
-    "ext_media_refs" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |         CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT) AS p
-        |  FROM documents)
-        |SELECT printf('d%010d', doc_id) AS doc_id,
-        |       'img://' || doc_id || '/0' AS media_ref,
-        |       (1 + p + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END)::BIGINT AS ord
-        |FROM w WHERE doc_id % 2 = 0
-        |UNION ALL
-        |SELECT printf('d%010d', doc_id),
-        |       'img://' || doc_id || '/1',
-        |       (2 + p + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END)::BIGINT
-        |FROM w WHERE doc_id % 4 = 0""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
-        |       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_price_cents,
-        |       CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) AS sum_disc_price_c4,
-        |       count(*)::BIGINT AS n_rows
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q6_filter" ->
-      """SELECT CAST(sum(CAST(round(l_extendedprice * l_discount * 10000) AS BIGINT)) AS BIGINT) AS revenue_c4,
-        |       count(*)::BIGINT AS n_rows
-        |FROM lineitem
-        |WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin,
-
-    "ta_tokens" ->
-      """SELECT doc_id, len(string_split(text,' '))::BIGINT AS n_tokens,
-        |       length(text)::BIGINT AS n_chars_q
-        |FROM documents""".stripMargin,
-
-    "dedup_exact" ->
-      """WITH g AS (
-        |  SELECT md5(text) AS fp, count(*) AS n, min(doc_id) AS keep_id
-        |  FROM documents GROUP BY 1)
-        |SELECT count(*)::BIGINT AS n_unique, sum(n - 1)::BIGINT AS n_dup_rows FROM g""".stripMargin,
-
-    "q3_topk" ->
-      """SELECT l_orderkey, revenue_c4, o_odate_us FROM (
-        |  SELECT l_orderkey, epoch_us(o_orderdate) AS o_odate_us,
-        |    CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) AS revenue_c4
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  WHERE c_mktsegment = 'BUILDING'
-        |  GROUP BY l_orderkey, o_orderdate)
-        |ORDER BY revenue_c4 DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q5_region_rev" ->
-      """SELECT r_name, n_name,
-        |  CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) AS revenue_c4,
-        |  count(*)::BIGINT AS n_rows
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-
-    "w_events" ->
-      """SELECT event_id, user_id,
-        |  CAST(row_number() OVER w AS BIGINT) AS rnk,
-        |  value_c,
-        |  (value_c - lag(value_c, 1, 0) OVER w)::BIGINT AS delta_c,
-        |  CAST(sum(value_c) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS run_c
-        |FROM (SELECT event_id, user_id, ts,
-        |        CAST(floor(value * 100) AS BIGINT) AS value_c FROM events)
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
-
-    "ev_sessions" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |    CASE WHEN lag(ts, 1) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts), 1, 0) OVER w > 1800000000
-        |      THEN 1 ELSE 0 END AS new_sess
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT user_id, CAST(sum(new_sess) AS BIGINT) AS n_sessions,
-        |       count(*)::BIGINT AS n_events
-        |FROM g GROUP BY user_id""".stripMargin,
-
-    "ev_window_agg" ->
-      """SELECT event_type, epoch_us(date_trunc('hour', ts)) AS win_us,
-        |  count(*)::BIGINT AS n,
-        |  CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS sum_c
-        |FROM events GROUP BY event_type, date_trunc('hour', ts)""".stripMargin,
-
-    // streaming executions converge to the exact batch answers
-    "ev_stream_window" ->
-      """SELECT event_type, epoch_us(date_trunc('hour', ts)) AS win_us,
-        |  count(*)::BIGINT AS n,
-        |  CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS sum_c
-        |FROM events GROUP BY event_type, date_trunc('hour', ts)""".stripMargin,
-
-    // after the late-drop + flush repair, the sink equals the batch agg
-    "ev_stream_late" ->
-      """SELECT event_type, epoch_us(date_trunc('hour', ts)) AS win_us,
-        |  count(*)::BIGINT AS n,
-        |  CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS sum_c
-        |FROM events GROUP BY event_type, date_trunc('hour', ts)""".stripMargin,
-
-    "ev_stream_sessions" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |    CASE WHEN lag(ts, 1) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts), 1, 0) OVER w > 1800000000
-        |      THEN 1 ELSE 0 END AS new_sess
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT user_id, CAST(sum(new_sess) AS BIGINT) AS n_sessions,
-        |       count(*)::BIGINT AS n_events
-        |FROM g GROUP BY user_id""".stripMargin,
-
-    // Stream-dedup replay: the duplicates are dropped by the watermark
-    // state, so the oracle is the plain duplicate-free aggregate.
-    "ev_stream_dedup" ->
-      """SELECT event_type, count(*)::BIGINT AS n,
-        |  CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS sum_c
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "ev_pivot" ->
-      """SELECT epoch_us(date_trunc('hour', ts)) AS win_us,
-        |  CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
-        |  CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-        |  CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // As-of replay with the same window construction (the carry-forward
-    // IS the spec; an ORDER BY ... LIMIT 1 lateral would also work but
-    // DuckDB's IGNORE NULLS window is exact and fast).
-    "ev_asof_join" ->
-      """WITH t AS (
-        |  SELECT user_id, event_id, ts, event_type,
-        |    CASE WHEN event_type = 'view' THEN event_id END AS r_id,
-        |    CASE WHEN event_type = 'view' THEN epoch_us(ts) END AS r_us
-        |  FROM events WHERE event_type IN ('purchase', 'view')),
-        |w AS (
-        |  SELECT *,
-        |    last_value(r_id IGNORE NULLS) OVER win AS prior_id,
-        |    last_value(r_us IGNORE NULLS) OVER win AS prior_us
-        |  FROM t
-        |  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-        |SELECT user_id, event_id AS left_id,
-        |  coalesce(prior_id, -1)::BIGINT AS right_id,
-        |  coalesce(epoch_us(ts) - prior_us, -1)::BIGINT AS gap_us
-        |FROM w WHERE event_type = 'purchase'""".stripMargin,
-
-    // Batch replay of the stream-stream interval join: same user, the
-    // purchase within [view_ts, view_ts + 30 min].
-    "ev_stream_join" ->
-      """SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
-        |  CAST(floor(p.value * 100) AS BIGINT) AS val_cents
-        |FROM events v
-        |JOIN events p ON p.user_id = v.user_id
-        |  AND v.event_type = 'view' AND p.event_type = 'purchase'
-        |  AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 30 MINUTE""".stripMargin,
-
-    "ev_json" ->
-      """SELECT event_type,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  count(*)::BIGINT AS n
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "set_viewers_no_purchase" ->
-      """SELECT DISTINCT epoch_us(date_trunc('hour', ts)) AS hr FROM events WHERE event_type = 'view'
-        |EXCEPT
-        |SELECT DISTINCT epoch_us(date_trunc('hour', ts)) AS hr FROM events WHERE event_type = 'purchase'""".stripMargin,
-
-    // Bloom replay: identical word/bit math over the shared md5i hash
-    // (63 bits per word keeps every BIGINT non-negative on both engines).
-    "bloom_semijoin" ->
-      s"""WITH pu AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'),
-         |ppos AS (
-         |  SELECT ${md5iSql("'bf' || t.i || '|' || CAST(user_id AS VARCHAR)")} % 4032 AS p
-         |  FROM pu, (SELECT unnest([0,1,2]) AS i) t),
-         |words AS (
-         |  SELECT p // 63 AS w, bit_or(1::BIGINT << CAST(p % 63 AS INT)) AS bits
-         |  FROM ppos GROUP BY p // 63),
-         |fp AS (SELECT CAST(sum(((w + 1) * (bits % 1000000007)) % 1000000007)
-         |         % 1000000007 AS BIGINT) AS bloom_fp FROM words),
-         |vu AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'view'),
-         |vpos AS (
-         |  SELECT user_id,
-         |    ${md5iSql("'bf' || t.i || '|' || CAST(user_id AS VARCHAR)")} % 4032 AS p
-         |  FROM vu, (SELECT unnest([0,1,2]) AS i) t),
-         |hits AS (
-         |  SELECT v.user_id,
-         |    sum(CASE WHEN ((coalesce(w.bits, 0) >> CAST(v.p % 63 AS INT)) & 1) = 1
-         |        THEN 1 ELSE 0 END) AS nbits
-         |  FROM vpos v LEFT JOIN words w ON w.w = v.p // 63
-         |  GROUP BY v.user_id)
-         |SELECT (SELECT count(*) FROM vu)::BIGINT AS n_viewers,
-         |  (SELECT count(*) FROM hits WHERE nbits = 3)::BIGINT AS n_candidates,
-         |  (SELECT count(*) FROM vu WHERE user_id IN (SELECT user_id FROM pu))::BIGINT AS n_true,
-         |  (SELECT bloom_fp FROM fp) AS bloom_fp""".stripMargin,
-
-    "agg_hist_quantile" ->
-      """WITH b AS (
-        |  SELECT event_type, CAST(floor(value * 100) AS BIGINT) // 16 AS bin FROM events),
-        |c AS (SELECT event_type, bin, count(*) AS cnt FROM b GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT event_type, bin,
-        |    sum(cnt) OVER (PARTITION BY event_type ORDER BY bin) AS cum,
-        |    sum(cnt) OVER (PARTITION BY event_type) AS n
-        |  FROM c)
-        |SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-        |  CAST(min(CASE WHEN cum * 100 >= n * 50 THEN bin END) AS BIGINT) AS p50_bin,
-        |  CAST(min(CASE WHEN cum * 100 >= n * 95 THEN bin END) AS BIGINT) AS p95_bin
-        |FROM cum GROUP BY event_type""".stripMargin,
-
-    "agg_median" ->
-      """SELECT event_type,
-        |  CAST(floor(median(CAST(floor(value * 100) AS BIGINT)) * 2) AS BIGINT) AS med2,
-        |  count(*)::BIGINT AS n
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q_cube" ->
-      """SELECT coalesce(l_returnflag, '(all)') AS l_returnflag,
-        |  coalesce(l_linestatus, '(all)') AS l_linestatus,
-        |  count(*)::BIGINT AS n,
-        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS qty_c
-        |FROM lineitem
-        |GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT coalesce(n_name, '(all)') AS n_name,
-        |  count(*)::BIGINT AS n_orders,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY ROLLUP (n_name)""".stripMargin,
-
-    "topk_brands" ->
-      """SELECT p_brand, count(*)::BIGINT AS n FROM part
-        |GROUP BY p_brand ORDER BY n DESC, p_brand LIMIT 5""".stripMargin,
-
-    "topk_native" ->
-      """SELECT user_id, event_id, value_c, rnk FROM (
-        |  SELECT user_id, event_id,
-        |    CAST(floor(value*100) AS BIGINT) AS value_c,
-        |    CAST(row_number() OVER (PARTITION BY user_id
-        |      ORDER BY CAST(floor(value*100) AS BIGINT) DESC, event_id) AS BIGINT) AS rnk
-        |  FROM events)
-        |WHERE rnk <= 3""".stripMargin,
-
-    "ta_tokens_re" ->
-      s"""SELECT doc_id, len(string_split(text,' '))::BIGINT AS n_tokens_ws,
-         |  len(regexp_extract_all(text, '${TextOps.TokenRegex}'))::BIGINT AS n_tokens_re
-         |FROM documents""".stripMargin,
-
-    "tok_bpe" ->
-      s"""WITH seg AS (
-         |  SELECT doc_id, ${graft.operators.BpeOps.segSql("text")} AS s
-         |  FROM documents),
-         |toks AS (
-         |  SELECT doc_id, ${graft.operators.BpeOps.toksSql("s")} AS ts
-         |  FROM seg)
-         |SELECT printf('d%010d', doc_id) AS doc_id,
-         |  len(ts)::BIGINT AS n_tokens,
-         |  list_reduce(
-         |    list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(ts, t -> CAST(${graft.operators.BpeOps.vocabCaseSql("t")} AS BIGINT))),
-         |    (a, x) -> (a * 31 + (x + 1000000007)) % 1000000007) AS fp,
-         |  1::BIGINT AS exact
-         |FROM toks""".stripMargin,
-
-    "tok_bpe_learn" -> graft.operators.BpeOps.learnOracleSql,
-
-    "ta_quality" ->
-      s"""WITH c AS (
-         |  SELECT doc_id, text, len(ws)::BIGINT AS n_words,
-         |    list_sum(list_transform(ws, x -> len(x)))::BIGINT AS chars,
-         |    len(list_filter(ws, x -> x IN (${TextOps.sqlInList(TextOps.QualityStop)})))::BIGINT AS n_stop
-         |  FROM (SELECT doc_id, text, string_split(text,' ') AS ws FROM documents)),
-         |q AS (
-         |  SELECT doc_id, n_words,
-         |    CASE WHEN n_words > 0 THEN CAST(floor((100.0*chars)/n_words) AS BIGINT) ELSE 0 END AS mwl_q2,
-         |    CASE WHEN n_words > 0 THEN CAST(floor((10000.0*n_stop)/n_words) AS BIGINT) ELSE 0 END AS stop_q4,
-         |    (length(text) - length(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')))::BIGINT AS n_punct
-         |  FROM c)
-         |SELECT doc_id, n_words, mwl_q2, stop_q4, n_punct,
-         |  (CASE WHEN n_words BETWEEN 50 AND 5000 THEN 40 ELSE 10 END
-         |   + CASE WHEN stop_q4 >= 200 THEN 30 ELSE 0 END
-         |   + CASE WHEN mwl_q2 BETWEEN 250 AND 900 THEN 30 ELSE 0 END)::BIGINT AS score
-         |FROM q""".stripMargin,
-
-    "ta_langid" ->
-      s"""WITH c AS (
-         |  SELECT doc_id,
-         |    len(list_filter(ws, w -> w IN (${TextOps.sqlInList(TextOps.EnStop)})))::BIGINT AS c_en,
-         |    len(list_filter(ws, w -> w IN (${TextOps.sqlInList(TextOps.EsStop)})))::BIGINT AS c_es,
-         |    len(list_filter(ws, w -> w IN (${TextOps.sqlInList(TextOps.DeStop)})))::BIGINT AS c_de,
-         |    len(list_filter(ws, w -> w IN (${TextOps.sqlInList(TextOps.FrStop)})))::BIGINT AS c_fr
-         |  FROM (SELECT doc_id, string_split(text,' ') AS ws FROM documents))
-         |SELECT doc_id, c_en, c_es, c_de, c_fr,
-         |  CASE WHEN greatest(c_en,c_es,c_de,c_fr) = 0 THEN 'und'
-         |       WHEN c_de = greatest(c_en,c_es,c_de,c_fr) THEN 'de'
-         |       WHEN c_en = greatest(c_en,c_es,c_de,c_fr) THEN 'en'
-         |       WHEN c_es = greatest(c_en,c_es,c_de,c_fr) THEN 'es'
-         |       ELSE 'fr' END AS pred_lang
-         |FROM c""".stripMargin,
-
-    "ta_fingerprint" ->
-      s"""SELECT doc_id,
-         |  list_reduce(
-         |    list_transform(string_split(text,' '), w -> ${md5iSql("w")} % 1000000007),
-         |    (a,b) -> (a*31+b) % 1000000007)::BIGINT AS fp
-         |FROM documents""".stripMargin,
-
-    "corpus_vocab_kmv" ->
-      s"""WITH tok AS (SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
-         |h AS (SELECT DISTINCT source, ${md5iSql("w")} % ${TextOps.KmvSpace} AS hv FROM tok),
-         |r AS (SELECT source, hv,
-         |        row_number() OVER (PARTITION BY source ORDER BY hv) AS rn FROM h),
-         |a AS (SELECT source, count(*)::BIGINT AS k_used, max(hv)::BIGINT AS kth
-         |      FROM r WHERE rn <= 16 GROUP BY source)
-         |SELECT source, k_used, kth,
-         |  (CASE WHEN k_used < 16 THEN k_used
-         |        WHEN kth > 0 THEN ${15L * TextOps.KmvSpace} // kth
-         |        ELSE 0 END)::BIGINT AS est
-         |FROM a""".stripMargin,
-
-    // HLL register replay: bucket = h mod 256, payload w = h div 256,
-    // rho = trailing zeros + 1 via an exact mod-2^r CASE chain (w = 0 →
-    // 53); max per (source, bucket) over a dense 256-bucket grid, then
-    // the same integer fingerprint / Z-sum / rational-alpha estimate.
-    "corpus_vocab_hll" ->
-      s"""WITH tok AS (SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
-         |h AS (SELECT source, ${md5iSql("w")} AS hv FROM tok),
-         |b AS (SELECT source, hv % 256 AS bucket, hv // 256 AS wv FROM h),
-         |r AS (SELECT source, bucket,
-         |        max(CASE WHEN wv = 0 THEN 53 ${(1 to 52).map(rr =>
-                    s"WHEN wv % ${1L << rr} = ${1L << (rr - 1)} THEN $rr").mkString(" ")}
-         |            ELSE 53 END) AS rho
-         |      FROM b GROUP BY source, bucket),
-         |srcs AS (SELECT DISTINCT source FROM documents),
-         |grid AS (SELECT s.source, g.bucket
-         |         FROM srcs s CROSS JOIN (SELECT unnest(generate_series(0, 255)) AS bucket) g),
-         |regs AS (SELECT g.source, g.bucket, coalesce(r.rho, 0) AS rho
-         |         FROM grid g LEFT JOIN r ON r.source = g.source AND r.bucket = g.bucket),
-         |a AS (SELECT source,
-         |        CAST(count(*) FILTER (WHERE rho > 0) AS BIGINT) AS nonzero,
-         |        CAST(sum((bucket + 1) * (rho*rho*31 + rho + 7)) % 1000000007 AS BIGINT) AS reg_fp,
-         |        CAST(sum(1::BIGINT << (53 - rho)) % 1000000007 AS BIGINT) AS z_mod,
-         |        CAST(sum(1::BIGINT << (53 - rho)) AS HUGEINT) AS zsum
-         |      FROM regs GROUP BY source)
-         |SELECT source, nonzero, reg_fp, z_mod,
-         |  CAST((1846528000::HUGEINT * 65536 * 9007199254740992::HUGEINT)
-         |       // (2570790000::HUGEINT * zsum) AS BIGINT) AS est
-         |FROM a""".stripMargin,
-
-    "ta_repetition" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |g AS (SELECT doc_id,
-        |  CASE WHEN len(ws) >= 2
-        |    THEN list_transform(generate_series(1, len(ws)-1), i -> ws[i] || ' ' || ws[i+1])
-        |    ELSE [] END AS g2 FROM w),
-        |x AS (SELECT doc_id, unnest(g2) AS gram FROM g),
-        |c AS (SELECT doc_id, gram, count(*)::BIGINT AS cnt FROM x GROUP BY doc_id, gram),
-        |s AS (SELECT doc_id, count(*)::BIGINT AS d2, max(cnt)::BIGINT AS top2,
-        |        CAST(sum(cnt) AS BIGINT) AS n2 FROM c GROUP BY doc_id)
-        |SELECT g.doc_id, coalesce(s.n2, 0)::BIGINT AS n2,
-        |  coalesce(s.d2, 0)::BIGINT AS d2, coalesce(s.top2, 0)::BIGINT AS top2,
-        |  (CASE WHEN coalesce(s.n2, 0) > 0 THEN (10000*(s.n2 - s.d2)) // s.n2
-        |        ELSE 0 END)::BIGINT AS rep_q4
-        |FROM g LEFT JOIN s ON s.doc_id = g.doc_id""".stripMargin,
-
-    "pii_scrub" ->
-      s"""WITH a AS (
-         |  SELECT doc_id, CASE WHEN doc_id % 3 = 0
-         |    THEN text || ' contact user' || CAST(doc_id AS VARCHAR)
-         |         || '@mail.example.com or call 555-0'
-         |         || CAST(doc_id % 100 AS VARCHAR) || ' now'
-         |    ELSE text END AS aug
-         |  FROM documents)
-         |SELECT doc_id,
-         |  len(regexp_extract_all(aug, '${CurateOps.EmailRe}'))::BIGINT AS n_email,
-         |  len(regexp_extract_all(aug, '${CurateOps.PhoneRe}'))::BIGINT AS n_phone,
-         |  md5(regexp_replace(regexp_replace(aug, '${CurateOps.EmailRe}', '<EMAIL>', 'g'),
-         |      '${CurateOps.PhoneRe}', '<PHONE>', 'g')) AS scrub_md5
-         |FROM a""".stripMargin,
-
-    "curate_src_cap" ->
-      """SELECT source, doc_id, n_chars, rnk FROM (
-        |  SELECT source, doc_id, n_chars,
-        |    CAST(row_number() OVER (PARTITION BY source
-        |      ORDER BY n_chars DESC, doc_id) AS BIGINT) AS rnk
-        |  FROM documents)
-        |WHERE rnk <= 20""".stripMargin,
-
-    "curate_pipeline" ->
-      s"""WITH RECURSIVE $minhashPairCtes,
-         |p AS (SELECT doc_a, doc_b FROM v WHERE jacc_i*10 >= jacc_u*7),
-         |ew AS (SELECT doc_a AS eu, doc_b AS ev FROM p
-         |       UNION SELECT doc_b, doc_a FROM p),
-         |reach(n, r) AS (
-         |  SELECT eu, eu FROM (SELECT DISTINCT eu FROM ew)
-         |  UNION
-         |  SELECT reach.n, ew.ev FROM reach JOIN ew ON ew.eu = reach.r),
-         |lab AS (SELECT n AS doc_id, min(r)::BIGINT AS cluster FROM reach GROUP BY n),
-         |dup AS (SELECT doc_id FROM lab WHERE doc_id <> cluster),
-         |qc AS (
-         |  SELECT doc_id, text, len(ws)::BIGINT AS n_words,
-         |    list_sum(list_transform(ws, x -> len(x)))::BIGINT AS chars,
-         |    len(list_filter(ws, x -> x IN (${TextOps.sqlInList(TextOps.QualityStop)})))::BIGINT AS n_stop
-         |  FROM (SELECT doc_id, text, string_split(text,' ') AS ws FROM documents)),
-         |qq AS (
-         |  SELECT doc_id, n_words,
-         |    CASE WHEN n_words > 0 THEN CAST(floor((100.0*chars)/n_words) AS BIGINT) ELSE 0 END AS mwl_q2,
-         |    CASE WHEN n_words > 0 THEN CAST(floor((10000.0*n_stop)/n_words) AS BIGINT) ELSE 0 END AS stop_q4
-         |  FROM qc),
-         |qs AS (
-         |  SELECT doc_id,
-         |    (CASE WHEN n_words BETWEEN 50 AND 5000 THEN 40 ELSE 10 END
-         |     + CASE WHEN stop_q4 >= 200 THEN 30 ELSE 0 END
-         |     + CASE WHEN mwl_q2 BETWEEN 250 AND 900 THEN 30 ELSE 0 END)::BIGINT AS score
-         |  FROM qq),
-         |lc AS (
-         |  SELECT doc_id,
-         |    len(list_filter(ws, w -> w IN (${TextOps.sqlInList(TextOps.EnStop)})))::BIGINT AS c_en,
-         |    len(list_filter(ws, w -> w IN (${TextOps.sqlInList(TextOps.EsStop)})))::BIGINT AS c_es,
-         |    len(list_filter(ws, w -> w IN (${TextOps.sqlInList(TextOps.DeStop)})))::BIGINT AS c_de,
-         |    len(list_filter(ws, w -> w IN (${TextOps.sqlInList(TextOps.FrStop)})))::BIGINT AS c_fr
-         |  FROM (SELECT doc_id, string_split(text,' ') AS ws FROM documents)),
-         |lg AS (
-         |  SELECT doc_id,
-         |    CASE WHEN greatest(c_en,c_es,c_de,c_fr) = 0 THEN 'und'
-         |         WHEN c_de = greatest(c_en,c_es,c_de,c_fr) THEN 'de'
-         |         WHEN c_en = greatest(c_en,c_es,c_de,c_fr) THEN 'en'
-         |         WHEN c_es = greatest(c_en,c_es,c_de,c_fr) THEN 'es'
-         |         ELSE 'fr' END AS pred_lang
-         |  FROM lc),
-         |kept AS (
-         |  SELECT d.doc_id, d.source, qs.score FROM documents d
-         |  JOIN qs ON qs.doc_id = d.doc_id
-         |  JOIN lg ON lg.doc_id = d.doc_id
-         |  WHERE qs.score >= 70 AND lg.pred_lang = 'en'
-         |    AND d.doc_id NOT IN (SELECT doc_id FROM dup))
-         |SELECT doc_id, source, score, rnk FROM (
-         |  SELECT doc_id, source, score,
-         |    CAST(row_number() OVER (PARTITION BY source
-         |      ORDER BY score DESC, doc_id) AS BIGINT) AS rnk
-         |  FROM kept)
-         |WHERE rnk <= 15""".stripMargin,
-
-    "pack_chunks" ->
-      s"""SELECT doc_id, source, toks, start_tok,
-         |  (start_tok // ${graft.operators.PackOps.Capacity})::BIGINT AS chunk_first,
-         |  ((start_tok + toks - 1) // ${graft.operators.PackOps.Capacity})::BIGINT AS chunk_last,
-         |  ((start_tok + toks - 1) // ${graft.operators.PackOps.Capacity}
-         |    - start_tok // ${graft.operators.PackOps.Capacity} + 1)::BIGINT AS n_chunks
-         |FROM (
-         |  SELECT doc_id, source, toks,
-         |    coalesce(sum(toks) OVER (PARTITION BY source ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS start_tok
-         |  FROM (SELECT doc_id, source,
-         |          len(string_split(text, ' '))::BIGINT AS toks
-         |        FROM documents))""".stripMargin,
-
-    "mix_budget" ->
-      s"""SELECT doc_id, source, toks, start_tok,
-         |  (CASE WHEN start_tok + toks <= ${graft.operators.MixOps.BudgetPerSource}
-         |        THEN 1 ELSE 0 END)::BIGINT AS kept
-         |FROM (
-         |  SELECT doc_id, source, toks,
-         |    coalesce(sum(toks) OVER (PARTITION BY source ORDER BY ord, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS start_tok
-         |  FROM (SELECT doc_id, source,
-         |          ${md5iSql("'mx|' || doc_id")} AS ord,
-         |          len(string_split(text, ' '))::BIGINT AS toks
-         |        FROM documents))""".stripMargin,
-
-    "dedup_minhash" ->
-      s"""WITH $minhashPairCtes
-         |SELECT doc_a, doc_b, jacc_i, jacc_u FROM v WHERE jacc_i*10 >= jacc_u*7""".stripMargin,
-
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE $minhashPairCtes,
-         |p AS (SELECT doc_a, doc_b FROM v WHERE jacc_i*10 >= jacc_u*7),
-         |ew AS (SELECT doc_a AS eu, doc_b AS ev FROM p
-         |       UNION SELECT doc_b, doc_a FROM p),
-         |reach(n, r) AS (
-         |  SELECT eu, eu FROM (SELECT DISTINCT eu FROM ew)
-         |  UNION
-         |  SELECT reach.n, ew.ev FROM reach JOIN ew ON ew.eu = reach.r),
-         |lab AS (SELECT n AS doc_id, min(r)::BIGINT AS cluster FROM reach GROUP BY n)
-         |SELECT doc_id, cluster,
-         |  (count(*) OVER (PARTITION BY cluster))::BIGINT AS csize
-         |FROM lab""".stripMargin,
-
-    "dedup_stream" ->
-      s"""WITH ds AS (
-         |  SELECT doc_id, list_distinct(
-         |    CASE WHEN len(ws) >= 3
-         |      THEN list_transform(generate_series(1, len(ws)-2),
-         |             i -> array_to_string(list_slice(ws, i, i+2), ' '))
-         |      ELSE [array_to_string(ws, ' ')] END) AS shs
-         |  FROM (SELECT doc_id, string_split(text,' ') AS ws FROM documents)),
-         |sig AS (
-         |  SELECT doc_id, shs,
-         |    list_transform(generate_series(0,15), k ->
-         |      list_min(list_transform(shs, s ->
-         |        ((${md5iSql("'a|' || k")} % 1000000006 + 1)
-         |           * (${md5iSql("s")} % 1000000007)
-         |         + ${md5iSql("'b|' || k")} % 1000000007) % 1000000007))) AS sig
-         |  FROM ds),
-         |bnd AS (
-         |  SELECT doc_id,
-         |    md5(sig[4*b+1] || ',' || sig[4*b+2] || ',' || sig[4*b+3] || ',' || sig[4*b+4]) AS bk
-         |  FROM (SELECT doc_id, sig, unnest(generate_series(0,3)) AS b FROM sig)),
-         |pos AS (
-         |  SELECT bk, doc_id,
-         |    row_number() OVER (PARTITION BY bk ORDER BY doc_id) AS p,
-         |    min(doc_id) OVER (PARTITION BY bk) AS rep
-         |  FROM bnd),
-         |cand AS (
-         |  SELECT DISTINCT doc_a, doc_b FROM (
-         |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |    FROM pos a JOIN pos b ON a.bk = b.bk AND a.doc_id < b.doc_id
-         |    WHERE b.p <= ${DedupOps.MaxBucket}
-         |    UNION ALL
-         |    SELECT rep AS doc_a, doc_id AS doc_b FROM pos
-         |    WHERE p > ${DedupOps.MaxBucket})),
-         |v AS (
-         |  SELECT doc_a, doc_b,
-         |    len(list_intersect(a.shs, b.shs))::BIGINT AS jacc_i,
-         |    (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)))::BIGINT AS jacc_u
-         |  FROM cand JOIN ds a ON a.doc_id = cand.doc_a
-         |            JOIN ds b ON b.doc_id = cand.doc_b)
-         |SELECT doc_a, doc_b, jacc_i, jacc_u FROM v WHERE jacc_i*10 >= jacc_u*7""".stripMargin,
-
-    "dedup_simhash" ->
-      s"""SELECT doc_id,
-         |  list_reduce(
-         |    list_transform(generate_series(0,${DedupOps.SimBits - 1}), j ->
-         |      CASE WHEN list_sum(list_transform(hs,
-         |             h -> CASE WHEN ((h >> j) & 1) = 1 THEN 1 ELSE -1 END)) > 0
-         |        THEN (1::BIGINT << j) ELSE 0::BIGINT END),
-         |    (a,b) -> a | b) AS simhash
-         |FROM (SELECT doc_id,
-         |        list_transform(list_distinct(string_split(text,' ')),
-         |                       w -> ${md5iSql("w")}) AS hs
-         |      FROM documents)""".stripMargin,
-
-    "dedup_ngram" ->
-      s"""WITH ds AS (
-         |  SELECT doc_id, source, list_distinct(
-         |    CASE WHEN len(ws) >= 3
-         |      THEN list_transform(generate_series(1, len(ws)-2),
-         |             i -> array_to_string(list_slice(ws, i, i+2), ' '))
-         |      ELSE [array_to_string(ws, ' ')] END) AS shs
-         |  FROM (SELECT doc_id, source, string_split(text,' ') AS ws FROM documents)),
-         |inv AS (SELECT doc_id, ${md5iSql("source || '|' || s")} AS k
-         |        FROM (SELECT doc_id, source, unnest(shs) AS s FROM ds)),
-         |dfc AS (SELECT k FROM inv GROUP BY k
-         |        HAVING count(*) <= ${DedupOps.MaxDf}),
-         |kept AS (SELECT inv.doc_id, inv.k FROM inv JOIN dfc ON inv.k = dfc.k),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM kept a JOIN kept b
-         |    ON a.k = b.k AND a.doc_id < b.doc_id)
-         |SELECT * FROM (
-         |  SELECT doc_a, doc_b,
-         |    len(list_intersect(a.shs, b.shs))::BIGINT AS jacc_i,
-         |    (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)))::BIGINT AS jacc_u
-         |  FROM cand JOIN ds a ON a.doc_id = cand.doc_a
-         |            JOIN ds b ON b.doc_id = cand.doc_b)
-         |WHERE jacc_i*10 >= jacc_u*3""".stripMargin,
-
-    // band-granular replay: bands = shingle key >> BandBits, the cap
-    // counts DISTINCT docs per band (the engine's in-buffer set dedup)
-    "dedup_ngram_banded" ->
-      s"""WITH ds AS (
-         |  SELECT doc_id, source, list_distinct(
-         |    CASE WHEN len(ws) >= 3
-         |      THEN list_transform(generate_series(1, len(ws)-2),
-         |             i -> array_to_string(list_slice(ws, i, i+2), ' '))
-         |      ELSE [array_to_string(ws, ' ')] END) AS shs
-         |  FROM (SELECT doc_id, source, string_split(text,' ') AS ws FROM documents)),
-         |inv AS (SELECT DISTINCT doc_id,
-         |          ${md5iSql("source || '|' || s")} // ${1 << DedupOps.BandBits} AS k
-         |        FROM (SELECT doc_id, source, unnest(shs) AS s FROM ds)),
-         |dfc AS (SELECT k FROM inv GROUP BY k
-         |        HAVING count(*) <= ${DedupOps.MaxDf << DedupOps.BandBits}),
-         |kept AS (SELECT inv.doc_id, inv.k FROM inv JOIN dfc ON inv.k = dfc.k),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM kept a JOIN kept b
-         |    ON a.k = b.k AND a.doc_id < b.doc_id)
-         |SELECT * FROM (
-         |  SELECT doc_a, doc_b,
-         |    len(list_intersect(a.shs, b.shs))::BIGINT AS jacc_i,
-         |    (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)))::BIGINT AS jacc_u
-         |  FROM cand JOIN ds a ON a.doc_id = cand.doc_a
-         |            JOIN ds b ON b.doc_id = cand.doc_b)
-         |WHERE jacc_i*10 >= jacc_u*3""".stripMargin,
-
-    // ExactSubstr replay: hash every k-word window, keep keys with ≥2
-    // distinct docs and ≤ SubstrMaxOcc total postings (the engine's
-    // bounded-collect viral cut), merge overlapping/adjacent duplicated
-    // positions (gap ≤ k) into maximal spans via gaps-and-islands.
-    "dedup_substr" ->
-      s"""WITH $substrSpanChainSql
-         |SELECT doc_id::BIGINT AS doc_id, min(p)::BIGINT AS span_start,
-         |  (max(p) + ${DedupOps.SubstrK} - min(p))::BIGINT AS span_len
-         |FROM grp GROUP BY doc_id, g""".stripMargin,
-
-    // ExactSubstr CUT replay: the same span chain, then every covered
-    // word position is dropped and the remainder re-joined with single
-    // spaces; docs with no spans (or too short to window) pass through.
-    "curate_substr" ->
-      s"""WITH $substrSpanChainSql,
-         |spansq AS (SELECT doc_id, min(p) AS s,
-         |  max(p) + ${DedupOps.SubstrK} - min(p) AS l FROM grp GROUP BY doc_id, g),
-         |docw AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-         |pos AS (SELECT d.doc_id, g.i, d.ws[g.i+1] AS w FROM docw d,
-         |  LATERAL (SELECT unnest(generate_series(0, len(d.ws)-1)) AS i) g),
-         |keep AS (SELECT p.doc_id, p.i, p.w FROM pos p
-         |  WHERE NOT EXISTS (SELECT 1 FROM spansq s WHERE s.doc_id = p.doc_id
-         |    AND p.i >= s.s AND p.i < s.s + s.l))
-         |SELECT d.doc_id::BIGINT AS doc_id,
-         |  coalesce(kc.txt, '') AS clean_text,
-         |  len(d.ws)::BIGINT AS n_words,
-         |  coalesce(sc.cut, 0)::BIGINT AS cut_words
-         |FROM docw d
-         |LEFT JOIN (SELECT doc_id, string_agg(w, ' ' ORDER BY i) AS txt
-         |           FROM keep GROUP BY doc_id) kc ON kc.doc_id = d.doc_id
-         |LEFT JOIN (SELECT doc_id, sum(l) AS cut FROM spansq GROUP BY doc_id) sc
-         |  ON sc.doc_id = d.doc_id""".stripMargin,
-
-    "dedup_embedding" ->
-      s"""WITH n AS (
-         |  SELECT vec_id, label, q, list_sum(list_transform(q, x -> x*x))::BIGINT AS nsq,
-         |    list_reduce(
-         |      list_transform(generate_series(0,${SimilarityOps.Planes - 1}), p ->
-         |        CASE WHEN list_sum(list_transform(generate_series(1, len(q)),
-         |               d -> (${md5iSql("p || '|' || (d-1)")} % 2001 - 1000) * q[d])) > 0
-         |          THEN (1::BIGINT << p) ELSE 0::BIGINT END),
-         |      (a,b) -> a | b) AS sketch
-         |  FROM (SELECT vec_id, label,
-         |          list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS q
-         |        FROM embeddings)),
-         |bnd AS (
-         |  SELECT vec_id,
-         |    b || '|' || ((sketch >> (b * ${DedupOps.EmbBandBits})) % ${1 << DedupOps.EmbBandBits})
-         |      || '|' || label AS bk
-         |  FROM (SELECT vec_id, label, sketch,
-         |          unnest(generate_series(0, ${DedupOps.EmbBands - 1})) AS b FROM n)),
-         |sz AS (SELECT bk, count(*) AS nb2, min(vec_id) AS rep FROM bnd GROUP BY bk),
-         |cand AS (
-         |  SELECT DISTINCT vec_a, vec_b FROM (
-         |    SELECT x.vec_id AS vec_a, y.vec_id AS vec_b
-         |    FROM bnd x JOIN bnd y ON x.bk = y.bk AND x.vec_id < y.vec_id
-         |    JOIN sz ON sz.bk = x.bk
-         |    WHERE sz.nb2 <= ${DedupOps.MaxBucket}
-         |    UNION ALL
-         |    SELECT sz.rep AS vec_a, b.vec_id AS vec_b
-         |    FROM bnd b JOIN sz ON sz.bk = b.bk
-         |    WHERE sz.nb2 > ${DedupOps.MaxBucket} AND b.vec_id <> sz.rep))
-         |SELECT * FROM (
-         |  SELECT vec_a, vec_b,
-         |    list_sum(list_transform(generate_series(1, len(a.q)), i -> a.q[i]*b.q[i]))::BIGINT AS dot,
-         |    a.nsq AS na, b.nsq AS nb
-         |  FROM cand JOIN n a ON a.vec_id = cand.vec_a
-         |            JOIN n b ON b.vec_id = cand.vec_b)
-         |WHERE dot > 0 AND 25*dot*dot >= 4*na*nb""".stripMargin,
-
-    "dedup_embedding_mp" ->
-      s"""WITH n AS (
-         |  SELECT vec_id, label, q, list_sum(list_transform(q, x -> x*x))::BIGINT AS nsq,
-         |    list_reduce(
-         |      list_transform(generate_series(0,${SimilarityOps.Planes - 1}), p ->
-         |        CASE WHEN list_sum(list_transform(generate_series(1, len(q)),
-         |               d -> (${md5iSql("p || '|' || (d-1)")} % 2001 - 1000) * q[d])) > 0
-         |          THEN (1::BIGINT << p) ELSE 0::BIGINT END),
-         |      (a,b) -> a | b) AS sketch
-         |  FROM (SELECT vec_id, label,
-         |          list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS q
-         |        FROM embeddings)),
-         |bnd AS (
-         |  SELECT vec_id,
-         |    b || '|' || xor((sketch >> (b * ${DedupOps.EmbBandBits})) % ${1 << DedupOps.EmbBandBits}, m)
-         |      || '|' || label AS bk
-         |  FROM (SELECT vec_id, label, sketch, b, unnest([${(0L +: (0 until DedupOps.EmbBandBits).map(1L << _)).mkString(", ")}]) AS m
-         |        FROM (SELECT vec_id, label, sketch,
-         |                unnest(generate_series(0, ${DedupOps.EmbBands - 1})) AS b FROM n))),
-         |sz AS (SELECT bk, count(*) AS nb2, min(vec_id) AS rep FROM bnd GROUP BY bk),
-         |cand AS (
-         |  SELECT DISTINCT vec_a, vec_b FROM (
-         |    SELECT x.vec_id AS vec_a, y.vec_id AS vec_b
-         |    FROM bnd x JOIN bnd y ON x.bk = y.bk AND x.vec_id < y.vec_id
-         |    JOIN sz ON sz.bk = x.bk
-         |    WHERE sz.nb2 <= ${DedupOps.MaxBucket}
-         |    UNION ALL
-         |    SELECT sz.rep AS vec_a, b.vec_id AS vec_b
-         |    FROM bnd b JOIN sz ON sz.bk = b.bk
-         |    WHERE sz.nb2 > ${DedupOps.MaxBucket} AND b.vec_id <> sz.rep))
-         |SELECT * FROM (
-         |  SELECT vec_a, vec_b,
-         |    list_sum(list_transform(generate_series(1, len(a.q)), i -> a.q[i]*b.q[i]))::BIGINT AS dot,
-         |    a.nsq AS na, b.nsq AS nb
-         |  FROM cand JOIN n a ON a.vec_id = cand.vec_a
-         |            JOIN n b ON b.vec_id = cand.vec_b)
-         |WHERE dot > 0 AND 25*dot*dot >= 4*na*nb""".stripMargin,
-
-    "ann_topk" ->
-      """WITH n AS (
-        |  SELECT vec_id, q, list_sum(list_transform(q, x -> x*x))::BIGINT AS nsq
-        |  FROM (SELECT vec_id,
-        |          list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS q
-        |        FROM embeddings)),
-        |qs AS (SELECT vec_id AS query_id, q AS qv, nsq AS na FROM n WHERE vec_id < 8),
-        |p AS (
-        |  SELECT query_id, n.vec_id AS neighbor_id,
-        |    list_sum(list_transform(generate_series(1, len(qv)), i -> qv[i]*n.q[i]))::BIGINT AS dot,
-        |    na, n.nsq AS nb
-        |  FROM qs, n WHERE n.vec_id <> qs.query_id),
-        |r AS (
-        |  SELECT query_id, neighbor_id, dot, na, nb,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY (CAST(dot AS DOUBLE)/sqrt(CAST(na AS DOUBLE)*nb)) DESC, neighbor_id) AS rnk
-        |  FROM p)
-        |SELECT query_id, neighbor_id, rnk::BIGINT AS rnk, dot, na, nb FROM r WHERE rnk <= 5""".stripMargin,
-
-    "ann_ivf" ->
-      """WITH nn AS (
-        |  SELECT vec_id, q, list_sum(list_transform(q, x -> x*x))::BIGINT AS nsq
-        |  FROM (SELECT vec_id,
-        |          list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS q
-        |        FROM embeddings)),
-        |seeds AS (SELECT vec_id AS cell, q AS cv, nsq AS nc FROM nn WHERE vec_id < 16),
-        |a0 AS (
-        |  SELECT vec_id, q, cell FROM (
-        |    SELECT nn.vec_id, nn.q, s.cell,
-        |      row_number() OVER (PARTITION BY nn.vec_id ORDER BY
-        |        nn.nsq - 2*list_sum(list_transform(generate_series(1, len(nn.q)), i -> nn.q[i]*s.cv[i]))::BIGINT + s.nc ASC,
-        |        s.cell ASC) AS rn
-        |    FROM nn CROSS JOIN seeds s) WHERE rn = 1),
-        |dimmean AS (
-        |  SELECT cell, d, CAST(floor(CAST(sum(v) AS DOUBLE)/count(*)) AS BIGINT) AS m
-        |  FROM (SELECT cell, unnest(generate_series(1, len(q))) AS d, unnest(q) AS v FROM a0)
-        |  GROUP BY cell, d),
-        |upd AS (
-        |  SELECT cell, cv, list_sum(list_transform(cv, x -> x*x))::BIGINT AS nc FROM (
-        |    SELECT cell, list(m ORDER BY d) AS cv FROM dimmean GROUP BY cell)),
-        |cells AS (
-        |  SELECT vec_id, q, nsq, cell FROM (
-        |    SELECT nn.vec_id, nn.q, nn.nsq, u.cell,
-        |      row_number() OVER (PARTITION BY nn.vec_id ORDER BY
-        |        nn.nsq - 2*list_sum(list_transform(generate_series(1, len(nn.q)), i -> nn.q[i]*u.cv[i]))::BIGINT + u.nc ASC,
-        |        u.cell ASC) AS rn
-        |    FROM nn CROSS JOIN upd u) WHERE rn = 1),
-        |probes AS (
-        |  SELECT query_id, cell, qv, na FROM (
-        |    SELECT s.vec_id AS query_id, u.cell, s.q AS qv, s.nsq AS na,
-        |      row_number() OVER (PARTITION BY s.vec_id ORDER BY
-        |        s.nsq - 2*list_sum(list_transform(generate_series(1, len(s.q)), i -> s.q[i]*u.cv[i]))::BIGINT + u.nc ASC,
-        |        u.cell ASC) AS rn
-        |    FROM (SELECT * FROM nn WHERE vec_id < 8) s CROSS JOIN upd u) WHERE rn <= 4),
-        |cand AS (
-        |  SELECT p.query_id, c.vec_id AS neighbor_id,
-        |    list_sum(list_transform(generate_series(1, len(p.qv)), i -> p.qv[i]*c.q[i]))::BIGINT AS dot,
-        |    p.na, c.nsq AS nb
-        |  FROM probes p JOIN cells c ON c.cell = p.cell AND c.vec_id <> p.query_id),
-        |r AS (
-        |  SELECT query_id, neighbor_id, dot, na, nb,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY
-        |      (CAST(dot AS DOUBLE)/sqrt(CAST(na AS DOUBLE)*nb)) DESC, neighbor_id) AS rnk
-        |  FROM cand)
-        |SELECT query_id, neighbor_id, rnk::BIGINT AS rnk, dot, na, nb FROM r WHERE rnk <= 5""".stripMargin,
-
-    "ann_lsh_sketch" ->
-      s"""SELECT vec_id,
-         |  list_reduce(
-         |    list_transform(generate_series(0,${SimilarityOps.Planes - 1}), p ->
-         |      CASE WHEN list_sum(list_transform(generate_series(1, len(q)),
-         |             d -> (${md5iSql("p || '|' || (d-1)")} % 2001 - 1000) * q[d])) > 0
-         |        THEN (1::BIGINT << p) ELSE 0::BIGINT END),
-         |    (a,b) -> a | b) AS sketch
-         |FROM (SELECT vec_id,
-         |        list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS q
-         |      FROM embeddings)""".stripMargin,
-
-    "sample_stratified" ->
-      s"""SELECT source, count(*)::BIGINT AS n_total,
-         |  CAST(sum(CASE WHEN ${md5iSql("'sample|' || source || '|' || CAST(doc_id AS VARCHAR)")} % 100 < 10
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled
-         |FROM documents GROUP BY source""".stripMargin,
-
-    "sample_weighted" ->
-      s"""WITH p AS (
-         |  SELECT source, doc_id,
-         |    ${md5iSql("'ws|' || CAST(doc_id AS VARCHAR)")}
-         |      // greatest(n_chars, 1) AS prio
-         |  FROM documents),
-         |r AS (
-         |  SELECT source, doc_id, prio,
-         |    row_number() OVER (PARTITION BY source ORDER BY prio, doc_id) AS rnk
-         |  FROM p)
-         |SELECT source, doc_id, CAST(prio AS BIGINT) AS prio,
-         |  CAST(rnk AS BIGINT) AS rnk
-         |FROM r WHERE rnk <= 10""".stripMargin,
-
-    "split_assign" ->
-      s"""SELECT lang,
-         |  CASE WHEN g < 80 THEN 'train' WHEN g < 90 THEN 'val' ELSE 'test' END AS split,
-         |  count(*)::BIGINT AS n
-         |FROM (SELECT lang, ${md5iSql("'split|' || CAST(doc_id AS VARCHAR)")} % 100 AS g
-         |      FROM documents)
-         |GROUP BY 1, 2""".stripMargin,
-
-    "mm_decode" ->
-      s"""WITH refs AS (
-         |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents WHERE doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT 'img://' || doc_id || '/1' FROM documents WHERE doc_id % 4 = 0)
-         |SELECT media_ref,
-         |  (${md5iSql("'w|' || media_ref")} % 1920 + 1)::BIGINT AS width,
-         |  (${md5iSql("'h|' || media_ref")} % 1080 + 1)::BIGINT AS height,
-         |  CASE ${md5iSql("'t|' || media_ref")} % 3
-         |    WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png' ELSE 'gif' END AS format,
-         |  (CASE ${md5iSql("'t|' || media_ref")} % 3
-         |    WHEN 0 THEN ${MediaOps.MediaHeaders.JpegLen}
-         |    WHEN 1 THEN ${MediaOps.MediaHeaders.PngLen}
-         |    ELSE ${MediaOps.MediaHeaders.GifLen} END)::BIGINT AS n_bytes
-         |FROM refs""".stripMargin,
-
-    "bin_source" ->
-      s"""WITH refs AS (
-         |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents WHERE doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT 'img://' || doc_id || '/1' FROM documents WHERE doc_id % 4 = 0)
-         |SELECT media_ref,
-         |  (${md5iSql("'w|' || media_ref")} % 1920 + 1)::BIGINT AS width,
-         |  (${md5iSql("'h|' || media_ref")} % 1080 + 1)::BIGINT AS height,
-         |  CASE ${md5iSql("'t|' || media_ref")} % 3
-         |    WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png' ELSE 'gif' END AS format,
-         |  (CASE ${md5iSql("'t|' || media_ref")} % 3
-         |    WHEN 0 THEN ${MediaOps.MediaHeaders.JpegLen}
-         |    WHEN 1 THEN ${MediaOps.MediaHeaders.PngLen}
-         |    ELSE ${MediaOps.MediaHeaders.GifLen} END)::BIGINT AS n_bytes
-         |FROM refs""".stripMargin,
-
-    // Full pixel-pipeline replay: tiles in closed form from the pixel
-    // rule; the global view through the same 22-bit fixed-point bicubic
-    // (weight tables embedded from PixelKernel.computeCoeffs), per-pass
-    // u8 clipping, letterbox fill 127; checksums fold row-major RGB
-    // (pix_fp) and CHW normalized numerators (norm_fp).
-    "mm_pixels" ->
-      s"""WITH refs AS (
-         |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents WHERE doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT 'img://' || doc_id || '/1' FROM documents WHERE doc_id % 4 = 0),
-         |meta0 AS (
-         |  SELECT media_ref,
-         |    (${md5iSql("'prw|' || media_ref")} % 2 + 1)::BIGINT AS rw,
-         |    (${md5iSql("'prh|' || media_ref")} % 2 + 1)::BIGINT AS rh,
-         |    (${md5iSql("'px|' || media_ref")} % 251)::BIGINT AS s
-         |  FROM refs
-         |  WHERE ${md5iSql("'pxs|' || media_ref")} % ${graft.operators.PixelOps.SubsetMod} = 0),
-         |meta AS (
-         |  SELECT media_ref, rw, rh, s, 16*rw AS sw, 16*rh AS sh,
-         |    16*rw // greatest(rw,rh) AS nw, 16*rh // greatest(rw,rh) AS nh
-         |  FROM meta0),
-         |gl AS (SELECT *, (16 - nw) // 2 AS xoff, (16 - nh) // 2 AS yoff FROM meta),
-         |src AS (
-         |  SELECT m.media_ref, gx.x, gy.y, ch.c,
-         |    CASE ch.c WHEN 0 THEN (7*gx.x + 13*gy.y + m.s) % 256
-         |              WHEN 1 THEN (11*gx.x + 3*gy.y + 2*m.s) % 256
-         |              ELSE (gx.x + gy.y + 3*m.s) % 256 END AS val
-         |  FROM meta m,
-         |    LATERAL (SELECT unnest(generate_series(0, m.sw - 1)) AS x) gx,
-         |    LATERAL (SELECT unnest(generate_series(0, m.sh - 1)) AS y) gy,
-         |    (SELECT unnest([0,1,2]) AS c) ch),
-         |coef(insz, outsz, oi, si, w) AS (VALUES ${graft.operators.PixelOps.coeffSqlValues}),
-         |hp AS (
-         |  SELECT s.media_ref, t.oi AS x, s.y, s.c,
-         |    greatest(0, least(255, CAST(floor((2097152 + sum(s.val * t.w)) / 4194304.0) AS BIGINT))) AS val
-         |  FROM src s
-         |  JOIN gl g ON s.media_ref = g.media_ref
-         |  JOIN coef t ON t.insz = g.sw AND t.outsz = g.nw AND t.si = s.x
-         |  GROUP BY s.media_ref, t.oi, s.y, s.c),
-         |vp AS (
-         |  SELECT h.media_ref, h.x, t.oi AS y, h.c,
-         |    greatest(0, least(255, CAST(floor((2097152 + sum(h.val * t.w)) / 4194304.0) AS BIGINT))) AS val
-         |  FROM hp h
-         |  JOIN gl g ON h.media_ref = g.media_ref
-         |  JOIN coef t ON t.insz = g.sh AND t.outsz = g.nh AND t.si = h.y
-         |  GROUP BY h.media_ref, h.x, t.oi, h.c),
-         |grid16 AS (
-         |  SELECT gx.x, gy.y, ch.c
-         |  FROM (SELECT unnest(generate_series(0,15)) AS x) gx,
-         |       (SELECT unnest(generate_series(0,15)) AS y) gy,
-         |       (SELECT unnest([0,1,2]) AS c) ch),
-         |canvas AS (
-         |  SELECT g.media_ref, p.x, p.y, p.c, coalesce(v.val, 127) AS val
-         |  FROM gl g CROSS JOIN grid16 p
-         |  LEFT JOIN vp v ON v.media_ref = g.media_ref AND v.x = p.x - g.xoff
-         |    AND v.y = p.y - g.yoff AND v.c = p.c),
-         |tiles AS (
-         |  SELECT m.media_ref, t.ti, (t.ti % m.rw) * 16 AS x0, (t.ti // m.rw) * 16 AS y0
-         |  FROM meta m,
-         |    LATERAL (SELECT unnest(generate_series(0, m.rw*m.rh - 1)) AS ti) t),
-         |tile_vals AS (
-         |  SELECT t.media_ref, t.ti, s.x - t.x0 AS x, s.y - t.y0 AS y, s.c, s.val
-         |  FROM tiles t
-         |  JOIN src s ON s.media_ref = t.media_ref
-         |    AND s.x >= t.x0 AND s.x < t.x0 + 16
-         |    AND s.y >= t.y0 AND s.y < t.y0 + 16),
-         |tile_parts AS (
-         |  SELECT media_ref, 'tile_' || ti AS part,
-         |    CAST(list_reduce(list(val ORDER BY y, x, c), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS pix_fp,
-         |    CAST(list_reduce(list(2*val ORDER BY c, y, x), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS norm_fp
-         |  FROM tile_vals GROUP BY media_ref, ti),
-         |global_parts AS (
-         |  SELECT media_ref, 'global' AS part,
-         |    CAST(list_reduce(list(val ORDER BY y, x, c), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS pix_fp,
-         |    CAST(list_reduce(list(2*val ORDER BY c, y, x), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS norm_fp
-         |  FROM canvas GROUP BY media_ref)
-         |SELECT media_ref, part, 16::BIGINT AS width, 16::BIGINT AS height, pix_fp, norm_fp
-         |FROM (SELECT * FROM tile_parts UNION ALL SELECT * FROM global_parts)""".stripMargin,
-
-    // PNG-profile replay: every profile is the same closed-form content,
-    // so the oracle maps profile → pixel formula and folds the 19×13×3
-    // grid — the engine's REAL per-profile decodes must land on these
-    // exact checksums (alpha/low-byte/interlace variants must equal
-    // their base profile's pixels).
-    "mm_png_profiles" -> {
-      import graft.operators.PixelOps
-      s"""WITH refs AS (
-         |  SELECT 'img://' || doc_id || '/0' AS media_ref
-         |  FROM documents WHERE doc_id % 2 = 0),
-         |meta AS (
-         |  SELECT media_ref, (${md5iSql("'px|' || media_ref")} % 251)::BIGINT AS s
-         |  FROM refs
-         |  WHERE ${md5iSql("'pxs|' || media_ref")} % ${PixelOps.SubsetMod} = 0),
-         |profiles(profile, kind) AS (VALUES
-         |  ('truecolor','rgb'), ('adam7','rgb'), ('rgb16','rgb'), ('rgba8','rgb'),
-         |  ('gray8','gray'), ('gray8_adam7','gray'), ('gray16','gray'), ('graya8','gray'),
-         |  ('gray1','g1'), ('gray4','g4'), ('palette8','p8'), ('palette4_adam7','p4')),
-         |grid AS (
-         |  SELECT gx.x, gy.y, ch.c
-         |  FROM (SELECT unnest(generate_series(0, ${PixelOps.ProfW - 1})) AS x) gx,
-         |       (SELECT unnest(generate_series(0, ${PixelOps.ProfH - 1})) AS y) gy,
-         |       (SELECT unnest([0,1,2]) AS c) ch),
-         |vals AS (
-         |  SELECT m.media_ref, p.profile, g.x, g.y, g.c,
-         |    CASE p.kind
-         |      WHEN 'rgb' THEN
-         |        CASE g.c WHEN 0 THEN (7*g.x + 13*g.y + m.s) % 256
-         |                 WHEN 1 THEN (11*g.x + 3*g.y + 2*m.s) % 256
-         |                 ELSE (g.x + g.y + 3*m.s) % 256 END
-         |      WHEN 'gray' THEN (7*g.x + 13*g.y + m.s) % 256
-         |      WHEN 'g1' THEN 255 * ((g.x + g.y + m.s) % 2)
-         |      WHEN 'g4' THEN 17 * ((g.x + 3*g.y + m.s) % 16)
-         |      WHEN 'p8' THEN
-         |        CASE g.c WHEN 0 THEN (7*((3*g.x + 5*g.y + m.s) % 256) + m.s) % 256
-         |                 WHEN 1 THEN (11*((3*g.x + 5*g.y + m.s) % 256) + 2*m.s) % 256
-         |                 ELSE (((3*g.x + 5*g.y + m.s) % 256) + 3*m.s) % 256 END
-         |      ELSE
-         |        CASE g.c WHEN 0 THEN (7*((g.x + 2*g.y + m.s) % 16) + m.s) % 256
-         |                 WHEN 1 THEN (11*((g.x + 2*g.y + m.s) % 16) + 2*m.s) % 256
-         |                 ELSE (((g.x + 2*g.y + m.s) % 16) + 3*m.s) % 256 END
-         |    END AS val
-         |  FROM meta m CROSS JOIN profiles p CROSS JOIN grid g)
-         |SELECT media_ref, profile,
-         |  ${PixelOps.ProfW}::BIGINT AS width, ${PixelOps.ProfH}::BIGINT AS height,
-         |  CAST(list_reduce(list(val ORDER BY y, x, c),
-         |    (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS pix_fp
-         |FROM vals GROUP BY media_ref, profile""".stripMargin
-    },
-
-    // GIF rule replay: palette indices idx = (3x+5y+s) mod 256 expanded
-    // through the fixed palette (i, 7i+11, 13i+17) mod 256 — then the
-    // identical convolution/letterbox/tile machinery as mm_pixels.
-    "mm_gif_pixels" -> mmGifOracleSql("gx", 256),
-
-    // Interlace gate: the engine decodes the SAME rule frames
-    // transmitted in GIF89a 4-pass interlace order — output must
-    // hash-equal the straight-scan replay verbatim (mm_jpeg_prog
-    // pattern), so a de-interlace bug anywhere hash-fails.
-    "mm_gif_interlace" -> mmGifOracleSql("gx", 256),
-
-    // Small-code gate: 16-color frames through 4-bit LZW codes AND
-    // interlace; the oracle replays the mod-16 rule.
-    "mm_gif_small" -> mmGifOracleSql("gc", 16),
-
-    // Animated-GIF replay: frame 0 = the full-canvas mod-256 rule;
-    // patch g ≥ 1 = an 8×8 rect at ((3g)%(w-8),(5g)%(h-8)) with rule
-    // (7x'+3y'+s+17g) mod 255, transparent where (x'+y'+g)%3=0. The
-    // canvas at sampled frame f shows, per pixel, the LAST opaque
-    // writer among g ≤ f (arg_max) — base rule where no patch wrote.
-    "mm_gif_frames" ->
-      s"""WITH refs AS (
-         |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents WHERE doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT 'img://' || doc_id || '/1' FROM documents WHERE doc_id % 4 = 0),
-         |meta AS (
-         |  SELECT media_ref,
-         |    16*(${md5iSql("'grw|' || media_ref")} % 2 + 1)::BIGINT AS sw,
-         |    16*(${md5iSql("'grh|' || media_ref")} % 2 + 1)::BIGINT AS sh,
-         |    (${md5iSql("'gx|' || media_ref")} % 251)::BIGINT AS s,
-         |    (${md5iSql("'gf|' || media_ref")} % 4 + 5)::BIGINT AS nf
-         |  FROM refs
-         |  WHERE ${md5iSql("'gxs|' || media_ref")} % ${graft.operators.PixelOps.SubsetMod} = 0),
-         |sf AS (
-         |  SELECT m.*, fr.f FROM meta m,
-         |    LATERAL (SELECT unnest(generate_series(0, m.nf - 1,
-         |      ${graft.operators.PixelOps.FrameSampleStep})) AS f) fr),
-         |grid AS (
-         |  SELECT s.media_ref, s.f, s.s, s.sw, s.sh, gx.x, gy.y
-         |  FROM sf s,
-         |    LATERAL (SELECT unnest(generate_series(0, s.sw - 1)) AS x) gx,
-         |    LATERAL (SELECT unnest(generate_series(0, s.sh - 1)) AS y) gy),
-         |cand AS (
-         |  SELECT media_ref, f, sw, sh, x, y, gg.g,
-         |    CASE WHEN gg.g = 0 THEN (3*x + 5*y + s) % 256
-         |         ELSE (7*(x - (gg.g*3) % (sw-8)) + 3*(y - (gg.g*5) % (sh-8))
-         |               + s + 17*gg.g) % 255 END AS val
-         |  FROM grid,
-         |    LATERAL (SELECT unnest(generate_series(0, f)) AS g) gg
-         |  WHERE gg.g = 0 OR (
-         |    x >= (gg.g*3) % (sw-8) AND x < (gg.g*3) % (sw-8) + 8 AND
-         |    y >= (gg.g*5) % (sh-8) AND y < (gg.g*5) % (sh-8) + 8 AND
-         |    ((x - (gg.g*3) % (sw-8)) + (y - (gg.g*5) % (sh-8)) + gg.g) % 3 != 0)),
-         |sel AS (
-         |  SELECT media_ref, f, sw, sh, x, y, arg_max(val, g) AS idx
-         |  FROM cand GROUP BY media_ref, f, sw, sh, x, y),
-         |chan AS (
-         |  SELECT media_ref, f, sw, sh, x, y, cc.c,
-         |    CASE cc.c WHEN 0 THEN idx WHEN 1 THEN (7*idx+11) % 256
-         |              ELSE (13*idx+17) % 256 END AS val
-         |  FROM sel, (SELECT unnest([0,1,2]) AS c) cc)
-         |SELECT media_ref, 'frame_' || f AS part,
-         |  sw::BIGINT AS width, sh::BIGINT AS height,
-         |  CAST(list_reduce(list(val ORDER BY y, x, c), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS pix_fp,
-         |  CAST(list_reduce(list(2*val ORDER BY c, y, x), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS norm_fp
-         |FROM chan GROUP BY media_ref, f, sw, sh""".stripMargin,
-
-    // Audio rule replay: quadratic PCM rule regenerated per sample,
-    // grouped into 8000-sample windows, integer energy.
-    "mm_audio_energy" ->
-      s"""WITH refs AS (
-         |  SELECT 'aud://' || doc_id AS media_ref FROM documents WHERE doc_id % 5 = 0),
-         |meta AS (
-         |  SELECT media_ref,
-         |    (${md5iSql("'as|' || media_ref")} % 1999) AS seed,
-         |    16000 * (1 + ${md5iSql("'alen|' || media_ref")} % 2) AS n
-         |  FROM refs),
-         |s AS (
-         |  SELECT m.media_ref, g.i // 8000 AS win,
-         |    ((7*g.i*g.i + 13*g.i + m.seed) % 2001 - 1000) AS v
-         |  FROM meta m,
-         |    LATERAL (SELECT unnest(generate_series(0, m.n - 1)) AS i) g)
-         |SELECT media_ref, win::BIGINT AS win, count(*)::BIGINT AS n_samples,
-         |  CAST(sum(v*v) AS BIGINT) AS energy
-         |FROM s GROUP BY media_ref, win""".stripMargin,
-
-    // JPEG rule replay: block-constant luma v = (5·⌊x/8⌋+9·⌊y/8⌋+s) mod
-    // 256 replicated to RGB — bit-exact through the engine's real JPEG
-    // codec (DC-only blocks, step-8 DC quant) — then the identical
-    // convolution/letterbox/tile machinery as mm_pixels/mm_gif_pixels.
-    "mm_jpeg_pixels" -> mmJpegOracleSql,
-
-    // Progressive-codec gate: hash-must-equal the baseline rule replay.
-    "mm_jpeg_prog" -> mmJpegOracleSql,
-
-    // CMYK replay: per-channel inverted-ink block rules folded with the
-    // integer rule rgb_c = (2·v_c·v_k + 255) // 510, then the identical
-    // convolution/letterbox/tile machinery.
-    "mm_jpeg_cmyk" -> mmJpegCmykOracleSql,
-
-    "mm_pixels_ref" ->
-      s"""WITH refs AS (
-         |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents
-         |  WHERE doc_id % ${graft.operators.PixelOps.RefSubsetEvery} = 0),
-         |gl AS (
-         |  SELECT media_ref, rw, rh, s, 640*rw AS sw, 640*rh AS sh,
-         |    CASE WHEN rw >= rh THEN 1024 ELSE 512 END AS nw,
-         |    CASE WHEN rh >= rw THEN 1024 ELSE 512 END AS nh,
-         |    (1024 - CASE WHEN rw >= rh THEN 1024 ELSE 512 END) // 2 AS xoff,
-         |    (1024 - CASE WHEN rh >= rw THEN 1024 ELSE 512 END) // 2 AS yoff
-         |  FROM (
-         |    SELECT media_ref,
-         |      (${md5iSql("'qrw|' || media_ref")} % 2 + 1)::BIGINT AS rw,
-         |      (${md5iSql("'qrh|' || media_ref")} % 2 + 1)::BIGINT AS rh,
-         |      (${md5iSql("'px|' || media_ref")} % 251)::BIGINT AS s
-         |    FROM refs)),
-         |coefr(insz, outsz, oi, si, w) AS (VALUES ${graft.operators.PixelOps.coeffSqlValuesRef}),
-         |vsel AS (SELECT DISTINCT insz, outsz, si FROM coefr WHERE oi % 64 = 0),
-         |ys AS (
-         |  SELECT g.media_ref, v.si AS y
-         |  FROM gl g JOIN vsel v ON v.insz = g.sh AND v.outsz = g.nh
-         |  UNION
-         |  SELECT g.media_ref, gy.y
-         |  FROM gl g, LATERAL (SELECT unnest(generate_series(0, g.sh - 1)) AS y) gy
-         |  WHERE gy.y % 64 = 0),
-         |src AS (
-         |  SELECT y.media_ref, gx.x, y.y, ch.c,
-         |    CASE ch.c WHEN 0 THEN (7*gx.x + 13*y.y + g.s) % 256
-         |              WHEN 1 THEN (11*gx.x + 3*y.y + 2*g.s) % 256
-         |              ELSE (gx.x + y.y + 3*g.s) % 256 END AS val
-         |  FROM ys y
-         |  JOIN gl g ON g.media_ref = y.media_ref,
-         |    LATERAL (SELECT unnest(generate_series(0, g.sw - 1)) AS x) gx,
-         |    (SELECT unnest([0,1,2]) AS c) ch),
-         |hp AS (
-         |  SELECT s.media_ref, t.oi AS x, s.y, s.c,
-         |    greatest(0, least(255, CAST(floor((2097152 + sum(s.val * t.w)) / 4194304.0) AS BIGINT))) AS val
-         |  FROM src s
-         |  JOIN gl g ON s.media_ref = g.media_ref
-         |  JOIN vsel v ON v.insz = g.sh AND v.outsz = g.nh AND v.si = s.y
-         |  JOIN coefr t ON t.insz = g.sw AND t.outsz = g.nw AND t.si = s.x
-         |  GROUP BY s.media_ref, t.oi, s.y, s.c),
-         |vp AS (
-         |  SELECT h.media_ref, h.x, t.oi AS y, h.c,
-         |    greatest(0, least(255, CAST(floor((2097152 + sum(h.val * t.w)) / 4194304.0) AS BIGINT))) AS val
-         |  FROM hp h
-         |  JOIN gl g ON h.media_ref = g.media_ref
-         |  JOIN coefr t ON t.insz = g.sh AND t.outsz = g.nh AND t.si = h.y
-         |    AND t.oi % 64 = 0
-         |  GROUP BY h.media_ref, h.x, t.oi, h.c),
-         |grid1024 AS (
-         |  SELECT gx.x, gy.y, ch.c
-         |  FROM (SELECT unnest(generate_series(0, 1023)) AS x) gx,
-         |       (SELECT unnest(generate_series(0, 1023)) AS y) gy,
-         |       (SELECT unnest([0,1,2]) AS c) ch
-         |  WHERE gy.y % 64 = 0),
-         |canvas AS (
-         |  SELECT g.media_ref, p.x, p.y, p.c, coalesce(v.val, 127) AS val
-         |  FROM gl g CROSS JOIN grid1024 p
-         |  LEFT JOIN vp v ON v.media_ref = g.media_ref AND v.x = p.x - g.xoff
-         |    AND v.y = p.y - g.yoff AND v.c = p.c),
-         |tiles AS (
-         |  SELECT m.media_ref, t.ti, (t.ti % m.rw) * 640 AS x0, (t.ti // m.rw) * 640 AS y0
-         |  FROM gl m,
-         |    LATERAL (SELECT unnest(generate_series(0, m.rw*m.rh - 1)) AS ti) t),
-         |tile_vals AS (
-         |  SELECT t.media_ref, t.ti, s.x - t.x0 AS x, s.y - t.y0 AS y, s.c, s.val
-         |  FROM tiles t
-         |  JOIN src s ON s.media_ref = t.media_ref
-         |    AND s.x >= t.x0 AND s.x < t.x0 + 640
-         |    AND s.y >= t.y0 AND s.y < t.y0 + 640
-         |  WHERE (s.y - t.y0) % 64 = 0),
-         |tile_parts AS (
-         |  SELECT media_ref, 'tile_' || ti AS part, 640 AS width, 640 AS height,
-         |    CAST(list_reduce(list(val ORDER BY y, x, c), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS pix_fp,
-         |    CAST(list_reduce(list(2*val ORDER BY c, y, x), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS norm_fp
-         |  FROM tile_vals GROUP BY media_ref, ti),
-         |global_parts AS (
-         |  SELECT media_ref, 'global' AS part, 1024 AS width, 1024 AS height,
-         |    CAST(list_reduce(list(val ORDER BY y, x, c), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS pix_fp,
-         |    CAST(list_reduce(list(2*val ORDER BY c, y, x), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS norm_fp
-         |  FROM canvas GROUP BY media_ref)
-         |SELECT media_ref, part, width::BIGINT AS width, height::BIGINT AS height, pix_fp, norm_fp
-         |FROM (SELECT * FROM tile_parts UNION ALL SELECT * FROM global_parts)""".stripMargin,
-
-    // Full-frame gate: same pipeline replay as mm_pixels_ref but over
-    // EVERY source row / output position, with order-free Σ(pos+1)·h(v)
-    // checksums aggregated by plain sum() — no sampling, no list folds.
-    "mm_pixels_full" ->
-      s"""WITH refs AS (
-         |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents
-         |  WHERE doc_id % ${graft.operators.PixelOps.RefSubsetEvery} = 0),
-         |gl AS (
-         |  SELECT media_ref, rw, rh, s, 640*rw AS sw, 640*rh AS sh,
-         |    CASE WHEN rw >= rh THEN 1024 ELSE 512 END AS nw,
-         |    CASE WHEN rh >= rw THEN 1024 ELSE 512 END AS nh,
-         |    (1024 - CASE WHEN rw >= rh THEN 1024 ELSE 512 END) // 2 AS xoff,
-         |    (1024 - CASE WHEN rh >= rw THEN 1024 ELSE 512 END) // 2 AS yoff
-         |  FROM (
-         |    SELECT media_ref,
-         |      (${md5iSql("'qrw|' || media_ref")} % 2 + 1)::BIGINT AS rw,
-         |      (${md5iSql("'qrh|' || media_ref")} % 2 + 1)::BIGINT AS rh,
-         |      (${md5iSql("'px|' || media_ref")} % 251)::BIGINT AS s
-         |    FROM refs)),
-         |coefr(insz, outsz, oi, si, w) AS (VALUES ${graft.operators.PixelOps.coeffSqlValuesRef}),
-         |src AS (
-         |  SELECT g.media_ref, gx.x, gy.y, ch.c,
-         |    CASE ch.c WHEN 0 THEN (7*gx.x + 13*gy.y + g.s) % 256
-         |              WHEN 1 THEN (11*gx.x + 3*gy.y + 2*g.s) % 256
-         |              ELSE (gx.x + gy.y + 3*g.s) % 256 END AS val
-         |  FROM gl g,
-         |    LATERAL (SELECT unnest(generate_series(0, g.sw - 1)) AS x) gx,
-         |    LATERAL (SELECT unnest(generate_series(0, g.sh - 1)) AS y) gy,
-         |    (SELECT unnest([0,1,2]) AS c) ch),
-         |hp AS (
-         |  SELECT s.media_ref, t.oi AS x, s.y, s.c,
-         |    greatest(0, least(255, CAST(floor((2097152 + sum(s.val * t.w)) / 4194304.0) AS BIGINT))) AS val
-         |  FROM src s
-         |  JOIN gl g ON s.media_ref = g.media_ref
-         |  JOIN coefr t ON t.insz = g.sw AND t.outsz = g.nw AND t.si = s.x
-         |  GROUP BY s.media_ref, t.oi, s.y, s.c),
-         |vp AS (
-         |  SELECT h.media_ref, h.x, t.oi AS y, h.c,
-         |    greatest(0, least(255, CAST(floor((2097152 + sum(h.val * t.w)) / 4194304.0) AS BIGINT))) AS val
-         |  FROM hp h
-         |  JOIN gl g ON h.media_ref = g.media_ref
-         |  JOIN coefr t ON t.insz = g.sh AND t.outsz = g.nh AND t.si = h.y
-         |  GROUP BY h.media_ref, h.x, t.oi, h.c),
-         |grid1024 AS (
-         |  SELECT gx.x, gy.y, ch.c
-         |  FROM (SELECT unnest(generate_series(0, 1023)) AS x) gx,
-         |       (SELECT unnest(generate_series(0, 1023)) AS y) gy,
-         |       (SELECT unnest([0,1,2]) AS c) ch),
-         |canvas AS (
-         |  SELECT g.media_ref, p.x, p.y, p.c, coalesce(v.val, 127) AS val
-         |  FROM gl g CROSS JOIN grid1024 p
-         |  LEFT JOIN vp v ON v.media_ref = g.media_ref AND v.x = p.x - g.xoff
-         |    AND v.y = p.y - g.yoff AND v.c = p.c),
-         |tiles AS (
-         |  SELECT m.media_ref, t.ti, (t.ti % m.rw) * 640 AS x0, (t.ti // m.rw) * 640 AS y0
-         |  FROM gl m,
-         |    LATERAL (SELECT unnest(generate_series(0, m.rw*m.rh - 1)) AS ti) t),
-         |tile_vals AS (
-         |  SELECT t.media_ref, t.ti, s.x - t.x0 AS x, s.y - t.y0 AS y, s.c, s.val
-         |  FROM tiles t
-         |  JOIN src s ON s.media_ref = t.media_ref
-         |    AND s.x >= t.x0 AND s.x < t.x0 + 640
-         |    AND s.y >= t.y0 AND s.y < t.y0 + 640),
-         |tile_parts AS (
-         |  SELECT media_ref, 'tile_' || ti AS part, 640 AS width, 640 AS height,
-         |    CAST(sum(((y*640 + x)*3 + c + 1) * (((val+1)*(val+31)) % 1000000007)) % 1000000007 AS BIGINT) AS pix_fp,
-         |    CAST(sum((c*409600 + y*640 + x + 1) * (((2*val+1)*(2*val+31)) % 1000000007)) % 1000000007 AS BIGINT) AS norm_fp
-         |  FROM tile_vals GROUP BY media_ref, ti),
-         |global_parts AS (
-         |  SELECT media_ref, 'global' AS part, 1024 AS width, 1024 AS height,
-         |    CAST(sum(((y*1024 + x)*3 + c + 1) * (((val+1)*(val+31)) % 1000000007)) % 1000000007 AS BIGINT) AS pix_fp,
-         |    CAST(sum((c*1048576 + y*1024 + x + 1) * (((2*val+1)*(2*val+31)) % 1000000007)) % 1000000007 AS BIGINT) AS norm_fp
-         |  FROM canvas GROUP BY media_ref)
-         |SELECT media_ref, part, width::BIGINT AS width, height::BIGINT AS height, pix_fp, norm_fp
-         |FROM (SELECT * FROM tile_parts UNION ALL SELECT * FROM global_parts)""".stripMargin,
-
-    "mm_frames" ->
-      s"""WITH refs AS (
-         |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents WHERE doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT 'img://' || doc_id || '/1' FROM documents WHERE doc_id % 4 = 0)
-         |SELECT media_ref,
-         |  unnest(generate_series(0, n_frames - 1, 10))::BIGINT AS frame_idx
-         |FROM (SELECT media_ref, ${md5iSql("'f|' || media_ref")} % 96 + 5 AS n_frames FROM refs)""".stripMargin,
-    "mm_tiling" ->
-      s"""WITH refs AS (
-         |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents WHERE doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT 'img://' || doc_id || '/1' FROM documents WHERE doc_id % 4 = 0),
-         |dims AS (
-         |  SELECT media_ref,
-         |    (${md5iSql("'w|' || media_ref")} % 1920 + 1)::BIGINT AS w,
-         |    (${md5iSql("'h|' || media_ref")} % 1080 + 1)::BIGINT AS h
-         |  FROM refs),
-         |cand AS (
-         |  SELECT a.i AS rw, b.j AS rh
-         |  FROM (SELECT unnest(generate_series(1,9)) AS i) a,
-         |       (SELECT unnest(generate_series(1,9)) AS j) b
-         |  WHERE a.i*b.j BETWEEN 2 AND 9),
-         |scored AS (
-         |  SELECT d.media_ref, d.w, d.h, c.rw, c.rh,
-         |    abs(CAST(d.w AS DOUBLE)/d.h - CAST(c.rw AS DOUBLE)/c.rh) AS diff
-         |  FROM dims d CROSS JOIN cand c),
-         |eq AS (
-         |  SELECT s.* FROM scored s
-         |  JOIN (SELECT media_ref, min(diff) AS md FROM scored GROUP BY 1) m
-         |    ON s.media_ref = m.media_ref AND s.diff = m.md),
-         |qual AS (
-         |  SELECT media_ref, rw, rh,
-         |    row_number() OVER (PARTITION BY media_ref ORDER BY rw DESC, rh DESC) AS rn
-         |  FROM eq
-         |  WHERE CAST(w*h AS DOUBLE) > 0.5 * CAST(640*640*rw*rh AS DOUBLE)),
-         |frst AS (
-         |  SELECT media_ref, rw, rh,
-         |    row_number() OVER (PARTITION BY media_ref ORDER BY rw, rh) AS rn
-         |  FROM eq),
-         |pick AS (
-         |  SELECT f.media_ref,
-         |    coalesce(q.rw, f.rw)::BIGINT AS ratio_w,
-         |    coalesce(q.rh, f.rh)::BIGINT AS ratio_h
-         |  FROM (SELECT * FROM frst WHERE rn = 1) f
-         |  LEFT JOIN (SELECT * FROM qual WHERE rn = 1) q ON f.media_ref = q.media_ref)
-         |SELECT media_ref, ratio_w, ratio_h,
-         |  (ratio_w*ratio_h)::BIGINT AS n_tiles,
-         |  273::BIGINT AS tokens_global,
-         |  (CASE WHEN ratio_w > 1 OR ratio_h > 1
-         |    THEN (10*ratio_h)*(10*ratio_w + 1) ELSE 0 END)::BIGINT AS tokens_local,
-         |  (273 + CASE WHEN ratio_w > 1 OR ratio_h > 1
-         |    THEN (10*ratio_h)*(10*ratio_w + 1) ELSE 0 END)::BIGINT AS tokens_total
-         |FROM pick""".stripMargin,
-
-    "mm_tiling_nocrop" ->
-      s"""WITH refs AS (
-         |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents WHERE doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT 'img://' || doc_id || '/1' FROM documents WHERE doc_id % 4 = 0)
-         |SELECT media_ref,
-         |  (${md5iSql("'w|' || media_ref")} % 1920 + 1)::BIGINT AS width,
-         |  (${md5iSql("'h|' || media_ref")} % 1080 + 1)::BIGINT AS height,
-         |  0::BIGINT AS n_tiles, 111::BIGINT AS tokens_global,
-         |  0::BIGINT AS tokens_local, 111::BIGINT AS tokens_total
-         |FROM refs""".stripMargin,
-
-    "ext_normalize_expr" ->
-      "SELECT doc_id, text AS norm FROM documents",
-
-    // §2.8 encoding family: the data-URL base64 round trip. Accepted
-    // data: URLs must parse back to the exact header-derived dims (any
-    // base64 corruption hash-fails); rejected schemes degrade to zeros.
-    "mm_data_url" ->
-      s"""WITH refs AS (
-         |  SELECT 'img://' || doc_id || '/0' AS media_ref FROM documents WHERE doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT 'img://' || doc_id || '/1' FROM documents WHERE doc_id % 4 = 0),
-         |r AS (
-         |  SELECT media_ref,
-         |    ${md5iSql("'rej|' || media_ref")} % 5 = 0 AS rej,
-         |    ${md5iSql("'w|' || media_ref")} % 1920 + 1 AS w,
-         |    ${md5iSql("'h|' || media_ref")} % 1080 + 1 AS h,
-         |    ${md5iSql("'t|' || media_ref")} % 3 AS tf
-         |  FROM refs)
-         |SELECT media_ref,
-         |  (CASE WHEN rej THEN 0 ELSE w END)::BIGINT AS width,
-         |  (CASE WHEN rej THEN 0 ELSE h END)::BIGINT AS height,
-         |  CASE WHEN rej THEN 'rejected'
-         |       WHEN tf = 0 THEN 'jpeg' WHEN tf = 1 THEN 'png' ELSE 'gif' END AS format,
-         |  (CASE WHEN rej THEN 0
-         |        WHEN tf = 0 THEN ${MediaOps.MediaHeaders.JpegLen}
-         |        WHEN tf = 1 THEN ${MediaOps.MediaHeaders.PngLen}
-         |        ELSE ${MediaOps.MediaHeaders.GifLen} END)::BIGINT AS n_bytes
-         |FROM r""".stripMargin,
-
-    // Pruned-read replay: range buckets are monotone in doc_id, so the
-    // read set is the buckets whose [min,max] id bounds intersect the
-    // middle-fifth range; row totals are the plain filter.
-    "tio_prune" ->
-      s"""WITH mx AS (SELECT max(doc_id) AS mid FROM documents),
-         |rng AS (SELECT (mid*2)//5 AS lo, (mid*3)//5 AS hi FROM mx),
-         |w AS (SELECT d.doc_id,
-         |        least(15, (d.doc_id*16)//(mx.mid+1)) AS bucket,
-         |        (1 + CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT)
-         |         + CASE WHEN d.doc_id % 3 = 0 THEN 1 ELSE 0 END
-         |         + CASE WHEN d.doc_id % 2 = 0 THEN 1 ELSE 0 END
-         |         + CASE WHEN d.doc_id % 4 = 0 THEN 1 ELSE 0 END) AS n_spans
-         |      FROM documents d, mx),
-         |bm AS (SELECT bucket, min(doc_id) AS bmin, max(doc_id) AS bmax
-         |       FROM w GROUP BY bucket),
-         |rd AS (SELECT count(*)::BIGINT AS buckets_read,
-         |              (SELECT count(*) FROM bm)::BIGINT AS buckets_total
-         |       FROM bm, rng WHERE bmin <= hi AND bmax >= lo)
-         |SELECT
-         |  (SELECT count(*) FROM w, rng WHERE w.doc_id BETWEEN lo AND hi)::BIGINT AS n_docs,
-         |  (SELECT CAST(sum(n_spans) AS BIGINT) FROM w, rng WHERE w.doc_id BETWEEN lo AND hi) AS n_spans,
-         |  buckets_read, buckets_total
-         |FROM rd""".stripMargin,
-
-    // Bloom-pruned point-read replay on the hash layout: rebuild every
-    // bucket's 64×63-bit doc_id Bloom from the raw documents, probe the
-    // spec id set, and predict buckets_read EXACTLY (false positives
-    // included) plus the exact row totals of the matched ids.
-    "tio_prune_hash" -> {
-      val qidList = PruneHashProbeIds.map(id => s"'$id'").mkString(",")
-      s"""WITH w AS (
-         |  SELECT printf('d%010d', doc_id) AS did,
-         |    ${graft.functions.Hashing.md5iSql("printf('d%010d', doc_id)")} % 16 AS bucket,
-         |    (1 + CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT)
-         |     + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
-         |     + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-         |     + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END) AS n_spans
-         |  FROM documents),
-         |words AS (
-         |  SELECT bucket, p // 63 AS wd, bit_or(1::BIGINT << CAST(p % 63 AS INT)) AS bits
-         |  FROM (SELECT bucket,
-         |          ${graft.functions.Hashing.md5iSql("'bf' || t.i || '|' || did")} % 4032 AS p
-         |        FROM w, (SELECT unnest([0,1,2]) AS i) t)
-         |  GROUP BY 1, 2),
-         |q AS (SELECT unnest([$qidList]) AS qid),
-         |qp AS (SELECT qid,
-         |         ${graft.functions.Hashing.md5iSql("'bf' || t.i || '|' || qid")} % 4032 AS p
-         |       FROM q, (SELECT unnest([0,1,2]) AS i) t),
-         |buckets AS (SELECT DISTINCT bucket FROM w),
-         |hit AS (
-         |  SELECT b.bucket, q.qid,
-         |    sum(CASE WHEN ((coalesce(wd.bits, 0) >> CAST(q.p % 63 AS INT)) & 1) = 1
-         |        THEN 1 ELSE 0 END) AS nb
-         |  FROM buckets b CROSS JOIN qp q
-         |  LEFT JOIN words wd ON wd.bucket = b.bucket AND wd.wd = q.p // 63
-         |  GROUP BY 1, 2),
-         |readb AS (SELECT DISTINCT bucket FROM hit WHERE nb = 3)
-         |SELECT
-         |  (SELECT count(*) FROM w WHERE did IN (SELECT qid FROM q))::BIGINT AS n_docs,
-         |  (SELECT CAST(sum(n_spans) AS BIGINT) FROM w WHERE did IN (SELECT qid FROM q)) AS n_spans,
-         |  (SELECT count(*) FROM readb)::BIGINT AS buckets_read,
-         |  (SELECT count(*) FROM buckets)::BIGINT AS buckets_total""".stripMargin
-    },
-
-    // Merged-view replay: upserted keys (doc_id % 3 = 0) count exactly 1
-    // span; everything else keeps the tio_roundtrip closed form.
-    "tio_upsert" ->
-      s"""WITH w AS (
-         |  SELECT ${md5iSql("printf('d%010d', doc_id)")} % 16 AS bucket,
-         |    (CASE WHEN doc_id % 3 = 0 THEN 1
-         |          ELSE 1 + CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT)
-         |             + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-         |             + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END
-         |     END) AS n_spans
-         |  FROM documents)
-         |SELECT bucket::BIGINT AS bucket, count(*)::BIGINT AS n_docs,
-         |  CAST(sum(n_spans) AS BIGINT) AS n_spans
-         |FROM w GROUP BY bucket""".stripMargin,
-
-    "tio_roundtrip" ->
-      s"""WITH w AS (
-         |  SELECT ${md5iSql("printf('d%010d', doc_id)")} % 16 AS bucket,
-         |    (1 + CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT)
-         |       + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
-         |       + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-         |       + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END) AS n_spans
-         |  FROM documents)
-         |SELECT bucket::BIGINT AS bucket, count(*)::BIGINT AS n_docs,
-         |  CAST(sum(n_spans) AS BIGINT) AS n_spans
-         |FROM w GROUP BY bucket""".stripMargin,
-
-    "tio_compact" ->
-      s"""WITH w AS (
-         |  SELECT ${md5iSql("printf('d%010d', doc_id)")} % 16 AS bucket,
-         |    (1 + CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT)
-         |       + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
-         |       + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-         |       + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END) AS n_spans
-         |  FROM documents)
-         |SELECT bucket::BIGINT AS bucket, count(*)::BIGINT AS n_docs,
-         |  CAST(sum(n_spans) AS BIGINT) AS n_spans
-         |FROM w GROUP BY bucket""".stripMargin,
-
-    "tio_evolve" ->
-      """WITH w AS (
-        |  SELECT CASE WHEN doc_id % 2 = 0 THEN 'none'
-        |              WHEN doc_id % 3 = 0 THEN 'en' ELSE 'xx' END AS lang,
-        |    (1 + CAST(ceil(greatest(len(string_split(text,' '))-3,0)/12.0) AS BIGINT)
-        |       + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
-        |       + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-        |       + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END) AS n_spans
-        |  FROM documents)
-        |SELECT lang, count(*)::BIGINT AS n_docs,
-        |  CAST(sum(n_spans) AS BIGINT) AS n_spans
-        |FROM w GROUP BY lang""".stripMargin,
-
-    "tok_stream" ->
-      """SELECT printf('d%010d', doc_id) AS doc_id,
-        |  (11 + len(string_split(text,' '))
-        |     + CASE WHEN doc_id % 3 = 0 THEN 9 ELSE 0 END
-        |     + 111*slots)::BIGINT AS n_tokens,
-        |  slots::BIGINT AS n_image_slots,
-        |  (111*slots)::BIGINT AS n_mask_ones,
-        |  (111*slots)::BIGINT AS vision_token_total
-        |FROM (SELECT doc_id, text,
-        |        (CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-        |         + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END) AS slots
-        |      FROM documents)""".stripMargin,
-
-    // stage parity: tokens stage is exact (band 0); the quality stages'
-    // quantization error is the fractional part of the raw ratio, which
-    // is strictly < 1 unit (band 1e6 at q6), so every stage passes —
-    // the oracle asserts the expected diff stats bit-for-bit
-    "parity_stats" ->
-      s"""WITH c AS (
-         |  SELECT doc_id, len(ws)::BIGINT AS n_words,
-         |    list_sum(list_transform(ws, x -> len(x)))::BIGINT AS chars,
-         |    len(list_filter(ws, x -> x IN (${TextOps.sqlInList(TextOps.QualityStop)})))::BIGINT AS n_stop
-         |  FROM (SELECT doc_id, string_split(text,' ') AS ws FROM documents)),
-         |q AS (
-         |  SELECT doc_id,
-         |    CASE WHEN n_words > 0 THEN CAST(chars*100 AS DOUBLE)/n_words ELSE 0.0 END AS mwl_raw,
-         |    CASE WHEN n_words > 0 THEN CAST(n_stop*10000 AS DOUBLE)/n_words ELSE 0.0 END AS stop_raw
-         |  FROM c),
-         |m6 AS (
-         |  SELECT doc_id,
-         |    CAST(floor((mwl_raw - floor(mwl_raw)) * 1000000) AS BIGINT) AS mq6,
-         |    CAST(floor((stop_raw - floor(stop_raw)) * 1000000) AS BIGINT) AS sq6
-         |  FROM q)
-         |SELECT 'tokens' AS stage, count(*)::BIGINT AS n_rows,
-         |  0::BIGINT AS max_diff_q6, CAST(min(doc_id) AS BIGINT) AS argmax_key,
-         |  0::BIGINT AS n_over_band, 0::BIGINT AS band_q6, 1::BIGINT AS pass
-         |FROM documents
-         |UNION ALL
-         |SELECT 'quality_mwl', count(*)::BIGINT, max(mq6)::BIGINT,
-         |  CAST(min(CASE WHEN mq6 = mx THEN doc_id END) AS BIGINT),
-         |  CAST(sum(CASE WHEN mq6 > 1000000 THEN 1 ELSE 0 END) AS BIGINT),
-         |  1000000::BIGINT, 1::BIGINT
-         |FROM (SELECT doc_id, mq6, max(mq6) OVER () AS mx FROM m6)
-         |UNION ALL
-         |SELECT 'quality_stop', count(*)::BIGINT, max(sq6)::BIGINT,
-         |  CAST(min(CASE WHEN sq6 = sx THEN doc_id END) AS BIGINT),
-         |  CAST(sum(CASE WHEN sq6 > 1000000 THEN 1 ELSE 0 END) AS BIGINT),
-         |  1000000::BIGINT, 1::BIGINT
-         |FROM (SELECT doc_id, sq6, max(sq6) OVER () AS sx FROM m6)""".stripMargin,
-
-    // greedy decode replay: g(doc,j) = argmax_t md5i("dec|doc|j|t");
-    // first j with g=0 is the EOS step (token not emitted)
-    "dec_greedy" ->
-      s"""WITH steps AS (
-         |  SELECT doc_id, j, arg_max(t, h) AS g
-         |  FROM (SELECT doc_id, j, t,
-         |          ${md5iSql("'dec|' || doc_id || '|' || j || '|' || t")} AS h
-         |        FROM documents,
-         |             (SELECT unnest(generate_series(0,7)) AS j),
-         |             (SELECT unnest(generate_series(0,15)) AS t))
-         |  GROUP BY doc_id, j),
-         |eos AS (SELECT doc_id, min(j) AS jeos FROM steps WHERE g = 0 GROUP BY doc_id)
-         |SELECT s.doc_id,
-         |  coalesce(e.jeos, 8)::BIGINT AS n_gen,
-         |  (CASE WHEN e.jeos IS NULL THEN 0 ELSE 1 END)::BIGINT AS stopped,
-         |  (CASE WHEN e.jeos IS NULL THEN 8 ELSE e.jeos + 1 END)::BIGINT AS steps,
-         |  CAST(sum(CASE WHEN s.j < coalesce(e.jeos, 8) THEN s.g ELSE 0 END) AS BIGINT) AS gen_sum
-         |FROM steps s LEFT JOIN eos e ON s.doc_id = e.doc_id
-         |GROUP BY s.doc_id, e.jeos""".stripMargin,
-
-    // stateful ban-then-argmax loop replayed with a recursive CTE: each
-    // step bans every token that followed an earlier occurrence of the
-    // last token (n=2), falls back to unrestricted argmax if the ban
-    // empties the distribution, stops on EOS 0 or budget 12
-    "dec_greedy_norepeat" ->
-      s"""WITH RECURSIVE gen AS (
-         |  SELECT doc_id, 0 AS j, CAST([] AS BIGINT[]) AS seq, FALSE AS stopped
-         |  FROM documents
-         |  UNION ALL
-         |  SELECT doc_id, j + 1,
-         |    CASE WHEN nxt = 0 THEN seq ELSE list_append(seq, nxt) END,
-         |    nxt = 0
-         |  FROM (
-         |    SELECT doc_id, j, seq,
-         |      -(list_aggregate(
-         |          CASE WHEN len(list_filter(cands, p -> NOT list_contains(banned, -p[2]))) = 0
-         |               THEN cands
-         |               ELSE list_filter(cands, p -> NOT list_contains(banned, -p[2])) END,
-         |          'max'))[2] AS nxt
-         |    FROM (
-         |      SELECT doc_id, j, seq,
-         |        list_transform(list_filter(range(1, len(seq)), i -> seq[i] = seq[len(seq)]),
-         |                       i -> seq[i+1]) AS banned,
-         |        list_transform(range(0, 8), t -> [${md5iSql("'decnr|' || doc_id || '|' || j || '|' || t")}, -t]) AS cands
-         |      FROM gen WHERE j < 12 AND NOT stopped)))
-         |SELECT doc_id,
-         |  CAST(len(seq) AS BIGINT) AS n_gen,
-         |  (CASE WHEN stopped THEN 1 ELSE 0 END)::BIGINT AS stopped,
-         |  j::BIGINT AS steps,
-         |  coalesce(CAST(list_sum(seq) AS BIGINT), 0) AS gen_sum
-         |FROM (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY j DESC) AS rn FROM gen)
-         |WHERE rn = 1""".stripMargin,
-
-    // window counts from the tok_stream token formula; pad to ×14
-    "wp_windows" ->
-      """WITH n AS (
-        |  SELECT doc_id,
-        |    (11 + len(string_split(text,' '))
-        |       + CASE WHEN doc_id % 3 = 0 THEN 9 ELSE 0 END
-        |       + 111*(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-        |              + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END)) AS nt
-        |  FROM documents)
-        |SELECT printf('d%010d', doc_id) AS doc_id, nt::BIGINT AS n_tokens,
-        |  CAST(ceil(nt / 14.0) AS BIGINT) AS n_blocks,
-        |  (CAST(ceil(nt / 14.0) AS BIGINT) * 14 - nt)::BIGINT AS pad_len,
-        |  1::BIGINT AS roundtrip_ok
-        |FROM n""".stripMargin,
-
-    "conf_resolve" ->
-      """SELECT doc_id, 'lang.allow' AS key, 'en' AS value, 'default' AS layer
-        |FROM documents
-        |UNION ALL
-        |SELECT doc_id, 'quality.min_words',
-        |  CASE WHEN doc_id % 2 = 0 THEN CAST(doc_id % 5 AS VARCHAR)
-        |       WHEN doc_id % 3 = 0 THEN 'f' || (doc_id % 7)
-        |       ELSE '50' END,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'override'
-        |       WHEN doc_id % 3 = 0 THEN 'file' ELSE 'default' END
-        |FROM documents
-        |UNION ALL
-        |SELECT doc_id, 'tiling.max',
-        |  CASE WHEN doc_id % 3 = 0 THEN '9' ELSE '6' END,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'file' ELSE 'default' END
-        |FROM documents""".stripMargin,
-
-    // collapse semantics (see graft.conversation.Collapse scaladoc): kept
-    // sections are [system "sys w0"; system w2 (reverse-flattened with its
-    // image on even ids); last user turn "q w3" (image on %3=0)]; earlier
-    // user turn, assistant turn, empty system, and post-user system are
-    // all dropped; images collected only from kept messages.
-    "msg_collapse" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |s AS (
-        |  SELECT doc_id,
-        |    'sys ' || ws[1] AS s1,
-        |    CASE WHEN doc_id % 2 = 0 THEN '<image>' || chr(10) || ws[3]
-        |         ELSE ws[3] END AS s2,
-        |    CASE WHEN doc_id % 3 = 0 THEN '<image>' || chr(10) || 'q ' || ws[4]
-        |         ELSE 'q ' || ws[4] END AS s3
-        |  FROM w)
-        |SELECT doc_id AS conv_id,
-        |  '<|User|>' || chr(10) || s1 || chr(10) || chr(10) || s2
-        |    || chr(10) || chr(10) || s3 || chr(10) || '<|Assistant|>' || chr(10)
-        |    AS prompt,
-        |  3::BIGINT AS n_sections,
-        |  (CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-        |   + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_images
-        |FROM s""".stripMargin,
-
-    // deepseek render: system "{system_message}" + sep, then
-    // role: content + sep[idx%2] (sep2 = EOS sentinel), bare "role:" for
-    // the trailing None cue (conversation/mod.rs:63-88)
-    "conv_render" ->
-      """SELECT doc_id AS conv_id,
-        |  'doc ' || ws[1] || chr(10) || chr(10)
-        |    || '<|User|>: q ' || ws[4] || chr(10) || chr(10)
-        |    || '<|Assistant|>: a ' || ws[2] || '<｜end▁of▁sentence｜>'
-        |    || '<|User|>: and now?' || chr(10) || chr(10)
-        |    || '<|Assistant|>:' AS prompt
-        |FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents)""".stripMargin,
-
-    // P6 validity: text-word hashes are 60-bit (valid-u32 tail ≈ 2^-28);
-    // every 111-token placeholder block is id -1 → dropped
-    "tok_valid" ->
-      s"""SELECT doc_id,
-         |  (len(ws) + 111*slots)::BIGINT AS n_ids,
-         |  len(list_filter(list_transform(ws, w -> ${md5iSql("w")}),
-         |      h -> h < 4294967296))::BIGINT AS n_valid_u32,
-         |  (len(ws) + 111*slots
-         |   - len(list_filter(list_transform(ws, w -> ${md5iSql("w")}),
-         |         h -> h < 4294967296)))::BIGINT AS n_dropped
-         |FROM (SELECT doc_id, string_split(text,' ') AS ws,
-         |        (CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-         |         + CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END) AS slots
-         |      FROM documents)""".stripMargin,
-
-    // S6 dictionary tokenizer: vocab = top-16 words by (count desc, word),
-    // id = rank-1; OOV bucket id 16; fp = order-sensitive poly fold
-    "tok_dict" ->
-      s"""WITH cnt AS (
-         |  SELECT word, count(*) AS c
-         |  FROM (SELECT unnest(string_split(text,' ')) AS word FROM documents)
-         |  GROUP BY word),
-         |v AS (
-         |  SELECT word, row_number() OVER (ORDER BY c DESC, word) - 1 AS vid
-         |  FROM cnt ORDER BY c DESC, word LIMIT ${graft.operators.TokenOps.DictSize}),
-         |tokw AS (
-         |  SELECT d.doc_id, g.i, d.ws[g.i] AS word
-         |  FROM (SELECT doc_id, string_split(text,' ') AS ws FROM documents) d,
-         |       LATERAL (SELECT unnest(generate_series(1, len(d.ws))) AS i) g),
-         |tok AS (
-         |  SELECT t.doc_id, t.i,
-         |    coalesce(v.vid, ${graft.operators.TokenOps.DictSize}) AS tid
-         |  FROM tokw t LEFT JOIN v ON v.word = t.word)
-         |SELECT doc_id,
-         |  count(*)::BIGINT AS n_tokens,
-         |  CAST(sum(CASE WHEN tid = ${graft.operators.TokenOps.DictSize} THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-         |  CAST(list_reduce(list(tid ORDER BY i), (a,b) -> (a*31+b) % 1000000007) AS BIGINT) AS fp
-         |FROM tok GROUP BY doc_id""".stripMargin,
-
-    "moe_route" ->
-      """WITH q AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS qv
-        |  FROM embeddings),
-        |e AS (
-        |  SELECT vec_id, i - 1 AS expert_idx, qv[i] AS score
-        |  FROM (SELECT vec_id, qv, unnest(generate_series(1, 8)) AS i FROM q)),
-        |r AS (
-        |  SELECT vec_id, expert_idx, score,
-        |    CAST(row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY score DESC, expert_idx) AS BIGINT) AS rnk
-        |  FROM e)
-        |SELECT vec_id, expert_idx::BIGINT AS expert_idx, rnk, score,
-        |  CAST(sum(score) OVER (PARTITION BY vec_id) AS BIGINT) AS score_topk_sum
-        |FROM r WHERE rnk <= 2""".stripMargin,
-
-    // J3 gather/compute/scatter: per-expert affine over the routed rows,
-    // coefficients md5i-derived per expert — BIGINT-exact replay.
-    "moe_apply" ->
-      s"""WITH q AS (
-         |  SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS qv
-         |  FROM embeddings),
-         |e AS (
-         |  SELECT vec_id, i - 1 AS expert_idx, qv[i] AS score
-         |  FROM (SELECT vec_id, qv, unnest(generate_series(1, 8)) AS i FROM q)),
-         |r AS (
-         |  SELECT vec_id, expert_idx, score,
-         |    row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY score DESC, expert_idx) AS rnk
-         |  FROM e)
-         |SELECT vec_id, expert_idx::BIGINT AS expert_idx,
-         |  ((${md5iSql("'ea|' || expert_idx")} % 1000000 + 1) * score
-         |    + ${md5iSql("'eb|' || expert_idx")} % 1000000007)::BIGINT AS out
-         |FROM r WHERE rnk <= 2""".stripMargin,
-
-    // ids→text round trip: in-vocab words decode back to themselves
-    // (bijective vocab), OOV decodes to the <unk> sentinel.
-    "tok_roundtrip" ->
-      s"""WITH cnt AS (
-         |  SELECT word, count(*) AS c
-         |  FROM (SELECT unnest(string_split(text,' ')) AS word FROM documents)
-         |  GROUP BY word),
-         |v AS (
-         |  SELECT word, row_number() OVER (ORDER BY c DESC, word) - 1 AS vid
-         |  FROM cnt ORDER BY c DESC, word LIMIT ${graft.operators.TokenOps.DictSize}),
-         |tokw AS (
-         |  SELECT d.doc_id, g.i, d.ws[g.i] AS word
-         |  FROM (SELECT doc_id, string_split(text,' ') AS ws FROM documents) d,
-         |       LATERAL (SELECT unnest(generate_series(1, len(d.ws))) AS i) g),
-         |dec AS (
-         |  SELECT t.doc_id, t.i,
-         |    CASE WHEN v.vid IS NOT NULL THEN t.word ELSE '${graft.operators.TokenOps.UnkToken}' END AS dw,
-         |    CASE WHEN v.vid IS NOT NULL THEN 1 ELSE 0 END AS rec
-         |  FROM tokw t LEFT JOIN v ON v.word = t.word)
-         |SELECT doc_id, count(*)::BIGINT AS n_tokens,
-         |  CAST(sum(rec) AS BIGINT) AS n_recovered,
-         |  (CASE WHEN sum(rec) = count(*) THEN 1 ELSE 0 END)::BIGINT AS exact,
-         |  md5(string_agg(dw, ' ' ORDER BY i)) AS digest
-         |FROM dec GROUP BY doc_id""".stripMargin,
-  )
-
-  private def md5iSql(e: String): String = graft.functions.Hashing.md5iSql(e)
-
-  /** Shared CTE chain producing the verified minhash near-dup candidates:
-    * shingle sets → 16-perm signatures → 4 band keys → MaxBucket-capped
-    * candidate pairs → exact integer Jaccard (`v`). dedup_minhash selects
-    * from `v` directly; dedup_clusters appends a recursive min-label
-    * transitive closure over the same pairs.
-    */
-  private lazy val minhashPairCtes: String =
-    s"""ds AS (
-       |  SELECT doc_id, list_distinct(
-       |    CASE WHEN len(ws) >= 3
-       |      THEN list_transform(generate_series(1, len(ws)-2),
-       |             i -> array_to_string(list_slice(ws, i, i+2), ' '))
-       |      ELSE [array_to_string(ws, ' ')] END) AS shs
-       |  FROM (SELECT doc_id, string_split(text,' ') AS ws FROM documents)),
-       |sig AS (
-       |  SELECT doc_id, shs,
-       |    list_transform(generate_series(0,15), k ->
-       |      list_min(list_transform(shs, s ->
-       |        ((${md5iSql("'a|' || k")} % 1000000006 + 1)
-       |           * (${md5iSql("s")} % 1000000007)
-       |         + ${md5iSql("'b|' || k")} % 1000000007) % 1000000007))) AS sig
-       |  FROM ds),
-       |bnd AS (
-       |  SELECT doc_id,
-       |    md5(sig[4*b+1] || ',' || sig[4*b+2] || ',' || sig[4*b+3] || ',' || sig[4*b+4]) AS bk
-       |  FROM (SELECT doc_id, sig, unnest(generate_series(0,3)) AS b FROM sig)),
-       |sz AS (SELECT bk, count(*) AS n, min(doc_id) AS rep FROM bnd GROUP BY bk),
-       |cand AS (
-       |  SELECT DISTINCT doc_a, doc_b FROM (
-       |    SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-       |    FROM bnd x JOIN bnd y ON x.bk = y.bk AND x.doc_id < y.doc_id
-       |    JOIN sz ON sz.bk = x.bk
-       |    WHERE sz.n <= ${DedupOps.MaxBucket}
-       |    UNION ALL
-       |    SELECT sz.rep AS doc_a, b.doc_id AS doc_b
-       |    FROM bnd b JOIN sz ON sz.bk = b.bk
-       |    WHERE sz.n > ${DedupOps.MaxBucket} AND b.doc_id <> sz.rep)),
-       |v AS (
-       |  SELECT doc_a, doc_b,
-       |    len(list_intersect(a.shs, b.shs))::BIGINT AS jacc_i,
-       |    (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)))::BIGINT AS jacc_u
-       |  FROM cand JOIN ds a ON a.doc_id = cand.doc_a
-       |            JOIN ds b ON b.doc_id = cand.doc_b)""".stripMargin
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] =
+    gates.map { case (name, g) => name -> g.oracle }
 }

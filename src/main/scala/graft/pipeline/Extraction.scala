@@ -69,18 +69,6 @@ object Extraction {
     spark.sparkContext.longAccumulator("graft.spans_in"),
     spark.sparkContext.longAccumulator("graft.spans_out"))
 
-  /** extractDs with live accumulator updates per document. */
-  def extractDsWithMetrics(docs: Dataset[Doc], m: Metrics): Dataset[ExtractedDoc] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[ExtractedDoc]
-    docs.mapPartitions(_.map { d =>
-      val out = Kernel.extract(d)
-      m.docs.add(1L)
-      m.spansIn.add(d.spans.size.toLong)
-      m.spansOut.add(out.spans.size.toLong)
-      out
-    })
-  }
-
   /** Exact metric totals as a plan-level aggregation over the data
     * itself — retry-safe (exactly-once) where the accumulator surface
     * is at-least-once. Runs the kernel once in the same narrow pass and
