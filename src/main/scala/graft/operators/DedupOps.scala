@@ -461,6 +461,8 @@ object DedupOps {
   val SubstrMaxOcc = 64
   val SubstrPosBits = 20
   private val SubstrPosMod = 1L << SubstrPosBits
+  /** Posting doc ids lie in [0, 2^43): doc_id·2^20 + pos then fits a long. */
+  private val SubstrDocLimit = 1L << (63 - SubstrPosBits)
 
   /** EXACT duplicated-substring spans — the suffix-style "exact substr"
     * dedup of LLM-corpus practice (find every maximal run of ≥ k words
@@ -489,6 +491,12 @@ object DedupOps {
   def exactSubstrSpans(spark: SparkSession, docs: DataFrame,
                        k: Int = SubstrK, maxOcc: Int = SubstrMaxOcc): DataFrame = {
     import spark.implicits._
+    // an id outside [0, 2^43) would wrap or land in another doc's
+    // postings: fail the query, naming the id
+    val postingDoc = when($"doc_id" < 0 || $"doc_id" >= SubstrDocLimit,
+      raise_error(concat(lit("exactSubstrSpans: doc_id "), $"doc_id".cast("string"),
+        lit(s" is outside [0, 2^${63 - SubstrPosBits})"))))
+      .otherwise($"doc_id")
     val words = docs
       .select($"doc_id", split($"text", " ").as("ws"))
       .filter(size($"ws") >= k && size($"ws") < SubstrPosMod)
@@ -496,7 +504,7 @@ object DedupOps {
       .select($"doc_id", $"ws", explode(expr(s"sequence(0, size(ws) - $k)")).as("p"))
       .select(
         Hashing.md5iCol(concat_ws(" ", expr(s"slice(ws, p + 1, $k)"))).as("key"),
-        ($"doc_id" * SubstrPosMod + $"p").as("pk"))
+        (postingDoc * SubstrPosMod + $"p").as("pk"))
     val dupPos = occ.groupBy($"key")
       .agg(graft.functions.BoundedCollectAgg.column($"pk", maxOcc).as("occs"))
       .filter($"occs".isNotNull && size($"occs") >= 2)

@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.functions.Hashing
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Mergeable-sketch operators beyond KMV/HLL: a Bloom-filter semi-join
@@ -24,7 +23,7 @@ object SketchOps {
 
   /** Probe position of hash function `i` for `key` — the semi-join
     * filter's; the TableIO manifest blooms get the same bits from its
-    * driver-side twin through [[BloomWordsAgg]] (same wire format, same
+    * driver-side twin through [[bloomAdd]] (same wire format, same
     * DuckDB replay).
     */
   private[graft] def bloomPos(i: Int, key: org.apache.spark.sql.Column) =
@@ -36,44 +35,24 @@ object SketchOps {
   private[graft] def bloomPosLocal(i: Int, key: String): Int =
     (Hashing.md5i(s"bf$i|$key") % BloomBits).toInt
 
+  /** Set `key`'s bits in a [[BloomWords]]-long word vector: the same bits
+    * as [[bloomBuild]] (via [[bloomPosLocal]]), one key at a time.
+    */
+  private[graft] def bloomAdd(words: Array[Long], key: String): Unit = {
+    var i = 0
+    while (i < BloomHashes) {
+      val p = bloomPosLocal(i, key)
+      words(p / BitsPerWord) |= 1L << (p % BitsPerWord)
+      i += 1
+    }
+  }
+
   /** Membership probe against a [[BloomWords]]-long word vector. */
   private[graft] def bloomMaybeContains(words: IndexedSeq[Long], key: String): Boolean =
     (0 until BloomHashes).forall { i =>
       val p = bloomPosLocal(i, key)
       ((words(p / BitsPerWord) >> (p % BitsPerWord)) & 1L) == 1L
     }
-
-  /** The [[BloomWords]]-long word vector over a group's string keys, as
-    * one typed aggregate: the same bits as [[bloomBuild]] (via
-    * [[bloomPosLocal]]), but per group and beside other aggregates in a
-    * single pass. The partial state is the word vector itself; null keys
-    * set no bits, like the column form.
-    */
-  private object BloomWordsAgg extends Aggregator[String, Array[Long], Array[Long]] {
-    def zero: Array[Long] = new Array[Long](BloomWords)
-    def reduce(words: Array[Long], key: String): Array[Long] = {
-      if (key != null) {
-        var i = 0
-        while (i < BloomHashes) {
-          val p = bloomPosLocal(i, key)
-          words(p / BitsPerWord) |= 1L << (p % BitsPerWord)
-          i += 1
-        }
-      }
-      words
-    }
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var w = 0
-      while (w < BloomWords) { a(w) |= b(w); w += 1 }
-      a
-    }
-    def finish(words: Array[Long]): Array[Long] = words
-    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-  }
-
-  /** [[BloomWordsAgg]] over a string column. */
-  def bloomWords(key: Column): Column = udaf(BloomWordsAgg, Encoders.STRING)(key)
 
   /** (word, bits) rows of the Bloom filter over `keys` (one column).
     * Build is a single bit_or aggregation over ≤ BloomWords groups —

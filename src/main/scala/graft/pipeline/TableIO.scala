@@ -4,10 +4,11 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectM
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.pipeline.Extraction.ExtractedRow
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -53,10 +54,17 @@ import scala.util.Using
   * schema (evolved columns included), so building one runs no inference
   * job, and manifest-listed reads open the listed files without listing.
   *
+  * A commit is ONE query: the data write, with every bucket's manifest
+  * stats (counts, bytes, checksum, key bounds, Bloom words) observed by
+  * `Dataset.observe` on the rows as they stream into the writer. Nothing
+  * re-reads the written files; a listing of each written bucket's dir
+  * supplies its manifest's file list.
+  *
   * Resume = anti-filter of input buckets against committed manifests; the
   * write uses dynamic partition overwrite so a bucket interrupted between
   * data-append and manifest-commit is rewritten whole on the next run
-  * (partial files never double-count).
+  * (partial files never double-count). Only buckets the run wrote rows to
+  * are committed: a stale bucket dir it wrote nothing to stays invisible.
   *
   * Local FS here; at cluster scale the same protocol runs over any Hadoop
   * FileSystem with atomic rename (HDFS) — the seam is this object.
@@ -168,23 +176,113 @@ object TableIO {
         m.opt("bloom")(m.longs).getOrElse(Nil).toIndexedSeq)
     }
 
-  /** Data files of every uncommitted `data/bucket=<i>` dir, by bucket:
-    * the rows just written plus any stale dir a killed run left behind.
-    * Buckets without files are left out.
+  /** The data files of each given bucket's `data/bucket=<i>` dir, listed
+    * once, in name order. A bucket without files raises: its rows were
+    * observed on the write, so their files must be there.
     */
-  private def uncommittedFiles(spark: SparkSession, outDir: String,
-      done: Set[Int]): Map[Int, Seq[FileStatus]] = {
+  private def bucketFiles(spark: SparkSession, outDir: String,
+      buckets: Seq[Int]): Map[Int, Seq[FileStatus]] = {
     val data = new HPath(s"$outDir/data")
     val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(data)) Map.empty
-    else fs.listStatus(data).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("bucket="))
-      .map(d => d.getPath.getName.stripPrefix("bucket=").toInt -> d.getPath)
-      .filterNot { case (b, _) => done(b) }
-      .map { case (b, d) => b -> fs.listStatus(d).toSeq
-        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName) }
-      .filter(_._2.nonEmpty).toMap
+    buckets.map { b =>
+      val dir = new HPath(data, s"bucket=$b")
+      val files = (if (fs.exists(dir)) fs.listStatus(dir).toSeq else Nil)
+        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
+      if (files.isEmpty) throw new IllegalStateException(
+        s"bucket $b: the write observed rows but $dir holds no data files")
+      b -> files
+    }.toMap
   }
+
+  /** One bucket's manifest stats, as the write observed them: lineage
+    * counts, an order-insensitive checksum (XOR of per-doc FNV
+    * checksums), doc_id key bounds (the Iceberg column-stats analog
+    * [[readCommittedPruned]] skips buckets by) and doc_id Bloom words (the
+    * puffin-blob analog [[readCommittedPrunedByIds]] skips buckets by,
+    * even under the hash layout, where bounds can't prune). The words
+    * share the 64×63-bit format and hash family of the bloom_semijoin
+    * filter, so the DuckDB oracle replays membership bit for bit. Field
+    * names are the manifest keys.
+    */
+  private[pipeline] final case class BucketStats(bucket: Int, var doc_count: Long,
+      var span_count: Long, var bytes: Long, var span_checksum: Long,
+      var min_doc: String, var max_doc: String, bloom: Array[Long])
+
+  /** `a` before `b` in UTF-8 byte order (code-point order), the order of
+    * Spark's string `min`/`max`: a surrogate (a code point above U+FFFF)
+    * sorts after every other UTF-16 unit.
+    */
+  private def utf8Before(a: String, b: String): Boolean = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    if (i == n) a.length < b.length
+    else {
+      val (x, y) = (a.charAt(i), b.charAt(i))
+      if (Character.isSurrogate(x) == Character.isSurrogate(y)) x < y
+      else Character.isSurrogate(y)
+    }
+  }
+
+  /** Every bucket's [[BucketStats]] as one typed aggregate over
+    * (bucket, span_count, bytes, checksum, doc_id) rows. The buffer is
+    * indexed by bucket id (null = no row yet); the output lists the
+    * buckets seen, in bucket order. Null doc_ids set no bound and no bit,
+    * like Spark's `min`/`max` and [[graft.operators.SketchOps.bloomBuild]].
+    */
+  private object BucketStatsAgg extends Aggregator[(Int, Int, Long, Long, String),
+      Array[BucketStats], Array[BucketStats]] {
+    private type In = (Int, Int, Long, Long, String)
+    def zero: Array[BucketStats] = Array.empty
+
+    /** `buf` with a slot for bucket `b`. */
+    private def slotFor(buf: Array[BucketStats], b: Int): Array[BucketStats] = {
+      if (b < 0) throw new IllegalArgumentException(s"bucket $b: bucket ids are >= 0")
+      if (b < buf.length) buf else java.util.Arrays.copyOf(buf, b + 1)
+    }
+
+    def reduce(buf: Array[BucketStats], r: In): Array[BucketStats] = {
+      val (b, spans, bytes, checksum, id) = r
+      val out = slotFor(buf, b)
+      if (out(b) == null) out(b) = BucketStats(b, 0L, 0L, 0L, 0L, null, null,
+        new Array[Long](graft.operators.SketchOps.BloomWords))
+      val s = out(b)
+      s.doc_count += 1; s.span_count += spans; s.bytes += bytes
+      s.span_checksum ^= checksum
+      if (id != null) {
+        if (s.min_doc == null || utf8Before(id, s.min_doc)) s.min_doc = id
+        if (s.max_doc == null || utf8Before(s.max_doc, id)) s.max_doc = id
+        graft.operators.SketchOps.bloomAdd(s.bloom, id)
+      }
+      out
+    }
+
+    def merge(a: Array[BucketStats], b: Array[BucketStats]): Array[BucketStats] = {
+      val out = if (b.length > a.length) slotFor(a, b.length - 1) else a
+      b.indices.foreach { i =>
+        val (x, y) = (out(i), b(i))
+        if (x == null) out(i) = y
+        else if (y != null) {
+          x.doc_count += y.doc_count; x.span_count += y.span_count
+          x.bytes += y.bytes; x.span_checksum ^= y.span_checksum
+          if (x.min_doc == null || (y.min_doc != null && utf8Before(y.min_doc, x.min_doc)))
+            x.min_doc = y.min_doc
+          if (x.max_doc == null || (y.max_doc != null && utf8Before(x.max_doc, y.max_doc)))
+            x.max_doc = y.max_doc
+          var w = 0
+          while (w < x.bloom.length) { x.bloom(w) |= y.bloom(w); w += 1 }
+        }
+      }
+      out
+    }
+
+    def finish(buf: Array[BucketStats]): Array[BucketStats] = buf.filter(_ != null)
+    def bufferEncoder: Encoder[Array[BucketStats]] = ExpressionEncoder[Array[BucketStats]]()
+    def outputEncoder: Encoder[Array[BucketStats]] = ExpressionEncoder[Array[BucketStats]]()
+  }
+
+  private lazy val bucketStats =
+    udaf(BucketStatsAgg, Encoders.product[(Int, Int, Long, Long, String)])
 
   private lazy val rowEncoder = Encoders.product[ExtractedRow]
   private def baseSchema: StructType = rowEncoder.schema
@@ -247,63 +345,50 @@ object TableIO {
   def writeResumable(rows: Dataset[ExtractedRow], outDir: String): Int = {
     val spark = rows.sparkSession
     import spark.implicits._
-    import graft.operators.SketchOps
     // read first: a table whose metadata does not parse fails before any write
     val snapshot = currentSnapshot(outDir) + 1
     val done = committedBuckets(outDir)
     val todo = if (done.isEmpty) rows
                else rows.filter(!$"bucket".isin(done.toSeq: _*))
     val t0 = System.nanoTime()
-    // The write: dynamic partition overwrite replaces only buckets present
-    // in `todo`; committed buckets' data is untouched. (No .cache(): at
-    // 100 TB the stats below re-read the *written* parquet with column
-    // pruning instead of holding the corpus in memory.)
+    // The one query. Dynamic partition overwrite replaces only buckets
+    // present in `todo`; committed buckets' data is untouched.
     // Cluster by bucket BEFORE partitionBy: without it every task opens a
     // writer per bucket (tasks × buckets tiny files — a small-file
     // explosion at scale); clustered, each task writes whole buckets.
+    // The manifest stats are observed on the rows as they stream into the
+    // writer. The observe sits after the exchange, in the write job's
+    // result stage, where Spark merges each partition's update exactly
+    // once: a failed or retried task attempt never counts.
+    val observed = Observation()
     todo
       .repartition(col("bucket"))
+      .observe(observed, bucketStats($"bucket", $"span_count", $"bytes",
+        $"checksum", $"doc_id").as("stats"))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket")
       .parquet(s"$outDir/data")
-    // One listing of the uncommitted bucket dirs supplies both the rows the
-    // stats read and the manifests' file lists, so the stats describe
-    // exactly the files a reader opens. Empty on a fully-committed rerun:
-    // no second Spark job, straight to the marker.
-    val pending = uncommittedFiles(spark, outDir, done)
-    // One aggregation over exactly those files, read with the known row
-    // schema (no inference) and pruned to the small columns: lineage
-    // counts, an order-insensitive checksum over per-doc FNV checksums,
-    // per-bucket key bounds (the Iceberg column-stats analog that lets
-    // readCommittedPruned skip buckets by range) and the doc_id Bloom
-    // words (the Iceberg puffin-blob analog: readCommittedPrunedByIds
-    // skips buckets on point/id-set predicates even under the hash
-    // layout, where bounds can't prune). The words share the 64×63-bit
-    // format and hash family of the bloom_semijoin filter, so the DuckDB
-    // oracle replays membership bit-for-bit.
-    val stats =
-      if (pending.isEmpty) Array.empty[(Int, Long, Long, Long, Long, String, String, Seq[Long])]
-      else readListed(spark, outDir, pending.values.flatten.toSeq)
-        .groupBy($"bucket").agg(
-          count(lit(1)).as("doc_count"),
-          sum($"span_count").cast("long").as("span_count"),
-          sum($"bytes").cast("long").as("bytes"),
-          expr("bit_xor(checksum)").as("span_checksum"),
-          min($"doc_id").as("min_doc"), max($"doc_id").as("max_doc"),
-          SketchOps.bloomWords($"doc_id").as("bloom"))
-        .as[(Int, Long, Long, Long, Long, String, String, Seq[Long])].collect()
+    // Only buckets the write observed get a manifest; a stale dir of a
+    // killed run that this run wrote no row to stays uncommitted.
+    val stats = observed.get("stats").asInstanceOf[Seq[Row]]
+    val files = bucketFiles(spark, outDir, stats.map(_.getAs[Int]("bucket")))
     val wallMs = (System.nanoTime() - t0) / 1000000
-    stats.foreach { case (b, dc, sc, by, ck, lo, hi, bloom) =>
+    stats.foreach { s =>
+      val b = s.getAs[Int]("bucket")
       Meta.write(manifestPath(outDir, b), "snapshot" -> snapshot, "bucket" -> b,
-        "doc_count" -> dc, "span_count" -> sc, "bytes" -> by, "wall_ms" -> wallMs,
-        "span_checksum" -> ck, "min_doc" -> lo, "max_doc" -> hi, "bloom" -> bloom,
-        "files" -> pending(b).map(f => s"bucket=$b/${f.getPath.getName}"))
+        "doc_count" -> s.getAs[Long]("doc_count"), "span_count" -> s.getAs[Long]("span_count"),
+        "bytes" -> s.getAs[Long]("bytes"), "wall_ms" -> wallMs,
+        "span_checksum" -> s.getAs[Long]("span_checksum"),
+        "min_doc" -> s.getAs[String]("min_doc"), "max_doc" -> s.getAs[String]("max_doc"),
+        "bloom" -> s.getAs[Seq[Long]]("bloom"),
+        "files" -> files(b).map(f => s"bucket=$b/${f.getPath.getName}"))
     }
+    // `todo` holds no committed bucket, so the two sets are disjoint
     Meta.write(markerPath(outDir), "snapshot" -> snapshot,
-      "buckets_committed" -> committedBuckets(outDir).size,
-      "last_run_buckets" -> stats.length, "last_run_wall_ms" -> wallMs)
-    stats.length
+      "buckets_committed" -> (done.size + stats.size),
+      "last_run_buckets" -> stats.size, "last_run_wall_ms" -> wallMs)
+    stats.size
   }
 
   /** Streaming ingestion: idempotent per-micro-batch commit. A replayed

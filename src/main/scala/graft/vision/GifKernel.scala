@@ -145,8 +145,10 @@ object GifKernel {
         else {
           // expand `code` (or prev+first(prev) for the just-assigned case)
           var sp = 0
-          var c = if (code == nextCode) { stack(sp) = firstByte(prev); sp += 1; prev }
-                  else code
+          var c = if (code == nextCode) {
+                    require(prev >= 0, s"corrupt LZW stream: code $code follows a clear")
+                    stack(sp) = firstByte(prev); sp += 1; prev
+                  } else code
           require(c < nextCode, s"corrupt LZW stream: code $c >= $nextCode")
           // walk the prefix chain to the root (roots have prefix -1)
           while (c >= 0) {
@@ -315,6 +317,34 @@ object GifKernel {
     out.toByteArray
   }
 
+  /** Bounds-checked reads over a GIF byte stream: reading past its end
+    * is the structured failure "truncated GIF", never an AIOOBE.
+    */
+  private final class GifBytes(bytes: Array[Byte]) {
+    private def need(end: Int): Unit =
+      if (end > bytes.length) throw new IllegalArgumentException("truncated GIF")
+    def u8(o: Int): Int = { need(o + 1); bytes(o) & 0xff }
+    def u16(o: Int): Int = u8(o) | (u8(o + 1) << 8)
+    def copy(o: Int, dst: Array[Byte], n: Int): Unit = {
+      need(o + n)
+      System.arraycopy(bytes, o, dst, 0, n)
+    }
+    /** Walk the length-prefixed sub-blocks at `pos`, appending their data
+      * to `sink` when given; returns the position after the terminator.
+      */
+    def subBlocks(pos: Int, sink: java.io.ByteArrayOutputStream = null): Int = {
+      var p = pos
+      var len = u8(p)
+      while (len != 0) {
+        need(p + 1 + len)
+        if (sink != null) sink.write(bytes, p + 1, len)
+        p += 1 + len
+        len = u8(p)
+      }
+      p + 1
+    }
+  }
+
   /** Decode an animated GIF to the sequence of COMPOSITED full-canvas
     * frames: each element is the logical screen as displayed after that
     * frame — sub-rectangle frames are scattered onto the canvas,
@@ -330,18 +360,19 @@ object GifKernel {
   def decodeGifAnim(bytes: Array[Byte]): Seq[Indexed] = {
     require(bytes.length > 13 && bytes(0) == 'G' && bytes(1) == 'I' &&
       bytes(2) == 'F', "not a GIF")
-    def u16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
+    val in = new GifBytes(bytes)
+    import in.{u8, u16}
     val screenW = u16(6); val screenH = u16(8)
     require(screenW > 0 && screenH > 0 &&
       screenW.toLong * screenH <= 64L * 1024 * 1024,
       s"implausible screen ${screenW}x$screenH")
-    val packed = bytes(10) & 0xff
+    val packed = u8(10)
     require((packed & 0x80) != 0, "animated decode requires a global color table")
-    val bgIndex = bytes(11) & 0xff
+    val bgIndex = u8(11)
     val tableSize = 2 << (packed & 0x07)
     var pos = 13
     val palette = new Array[Byte](768)
-    System.arraycopy(bytes, pos, palette, 0, math.min(tableSize * 3, 768))
+    in.copy(pos, palette, tableSize * 3)
     pos += tableSize * 3
     val canvas = new Array[Byte](screenW * screenH)
     java.util.Arrays.fill(canvas, bgIndex.toByte)
@@ -356,42 +387,33 @@ object GifKernel {
     var disposal = 0
     var done = false
     while (!done) {
-      (bytes(pos) & 0xff) match {
+      u8(pos) match {
         case 0x3b => done = true
         case 0x21 =>
-          val label = bytes(pos + 1) & 0xff
-          if (label == 0xf9 && (bytes(pos + 2) & 0xff) >= 4) {
-            val gce = bytes(pos + 3) & 0xff
+          val label = u8(pos + 1)
+          if (label == 0xf9 && u8(pos + 2) >= 4) {
+            val gce = u8(pos + 3)
             disposal = (gce >> 2) & 0x07
             // 4..7 are reserved by GIF89a — mis-compositing them
             // silently would corrupt every later frame, so fail loud
             require(disposal <= 3, s"reserved disposal method $disposal")
-            transparentIdx = if ((gce & 1) != 0) bytes(pos + 6) & 0xff else -1
+            transparentIdx = if ((gce & 1) != 0) u8(pos + 6) else -1
           }
-          pos += 2
-          while ((bytes(pos) & 0xff) != 0) pos += 1 + (bytes(pos) & 0xff)
-          pos += 1
+          pos = in.subBlocks(pos + 2)
         case 0x2c =>
           val left = u16(pos + 1); val top = u16(pos + 3)
           val w = u16(pos + 5); val h = u16(pos + 7)
           require(w > 0 && h > 0 && left + w <= screenW && top + h <= screenH,
             s"frame rect ${w}x$h@($left,$top) exceeds ${screenW}x$screenH")
-          val localPacked = bytes(pos + 9) & 0xff
+          val localPacked = u8(pos + 9)
           require((localPacked & 0x80) == 0,
             "per-frame local color table unsupported in index-level animation compositing")
           val interlaced = (localPacked & 0x40) != 0
           pos += 10
-          val minCode = bytes(pos) & 0xff
+          val minCode = u8(pos)
           require(minCode >= 2 && minCode <= 8, s"unsupported min code size $minCode")
-          pos += 1
           val lzw = new java.io.ByteArrayOutputStream()
-          var len = bytes(pos) & 0xff
-          while (len != 0) {
-            lzw.write(bytes, pos + 1, len)
-            pos += 1 + len
-            len = bytes(pos) & 0xff
-          }
-          pos += 1
+          pos = in.subBlocks(pos + 1, lzw)
           val raw = lzwDecode(lzw.toByteArray, w * h, minCode)
           val rect = if (interlaced) scatterInterlaced(raw, w, h) else raw
           // disposal 3 restores the WHOLE canvas to its pre-frame state
@@ -439,46 +461,37 @@ object GifKernel {
   def decodeGif(bytes: Array[Byte]): Indexed = {
     require(bytes.length > 13 && bytes(0) == 'G' && bytes(1) == 'I' &&
       bytes(2) == 'F', "not a GIF")
-    def u16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-    val packed = bytes(10) & 0xff
+    val in = new GifBytes(bytes)
+    import in.{u8, u16}
+    val packed = u8(10)
     var pos = 13
     val palette = new Array[Byte](768)
     if ((packed & 0x80) != 0) {
       val tableSize = 2 << (packed & 0x07)
-      System.arraycopy(bytes, pos, palette, 0, math.min(tableSize * 3, 768))
+      in.copy(pos, palette, tableSize * 3)
       pos += tableSize * 3
     }
     // skip extension blocks (0x21 label, then length-prefixed sub-blocks)
-    while ((bytes(pos) & 0xff) == 0x21) {
-      pos += 2
-      while ((bytes(pos) & 0xff) != 0) pos += 1 + (bytes(pos) & 0xff)
-      pos += 1
-    }
-    require((bytes(pos) & 0xff) == 0x2c, "image descriptor expected")
+    while (u8(pos) == 0x21) pos = in.subBlocks(pos + 2)
+    require(u8(pos) == 0x2c, "image descriptor expected")
     val w = u16(pos + 5); val h = u16(pos + 7)
     // allocation sanity: corrupt descriptors must not request multi-GB
     // rasters (w*h can also overflow Int) — fail structured first
     require(w > 0 && h > 0 && w.toLong * h <= 64L * 1024 * 1024,
       s"implausible raster ${w}x$h")
-    val localPacked = bytes(pos + 9) & 0xff
+    val localPacked = u8(pos + 9)
     val interlaced = (localPacked & 0x40) != 0
     pos += 10
     if ((localPacked & 0x80) != 0) {
       val localSize = 2 << (localPacked & 0x07)
       java.util.Arrays.fill(palette, 0.toByte)
-      System.arraycopy(bytes, pos, palette, 0, math.min(localSize * 3, 768))
+      in.copy(pos, palette, localSize * 3)
       pos += localSize * 3
     } else require((packed & 0x80) != 0, "no global or local color table")
-    val minCode = bytes(pos) & 0xff
+    val minCode = u8(pos)
     require(minCode >= 2 && minCode <= 8, s"unsupported min code size $minCode")
-    pos += 1
     val lzw = new java.io.ByteArrayOutputStream()
-    var len = bytes(pos) & 0xff
-    while (len != 0) {
-      lzw.write(bytes, pos + 1, len)
-      pos += 1 + len
-      len = bytes(pos) & 0xff
-    }
+    in.subBlocks(pos + 1, lzw)
     val raw = lzwDecode(lzw.toByteArray, w * h, minCode)
     val idx = if (interlaced) scatterInterlaced(raw, w, h) else raw
     Indexed(w, h, idx, palette)

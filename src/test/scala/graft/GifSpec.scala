@@ -64,9 +64,10 @@ class GifSpec extends AnyFunSuite {
         case _ => java.util.Arrays.copyOf(valid, rng.nextInt(valid.length) + 1)
       }
       // property: always terminates; failures are structured
-      // RuntimeExceptions, never a hang or a multi-GB allocation
+      // IllegalArgumentExceptions, never a hang, an AIOOBE or a
+      // multi-GB allocation
       try GifKernel.decodeGif(bytes)
-      catch { case _: RuntimeException => () }
+      catch { case _: IllegalArgumentException => () }
     }
   }
 
@@ -214,7 +215,7 @@ class GifSpec extends AnyFunSuite {
         case _ => java.util.Arrays.copyOf(valid, rng.nextInt(valid.length) + 1)
       }
       try GifKernel.decodeGif(bytes)
-      catch { case _: RuntimeException => () }
+      catch { case _: IllegalArgumentException => () }
     }
   }
 
@@ -314,8 +315,23 @@ class GifSpec extends AnyFunSuite {
         case _ => java.util.Arrays.copyOf(valid, rng.nextInt(valid.length) + 1)
       }
       try GifKernel.decodeGifAnim(bytes)
-      catch { case _: RuntimeException => () }
+      catch { case _: IllegalArgumentException => () }
     }
+  }
+
+  test("truncated GIF: every proper prefix fails with \"truncated GIF\", never an AIOOBE") {
+    val still = GifKernel.encodeGif(PixelOps.ruleGifIndexed("img://4/0", 16, 16))
+    val anim = GifKernel.encodeGifAnim(16, 16, PixelOps.gifPalette,
+      Seq(GifKernel.AnimFrame(0, 0, 16, 16, PixelOps.ruleGifIndexed("img://4/1", 16, 16).idx),
+        GifKernel.AnimFrame(2, 2, 4, 4, Array.fill(16)(3.toByte), disposal = 2)))
+    def cutAt(bytes: Array[Byte], n: Int)(decode: Array[Byte] => Any): Unit = {
+      val e = intercept[IllegalArgumentException](decode(java.util.Arrays.copyOf(bytes, n)))
+      assert(e.getMessage == "truncated GIF", s"prefix of $n bytes: ${e.getMessage}")
+    }
+    // past the 13-byte header every cut lands in the palette or the block
+    // walk; the single-frame decoder never reads the trailer
+    (14 until anim.length).foreach(cutAt(anim, _)(GifKernel.decodeGifAnim))
+    (14 until still.length - 1).foreach(cutAt(still, _)(GifKernel.decodeGif))
   }
 
   test("animated: disposal 3 restores the pre-frame canvas; 4..7 fail structured") {

@@ -104,6 +104,22 @@ class OpsSpec extends AnyFunSuite {
     assert(kept == Set((1L, 0L, 3L), (2L, 0L, 3L), (3L, 0L, 3L)))
   }
 
+  test("exact-substring spans: a doc_id outside [0, 2^43) fails loudly, naming it") {
+    import spark.implicits._
+    val text = (1 to 10).map(i => s"w$i").mkString(" ")
+    for (bad <- Seq(-5L, 1L << 43)) {
+      val e = intercept[Exception](DedupOps.exactSubstrSpans(spark,
+        Seq((1L, text), (bad, text)).toDF("doc_id", "text")).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(s"doc_id $bad is outside [0, 2^43)")),
+        e.getMessage)
+    }
+    // the largest valid id still pairs with its duplicate
+    val top = (1L << 43) - 1
+    assert(DedupOps.exactSubstrSpans(spark, Seq((1L, text), (top, text)).toDF("doc_id", "text"))
+      .as[(Long, Long, Long)].collect().toSet == Set((1L, 0L, 10L), (top, 0L, 10L)))
+  }
+
   test("exact-substring cut: duplicated runs removed, counts audited, rest untouched") {
     import spark.implicits._
     val shared = (1 to 12).map(i => s"c$i").mkString(" ")

@@ -435,7 +435,7 @@ class ResumeSpec extends AnyFunSuite {
     assert(readAll(partial) == expected)
   }
 
-  test("query count: a fresh write runs the write and one aggregation; a committed rerun only the write") {
+  test("query count: a fresh write and a rerun each run only the write, observing stats") {
     import org.apache.spark.ListenerBusDrain
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -458,15 +458,40 @@ class ResumeSpec extends AnyFunSuite {
     try {
       val (written, fresh) = queries(TableIO.writeResumable(input, out))
       assert(written == Buckets)
-      assert(fresh.size == 2, fresh.mkString("\n---\n"))
-      assert(fresh.head.contains("InsertIntoHadoopFsRelationCommand"))
-      assert(fresh(1).contains("Aggregate"))
+      assert(fresh.size == 1, fresh.mkString("\n---\n"))
+      val write = fresh.head
+      assert(write.contains("InsertIntoHadoopFsRelationCommand"))
+      // the stats are observed above the exchange, in the write's result stage
+      val observe = write.indexOf("CollectMetrics")
+      assert(observe >= 0 && observe < write.indexOf("RepartitionByExpression"), write)
       val (again, rerun) = queries(TableIO.writeResumable(input, out))
       assert(again == 0)
       assert(rerun.size == 1, rerun.mkString("\n---\n"))
       assert(rerun.head.contains("InsertIntoHadoopFsRelationCommand"))
       assert(TableIO.currentSnapshot(out) == 2L)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("stale bucket dir: a run that writes no row to it leaves it uncommitted and invisible") {
+    import spark.implicits._
+    val out = tmpDir()
+    TableIO.writeResumable(rows, out)
+    val expected = readAll(out).filterNot { case (id, _, _) => Extraction.bucketOf(id, Buckets) == 3 }
+    // un-commit bucket 3: its data dir stays behind, as after a killed run
+    Files.delete(Path.of(out, "manifests", "bucket-3.json"))
+    assert(Files.isDirectory(Path.of(out, "data", "bucket=3")))
+    assert(TableIO.writeResumable(rows.filter(_.bucket != 3), out) == 0)
+    assert(TableIO.committedBuckets(out) == (0 until Buckets).toSet - 3)
+    assert(readAll(out) == expected)
+    val marker = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Path.of(out, "_SUCCESS.json").toFile)
+    assert(marker.get("buckets_committed").asInt == Buckets - 1)
+    assert(marker.get("last_run_buckets").asInt == 0)
+    // a run with rows for bucket 3 rewrites and commits it whole
+    assert(TableIO.writeResumable(rows, out) == 1)
+    assert(TableIO.committedBuckets(out) == (0 until Buckets).toSet)
+    assert(readAll(out).size == expected.size +
+      rows.filter(_.bucket == 3).count())
   }
 
   test("manifest blooms: point reads skip buckets, never rows; legacy manifests read conservatively") {
