@@ -235,6 +235,12 @@ object TableIO {
     private type In = (Int, Int, Long, Long, String)
     def zero: Array[BucketStats] = Array.empty
 
+    /** Widen `s`'s doc_id bounds to take in [lo, hi] (null: no id). */
+    private def widen(s: BucketStats, lo: String, hi: String): Unit = {
+      if (lo != null && (s.min_doc == null || utf8Before(lo, s.min_doc))) s.min_doc = lo
+      if (hi != null && (s.max_doc == null || utf8Before(s.max_doc, hi))) s.max_doc = hi
+    }
+
     /** `buf` with a slot for bucket `b`. */
     private def slotFor(buf: Array[BucketStats], b: Int): Array[BucketStats] = {
       if (b < 0) throw new IllegalArgumentException(s"bucket $b: bucket ids are >= 0")
@@ -250,8 +256,7 @@ object TableIO {
       s.doc_count += 1; s.span_count += spans; s.bytes += bytes
       s.span_checksum ^= checksum
       if (id != null) {
-        if (s.min_doc == null || utf8Before(id, s.min_doc)) s.min_doc = id
-        if (s.max_doc == null || utf8Before(s.max_doc, id)) s.max_doc = id
+        widen(s, id, id)
         graft.operators.SketchOps.bloomAdd(s.bloom, id)
       }
       out
@@ -265,10 +270,7 @@ object TableIO {
         else if (y != null) {
           x.doc_count += y.doc_count; x.span_count += y.span_count
           x.bytes += y.bytes; x.span_checksum ^= y.span_checksum
-          if (x.min_doc == null || (y.min_doc != null && utf8Before(y.min_doc, x.min_doc)))
-            x.min_doc = y.min_doc
-          if (x.max_doc == null || (y.max_doc != null && utf8Before(x.max_doc, y.max_doc)))
-            x.max_doc = y.max_doc
+          widen(x, y.min_doc, y.max_doc)
           var w = 0
           while (w < x.bloom.length) { x.bloom(w) |= y.bloom(w); w += 1 }
         }
