@@ -2,10 +2,12 @@ package graft.gates
 
 import graft.SparkEntry.PruneHashProbeIds
 import graft.corpus.CorpusDerive
+import graft.extract.Kernel
 import graft.gates.ExtractionGates.keptSpansSql
 import graft.gates.Gate._
 import graft.pipeline.Extraction.ExtractedRow
 import graft.pipeline.{Extraction, TableIO}
+import graft.schema.Doc
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -60,8 +62,9 @@ object TableGates {
       import s.implicits._
       val out = freshDir("tio-prune")
       val maxId = t(s, dir, "documents").agg(max($"doc_id")).as[Long].head()
-      val rows = Extraction.extractRowsClustered(
-        CorpusDerive.derive(s, dir), buckets = 16, maxId = maxId)
+      val rows = Extraction.extractRowsWith(CorpusDerive.derive(s, dir),
+        (_: Doc).doc_id, Kernel.extractSpans, buckets = 16,
+        bucketBy = Extraction.rangeBucketOf(_, _, maxId))
       TableIO.writeResumable(rows, out)
       val lo = maxId * 2 / 5; val hi = maxId * 3 / 5
       val (pruned, read, total) = TableIO.readCommittedPruned(

@@ -265,17 +265,20 @@ object Extraction {
     extractRowsWith(docs, (_: Doc).doc_id, Kernel.extractSpans, buckets)
 
   /** [[extractRows]] over any document type and span kernel (the
-    * pipelineWith analog for the resumable-write row shape).
+    * pipelineWith analog for the resumable-write row shape). `bucketBy`
+    * maps (doc_id, buckets) to the row's bucket: [[bucketOf]]'s hash
+    * layout, or e.g. `rangeBucketOf(_, _, maxId)`'s range-clustered one.
     */
   def extractRowsWith[T](docs: Dataset[T], idOf: T => String,
                          kernel: T => IndexedSeq[ExtractedSpan],
-                         buckets: Int): Dataset[ExtractedRow] = {
+                         buckets: Int,
+                         bucketBy: (String, Int) => Int = bucketOf): Dataset[ExtractedRow] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[ExtractedRow]
     docs.mapPartitions(_.map { doc =>
       val id = idOf(doc)
       val spans = kernel(doc)
       val md = Kernel.renderMarkdown(spans)
-      ExtractedRow(id, spans, md, bucketOf(id, buckets), spans.size,
+      ExtractedRow(id, spans, md, bucketBy(id, buckets), spans.size,
         md.length.toLong, Kernel.checksum(ExtractedDoc(id, spans, md)))
     })
   }
@@ -293,26 +296,12 @@ object Extraction {
     * bounds become an effective skipping index
     * ([[TableIO.readCommittedPruned]]). Hash buckets spread every id
     * range across ALL buckets — resume-friendly but unprunable; this is
-    * the layout trade Iceberg exposes as partition-spec choice.
+    * the layout trade Iceberg exposes as partition-spec choice. Pass
+    * `rangeBucketOf(_, _, maxId)` as [[extractRowsWith]]'s `bucketBy`
+    * (`maxId` from a one-column pre-scan or catalog stats).
     */
   def rangeBucketOf(docId: String, buckets: Int, maxId: Long): Int = {
     val id = docId.slice(1, 11).toLong
     math.min(buckets - 1, (id * buckets / (maxId + 1)).toInt)
-  }
-
-  /** [[extractRows]] with range-clustered buckets (see [[rangeBucketOf]];
-    * `maxId` from a one-column pre-scan or catalog stats).
-    */
-  def extractRowsClustered(docs: Dataset[Doc], buckets: Int,
-                           maxId: Long): Dataset[ExtractedRow] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[ExtractedRow]
-    docs.mapPartitions(_.map { doc =>
-      val spans = Kernel.extractSpans(doc)
-      val md = Kernel.renderMarkdown(spans)
-      ExtractedRow(doc.doc_id, spans, md,
-        rangeBucketOf(doc.doc_id, buckets, maxId), spans.size,
-        md.length.toLong,
-        Kernel.checksum(ExtractedDoc(doc.doc_id, spans, md)))
-    })
   }
 }

@@ -20,22 +20,32 @@ import scala.util.Using
   * ships offline): an explicit per-bucket lineage-manifest + atomic
   * commit-marker layer over partitioned Parquet.
   *
-  * Layout under `outDir`:
-  *   data/bucket=<i>/ (parquet)     — extracted rows, one dir per bucket
-  *   manifests/bucket-<i>.json      — lineage: the bucket's DATA FILE LIST,
-  *                                    counts, bytes, checksum, snapshot id,
-  *                                    wall ms (atomic tmp+rename = commit)
+  * Layout under `outDir` — three table kinds, one protocol:
+  *   data/bucket=<i>/               — resumable buckets ([[writeResumable]])
+  *   data/batch=<id>/bucket=<i>/    — idempotent micro-batches ([[appendBatchDf]])
+  *   compacted/snap-<s>/bucket=<i>/ — compaction snapshots ([[compact]])
+  *   manifests/bucket-<i>.json      — a resumable bucket's DATA FILE LIST,
+  *                                    counts, bytes, checksum, key bounds,
+  *                                    Bloom words, snapshot id, wall ms
+  *   manifests/batch-<id>.json      — a micro-batch's file list and counts
+  *   manifests/compaction-<s>.json  — a snapshot's file list and what it
+  *                                    supersedes (the compaction journal)
   *   _SUCCESS.json                  — job-level marker (idempotent finalize,
   *                                    analog of the reference's SSE
   *                                    `finalize` idempotency —
   *                                    /root/reference/crates/server/src/stream.rs:287-355)
+  * Every metadata file is written atomically (tmp + rename) AFTER its data
+  * lands: that write is the commit.
+  *
+  * THE ONE VISIBILITY RULE: a row is visible only if a committed manifest
+  * or journal lists its file. Readers consume exactly the listed files — a
+  * bucket dir whose manifest never committed (a run that died between data
+  * write and commit) and stray files from a dead task attempt are
+  * invisible. No directory listing governs visibility. (Batch manifests and
+  * journals written before they listed their files are read by listing
+  * their dir's `bucket=<i>` subdirs, the listing a write takes.)
   *
   * Iceberg-fidelity properties:
-  *  - MANIFEST-LISTED READS: readers consume exactly the parquet files
-  *    named in committed manifests — a bucket directory containing data
-  *    but no manifest (a run that died between data write and commit), or
-  *    stray files from a dead task attempt, are invisible. No directory
-  *    listing governs visibility.
   *  - SNAPSHOT TIME TRAVEL: every manifest carries the snapshot id of the
   *    run that committed it; `readCommitted(asOfSnapshot = s)` reads the
   *    table as of snapshot s. Snapshot ids are monotonic (+1 per
@@ -50,15 +60,15 @@ import scala.util.Using
   * manifests, compaction journals, evolve records and `_SUCCESS.json`.
   * Metadata that does not parse, or lacks a required field, raises
   * IllegalStateException naming the file; it never reads as a default.
-  * Reads never infer a schema: every data read carries the known row
-  * schema (evolved columns included), so building one runs no inference
-  * job, and manifest-listed reads open the listed files without listing.
+  * One reader ([[readListed]]) reads all data: the listed files, under the
+  * known row schema (evolved columns included), so building a read runs
+  * no inference job and no listing.
   *
-  * A commit is ONE query: the data write, with every bucket's manifest
-  * stats (counts, bytes, checksum, key bounds, Bloom words) observed by
-  * `Dataset.observe` on the rows as they stream into the writer. Nothing
-  * re-reads the written files; a listing of each written bucket's dir
-  * supplies its manifest's file list.
+  * One write ([[writeBuckets]]) lands all data, and it is ONE query: the
+  * rows clustered by bucket, with every bucket's stats (counts, bytes,
+  * checksum, key bounds, Bloom words) observed by `Dataset.observe` as they
+  * stream into the writer. Nothing re-reads the written files; a listing
+  * of each written bucket's dir supplies the metadata's file list.
   *
   * Resume = anti-filter of input buckets against committed manifests; the
   * write uses dynamic partition overwrite so a bucket interrupted between
@@ -176,23 +186,25 @@ object TableIO {
         m.opt("bloom")(m.longs).getOrElse(Nil).toIndexedSeq)
     }
 
-  /** The data files of each given bucket's `data/bucket=<i>` dir, listed
-    * once, in name order. A bucket without files raises: its rows were
-    * observed on the write, so their files must be there.
+  private def dataDir(outDir: String): String = s"$outDir/data"
+
+  /** The data files of `dir/bucket=<b>`, relative to `dir`, in name order.
+    * None raises: a dir is listed only after a write put rows in it.
     */
-  private def bucketFiles(spark: SparkSession, outDir: String,
-      buckets: Seq[Int]): Map[Int, Seq[FileStatus]] = {
-    val data = new HPath(s"$outDir/data")
-    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    buckets.map { b =>
-      val dir = new HPath(data, s"bucket=$b")
-      val files = (if (fs.exists(dir)) fs.listStatus(dir).toSeq else Nil)
-        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-      if (files.isEmpty) throw new IllegalStateException(
-        s"bucket $b: the write observed rows but $dir holds no data files")
-      b -> files
-    }.toMap
+  private def bucketFiles(dir: String, b: Int): Seq[String] = {
+    val files = listNames(Paths.get(dir, s"bucket=$b"), "", ".parquet").sorted
+    if (files.isEmpty) throw new IllegalStateException(
+      s"bucket $b: $dir/bucket=$b holds no data files")
+    files.map(f => s"bucket=$b/$f")
   }
+
+  /** The file list of a batch or compaction committed before its metadata
+    * listed files: every `bucket=<i>` subdir of `dir`, listed as a write
+    * lists the buckets it wrote.
+    */
+  private def listedFiles(dir: String): Seq[String] =
+    listNames(Paths.get(dir), "bucket=", "").map(_.stripPrefix("bucket=").toInt)
+      .sorted.flatMap(bucketFiles(dir, _))
 
   /** One bucket's manifest stats, as the write observed them: lineage
     * counts, an order-insensitive checksum (XOR of per-doc FNV
@@ -302,95 +314,102 @@ object TableIO {
   private def typed(df: DataFrame): Dataset[ExtractedRow] =
     projectTo(df, baseSchema).as(rowEncoder)
 
-  /** Rows of exactly the listed `files` under `outDir/data`, read with the
-    * known row schema. Spark is handed the listed statuses, so it neither
-    * infers a schema nor lists the files again (which, above 32 paths, it
-    * does with a Spark job of its own).
+  /** The one data read: rows of exactly the listed `files` (relative to
+    * `base`) under `schema`, in schema order. Partition columns (`bucket`,
+    * and `batch` of micro-batch files) come from the files' dirs; `schema`
+    * types those it names. Spark is handed the files' statuses, so it
+    * neither infers a schema nor lists the files again (which, above 32
+    * paths, it does with a Spark job of its own). A listed file that is
+    * gone fails the read.
     */
-  private def readListed(spark: SparkSession, outDir: String,
-      files: Seq[FileStatus]): DataFrame = {
-    val byPath = files.map(f => f.getPath -> Array(f)).toMap
-    val listed = new FileStatusCache {
-      override def getLeafFiles(p: HPath): Option[Array[FileStatus]] = byPath.get(p)
-      def putLeafFiles(p: HPath, l: Array[FileStatus]): Unit = ()
-      def invalidateAll(): Unit = ()
+  private def readListed(spark: SparkSession, base: String, schema: StructType,
+      files: Seq[String]): DataFrame =
+    if (files.isEmpty) emptyDf(spark, schema)
+    else {
+      val root = new HPath(base)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val statuses = files.map(f => fs.getFileStatus(new HPath(root, f)))
+      val byPath = statuses.map(f => f.getPath -> Array(f)).toMap
+      val listed = new FileStatusCache {
+        override def getLeafFiles(p: HPath): Option[Array[FileStatus]] = byPath.get(p)
+        def putLeafFiles(p: HPath, l: Array[FileStatus]): Unit = ()
+        def invalidateAll(): Unit = ()
+      }
+      val index = new InMemoryFileIndex(spark, statuses.map(_.getPath),
+        Map("basePath" -> base), Some(schema), listed)
+      val parts = index.partitionSchema.fieldNames.toSet
+      projectTo(spark.baseRelationToDataFrame(HadoopFsRelation(index,
+        index.partitionSchema, StructType(schema.filterNot(f => parts(f.name))),
+        None, new ParquetFileFormat, Map.empty)(spark)), schema)
     }
-    val index = new InMemoryFileIndex(spark, files.map(_.getPath),
-      Map("basePath" -> s"$outDir/data"), Some(baseSchema), listed)
-    val parts = index.partitionSchema.fieldNames.toSet
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-      StructType(baseSchema.filterNot(f => parts(f.name))), None,
-      new ParquetFileFormat, Map.empty)(spark))
-  }
 
-  /** The one manifest-listed read: rows of the committed manifests `keep`
-    * selects, narrowed by `rows`, with (manifests read, manifests total).
-    * File statuses are taken from the manifests' file lists, so a listed
-    * file that is gone fails the read.
+  /** Rows of the committed bucket manifests `keep` selects, narrowed by
+    * `rows`, with (manifests read, manifests total).
     */
   private def readManifested(spark: SparkSession, outDir: String,
       keep: CommittedManifest => Boolean,
       rows: Column): (Dataset[ExtractedRow], Int, Int) = {
     val manifests = committedManifests(outDir)
     val live = manifests.filter(keep)
-    val data = new HPath(s"$outDir/data")
-    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = live.flatMap(_.files).map(f => fs.getFileStatus(new HPath(data, f)))
-    val df = if (files.isEmpty) emptyDf(spark, baseSchema)
-             else readListed(spark, outDir, files).filter(rows)
-    (typed(df), live.size, manifests.size)
+    val df = readListed(spark, dataDir(outDir), baseSchema, live.flatMap(_.files))
+    (typed(df.filter(rows)), live.size, manifests.size)
+  }
+
+  /** The one data write: `rows` clustered by bucket into parquet under
+    * `dir/bucket=<i>/`, overwriting `dir` (with `dynamic`, only the buckets
+    * written). Clustering BEFORE partitionBy makes each task write whole
+    * buckets; unclustered, every task opens a writer per bucket (tasks ×
+    * buckets tiny files — a small-file explosion at scale). Each bucket's
+    * [[BucketStats]] are observed on the rows as they stream into the
+    * writer. The observe sits after the exchange, in the write job's result
+    * stage, where Spark merges each partition's update exactly once: a
+    * failed or retried task attempt never counts. Returns each written
+    * bucket's stats with its files (relative to `dir`), in bucket order.
+    */
+  private def writeBuckets(rows: DataFrame, dir: String,
+      dynamic: Boolean = false): Seq[(Row, Seq[String])] = {
+    val observed = Observation()
+    rows.repartition(col("bucket"))
+      .observe(observed, bucketStats(col("bucket"), col("span_count"), col("bytes"),
+        col("checksum"), col("doc_id")).as("stats"))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
+      .partitionBy("bucket")
+      .parquet(dir)
+    observed.get("stats").asInstanceOf[Seq[Row]]
+      .map(s => s -> bucketFiles(dir, s.getAs[Int]("bucket")))
   }
 
   /** Resumable bucketed write. Returns the number of buckets written this
     * run (0 on a fully-committed rerun — idempotent no-op).
     */
   def writeResumable(rows: Dataset[ExtractedRow], outDir: String): Int = {
-    val spark = rows.sparkSession
-    import spark.implicits._
     // read first: a table whose metadata does not parse fails before any write
     val snapshot = currentSnapshot(outDir) + 1
     val done = committedBuckets(outDir)
     val todo = if (done.isEmpty) rows
-               else rows.filter(!$"bucket".isin(done.toSeq: _*))
+               else rows.filter(!col("bucket").isin(done.toSeq: _*))
     val t0 = System.nanoTime()
     // The one query. Dynamic partition overwrite replaces only buckets
-    // present in `todo`; committed buckets' data is untouched.
-    // Cluster by bucket BEFORE partitionBy: without it every task opens a
-    // writer per bucket (tasks × buckets tiny files — a small-file
-    // explosion at scale); clustered, each task writes whole buckets.
-    // The manifest stats are observed on the rows as they stream into the
-    // writer. The observe sits after the exchange, in the write job's
-    // result stage, where Spark merges each partition's update exactly
-    // once: a failed or retried task attempt never counts.
-    val observed = Observation()
-    todo
-      .repartition(col("bucket"))
-      .observe(observed, bucketStats($"bucket", $"span_count", $"bytes",
-        $"checksum", $"doc_id").as("stats"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(s"$outDir/data")
-    // Only buckets the write observed get a manifest; a stale dir of a
-    // killed run that this run wrote no row to stays uncommitted.
-    val stats = observed.get("stats").asInstanceOf[Seq[Row]]
-    val files = bucketFiles(spark, outDir, stats.map(_.getAs[Int]("bucket")))
+    // present in `todo`; committed buckets' data is untouched. Only
+    // buckets the write observed get a manifest; a stale dir of a killed
+    // run that this run wrote no row to stays uncommitted.
+    val written = writeBuckets(todo.toDF(), dataDir(outDir), dynamic = true)
     val wallMs = (System.nanoTime() - t0) / 1000000
-    stats.foreach { s =>
+    written.foreach { case (s, files) =>
       val b = s.getAs[Int]("bucket")
       Meta.write(manifestPath(outDir, b), "snapshot" -> snapshot, "bucket" -> b,
         "doc_count" -> s.getAs[Long]("doc_count"), "span_count" -> s.getAs[Long]("span_count"),
         "bytes" -> s.getAs[Long]("bytes"), "wall_ms" -> wallMs,
         "span_checksum" -> s.getAs[Long]("span_checksum"),
         "min_doc" -> s.getAs[String]("min_doc"), "max_doc" -> s.getAs[String]("max_doc"),
-        "bloom" -> s.getAs[Seq[Long]]("bloom"),
-        "files" -> files(b).map(f => s"bucket=$b/${f.getPath.getName}"))
+        "bloom" -> s.getAs[Seq[Long]]("bloom"), "files" -> files)
     }
     // `todo` holds no committed bucket, so the two sets are disjoint
     Meta.write(markerPath(outDir), "snapshot" -> snapshot,
-      "buckets_committed" -> (done.size + stats.size),
-      "last_run_buckets" -> stats.size, "last_run_wall_ms" -> wallMs)
-    stats.size
+      "buckets_committed" -> (done.size + written.size),
+      "last_run_buckets" -> written.size, "last_run_wall_ms" -> wallMs)
+    written.size
   }
 
   /** Streaming ingestion: idempotent per-micro-batch commit. A replayed
@@ -407,15 +426,31 @@ object TableIO {
                             batchId: Long): Boolean =
     appendBatchDf(rows.toDF(), outDir, batchId)
 
+  /** Each committed micro-batch's id and data files (relative to data/),
+    * in id order.
+    */
+  private def batchManifests(outDir: String): Seq[(Long, Seq[String])] =
+    listNames(manifestDir(outDir), "batch-", ".json").map { name =>
+      val m = Meta.read(manifestDir(outDir).resolve(name))
+      val id = m.long("batch")
+      id -> m.opt("files")(m.strings).getOrElse(
+        listedFiles(s"${dataDir(outDir)}/batch=$id").map(f => s"batch=$id/$f"))
+    }.sortBy(_._1)
+
   def committedBatches(outDir: String): Set[Long] =
-    listNames(manifestDir(outDir), "batch-", ".json")
-      .map(name => Meta.read(manifestDir(outDir).resolve(name)).long("batch")).toSet
+    batchManifests(outDir).map(_._1).toSet
+
+  /** Rows of the committed micro-batches `keep` selects, under `schema`. */
+  private def readBatches(spark: SparkSession, outDir: String,
+      keep: Long => Boolean, schema: StructType): DataFrame =
+    readListed(spark, dataDir(outDir), schema,
+      batchManifests(outDir).filter(b => keep(b._1)).flatMap(_._2))
 
   /** Read rows of manifest-committed micro-batches only; empty Dataset
     * (with the proper schema) before any batch commits.
     */
   def readCommittedBatches(spark: SparkSession, outDir: String): Dataset[ExtractedRow] =
-    typed(readBatchDirsDf(spark, outDir, committedBatches(outDir).toSeq, baseSchema))
+    typed(readBatches(spark, outDir, _ => true, baseSchema))
 
   // ------------------------------------------------------------------
   // Upsert: MERGE-on-read (the Iceberg MoR equality-delete analog).
@@ -436,8 +471,7 @@ object TableIO {
     */
   def readMerged(spark: SparkSession, outDir: String,
                  asOfBatch: Long = Long.MaxValue): Dataset[ExtractedRow] =
-    typed(readBatchDirsDf(spark, outDir,
-        committedBatches(outDir).filter(_ <= asOfBatch).toSeq, baseSchema)
+    typed(readBatches(spark, outDir, _ <= asOfBatch, baseSchema.add("batch", "long"))
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("batch").desc)))
       .filter(col("__rn") === 1))
@@ -472,10 +506,11 @@ object TableIO {
 
   /** A compaction snapshot supersedes a set of batch ids and (for full
     * rewrites) earlier compaction snapshots. Superseded state remains
-    * readable (time travel) until [[expireSnapshots]].
+    * readable (time travel) until [[expireSnapshots]]. `files` are its
+    * data files, relative to its snapshot dir.
     */
   final case class Compaction(snapshot: Long, supersededBatches: Seq[Long],
-      supersededSnapshots: Seq[Long])
+      supersededSnapshots: Seq[Long], files: Seq[String])
 
   private def compactionPath(outDir: String, snapshot: Long): Path =
     manifestDir(outDir).resolve(s"compaction-$snapshot.json")
@@ -483,13 +518,15 @@ object TableIO {
   def compactions(outDir: String): Seq[Compaction] = {
     val raw = listNames(manifestDir(outDir), "compaction-", ".json").map { name =>
       val j = Meta.read(manifestDir(outDir).resolve(name))
-      (j.long("snapshot"), j.longs("superseded"), j.opt("superseded_snapshots")(j.longs))
+      val snap = j.long("snapshot")
+      (snap, j.longs("superseded"), j.opt("superseded_snapshots")(j.longs),
+        j.opt("files")(j.strings).getOrElse(listedFiles(compactedDir(outDir, snap).toString)))
     }.sortBy(_._1)
-    raw.map { case (snap, batches, snaps) =>
+    raw.map { case (snap, batches, snaps, files) =>
       // legacy journals (pre-binpack) lack superseded_snapshots; their
       // full-rewrite semantics superseded every earlier compaction
       Compaction(snap, batches,
-        snaps.getOrElse(raw.map(_._1).filter(_ < snap)))
+        snaps.getOrElse(raw.map(_._1).filter(_ < snap)), files)
     }
   }
 
@@ -514,12 +551,16 @@ object TableIO {
   private def compactedDir(outDir: String, snapshot: Long): Path =
     Paths.get(outDir, "compacted", s"snap-$snapshot")
 
-  private def writeCompaction(outDir: String, snapshot: Long,
+  /** Rewrite `rows` as snapshot `snapshot`, superseding `batches` and
+    * `snaps`. The journal is written AFTER the data lands: the compaction
+    * becomes visible atomically with it.
+    */
+  private def writeCompaction(outDir: String, snapshot: Long, rows: DataFrame,
       batches: Seq[Long], snaps: Seq[Long]): Unit = {
-    // journal AFTER the data lands: the compaction becomes visible
-    // atomically with this manifest write
+    val written = writeBuckets(rows, compactedDir(outDir, snapshot).toString)
     Meta.write(compactionPath(outDir, snapshot), "snapshot" -> snapshot,
-      "superseded" -> batches.sorted, "superseded_snapshots" -> snaps.sorted)
+      "superseded" -> batches.sorted, "superseded_snapshots" -> snaps.sorted,
+      "files" -> written.flatMap(_._2))
     Meta.write(markerPath(outDir), "snapshot" -> snapshot,
       "compacted_batches" -> batches.length)
   }
@@ -536,13 +577,8 @@ object TableIO {
     val snapshot = currentSnapshot(outDir) + 1
     // evolution-aware read: rewrite under the LATEST schema so evolved
     // columns survive compaction (null-filled for pre-evolution rows)
-    val rows = readTableDf(spark, outDir)
-    rows.repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(compactedDir(outDir, snapshot).toString)
-    val liveBatches = committedBatches(outDir).diff(deadBatches(outDir)).toSeq
-    writeCompaction(outDir, snapshot, liveBatches,
+    writeCompaction(outDir, snapshot, readTableDf(spark, outDir),
+      committedBatches(outDir).diff(deadBatches(outDir)).toSeq,
       visibleCompactions(outDir).map(_.snapshot))
     snapshot
   }
@@ -572,13 +608,8 @@ object TableIO {
     if (small.length < 2) return None
     val snapshot = currentSnapshot(outDir) + 1
     // evolution-aware: binpack under the latest schema (see compact)
-    val schema = tableSchemaAt(outDir)
-    projectTo(readBatchDirsDf(spark, outDir, small, schema), schema)
-      .repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(compactedDir(outDir, snapshot).toString)
-    writeCompaction(outDir, snapshot, small, Seq.empty)
+    writeCompaction(outDir, snapshot,
+      readBatches(spark, outDir, small.toSet, tableSchemaAt(outDir)), small, Seq.empty)
     Some(snapshot)
   }
 
@@ -630,24 +661,23 @@ object TableIO {
     removed
   }
 
-  private def parquetFilesUnder(root: Path): Seq[String] =
-    if (!Files.exists(root)) Seq.empty
-    else Using.resource(Files.walk(root)) { st =>
-      st.iterator().asScala.filter(_.toString.endsWith(".parquet"))
-        .map(_.toString).toSeq
-    }
+  /** The files [[readTable]] reads as of `asOf`, by read base: each
+    * visible compaction's under its snapshot dir, then every committed
+    * batch's that no compaction ≤ asOf superseded, under data/.
+    */
+  private def visibleFiles(outDir: String, asOf: Long): Seq[(String, Seq[String])] = {
+    val dead = deadBatches(outDir, asOf)
+    visibleCompactions(outDir, asOf).map(c =>
+      compactedDir(outDir, c.snapshot).toString -> c.files) :+
+      (dataDir(outDir) -> batchManifests(outDir).filterNot(b => dead(b._1)).flatMap(_._2))
+  }
 
   /** All data-file paths currently visible through [[readTable]] — used
     * by tests to assert the compaction file-count drop.
     */
-  def visibleDataFiles(outDir: String): Seq[String] = {
-    val live = committedBatches(outDir).diff(deadBatches(outDir))
-    val batchFiles = live.toSeq.sorted.flatMap(b =>
-      parquetFilesUnder(Paths.get(outDir, "data", s"batch=$b")))
-    val compFiles = visibleCompactions(outDir).flatMap(c =>
-      parquetFilesUnder(compactedDir(outDir, c.snapshot)))
-    batchFiles ++ compFiles
-  }
+  def visibleDataFiles(outDir: String): Seq[String] =
+    visibleFiles(outDir, Long.MaxValue).flatMap { case (base, files) =>
+      files.map(f => s"$base/$f") }
 
   // ------------------------------------------------------------------
   // Schema evolution (the Iceberg add-column analog — its most common
@@ -711,26 +741,6 @@ object TableIO {
     activeFrom
   }
 
-  /** Rows of the given batch dirs under `schema`, plus their `batch`
-    * partition column. The schema is given, never inferred: an empty
-    * micro-batch's dir has no footers to infer it from.
-    */
-  private def readBatchDirsDf(spark: SparkSession, outDir: String,
-      batches: Seq[Long], schema: StructType): DataFrame = {
-    val withBatch = schema.add("batch", "long")
-    if (batches.isEmpty) emptyDf(spark, withBatch)
-    else spark.read.schema(withBatch)
-      .option("basePath", s"$outDir/data")
-      .parquet(batches.sorted.map(b => s"$outDir/data/batch=$b"): _*)
-  }
-
-  private def readCompactedDf(spark: SparkSession, outDir: String,
-      snapshot: Long, schema: StructType): DataFrame =
-    projectTo(spark.read
-      .schema(schema)
-      .option("basePath", compactedDir(outDir, snapshot).toString)
-      .parquet(compactedDir(outDir, snapshot).toString), schema)
-
   /** Evolution-aware [[readTable]]: same visibility rules, but the
     * result carries the SCHEMA AT `asOfSnapshot` — evolved columns
     * appear (NULL for pre-evolution rows) iff their activation snapshot
@@ -740,11 +750,8 @@ object TableIO {
   def readTableDf(spark: SparkSession, outDir: String,
       asOfSnapshot: Long = Long.MaxValue): DataFrame = {
     val schema = tableSchemaAt(outDir, asOfSnapshot)
-    val live = committedBatches(outDir)
-      .diff(deadBatches(outDir, asOfSnapshot)).toSeq
-    (visibleCompactions(outDir, asOfSnapshot)
-      .map(c => readCompactedDf(spark, outDir, c.snapshot, schema)) :+
-      projectTo(readBatchDirsDf(spark, outDir, live, schema), schema))
+    visibleFiles(outDir, asOfSnapshot)
+      .map { case (base, files) => readListed(spark, base, schema, files) }
       .reduce(_ unionByName _)
   }
 
@@ -755,8 +762,6 @@ object TableIO {
     * [[appendBatchIdempotent]].
     */
   def appendBatchDf(rows: DataFrame, outDir: String, batchId: Long): Boolean = {
-    val spark = rows.sparkSession
-    import spark.implicits._
     val schema = tableSchemaAt(outDir)
     require(rows.columns.toSeq == schema.fieldNames.toSeq,
       s"batch columns ${rows.columns.mkString(",")} != table schema " +
@@ -764,15 +769,13 @@ object TableIO {
       "then write with the full current schema")
     val mpath = manifestDir(outDir).resolve(s"batch-$batchId.json")
     if (Files.exists(mpath)) return false
-    rows.repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite) // replay-safe: replace, never append
-      .partitionBy("bucket")
-      .parquet(s"$outDir/data/batch=$batchId")
-    val (nd, ns) = readBatchDirsDf(spark, outDir, Seq(batchId), schema)
-      .agg(count(lit(1)), coalesce(sum($"span_count").cast("long"), lit(0L)))
-      .as[(Long, Long)].head()
+    // replay-safe: the batch dir is replaced whole, never appended to
+    val written = writeBuckets(rows, s"${dataDir(outDir)}/batch=$batchId")
+    val stats = written.map(_._1)
     Meta.write(mpath, "table_schema" -> currentTableSchemaVersion(outDir),
-      "batch" -> batchId, "doc_count" -> nd, "span_count" -> ns)
+      "batch" -> batchId, "doc_count" -> stats.map(_.getAs[Long]("doc_count")).sum,
+      "span_count" -> stats.map(_.getAs[Long]("span_count")).sum,
+      "files" -> written.flatMap(_._2.map(f => s"batch=$batchId/$f")))
     true
   }
 
@@ -789,7 +792,7 @@ object TableIO {
   /** Manifest-stats scan pruning (the Iceberg partition/file-skipping
     * analog): read ONLY the buckets whose [min_doc, max_doc] key bounds
     * intersect [loDoc, hiDoc], then apply the exact filter. With a
-    * range-clustered layout ([[Extraction.extractRowsClustered]]) a
+    * range-clustered layout ([[Extraction.rangeBucketOf]]) a
     * narrow predicate touches a few buckets instead of the table — at
     * 100 TB this is the difference between a point-lookup job and a full
     * scan. Doc ids are fixed-width zero-padded, so lexicographic bound

@@ -1,8 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.extract.Kernel
+import graft.pipeline.{Extraction, TableIO}
+import graft.schema.{Doc, ExtractedSpan, HtmlDoc}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured-Streaming surface of the engine.
   *
@@ -77,114 +81,84 @@ object StreamingExtract {
     */
   def extractStream(spark: SparkSession, srcDir: String, outDir: String,
                     checkpoint: String, maxFilesPerTrigger: Int = 4,
-                    availableNow: Boolean = false): StreamingQuery = {
-    import spark.implicits._
-    val schema = org.apache.spark.sql.Encoders.product[graft.schema.Doc].schema
-    val docs = spark.readStream.schema(schema)
+                    availableNow: Boolean = false): StreamingQuery =
+    extractStreamWith(spark, srcDir, outDir, checkpoint, (_: Doc).doc_id,
+      Kernel.extractSpans, maxFilesPerTrigger, availableNow)
+
+  /** [[extractStream]] over any document row type `T` and span kernel:
+    * the HTML front door streams raw (doc_id, html) rows through the
+    * [[graft.extract.Html]] tokenizer with the same idempotent per-batch
+    * commits.
+    */
+  private def extractStreamWith[T <: Product : TypeTag](spark: SparkSession,
+      srcDir: String, outDir: String, checkpoint: String, idOf: T => String,
+      kernel: T => IndexedSeq[ExtractedSpan], maxFilesPerTrigger: Int,
+      availableNow: Boolean): StreamingQuery = {
+    val enc = Encoders.product[T]
+    val docs = spark.readStream.schema(enc.schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString).parquet(srcDir)
-      .as[graft.schema.Doc]
-    val writer = graft.pipeline.Extraction.extractRows(docs, buckets = 16)
+      .as[T](enc)
+    val writer = Extraction.extractRowsWith(docs, idOf, kernel, StreamBuckets)
       .writeStream
-      .foreachBatch {
-        (batch: Dataset[graft.pipeline.Extraction.ExtractedRow], id: Long) =>
-          graft.pipeline.TableIO.appendBatchIdempotent(batch, outDir, id)
-          ()
+      .foreachBatch { (batch: Dataset[Extraction.ExtractedRow], id: Long) =>
+        TableIO.appendBatchIdempotent(batch, outDir, id)
+        ()
       }
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
+    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
-  /** [[extractStream]] for the HTML front door: the stream's rows are
-    * raw (doc_id, html) and the kernel is the [[graft.extract.Html]]
-    * tokenizer (via Extraction.htmlSpans) — same idempotent per-batch
-    * commits, same manifest-listed read-back.
-    */
-  def extractHtmlStream(spark: SparkSession, srcDir: String, outDir: String,
-                        checkpoint: String, maxFilesPerTrigger: Int = 4,
-                        availableNow: Boolean = false): StreamingQuery = {
-    import spark.implicits._
-    val schema = org.apache.spark.sql.Encoders.product[graft.schema.HtmlDoc].schema
-    val docs = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString).parquet(srcDir)
-      .as[graft.schema.HtmlDoc]
-    val writer = graft.pipeline.Extraction
-      .extractRowsWith(docs, (_: graft.schema.HtmlDoc).doc_id,
-        (d: graft.schema.HtmlDoc) => graft.pipeline.Extraction.htmlSpans(d.html),
-        buckets = 16)
-      .writeStream
-      .foreachBatch {
-        (batch: Dataset[graft.pipeline.Extraction.ExtractedRow], id: Long) =>
-          graft.pipeline.TableIO.appendBatchIdempotent(batch, outDir, id)
-          ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
+  /** Bucket count of the streaming tables. */
+  private val StreamBuckets = 16
 
   /** Continuous HTML ingestion end-to-end under the hash gate: 3 staged
     * files of synthesized spec-idiom HTML → 3 real micro-batches through
     * the REAL tokenizer → idempotent commits → manifest read-back, with
-    * the poisoned batch-0 replay asserted in-query (as in
-    * [[streamExtractCounts]]).
+    * the poisoned batch-0 replay asserted in-query (see [[streamCounts]]).
     */
   def streamHtmlCounts(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val html = spark.read.parquet(s"$sfDir/documents.parquet")
       .select($"doc_id").as[Long]
-      .map(id => graft.schema.HtmlDoc(id.toString,
-        graft.extract.Html.synthesize(id)))
-    val df = html.toDF()
-    val part = expr("CAST(doc_id AS BIGINT) % 3")
-    val src = stageOrderedParts(spark, (0 until 3).map(i => df.filter(part === i)))
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-html").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-html-ck").toString
-    val q = extractHtmlStream(spark, src, out, ckpt,
-      maxFilesPerTrigger = 1, availableNow = true)
-    q.awaitTermination()
-    val poison = graft.pipeline.Extraction.extractRowsWith(
-      html.filter(lit(false)), (_: graft.schema.HtmlDoc).doc_id,
-      (d: graft.schema.HtmlDoc) => graft.pipeline.Extraction.htmlSpans(d.html),
-      buckets = 16)
-    val replayed = graft.pipeline.TableIO.appendBatchIdempotent(poison, out, 0L)
-    require(!replayed, "batch 0 replay must be detected as already committed")
-    graft.pipeline.TableIO.readCommittedBatches(spark, out)
-      .select($"doc_id", $"span_count".cast("long").as("n_spans"))
+      .map(id => HtmlDoc(id.toString, graft.extract.Html.synthesize(id)))
+    streamCounts(spark, html, expr("CAST(doc_id AS BIGINT) % 3"),
+      (_: HtmlDoc).doc_id, (d: HtmlDoc) => Extraction.htmlSpans(d.html))
   }
 
   /** Driver query for the continuous DOCUMENT-ingestion path end-to-end
     * (the ev_stream_* queries cover the events pipeline; this one puts
     * extractStream → appendBatchIdempotent → readCommittedBatches under
-    * the hash gate). The derived corpus is staged as 3 in-order files →
-    * 3 real micro-batches through the SAME kernel as the batch pipeline,
-    * each committed idempotently. Replay idempotency is asserted INSIDE
-    * the query: batch 0 is re-committed with poisoned (empty) content —
-    * the guard must detect the existing manifest and no-op; if it
-    * overwrote, batch 0's docs would vanish and the oracle hash-fails.
+    * the hash gate), through the SAME kernel as the batch pipeline (see
+    * [[streamCounts]]).
+    */
+  def streamExtractCounts(spark: SparkSession, sfDir: String): DataFrame =
+    streamCounts(spark, graft.corpus.CorpusDerive.derive(spark, sfDir),
+      expr("CAST(substring(doc_id, 2) AS BIGINT) % 3"), (_: Doc).doc_id,
+      Kernel.extractSpans)
+
+  /** `docs` staged as 3 in-order files (split by `part`) → 3 real
+    * micro-batches through `kernel`, each committed idempotently → the
+    * committed rows' (doc_id, n_spans). Replay idempotency is asserted
+    * INSIDE the query: batch 0 is re-committed with poisoned (empty)
+    * content — the guard must detect the existing manifest and no-op; if
+    * it overwrote, batch 0's docs would vanish and the oracle hash-fails.
     * (Ref analog: idempotent finalize, server/src/stream.rs:287-355.)
     */
-  def streamExtractCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = graft.corpus.CorpusDerive.derive(spark, sfDir)
+  private def streamCounts[T <: Product : TypeTag](spark: SparkSession,
+      docs: Dataset[T], part: Column, idOf: T => String,
+      kernel: T => IndexedSeq[ExtractedSpan]): DataFrame = {
     val df = docs.toDF()
-    val part = expr("CAST(substring(doc_id, 2) AS BIGINT) % 3")
     val src = stageOrderedParts(spark, (0 until 3).map(i => df.filter(part === i)))
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-ext").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-ext-ck").toString
-    val q = extractStream(spark, src, out, ckpt,
-      maxFilesPerTrigger = 1, availableNow = true)
-    q.awaitTermination()
-    val poison = graft.pipeline.Extraction.extractRows(
-      docs.filter(lit(false)), buckets = 16)
-    val replayed = graft.pipeline.TableIO.appendBatchIdempotent(poison, out, 0L)
-    require(!replayed, "batch 0 replay must be detected as already committed")
-    graft.pipeline.TableIO.readCommittedBatches(spark, out)
-      .select($"doc_id", $"span_count".cast("long").as("n_spans"))
+    val out = java.nio.file.Files.createTempDirectory("graft-stream-out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-ck").toString
+    extractStreamWith(spark, src, out, ckpt, idOf, kernel,
+      maxFilesPerTrigger = 1, availableNow = true).awaitTermination()
+    val poison = Extraction.extractRowsWith(docs.filter(lit(false)), idOf, kernel, StreamBuckets)
+    require(!TableIO.appendBatchIdempotent(poison, out, 0L),
+      "batch 0 replay must be detected as already committed")
+    TableIO.readCommittedBatches(spark, out)
+      .select(col("doc_id"), col("span_count").cast("long").as("n_spans"))
   }
 
   /** Stage each frame as one parquet file with strictly increasing
@@ -253,7 +227,7 @@ object StreamingExtract {
       val q = eventWindowAgg(in)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Complete())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
     }
@@ -287,7 +261,7 @@ object StreamingExtract {
     withStatePartitions(spark, 8) {
       val q = in.writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
     }
@@ -343,7 +317,7 @@ object StreamingExtract {
       val q = joined
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
     }
@@ -366,7 +340,7 @@ object StreamingExtract {
       val q = eventWindowAgg(in)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Update())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
     }
@@ -455,7 +429,7 @@ object StreamingExtract {
           .option("maxFilesPerTrigger", "1").parquet(src).as[Ev])
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Update())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
     }

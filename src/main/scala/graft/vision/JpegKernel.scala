@@ -949,9 +949,9 @@ object JpegKernel {
     }
 
   /** Full decode to RGB — baseline or progressive (grayscale replicated;
-    * YCbCr via the JFIF inverse transform; Adobe 4-component CMYK/YCCK
-    * folded to RGB; subsampled chroma upsampled with libjpeg's fancy
-    * triangle filter for 2× factors).
+    * YCbCr via the JFIF inverse transform; 4-component CMYK/YCCK folded
+    * to RGB, inks inverted only under an Adobe APP14 marker; subsampled
+    * chroma upsampled with libjpeg's fancy triangle filter for 2× factors).
     */
   def decodeJpeg(bytes: Array[Byte]): Rgb = {
     val co = decodeCoefficients(bytes)
@@ -973,19 +973,21 @@ object JpegKernel {
         out(i) = v; out(i + 1) = v; out(i + 2) = v
       }
     } else if (planes.length == 4) {
-      // Adobe 4-component: stored samples are the INVERTED inks
+      // With an Adobe APP14 marker, stored samples are the INVERTED inks
       // (stored = 255 − ink, the Photoshop/libjpeg convention);
       // transform 2 ("YCCK") additionally runs YCbCr over the first
-      // three. Fold to RGB with the exact integer rule
+      // three. Without one, they are plain CMYK inks, inverted here so
+      // both fold alike. Fold to RGB with the exact integer rule
       // R = round(storedC·storedK / 255) = (2·storedC·storedK + 255)/510
       // — closed-form-replayable for the oracle's rule images.
       val Seq((p0, w0), (p1, w1), (p2, w2), (pk, wk)) = planes
       val ycck = co.adobeTransform == 2
+      val ink = if (co.adobeTransform >= 0) 0 else 0xff
       for (y <- 0 until h; x <- 0 until w) {
-        var c0 = p0(y * w0 + x) & 0xff
-        var c1 = p1(y * w1 + x) & 0xff
-        var c2 = p2(y * w2 + x) & 0xff
-        val k = pk(y * wk + x) & 0xff
+        var c0 = (p0(y * w0 + x) & 0xff) ^ ink
+        var c1 = (p1(y * w1 + x) & 0xff) ^ ink
+        var c2 = (p2(y * w2 + x) & 0xff) ^ ink
+        val k = (pk(y * wk + x) & 0xff) ^ ink
         if (ycck) {
           val lum = c0; val cbv = c1 - 128; val crv = c2 - 128
           c0 = cl(lum + 1.402 * crv) & 0xff

@@ -346,6 +346,31 @@ class JpegSpec extends AnyFunSuite {
     }
   }
 
+  test("cmyk: without an APP14 marker the planes are plain inks, never folded as inverted") {
+    val w = 16; val h = 16
+    val planes = Array.tabulate(4) { c =>
+      Array.tabulate(w * h) { i =>
+        val x = i % w; val y = i / w
+        ((5 * (x / 8) + 9 * (y / 8) + 61 * (c + 1)) % 256).toByte
+      }
+    }
+    val marked = JpegKernel.encodeCmyk(w, h, planes)
+    // the APP14 segment follows SOI: FF EE, then its big-endian length
+    assert((marked(2) & 0xff) == 0xff && (marked(3) & 0xff) == 0xee)
+    val app14 = 2 + ((marked(4) & 0xff) << 8 | (marked(5) & 0xff))
+    val unmarked = marked.take(2) ++ marked.drop(2 + app14)
+    val dec = JpegKernel.decodeJpeg(unmarked)
+    val inverted = JpegKernel.decodeJpeg(marked)
+    for (y <- 0 until h; x <- 0 until w; c <- 0 until 3) {
+      val i = y * w + x
+      val ic = 255 - (planes(c)(i) & 0xff)
+      val ik = 255 - (planes(3)(i) & 0xff)
+      assert((dec.data(i * 3 + c) & 0xff) == (2 * ic * ik + 255) / 510,
+        s"unmarked pixel ($x,$y,$c) not the plain-ink fold")
+    }
+    assert(!dec.data.sameElements(inverted.data), "unmarked decode equals the inverted-ink fold")
+  }
+
   test("cmyk: ImageIO readRaster sees our four stored planes verbatim") {
     val w = 24; val h = 16
     val rng = new scala.util.Random(31)

@@ -22,9 +22,20 @@ class ResumeSpec extends AnyFunSuite {
 
   private def rows = Extraction.extractRows(CorpusDerive.derive(spark, sf), Buckets)
 
-  private def readAll(out: String) = {
-    TableIO.readCommitted(spark, out)
-      .collect().sortBy(_.doc_id).map(r => (r.doc_id, r.spans, r.markdown)).toSeq
+  private def readAll(out: String) = sortedRows(TableIO.readCommitted(spark, out))
+
+  private def sortedRows(ds: org.apache.spark.sql.Dataset[Extraction.ExtractedRow]) =
+    ds.collect().sortBy(_.doc_id).map(r => (r.doc_id, r.spans, r.markdown)).toSeq
+
+  /** Copy a data file of `dir`'s first bucket next to it, as a dead task
+    * attempt would leave it.
+    */
+  private def addStray(dir: Path): Unit = {
+    val bucket = Files.list(dir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("bucket=")).toSeq.sorted.head
+    val real = Files.list(bucket).iterator().asScala
+      .find(_.toString.endsWith(".parquet")).get
+    Files.copy(real, bucket.resolve("part-stray-attempt.c000.parquet"))
   }
 
   test("clean run commits all buckets; rerun is an idempotent no-op") {
@@ -74,16 +85,24 @@ class ResumeSpec extends AnyFunSuite {
     val before = readAll(out)
     // a stray parquet from a dead task attempt inside a COMMITTED bucket
     // dir must be invisible (it is not in the manifest's file list) ...
-    val strayDir = Path.of(out, "data", "bucket=0")
-    val real = Files.list(strayDir).iterator().asScala
-      .find(_.toString.endsWith(".parquet")).get
-    Files.copy(real, strayDir.resolve("part-stray-attempt.c000.parquet"))
+    addStray(Path.of(out, "data"))
     // ... as must a whole data dir whose manifest was never committed
     Files.delete(Path.of(out, "manifests", "bucket-3.json"))
     val after = readAll(out)
     assert(after == before.filterNot { case (id, _, _) =>
       Extraction.bucketOf(id, Buckets) == 3 })
     assert(after.nonEmpty && after.size < before.size)
+
+    // the same rule holds for a committed micro-batch's dir and for a
+    // compacted snapshot's dir
+    val batches = tmpDir()
+    assert(TableIO.appendBatchIdempotent(rows, batches, 0L))
+    addStray(Path.of(batches, "data", "batch=0"))
+    assert(sortedRows(TableIO.readCommittedBatches(spark, batches)) == before)
+    assert(sortedRows(TableIO.readTable(spark, batches)) == before)
+    val snap = TableIO.compact(spark, batches)
+    addStray(Path.of(batches, "compacted", s"snap-$snap"))
+    assert(sortedRows(TableIO.readTable(spark, batches)) == before)
   }
 
   test("snapshot time travel: asOfSnapshot reads the table as of that commit") {
@@ -150,6 +169,20 @@ class ResumeSpec extends AnyFunSuite {
     val travel = TableIO.readTable(spark, out, asOfSnapshot = snap - 1)
       .collect().map(r => (r.doc_id, r.spans, r.markdown)).sortBy(_._1).toSeq
     assert(travel == before)
+
+    // a table whose batch manifests and journal predate their file lists
+    // reads the same rows: each lists its dir's buckets instead
+    val files = TableIO.visibleDataFiles(out)
+    Files.list(Path.of(out, "manifests")).iterator().asScala
+      .filter(_.getFileName.toString.matches("(batch|compaction)-.*\\.json"))
+      .foreach { m =>
+        val json = Files.readString(m)
+        assert(json.contains("\"files\":["), s"$m lists no files")
+        Files.writeString(m, json.replaceAll(",\"files\":\\[[^\\]]*\\]", ""))
+      }
+    assert(sortedRows(TableIO.readTable(spark, out)) == before)
+    assert(sortedRows(TableIO.readTable(spark, out, asOfSnapshot = snap - 1)) == before)
+    assert(TableIO.visibleDataFiles(out).sorted == files.sorted)
 
     // a post-compaction batch stays visible alongside the compacted base
     val extra = all.filter(r =>
@@ -469,6 +502,19 @@ class ResumeSpec extends AnyFunSuite {
       assert(rerun.size == 1, rerun.mkString("\n---\n"))
       assert(rerun.head.contains("InsertIntoHadoopFsRelationCommand"))
       assert(TableIO.currentSnapshot(out) == 2L)
+      // a micro-batch append is the one observed write too: its manifest
+      // counts come from the write, not from re-reading the batch
+      val batches = tmpDir()
+      val (appended, append) = queries(TableIO.appendBatchIdempotent(input, batches, 0L))
+      assert(appended)
+      assert(append.size == 1, append.mkString("\n---\n"))
+      assert(append.head.contains("InsertIntoHadoopFsRelationCommand") &&
+        append.head.contains("CollectMetrics"), append.head)
+      val m = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(Path.of(batches, "manifests", "batch-0.json").toFile)
+      val back = TableIO.readCommittedBatches(spark, batches).collect()
+      assert(m.get("doc_count").asLong == back.length)
+      assert(m.get("span_count").asLong == back.map(_.span_count.toLong).sum)
     } finally spark.listenerManager.unregister(listener)
   }
 
