@@ -311,6 +311,10 @@ object TableIO {
       case f        => col(f)
     }.toSeq: _*)
 
+  /** `df`'s base columns as rows. (A [[readListed]] read under
+    * `baseSchema` needs only `.as(rowEncoder)`: a second Project costs
+    * every point lookup a few ms of planning.)
+    */
   private def typed(df: DataFrame): Dataset[ExtractedRow] =
     projectTo(df, baseSchema).as(rowEncoder)
 
@@ -352,7 +356,7 @@ object TableIO {
     val manifests = committedManifests(outDir)
     val live = manifests.filter(keep)
     val df = readListed(spark, dataDir(outDir), baseSchema, live.flatMap(_.files))
-    (typed(df.filter(rows)), live.size, manifests.size)
+    (df.filter(rows).as(rowEncoder), live.size, manifests.size)
   }
 
   /** The one data write: `rows` clustered by bucket into parquet under
@@ -450,7 +454,7 @@ object TableIO {
     * (with the proper schema) before any batch commits.
     */
   def readCommittedBatches(spark: SparkSession, outDir: String): Dataset[ExtractedRow] =
-    typed(readBatches(spark, outDir, _ => true, baseSchema))
+    readBatches(spark, outDir, _ => true, baseSchema).as(rowEncoder)
 
   // ------------------------------------------------------------------
   // Upsert: MERGE-on-read (the Iceberg MoR equality-delete analog).
