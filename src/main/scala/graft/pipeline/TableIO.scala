@@ -76,8 +76,13 @@ import scala.util.Using
   * (partial files never double-count). Only buckets the run wrote rows to
   * are committed: a stale bucket dir it wrote nothing to stays invisible.
   *
-  * Local FS here; at cluster scale the same protocol runs over any Hadoop
-  * FileSystem with atomic rename (HDFS) — the seam is this object.
+  * Local FS here. Writes go through [[NioLocalFileSystem]], which sets
+  * each file's and dir's mode in-process: without libhadoop, Hadoop's own
+  * local FS forks a `chmod` per file and dir it creates (201 in a fresh
+  * 64-bucket commit). The files, modes and `.crc` sidecars are the same;
+  * reads use the session's FS. At cluster scale the same protocol runs
+  * over any Hadoop FileSystem with atomic rename (HDFS) — the seam is this
+  * object, and the writer options touch only `file:` paths.
   */
 object TableIO {
 
@@ -367,8 +372,10 @@ object TableIO {
     * [[BucketStats]] are observed on the rows as they stream into the
     * writer. The observe sits after the exchange, in the write job's result
     * stage, where Spark merges each partition's update exactly once: a
-    * failed or retried task attempt never counts. Returns each written
-    * bucket's stats with its files (relative to `dir`), in bucket order.
+    * failed or retried task attempt never counts. Files and dirs land
+    * through [[NioLocalFileSystem]]: the same modes and `.crc` sidecars,
+    * with no `chmod` forked per file. Returns each written bucket's stats
+    * with its files (relative to `dir`), in bucket order.
     */
   private def writeBuckets(rows: DataFrame, dir: String,
       dynamic: Boolean = false): Seq[(Row, Seq[String])] = {
@@ -377,6 +384,7 @@ object TableIO {
       .observe(observed, bucketStats(col("bucket"), col("span_count"), col("bytes"),
         col("checksum"), col("doc_id")).as("stats"))
       .write.mode(SaveMode.Overwrite)
+      .options(NioLocalFileSystem.WriterOptions)
       .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
       .partitionBy("bucket")
       .parquet(dir)

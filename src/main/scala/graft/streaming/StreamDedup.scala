@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.operators.DedupOps
+import graft.pipeline.NioLocalFileSystem
 
 /** Incremental (streaming) MinHash+LSH near-duplicate detection —
   * continuous-ingestion dedup, the shape a 100 TB training-data pipeline
@@ -111,8 +112,10 @@ object StreamDedup {
     val stars = pos.filter(col("p") > cap)
       .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
     toIndex.union(inBatch).union(stars).distinct()
-      .write.mode(SaveMode.Overwrite).parquet(s"$pairDir/batch=$batchId")
-    newBands.write.mode(SaveMode.Overwrite).parquet(s"$idxDir/batch=$batchId")
+      .write.mode(SaveMode.Overwrite).options(NioLocalFileSystem.WriterOptions)
+      .parquet(s"$pairDir/batch=$batchId")
+    newBands.write.mode(SaveMode.Overwrite).options(NioLocalFileSystem.WriterOptions)
+      .parquet(s"$idxDir/batch=$batchId")
   }
 
   /** Driver-verify entry: stage `docs` as `nBatches` contiguous doc_id

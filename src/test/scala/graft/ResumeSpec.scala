@@ -4,7 +4,9 @@ import graft.corpus.CorpusDerive
 import graft.pipeline.{Extraction, TableIO}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Kill-and-resume tests over the manifest + commit-marker layer
   * (SURVEY.md §7.4 risk 3): a run that dies mid-write must resume from the
@@ -38,11 +40,45 @@ class ResumeSpec extends AnyFunSuite {
     Files.copy(real, bucket.resolve("part-stray-attempt.c000.parquet"))
   }
 
+  /** Every path under `dir` by kind (data file, its `.crc`, other file,
+    * dir) with its mode.
+    */
+  private def modesByKind(dir: String): Map[String, Set[String]] =
+    Using.resource(Files.walk(Path.of(dir))) { st =>
+      st.iterator().asScala.toSeq.groupMap { p =>
+        val n = p.getFileName.toString
+        if (Files.isDirectory(p)) "dir"
+        else if (n.endsWith(".parquet")) "data"
+        else if (n.endsWith(".parquet.crc")) "data.crc"
+        else "other"
+      }(p => PosixFilePermissions.toString(Files.getPosixFilePermissions(p))).view
+        .mapValues(_.toSet).toMap
+    }
+
   test("clean run commits all buckets; rerun is an idempotent no-op") {
     val out = tmpDir()
+    // the data lands through the table writer's FS, not the session's
+    val nioStats = org.apache.hadoop.fs.FileSystem
+      .getStatistics("file", classOf[graft.pipeline.NioLocalFileSystem.Raw])
+    val nioBytes = nioStats.getBytesWritten
     val written = TableIO.writeResumable(rows, out)
     assert(written == Buckets)
     assert(TableIO.committedBuckets(out) == (0 until Buckets).toSet)
+    assert(nioStats.getBytesWritten > nioBytes)
+    // the table's files land with the modes and `.crc` sidecars a plain
+    // partitioned write leaves under the session's default FS
+    val plain = s"${tmpDir()}/plain"
+    rows.toDF().write.partitionBy("bucket").parquet(plain)
+    val modes = modesByKind(s"$out/data")
+    assert(modes("data") == Set("rw-r--r--") && modes("dir") == Set("rwxr-xr-x"), modes)
+    Seq("data", "data.crc", "dir").foreach(k => assert(modes(k) == modesByKind(plain)(k), k))
+    val dataFiles = Using.resource(Files.walk(Path.of(out, "data"))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+    }
+    assert(dataFiles.size >= Buckets)
+    dataFiles.foreach(f => assert(Files.exists(f.resolveSibling(s".${f.getFileName}.crc")), f))
+    assert(readAll(out) == sortedRows(spark.read.parquet(plain)
+      .as(org.apache.spark.sql.Encoders.product[Extraction.ExtractedRow])))
     val again = TableIO.writeResumable(rows, out)
     assert(again == 0, "fully-committed rerun must write nothing")
   }
