@@ -231,17 +231,4 @@ object SimilarityOps {
         $"dot".cast("double") / sqrt($"na".cast("double") * $"nb"))
     rankTopK(spark, pairs, k)
   }
-
-  /** ANN via LSH buckets: candidate pairs share a sketch; verified with
-    * the same exact-integer cosine threshold as the brute-force path.
-    */
-  def lshCandidatePairs(spark: SparkSession, emb: DataFrame): DataFrame = {
-    import spark.implicits._
-    val sk = lshSketch(spark, emb)
-    val q = quantized(emb).join(sk, "vec_id")
-    q.as("a").join(q.as("b"),
-        $"a.sketch" === $"b.sketch" && $"a.vec_id" < $"b.vec_id")
-      .select($"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"),
-        dot($"a.q", $"b.q").as("dot"), $"a.nsq".as("na"), $"b.nsq".as("nb"))
-  }
 }

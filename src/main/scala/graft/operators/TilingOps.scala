@@ -58,10 +58,6 @@ object TilingOps {
     best
   }
 
-  /** Row-major tile crop origins for a w×h grid. */
-  def tileOffsets(w: Int, h: Int, size: Int = ImageSize): Seq[(Int, Int)] =
-    (0 until w * h).map(i => ((i % w) * size, (i / w) * size))
-
   private def ceilDiv(a: Int, b: Int): Int = (a + b - 1) / b
 
   /** Global-view token count: (g+1)·g + 1, g = ceil((base/16)/4). */

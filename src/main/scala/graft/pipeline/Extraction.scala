@@ -4,6 +4,7 @@ import graft.extract.Kernel
 import graft.schema.{Doc, ExtractedDoc, ExtractedSpan}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{MetadataBuilder, StructType}
 
 /** Spark wiring of the extraction kernel (SURVEY.md §7.1 module 4).
   *
@@ -266,8 +267,17 @@ object Extraction {
 
   /** [[extractRows]] over any document type and span kernel (the
     * pipelineWith analog for the resumable-write row shape). `bucketBy`
-    * maps (doc_id, buckets) to the row's bucket: [[bucketOf]]'s hash
-    * layout, or e.g. `rangeBucketOf(_, _, maxId)`'s range-clustered one.
+    * maps (doc_id, buckets) to the row's bucket in [0, buckets):
+    * [[bucketOf]]'s hash layout, or e.g. `rangeBucketOf(_, _, maxId)`'s
+    * range-clustered one; a bucket outside that range fails the row.
+    *
+    * The `bucket` column carries its value domain as field metadata
+    * ([[BucketsKey]] = `buckets`), the way Spark ML tags a column with its
+    * attribute's number of values. The opaque kernel computes the bucket,
+    * but the planner-visible schema says which buckets can occur, so
+    * [[TableIO.writeResumable]] knows a table is complete without running
+    * the kernel. Filters, `toDF` and repartitions keep the tag; a typed
+    * `map` drops it.
     */
   def extractRowsWith[T](docs: Dataset[T], idOf: T => String,
                          kernel: T => IndexedSeq[ExtractedSpan],
@@ -276,12 +286,26 @@ object Extraction {
     implicit val enc = org.apache.spark.sql.Encoders.product[ExtractedRow]
     docs.mapPartitions(_.map { doc =>
       val id = idOf(doc)
+      val b = bucketBy(id, buckets)
+      if (b < 0 || b >= buckets) throw new IllegalArgumentException(
+        s"doc $id: bucket $b is outside [0, $buckets)")
       val spans = kernel(doc)
       val md = Kernel.renderMarkdown(spans)
-      ExtractedRow(id, spans, md, bucketBy(id, buckets), spans.size,
+      ExtractedRow(id, spans, md, b, spans.size,
         md.length.toLong, Kernel.checksum(ExtractedDoc(id, spans, md)))
-    })
+    }).withMetadata("bucket", new MetadataBuilder().putLong(BucketsKey, buckets).build())
+      .as[ExtractedRow]
   }
+
+  /** The `bucket` field-metadata key of [[extractRowsWith]]'s rows: the
+    * bucket count n, every row's bucket being in [0, n).
+    */
+  private val BucketsKey = "buckets"
+
+  /** The bucket count `schema`'s `bucket` field declares, if it has one. */
+  def bucketCount(schema: StructType): Option[Int] =
+    schema.find(_.name == "bucket").map(_.metadata)
+      .filter(_.contains(BucketsKey)).map(_.getLong(BucketsKey).toInt)
 
   /** Stable, deterministic, engine-portable bucket assignment:
     * md5i(doc_id) % buckets (positive 60-bit hash — see

@@ -75,6 +75,11 @@ import scala.util.Using
   * data-append and manifest-commit is rewritten whole on the next run
   * (partial files never double-count). Only buckets the run wrote rows to
   * are committed: a stale bucket dir it wrote nothing to stays invisible.
+  * Rows from [[Extraction.extractRowsWith]] declare their bucket count n
+  * in the `bucket` field's metadata; each manifest records it, a run with
+  * another n is rejected before it writes, and a run whose buckets 0..n-1
+  * are all committed runs no query at all: the retry of a finished job
+  * reads metadata only, and its kernel never runs.
   *
   * Local FS here. Writes go through [[NioLocalFileSystem]], which sets
   * each file's and dir's mode in-process: without libhadoop, Hadoop's own
@@ -179,7 +184,8 @@ object TableIO {
   final case class CommittedManifest(bucket: Int, snapshot: Long,
       schemaVersion: Int, files: Seq[String],
       minDoc: String = "", maxDoc: String = "",
-      bloom: IndexedSeq[Long] = IndexedSeq.empty)
+      bloom: IndexedSeq[Long] = IndexedSeq.empty,
+      buckets: Option[Int] = None)
 
   def committedManifests(outDir: String): Seq[CommittedManifest] =
     listNames(manifestDir(outDir), "bucket-", ".json").sorted.map { name =>
@@ -188,7 +194,8 @@ object TableIO {
         m.long("schema_version").toInt, m.strings("files"),
         m.opt("min_doc")(m.string).getOrElse(""),
         m.opt("max_doc")(m.string).getOrElse(""),
-        m.opt("bloom")(m.longs).getOrElse(Nil).toIndexedSeq)
+        m.opt("bloom")(m.longs).getOrElse(Nil).toIndexedSeq,
+        m.opt("buckets")(m.long).map(_.toInt))
     }
 
   private def dataDir(outDir: String): String = s"$outDir/data"
@@ -394,28 +401,50 @@ object TableIO {
 
   /** Resumable bucketed write. Returns the number of buckets written this
     * run (0 on a fully-committed rerun — idempotent no-op).
+    *
+    * When `rows` declare their bucket count n ([[Extraction.bucketCount]]),
+    * every manifest written records it, and rows whose n differs from a
+    * committed manifest's raise IllegalArgumentException before any data
+    * lands: a resume under another bucket count would skip docs never
+    * written and write others twice. When every bucket 0..n-1 is already
+    * committed, no row can be written, so the call runs no query: it only
+    * advances the marker. The kernel behind `rows` then never runs, so a
+    * kernel that would fail on committed docs does not fail the retry.
+    * Rows without the declaration (built by hand, or by a typed `map`)
+    * always run the one write query.
     */
   def writeResumable(rows: Dataset[ExtractedRow], outDir: String): Int = {
     // read first: a table whose metadata does not parse fails before any write
     val snapshot = currentSnapshot(outDir) + 1
-    val done = committedBuckets(outDir)
-    val todo = if (done.isEmpty) rows
-               else rows.filter(!col("bucket").isin(done.toSeq: _*))
+    val manifests = committedManifests(outDir)
+    val done = manifests.map(_.bucket).toSet
+    val n = Extraction.bucketCount(rows.schema)
+    for (k <- n; m <- manifests.find(_.buckets.exists(_ != k)))
+      throw new IllegalArgumentException(s"$outDir: the rows hold $k buckets, but " +
+        s"bucket ${m.bucket} was committed with ${m.buckets.get}; resume with ${m.buckets.get}")
     val t0 = System.nanoTime()
-    // The one query. Dynamic partition overwrite replaces only buckets
-    // present in `todo`; committed buckets' data is untouched. Only
-    // buckets the write observed get a manifest; a stale dir of a killed
-    // run that this run wrote no row to stays uncommitted.
-    val written = writeBuckets(todo.toDF(), dataDir(outDir), dynamic = true)
+    // The one query, unless no row can be written. Dynamic partition
+    // overwrite replaces only buckets present in `todo`; committed
+    // buckets' data is untouched. Only buckets the write observed get a
+    // manifest; a stale dir of a killed run that this run wrote no row to
+    // stays uncommitted.
+    val written =
+      if (n.exists(k => (0 until k).forall(done))) Seq.empty
+      else {
+        val todo = if (done.isEmpty) rows
+                   else rows.filter(!col("bucket").isin(done.toSeq: _*))
+        writeBuckets(todo.toDF(), dataDir(outDir), dynamic = true)
+      }
     val wallMs = (System.nanoTime() - t0) / 1000000
     written.foreach { case (s, files) =>
       val b = s.getAs[Int]("bucket")
-      Meta.write(manifestPath(outDir, b), "snapshot" -> snapshot, "bucket" -> b,
+      Meta.write(manifestPath(outDir, b), Seq("snapshot" -> snapshot, "bucket" -> b,
         "doc_count" -> s.getAs[Long]("doc_count"), "span_count" -> s.getAs[Long]("span_count"),
         "bytes" -> s.getAs[Long]("bytes"), "wall_ms" -> wallMs,
         "span_checksum" -> s.getAs[Long]("span_checksum"),
         "min_doc" -> s.getAs[String]("min_doc"), "max_doc" -> s.getAs[String]("max_doc"),
-        "bloom" -> s.getAs[Seq[Long]]("bloom"), "files" -> files)
+        "bloom" -> s.getAs[Seq[Long]]("bloom"), "files" -> files) ++
+        n.map("buckets" -> _): _*)
     }
     // `todo` holds no committed bucket, so the two sets are disjoint
     Meta.write(markerPath(outDir), "snapshot" -> snapshot,

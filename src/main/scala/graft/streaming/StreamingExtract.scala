@@ -55,23 +55,6 @@ object StreamingExtract {
       .select(col("event_type"), unix_micros(col("w.start").cast("timestamp_ltz")).as("win_us"),
         col("n"), col("sum_c"))
 
-  /** File-source streaming run of [[eventWindowAgg]] with a 1-hour
-    * watermark, complete-mode into an in-memory table. Returns the query;
-    * caller awaits termination of available data then reads `tableName`.
-    */
-  def runFileStream(spark: SparkSession, eventsDir: String,
-                    tableName: String): StreamingQuery = {
-    val schema = spark.read.parquet(eventsDir).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(eventsDir)
-      // watermarks require event time in TIMESTAMP (ltz); session tz is UTC
-      .withColumn("ts", col("ts").cast("timestamp_ltz"))
-    eventWindowAgg(src.withWatermark("ts", "1 hour"))
-      .writeStream.format("memory").queryName(tableName)
-      .outputMode(OutputMode.Complete())
-      .start()
-  }
-
   /** Continuous extraction: stream newly-arrived document files through
     * the SAME kernel as the batch pipeline, committing each micro-batch
     * through the resumable TableIO layer (bucket manifests + atomic

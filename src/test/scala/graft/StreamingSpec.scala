@@ -3,7 +3,8 @@ package graft
 import graft.streaming.StreamingExtract
 import graft.streaming.StreamingExtract.{Ev, UserSessions}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming suites: the streaming paths must produce exactly
@@ -22,10 +23,26 @@ class StreamingSpec extends AnyFunSuite {
     dir
   }
 
+  /** File-source streaming run of [[StreamingExtract.eventWindowAgg]]
+    * with a 1-hour watermark, complete-mode into the in-memory table
+    * `tableName`.
+    */
+  private def runFileStream(eventsDir: String, tableName: String): StreamingQuery = {
+    val schema = spark.read.parquet(eventsDir).schema
+    val src = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(eventsDir)
+      // watermarks require event time in TIMESTAMP (ltz); session tz is UTC
+      .withColumn("ts", col("ts").cast("timestamp_ltz"))
+    StreamingExtract.eventWindowAgg(src.withWatermark("ts", "1 hour"))
+      .writeStream.format("memory").queryName(tableName)
+      .outputMode(OutputMode.Complete())
+      .start()
+  }
+
   test("file-stream windowed agg == batch windowed agg") {
     val batch = StreamingExtract.eventWindowAgg(spark.read.parquet(eventsDir))
       .collect().map(_.toSeq).toSet
-    val q = StreamingExtract.runFileStream(spark, eventsDir, "win_agg_test")
+    val q = runFileStream(eventsDir, "win_agg_test")
     try {
       q.processAllAvailable()
       val streamed = spark.table("win_agg_test").collect().map(_.toSeq).toSet

