@@ -276,7 +276,7 @@ object MediaGates {
     // (weight tables embedded from PixelKernel.computeCoeffs), per-pass
     // u8 clipping, letterbox fill 127; checksums fold row-major RGB
     // (pix_fp) and CHW normalized numerators (norm_fp).
-    Gate("mm_pixels", overDocs(PixelOps.pixelParts),
+    Gate("mm_pixels", overDocs(PixelOps.px16Parts("p", PixelOps.processRef)),
       px16OracleSql("p", Seq("s" -> "px"), rgbRuleSql("gx.x", "gy.y", "ch.c", "m.s"))),
 
     // mm_pixels at the reference's SHIPPED geometry (base 1024 /
@@ -285,7 +285,7 @@ object MediaGates {
     // subset, hash-gated on every-64th-row slice checksums (the full
     // fold is gated byte-complete by mm_pixels at small geometry; the
     // slice keeps the DuckDB convolution replay tractable).
-    Gate("mm_pixels_ref", overDocs(PixelOps.pixelPartsRefGeom),
+    Gate("mm_pixels_ref", overDocs(PixelOps.refGeomParts(PixelOps.processRefGeom)),
       s"""WITH $refGeomCtes,
          |vsel AS (SELECT DISTINCT insz, outsz, si FROM coefr WHERE oi % 64 = 0),
          |ys AS (
@@ -309,10 +309,7 @@ object MediaGates {
     // aggregates full frames with a plain sum() over generated grids —
     // no list materialization — closing the slice caveat at the
     // reference's shipped 1024/640 geometry.
-    // Full-frame gate: same pipeline replay as mm_pixels_ref but over
-    // EVERY source row / output position, with order-free Σ(pos+1)·h(v)
-    // checksums aggregated by plain sum() — no sampling, no list folds.
-    Gate("mm_pixels_full", overDocs(PixelOps.pixelPartsRefGeomFull),
+    Gate("mm_pixels_full", overDocs(PixelOps.refGeomParts(PixelOps.processRefGeomFull)),
       s"""WITH $refGeomCtes,
          |src AS (
          |  SELECT g.media_ref, gx.x, gy.y, ch.c, ${rgbRuleSql("gx.x", "gy.y", "ch.c", "g.s")} AS val
@@ -380,27 +377,21 @@ object MediaGates {
     // GIF rule replay: palette indices idx = (3x+5y+s) mod 256 expanded
     // through the fixed palette (i, 7i+11, 13i+17) mod 256 — then the
     // identical convolution/letterbox/tile machinery as mm_pixels.
-    Gate("mm_gif_pixels", overDocs(PixelOps.gifPixelParts),
+    Gate("mm_gif_pixels", overDocs(PixelOps.px16Parts("g", PixelOps.processGif)),
       gifOracleSql("gx", 256)),
 
     // Interlace gate: the SAME frames transmitted in GIF89a 4-pass
     // interlace row order — the decoder's de-interlace scatter must land
     // every pixel back in place, so this hash-equals mm_gif_pixels'
     // oracle verbatim (the mm_jpeg_prog pattern).
-    // Interlace gate: the engine decodes the SAME rule frames
-    // transmitted in GIF89a 4-pass interlace order — output must
-    // hash-equal the straight-scan replay verbatim (mm_jpeg_prog
-    // pattern), so a de-interlace bug anywhere hash-fails.
-    Gate("mm_gif_interlace", overDocs(PixelOps.gifInterlacePixelParts),
+    Gate("mm_gif_interlace", overDocs(PixelOps.px16Parts("g", PixelOps.processGifInterlaced)),
       gifOracleSql("gx", 256)),
 
     // Small-code gate: 16-color frames through 4-bit LZW minimum code
     // size (codes start at 5 bits and widen through boundaries the
     // 8-bit stream never crosses) AND interlace; the oracle replays the
     // mod-16 closed-form rule.
-    // Small-code gate: 16-color frames through 4-bit LZW codes AND
-    // interlace; the oracle replays the mod-16 rule.
-    Gate("mm_gif_small", overDocs(PixelOps.gifSmallPixelParts),
+    Gate("mm_gif_small", overDocs(PixelOps.px16Parts("g", PixelOps.processGifSmall)),
       gifOracleSql("gc", 16)),
 
     // REAL animated-GIF frame sampling (upgrades the mm_frames metadata
@@ -408,13 +399,12 @@ object MediaGates {
     // patch frames, per-pixel transparency, per-frame interlace, and
     // graphic-control extensions — decoded by compositing onto the
     // logical screen, every 3rd canvas checksummed. The oracle replays
-    // "last opaque writer ≤ f per pixel" in closed form.
-    // Animated-GIF replay: frame 0 = the full-canvas mod-256 rule;
-    // patch g ≥ 1 = an 8×8 rect at ((3g)%(w-8),(5g)%(h-8)) with rule
-    // (7x'+3y'+s+17g) mod 255, transparent where (x'+y'+g)%3=0. The
-    // canvas at sampled frame f shows, per pixel, the LAST opaque
-    // writer among g ≤ f (arg_max) — base rule where no patch wrote.
-    Gate("mm_gif_frames", overDocs(PixelOps.gifFramesParts),
+    // frame 0 as the full-canvas mod-256 rule and patch g ≥ 1 as an 8×8
+    // rect at ((3g)%(w-8),(5g)%(h-8)) with rule (7x'+3y'+s+17g) mod 255,
+    // transparent where (x'+y'+g)%3=0; the canvas at sampled frame f
+    // shows, per pixel, the LAST opaque writer among g ≤ f (arg_max) —
+    // base rule where no patch wrote.
+    Gate("mm_gif_frames", overDocs(PixelOps.px16Parts("g", PixelOps.processGifFrames)),
       s"""WITH $imgRefsCte,
          |meta AS (
          |  SELECT media_ref,
@@ -464,11 +454,7 @@ object MediaGates {
     // replays decoded pixels from the closed-form rule while the engine
     // runs the full entropy decode; general-coefficient paths are pinned
     // by JpegSpec against the JDK ImageIO codec.
-    // JPEG rule replay: block-constant luma v = (5·⌊x/8⌋+9·⌊y/8⌋+s) mod
-    // 256 replicated to RGB — bit-exact through the engine's real JPEG
-    // codec (DC-only blocks, step-8 DC quant) — then the identical
-    // convolution/letterbox/tile machinery as mm_pixels/mm_gif_pixels.
-    Gate("mm_jpeg_pixels", overDocs(PixelOps.jpegPixelParts),
+    Gate("mm_jpeg_pixels", overDocs(PixelOps.px16Parts("j", PixelOps.processJpeg)),
       jpegOracleSql),
 
     // PROGRESSIVE (SOF2) JPEG decode (round-4 verdict "what's missing"
@@ -479,8 +465,7 @@ object MediaGates {
     // closed-form replay VERBATIM — any progressive entropy bug
     // hash-fails. General-content progressive (incl. AC refinement) is
     // pinned by JpegSpec against ImageIO-written libjpeg scan scripts.
-    // Progressive-codec gate: hash-must-equal the baseline rule replay.
-    Gate("mm_jpeg_prog", overDocs(PixelOps.jpegProgPixelParts),
+    Gate("mm_jpeg_prog", overDocs(PixelOps.px16Parts("j", PixelOps.processJpegProg)),
       jpegOracleSql),
 
     // Adobe CMYK (4-component + APP14) decode — the JPEG family
@@ -489,10 +474,7 @@ object MediaGates {
     // to RGB with the exact integer rule R=(2·c·k+255)/510 that the
     // oracle replays in closed form. ImageIO readRaster cross-checks
     // the wire format in JpegSpec.
-    // CMYK replay: per-channel inverted-ink block rules folded with the
-    // integer rule rgb_c = (2·v_c·v_k + 255) // 510, then the identical
-    // convolution/letterbox/tile machinery.
-    Gate("mm_jpeg_cmyk", overDocs(PixelOps.jpegCmykPixelParts),
+    Gate("mm_jpeg_cmyk", overDocs(PixelOps.px16Parts("j", PixelOps.processJpegCmyk)),
       px16OracleSql("j", (0 to 3).map(i => s"s$i" -> s"jc$i"),
         s"""(2 * ${jpegBlockSql("CASE ch.c WHEN 0 THEN m.s0 WHEN 1 THEN m.s1 ELSE m.s2 END")}
            |  * ${jpegBlockSql("m.s3")} + 255) // 510""".stripMargin)),

@@ -116,68 +116,11 @@ object Extraction {
     * kernel — a second time. At 100 TB that double scan is the
     * difference between one pass and two.
     */
-  /** Hard ceiling on keys the boundary sketch collects to the driver —
-    * independent of the input split count. Spark's own RangePartitioner
-    * applies the same discipline (`sampleSizePerPartition` against a
-    * total budget); without it, ~800k splits of a 100 TB input × 128
-    * keys each would put ~100M tuples (multi-GB) on the driver.
-    */
-  val SampleBudget = 100000
-  /** Second-level reduction width when split count × quota would still
-    * exceed the budget (quota already floored at its minimum).
-    */
-  val SampleGroups = 64
-  /** Per-partition sample floor: even at extreme split counts every
-    * split contributes a few keys so no region is invisible to the
-    * sketch.
-    */
-  val MinQuota = 8
-
-  /** Bounded boundary sample: per-partition reservoir with quota
-    * max(MinQuota, budget/numPartitions); when the floor makes the
-    * first-level total exceed 2×budget (split count > budget/MinQuota·2),
-    * a narrow coalesce + second reservoir reduces it below the budget
-    * BEFORE the collect. Driver receives ≤ max(2·budget,
-    * SampleGroups·MinQuota) keys, ever. A reservoir-of-reservoirs is not
-    * an exactly uniform sample, but boundaries only need approximate
-    * quantiles — placement stays EXACT either way (buckets are computed
-    * per row; boundary quality only affects balance).
-    */
-  def sampleKeys(docs: Dataset[Doc], saltBuckets: Int,
-                 budget: Int = SampleBudget): Array[RangeRouter.Key] =
-    sampleKeysWith(docs, (_: Doc).doc_id, saltBuckets, budget)
-
-  /** [[sampleKeys]] over any document type, keyed by `idOf`. */
-  def sampleKeysWith[T](docs: Dataset[T], idOf: T => String, saltBuckets: Int,
-                        budget: Int = SampleBudget): Array[RangeRouter.Key] = {
-    import docs.sparkSession.implicits._
-    val numParts = math.max(1, docs.rdd.getNumPartitions)
-    val quota = math.max(MinQuota, budget / numParts)
-    val firstLevel = docs.mapPartitions { it =>
-      RangeRouter.reservoir(
-        it.map(d => RangeRouter.key(idOf(d), saltBuckets)), quota)
-    }
-    if (numParts.toLong * quota <= 2L * budget) firstLevel.collect()
-    else {
-      val groupQuota = math.max(MinQuota, budget / SampleGroups)
-      firstLevel.coalesce(SampleGroups)
-        .mapPartitions(it => RangeRouter.reservoir(it, groupQuota))
-        .collect()
-    }
-  }
-
   def pipeline(docs: Dataset[Doc], shufflePartitions: Int = 0,
                saltBuckets: Int = 64): Dataset[ExtractedDoc] =
     pipelineWith(docs, (_: Doc).doc_id, Kernel.extractSpans,
       shufflePartitions, saltBuckets)
 
-  /** The span pipeline over raw HTML documents: the [[graft.extract.Html]]
-    * streaming tokenizer + link-density boilerplate strip is the kernel,
-    * everything else (salt, sketch-routed range placement, single
-    * exchange, post-shuffle markdown render) is shared with [[pipeline]].
-    * This is the north star's "boilerplate stripping over a streaming DOM
-    * tokenizer" as a DISTRIBUTED path, not just a per-row kernel.
-    */
   /** HTML → ordered spans: the [[graft.extract.Html]] kernel's block
     * stream mapped into the span model (shared by the batch pipeline,
     * the streaming path, and the driver queries).
@@ -187,6 +130,13 @@ object Extraction {
       ExtractedSpan(b.kind, b.text, b.mediaRef, i)
     }
 
+  /** The span pipeline over raw HTML documents: the [[graft.extract.Html]]
+    * streaming tokenizer + link-density boilerplate strip is the kernel,
+    * everything else (salt, sketch-routed range placement, single
+    * exchange, post-shuffle markdown render) is shared with [[pipeline]].
+    * This is the north star's "boilerplate stripping over a streaming DOM
+    * tokenizer" as a DISTRIBUTED path, not just a per-row kernel.
+    */
   def pipelineHtml(docs: Dataset[(String, String)], shufflePartitions: Int = 0,
                    saltBuckets: Int = 64): Dataset[ExtractedDoc] =
     pipelineWith(docs, (_: (String, String))._1,
@@ -234,8 +184,8 @@ object Extraction {
     if (stage == "kernel")
       return docs.mapPartitions(_.map(d => ExtractedDoc(idOf(d), kernel(d), "")))
     // narrow key-only sketch pass: derivation runs, kernel does NOT;
-    // driver collect bounded by SampleBudget regardless of split count
-    val keys = sampleKeysWith(docs, idOf, saltBuckets)
+    // driver collect bounded by RangeRouter.SampleBudget at any split count
+    val keys = RangeRouter.sample(docs, (d: T) => RangeRouter.key(idOf(d), saltBuckets))
     val bounds = RangeRouter.boundaries(keys, n)
     val tokens = RangeRouter.hashTokens(n)
     val bBounds = spark.sparkContext.broadcast(bounds)

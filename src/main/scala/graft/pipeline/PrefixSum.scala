@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * group becomes one 5 TB task. This is the textbook two-pass scan
   * instead:
   *
-  *   1. a bounded reservoir of (group, ord) keys → broadcast range
-  *      boundaries; every row computes its SHARD by binary search — an
-  *      explicit data-derived column, deliberately NOT
+  *   1. a bounded reservoir of (group, ord) keys
+  *      ([[RangeRouter.sample]]) → broadcast range boundaries; every row
+  *      computes its SHARD by binary search — an explicit data-derived
+  *      column, deliberately NOT
   *      spark_partition_id()/TaskContext (task-layout-dependent ids
   *      silently change under a downstream coalesce, which merges
   *      narrow chains into one task — PackSpec regression-guards this);
@@ -35,39 +36,6 @@ object PrefixSum {
   type Row = (Long, String, Long, Long)         // (id, group, ord, weight)
   type Out = (Long, String, Long, Long, Long)   // ... + start (exclusive)
 
-  private type SKey = (String, Long) // (group, ord)
-  private val skeyOrd: Ordering[SKey] =
-    Ordering.Tuple2(Ordering.String, Ordering.Long)
-
-  private def boundariesOf(sample: Array[SKey], n: Int): Array[SKey] = {
-    if (sample.isEmpty || n <= 1) return Array.empty
-    val sorted = sample.sorted(skeyOrd)
-    (1 until n).map { i =>
-      // Long quantile index: i * length overflows Int once the
-      // sample × shard-count product passes 2^31
-      sorted(math.min(sorted.length - 1L, i.toLong * sorted.length / n).toInt)
-    }.distinct.toArray
-  }
-
-  private def shardOf(bounds: Array[SKey], k: SKey): Int = {
-    var lo = 0
-    var hi = bounds.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (skeyOrd.lteq(bounds(mid), k)) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-
-  /** Driver-sample budget: same discipline as [[Extraction.SampleBudget]]
-    * — the collect must stay bounded regardless of input split count
-    * (~800k splits × an uncapped 128-key reservoir would put ~100M
-    * tuples on the driver).
-    */
-  val SampleBudget = 100000
-  val SampleGroups = 64
-  val MinQuota = 8
-
   /** `slotKey` names the persist slot for the sharded layout (one live
     * cache per caller — see [[graft.operators.DedupOps.persistSlot]]).
     */
@@ -80,23 +48,12 @@ object PrefixSum {
     // prune the weight expression (often a full tokenization) out of
     // this pass, so the corpus pays it once, in the sharded layout
     val keys = rows.toDF("id", "grp", "ord", "w")
-      .select($"grp", $"ord").as[SKey]
-    val numParts = math.max(1, keys.rdd.getNumPartitions)
-    val quota = math.max(MinQuota, SampleBudget / numParts)
-    val firstLevel = keys.mapPartitions(it => RangeRouter.reservoirOf(it, quota))
-    val sample =
-      if (numParts.toLong * quota <= 2L * SampleBudget) firstLevel.collect()
-      else {
-        val groupQuota = math.max(MinQuota, SampleBudget / SampleGroups)
-        firstLevel.coalesce(SampleGroups)
-          .mapPartitions(it => RangeRouter.reservoirOf(it, groupQuota))
-          .collect()
-      }
-    val bounds = boundariesOf(sample, n)
+      .select($"grp", $"ord").as[(String, Long)]
+    val bounds = RangeRouter.boundaries(RangeRouter.sample(keys, identity[(String, Long)]), n)
     val bBounds = spark.sparkContext.broadcast(bounds)
     val sharded = graft.operators.DedupOps.persistSlot(slotKey,
       rows.map { case (id, g, o, w) =>
-        (shardOf(bBounds.value, (g, o)), id, g, o, w)
+        (RangeRouter.bucket(bBounds.value, (g, o)), id, g, o, w)
       }.toDF("shard", "id", "grp", "ord", "w")
         .repartition(n, $"shard")
         .sortWithinPartitions($"shard", $"grp", $"ord", $"id")

@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
+import scala.reflect.ClassTag
 
 /** Exact range placement without RangePartitioner's double execution.
   *
@@ -35,15 +37,53 @@ object RangeRouter {
     ((if (m < 0) m + saltBuckets else m).toLong, docId)
   }
 
-  private val keyOrd: Ordering[Key] = Ordering.Tuple2(Ordering.Long, Ordering.String)
+  /** Hard ceiling on keys the boundary sample collects to the driver —
+    * independent of the input split count. Spark's own RangePartitioner
+    * applies the same discipline (`sampleSizePerPartition` against a
+    * total budget); without it, ~800k splits of a 100 TB input × 128
+    * keys each would put ~100M tuples (multi-GB) on the driver.
+    */
+  val SampleBudget = 100000
+  /** Second-level reduction width when split count × quota would still
+    * exceed the budget (quota already floored at its minimum).
+    */
+  val SampleGroups = 64
+  /** Per-partition sample floor: even at extreme split counts every
+    * split contributes a few keys so no region is invisible to the
+    * sketch.
+    */
+  val MinQuota = 8
 
-  /** Deterministic per-partition reservoir sample of up to `k` keys. */
-  def reservoir(it: Iterator[Key], k: Int = 128): Iterator[Key] =
-    reservoirOf(it, k)
+  /** Bounded boundary sample of `keyOf` over `ds`, a stratified
+    * reservoir: per-partition reservoir with quota max(MinQuota,
+    * budget/numPartitions); when the floor makes the first-level total
+    * exceed 2×budget (split count > budget/MinQuota·2), a narrow coalesce
+    * + second reservoir reduces it below the budget BEFORE the collect.
+    * Driver receives ≤ max(2·budget, SampleGroups·MinQuota) keys, ever. A
+    * reservoir-of-reservoirs is not an exactly uniform sample, but
+    * boundaries only need approximate quantiles — placement stays EXACT
+    * either way (buckets are computed per row; boundary quality only
+    * affects balance). `keyOf` runs inside the one pass over `ds`, so a
+    * key-only projection of `ds` keeps the pass key-only.
+    */
+  def sample[T, K: ClassTag: Encoder](ds: Dataset[T], keyOf: T => K,
+                                      budget: Int = SampleBudget): Array[K] = {
+    val numParts = math.max(1, ds.rdd.getNumPartitions)
+    val quota = math.max(MinQuota, budget / numParts)
+    val firstLevel = ds.mapPartitions(it => reservoir(it.map(keyOf), quota))
+    if (numParts.toLong * quota <= 2L * budget) firstLevel.collect()
+    else {
+      val groupQuota = math.max(MinQuota, budget / SampleGroups)
+      firstLevel.coalesce(SampleGroups)
+        .mapPartitions(it => reservoir(it, groupQuota))
+        .collect()
+    }
+  }
 
-  /** [[reservoir]] over any key type (seeded by the task's partition). */
-  def reservoirOf[T](it: Iterator[T], k: Int = 128)
-                    (implicit ct: scala.reflect.ClassTag[T]): Iterator[T] = {
+  /** Deterministic reservoir sample of up to `k` items (seeded by the
+    * task's partition).
+    */
+  private def reservoir[T: ClassTag](it: Iterator[T], k: Int): Iterator[T] = {
     val pid = Option(TaskContext.get()).map(_.partitionId()).getOrElse(0)
     val rng = new java.util.Random(pid * 2654435761L + 42L)
     val buf = new Array[T](k)
@@ -61,9 +101,9 @@ object RangeRouter {
   }
 
   /** n-1 ascending boundary keys (quantiles of the sorted sample). */
-  def boundaries(sample: Array[Key], n: Int): Array[Key] = {
+  def boundaries[K: Ordering: ClassTag](sample: Array[K], n: Int): Array[K] = {
     if (sample.isEmpty || n <= 1) return Array.empty
-    val sorted = sample.sorted(keyOrd)
+    val sorted = sample.sorted
     (1 until n).map { i =>
       // Long quantile index: i * length overflows Int once the
       // sample × partition-count product passes 2^31
@@ -72,12 +112,12 @@ object RangeRouter {
   }
 
   /** Range bucket: number of boundaries <= key (binary search). */
-  def bucket(bounds: Array[Key], k: Key): Int = {
+  def bucket[K](bounds: Array[K], k: K)(implicit ord: Ordering[K]): Int = {
     var lo = 0
     var hi = bounds.length
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
-      if (keyOrd.lteq(bounds(mid), k)) lo = mid + 1 else hi = mid
+      if (ord.lteq(bounds(mid), k)) lo = mid + 1 else hi = mid
     }
     lo
   }

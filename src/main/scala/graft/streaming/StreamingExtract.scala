@@ -6,7 +6,10 @@ import graft.schema.{Doc, ExtractedSpan, HtmlDoc}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
+import scala.util.Using
 
 /** Structured-Streaming surface of the engine.
   *
@@ -42,6 +45,32 @@ object StreamingExtract {
     spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, prev)
   }
+
+  /** Run `query` over a file stream of the parquet files staged in `src`
+    * (`maxFilesPerTrigger` per micro-batch) into a fresh memory-sink table
+    * in `mode`, with 8 state partitions (see [[withStatePartitions]]),
+    * until Trigger.AvailableNow has drained the source; returns the table.
+    */
+  private def runToMemory(spark: SparkSession, src: String, maxFilesPerTrigger: Int,
+      mode: OutputMode)(query: DataFrame => Dataset[_]): DataFrame = {
+    val name = s"graft_stream_${System.nanoTime()}"
+    val in = spark.readStream.schema(spark.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString).parquet(src)
+    withStatePartitions(spark, 8) {
+      query(in).writeStream.format("memory").queryName(name)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+    spark.table(name)
+  }
+
+  /** Event time as TIMESTAMP (ltz, as watermarks require) under a 1-hour
+    * watermark.
+    */
+  private def watermarked(events: DataFrame): DataFrame =
+    events.withColumn("ts", col("ts").cast("timestamp_ltz")).withWatermark("ts", "1 hour")
 
   /** Tumbling 1-hour windows per event_type: count + exact cent sum.
     * Works unchanged over a batch DataFrame or a streaming source —
@@ -133,8 +162,8 @@ object StreamingExtract {
       kernel: T => IndexedSeq[ExtractedSpan]): DataFrame = {
     val df = docs.toDF()
     val src = stageOrderedParts(spark, (0 until 3).map(i => df.filter(part === i)))
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-ck").toString
+    val out = Files.createTempDirectory("graft-stream-out").toString
+    val ckpt = Files.createTempDirectory("graft-stream-ck").toString
     extractStreamWith(spark, src, out, ckpt, idOf, kernel,
       maxFilesPerTrigger = 1, availableNow = true).awaitTermination()
     val poison = Extraction.extractRowsWith(docs.filter(lit(false)), idOf, kernel, StreamBuckets)
@@ -146,27 +175,27 @@ object StreamingExtract {
 
   /** Stage each frame as one parquet file with strictly increasing
     * modification times, so a file stream consumes them as in-order
-    * micro-batches (FileStreamSource orders by mtime). Driver-query
-    * plumbing — the measured pipelines never do this.
+    * micro-batches (FileStreamSource orders by mtime). Each frame is
+    * written to its own temp dir, its one parquet file moved out, and the
+    * dir deleted. Driver-query plumbing — the measured pipelines never do
+    * this.
     */
   def stageOrderedParts(spark: SparkSession, parts: Seq[DataFrame]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-src")
+    val dir = Files.createTempDirectory("graft-stream-src")
     parts.zipWithIndex.foreach { case (df, i) =>
-      val part = java.nio.file.Files.createTempDirectory("graft-stream-part")
+      val part = Files.createTempDirectory("graft-stream-part")
       df.coalesce(1).write.mode("overwrite").parquet(part.toString)
-      val src = java.nio.file.Files.list(part).iterator()
-      var moved = false
-      while (src.hasNext) {
-        val p = src.next()
-        if (p.toString.endsWith(".parquet")) {
-          val dst = dir.resolve(f"batch-$i%03d.parquet")
-          java.nio.file.Files.move(p, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 10000L))
-          moved = true
-        }
+      val files = Using.resource(Files.list(part))(_.iterator().asScala.toList)
+      val data = files.filter(_.toString.endsWith(".parquet"))
+      require(data.nonEmpty, s"no parquet part produced for stream bucket $i")
+      data.foreach { p =>
+        val dst = dir.resolve(f"batch-$i%03d.parquet")
+        Files.move(p, dst)
+        Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 10000L))
       }
-      require(moved, s"no parquet part produced for stream bucket $i")
+      files.foreach(Files.deleteIfExists)
+      Files.delete(part)
     }
     dir.toString
   }
@@ -200,21 +229,7 @@ object StreamingExtract {
     */
   def streamWindowQuery(spark: SparkSession, events: DataFrame): DataFrame = {
     val src = stageTimeOrderedFiles(spark, events, Seq("ts", "event_id"), 4)
-    val name = s"graft_stream_win_${System.nanoTime()}"
-    val schema = spark.read.parquet(src).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .withColumn("ts", col("ts").cast("timestamp_ltz"))
-      .withWatermark("ts", "1 hour")
-    withStatePartitions(spark, 8) {
-      val q = eventWindowAgg(in)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name)
+    runToMemory(spark, src, 1, OutputMode.Complete())(in => eventWindowAgg(watermarked(in)))
   }
 
   /** Driver query ST-coverage: dropDuplicatesWithinWatermark under a
@@ -234,21 +249,8 @@ object StreamingExtract {
       extraParts = bucketed => Seq(bucketed.filter(
         unix_micros(col("ts").cast("timestamp_ltz")) >= maxUs - 1800000000L &&
           col("event_id") % 3 === 0)))
-    val name = s"graft_stream_dedup_${System.nanoTime()}"
-    val schema = spark.read.parquet(src).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .withColumn("ts", col("ts").cast("timestamp_ltz"))
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-    withStatePartitions(spark, 8) {
-      val q = in.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name)
+    runToMemory(spark, src, 1, OutputMode.Append())(
+      in => watermarked(in).dropDuplicatesWithinWatermark("event_id"))
       .withColumn("value_c", floor(col("value") * 100).cast("long"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_c"))
@@ -267,8 +269,6 @@ object StreamingExtract {
     */
   def streamJoinQuery(spark: SparkSession, events: DataFrame): DataFrame = {
     val src = stageTimeOrderedFiles(spark, events, Seq("ts", "event_id"), 4)
-    val name = s"graft_stream_join_${System.nanoTime()}"
-    val schema = spark.read.parquet(src).schema
     // ONE shared source (val, not def): both join sides are branches of
     // the SAME FileStreamSource instance (a stream self-join), so the
     // micro-batch planner tracks one offset log instead of one per side
@@ -279,32 +279,23 @@ object StreamingExtract {
     // dominates this wall (stream-stream join opens 4 state stores per
     // partition per micro-batch; staging itself is ~1.7 s steady).
     // Measured steady wall: 7.7-8.9 s (mft=1) → ~5.0 s.
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
-      .withColumn("ts", col("ts").cast("timestamp_ltz"))
-    val views = in.filter(col("event_type") === "view")
-      .select(col("user_id"), col("event_id").as("view_id"),
-        col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 hour")
-    val purchases = in.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"),
-        floor(col("value") * 100).cast("long").as("val_cents"))
-      .withWatermark("purchase_ts", "1 hour")
-    val joined = views.join(purchases,
-      col("user_id") === col("p_user_id") &&
-        col("purchase_ts") >= col("view_ts") &&
-        col("purchase_ts") <= col("view_ts") + expr("INTERVAL 30 MINUTES"))
-      .select(col("user_id"), col("view_id"), col("purchase_id"), col("val_cents"))
-    withStatePartitions(spark, 8) {
-      val q = joined
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    runToMemory(spark, src, 2, OutputMode.Append()) { raw =>
+      val in = raw.withColumn("ts", col("ts").cast("timestamp_ltz"))
+      val views = in.filter(col("event_type") === "view")
+        .select(col("user_id"), col("event_id").as("view_id"),
+          col("ts").as("view_ts"))
+        .withWatermark("view_ts", "1 hour")
+      val purchases = in.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
+          col("ts").as("purchase_ts"),
+          floor(col("value") * 100).cast("long").as("val_cents"))
+        .withWatermark("purchase_ts", "1 hour")
+      views.join(purchases,
+        col("user_id") === col("p_user_id") &&
+          col("purchase_ts") >= col("view_ts") &&
+          col("purchase_ts") <= col("view_ts") + expr("INTERVAL 30 MINUTES"))
+        .select(col("user_id"), col("view_id"), col("purchase_id"), col("val_cents"))
     }
-    spark.table(name)
   }
 
   /** Run [[eventWindowAgg]] as an Update-mode watermarked stream over
@@ -312,25 +303,10 @@ object StreamingExtract {
     * running counters are monotone for non-negative event values, so the
     * last emission per window is the max).
     */
-  private[graft] def runUpdateWindowStream(spark: SparkSession, src: String): DataFrame = {
-    val name = s"graft_stream_upd_${System.nanoTime()}"
-    val schema = spark.read.parquet(src).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .withColumn("ts", col("ts").cast("timestamp_ltz"))
-      .withWatermark("ts", "1 hour")
-    withStatePartitions(spark, 8) {
-      val q = eventWindowAgg(in)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name)
+  private[graft] def runUpdateWindowStream(spark: SparkSession, src: String): DataFrame =
+    runToMemory(spark, src, 1, OutputMode.Update())(in => eventWindowAgg(watermarked(in)))
       .groupBy(col("event_type"), col("win_us"))
       .agg(max(col("n")).as("n"), max(col("sum_c")).as("sum_c"))
-  }
 
   /** Three-batch late-arrival staging: [old on-time history] →
     * [the final hour of on-time data, which advances the watermark] →
@@ -405,18 +381,7 @@ object StreamingExtract {
       col("event_id").cast("long"),
       unix_micros(col("ts").cast("timestamp_ltz")).as("ts_us"))
     val src = stageTimeOrderedFiles(spark, evs, Seq("ts_us", "event_id"), 3)
-    val name = s"graft_stream_sess_${System.nanoTime()}"
-    val schema = spark.read.parquet(src).schema
-    withStatePartitions(spark, 8) {
-      val q = sessionize(spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(src).as[Ev])
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name)
+    runToMemory(spark, src, 1, OutputMode.Update())(in => sessionize(in.as[Ev]))
       .groupBy(col("user_id"))
       .agg(max(col("n_sessions")).as("n_sessions"),
            max(col("n_events")).as("n_events"))

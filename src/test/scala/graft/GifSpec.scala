@@ -205,7 +205,7 @@ class GifSpec extends AnyFunSuite {
   test("fuzz: interlaced + small-code streams also terminate structurally") {
     val rng = new scala.util.Random(47)
     val valid = GifKernel.encodeGif(
-      PixelOps.ruleGifIndexed16("img://9/0", 32, 32), minCode = 4, interlaced = true)
+      PixelOps.ruleGifIndexed("img://9/0", 32, 32, 16, "gc"), minCode = 4, interlaced = true)
     for (trial <- 0 until 200) {
       val bytes = trial % 2 match {
         case 0 =>
@@ -247,7 +247,7 @@ class GifSpec extends AnyFunSuite {
 
   test("animated: cross-decoder parity vs ImageIO on every composited frame") {
     val ref = "img://0/0"
-    val rw = PixelOps.gifRatioW(ref); val rh = PixelOps.gifRatioH(ref)
+    val (rw, rh) = PixelOps.ratio("g", ref)
     val w = 16 * rw; val h = 16 * rh
     val s = (graft.functions.Hashing.md5i(s"gx|$ref") % 251L).toInt
     val base = PixelOps.ruleGifIndexed(ref, w, h)
@@ -404,7 +404,7 @@ class GifSpec extends AnyFunSuite {
 
   test("processGif emits the right part set per grid") {
     val parts = PixelOps.processGif("img://0/0")
-    val rw = PixelOps.gifRatioW("img://0/0"); val rh = PixelOps.gifRatioH("img://0/0")
+    val (rw, rh) = PixelOps.ratio("g", "img://0/0")
     assert(parts.length == rw * rh + 1)
     assert(parts.last.part == "global")
     assert(parts.forall(p => p.pix_fp >= 0 && p.norm_fp >= 0))

@@ -318,7 +318,7 @@ class JpegSpec extends AnyFunSuite {
 
   test("processJpeg emits the right part set per grid") {
     val parts = PixelOps.processJpeg("img://0/0")
-    val rw = PixelOps.jpegRatioW("img://0/0"); val rh = PixelOps.jpegRatioH("img://0/0")
+    val (rw, rh) = PixelOps.ratio("j", "img://0/0")
     assert(parts.length == rw * rh + 1)
     assert(parts.last.part == "global")
     assert(parts.forall(p => p.pix_fp >= 0 && p.norm_fp >= 0))
@@ -329,7 +329,7 @@ class JpegSpec extends AnyFunSuite {
       val ref = s"img://$rw$rh/0"
       val w = 16 * rw; val h = 16 * rh
       val planes = Array.tabulate(4) { c =>
-        val s = PixelOps.jpegCmykSalt(ref, c)
+        val s = PixelOps.seed(s"jc$c", ref)
         Array.tabulate(w * h) { i =>
           val x = i % w; val y = i / w
           ((5 * (x / 8) + 9 * (y / 8) + s) % 256).toByte

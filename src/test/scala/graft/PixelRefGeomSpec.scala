@@ -71,7 +71,7 @@ class PixelRefGeomSpec extends AnyFunSuite {
     var i = 0
     while (combos.size < 4 && i < 400) {
       val ref = s"img://$i/0"
-      combos.getOrElseUpdate((PixelOps.refRatioW(ref), PixelOps.refRatioH(ref)), ref)
+      combos.getOrElseUpdate(PixelOps.ratio("q", ref), ref)
       i += 1
     }
     assert(combos.size == 4, "need refs exercising every {1,2}x{1,2} grid")

@@ -126,7 +126,7 @@ class PixelSpec extends AnyFunSuite {
     val seeds = PixelOps.processProfiles("img://55/0") // 12 valid profiles
     val valids = {
       import graft.vision.PixelKernel._
-      val s = PixelOps.profileSeed("img://55/0")
+      val s = PixelOps.seed("px", "img://55/0")
       val g = (0 until 13).flatMap(y => (0 until 19).map(x =>
         (7 * x + 13 * y + s) % 256)).toArray
       Seq(
@@ -271,7 +271,7 @@ class PixelSpec extends AnyFunSuite {
   test("processRef: rw*rh tiles + global, all 16x16, deterministic") {
     val ref = "img://100/0"
     val parts = PixelOps.processRef(ref)
-    val rw = PixelOps.ratioW(ref); val rh = PixelOps.ratioH(ref)
+    val (rw, rh) = PixelOps.ratio("p", ref)
     assert(parts.length == rw * rh + 1)
     assert(parts.last.part == "global")
     assert(parts.forall(p => p.width == 16 && p.height == 16))

@@ -2,7 +2,10 @@ package graft
 
 import graft.corpus.CorpusDerive
 import graft.pipeline.{Extraction, RangeRouter}
+import graft.schema.Doc
+import org.apache.spark.sql.Encoder
 import org.scalatest.funsuite.AnyFunSuite
+import scala.reflect.ClassTag
 
 /** Router invariants: exact placement, true range clustering, and
   * pipeline output equivalence (the router is performance-only).
@@ -51,24 +54,29 @@ class RangeRouterSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = CorpusDerive.derive(spark, "/root/testdata/sf0.001")
       .repartition(200) // many small splits — the 100×-scale shape
-    // budget 100 with 200 partitions forces the second-level reduction
-    val tight = Extraction.sampleKeys(docs, saltBuckets = 64, budget = 100)
-    assert(tight.length <= math.max(2 * 100, Extraction.SampleGroups * Extraction.MinQuota),
-      s"collected ${tight.length}")
-    assert(tight.nonEmpty)
-    // budget 1000: first-level path, still bounded by 2×budget
-    val loose = Extraction.sampleKeys(docs, saltBuckets = 64, budget = 1000)
-    assert(loose.length <= 2 * 1000, s"collected ${loose.length}")
-    // boundary quality from the REDUCED sample: route every doc and check
-    // no range bucket exceeds 4× the mean load (approximate quantiles are
-    // fine; placement is exact regardless)
     val n = 16
-    val bounds = RangeRouter.boundaries(tight, n)
-    val ids = docs.map(_.doc_id).collect()
-    val sizes = ids.groupBy(id => RangeRouter.bucket(bounds, RangeRouter.key(id, 64)))
-      .values.map(_.length)
-    val mean = ids.length.toDouble / n
-    assert(sizes.max <= 4 * mean, s"max bucket ${sizes.max} vs mean $mean")
+    // one sampler, two key types: the extraction router's (salt, doc_id)
+    // and PrefixSum's (group, ord)
+    def check[K: Ordering: ClassTag: Encoder](keyOf: Doc => K): Unit = {
+      // budget 100 with 200 partitions forces the second-level reduction
+      val tight = RangeRouter.sample(docs, keyOf, budget = 100)
+      assert(tight.length <= math.max(2 * 100, RangeRouter.SampleGroups * RangeRouter.MinQuota),
+        s"collected ${tight.length}")
+      assert(tight.nonEmpty)
+      // budget 1000: first-level path, still bounded by 2×budget
+      val loose = RangeRouter.sample(docs, keyOf, budget = 1000)
+      assert(loose.length <= 2 * 1000, s"collected ${loose.length}")
+      // boundary quality from the REDUCED sample: route every doc and check
+      // no range bucket exceeds 4× the mean load (approximate quantiles are
+      // fine; placement is exact regardless)
+      val bounds = RangeRouter.boundaries(tight, n)
+      val keys = docs.map(keyOf).collect()
+      val sizes = keys.groupBy(k => RangeRouter.bucket(bounds, k)).values.map(_.length)
+      val mean = keys.length.toDouble / n
+      assert(sizes.max <= 4 * mean, s"max bucket ${sizes.max} vs mean $mean")
+    }
+    check(d => RangeRouter.key(d.doc_id, 64))
+    check(d => (s"src${d.doc_id.drop(1).toLong % 3}", d.doc_id.drop(1).toLong))
   }
 
   test("pipeline output == plain kernel output (router is placement-only)") {

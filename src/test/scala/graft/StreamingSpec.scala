@@ -2,10 +2,13 @@ package graft
 
 import graft.streaming.StreamingExtract
 import graft.streaming.StreamingExtract.{Ev, UserSessions}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Structured Streaming suites: the streaming paths must produce exactly
   * the batch results (the analog of the reference's monotonic-stream ==
@@ -207,5 +210,24 @@ class StreamingSpec extends AnyFunSuite {
     val sql = SparkEntry.queries("ev_sessions")(spark, "/root/testdata/sf0.001")
       .as[(Long, Long, Long)].collect().toSet
     assert(kernel == sql)
+  }
+
+  test("stageOrderedParts: staging leaks no file descriptor and no temp dir per part") {
+    import spark.implicits._
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def names(dir: java.nio.file.Path): List[String] =
+      Using.resource(Files.list(dir))(_.iterator().asScala.map(_.getFileName.toString).toList)
+    def partDirs = names(tmp).count(_.startsWith("graft-stream-part"))
+    val parts = (0 until 16).map(i => Seq(i.toLong).toDF("v"))
+    StreamingExtract.stageOrderedParts(spark, parts.take(1)) // warm the write path
+    val dirsBefore = partDirs
+    val fdsBefore = os.getOpenFileDescriptorCount
+    val src = StreamingExtract.stageOrderedParts(spark, parts)
+    val fdsAfter = os.getOpenFileDescriptorCount
+    assert(fdsAfter - fdsBefore < 16, s"open fds $fdsBefore -> $fdsAfter")
+    assert(partDirs == dirsBefore, "a staged part left its temp dir behind")
+    assert(names(Paths.get(src)).sorted == (0 until 16).map(i => f"batch-$i%03d.parquet"))
   }
 }
