@@ -12,12 +12,12 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst expressions for the dominant dedup sketch pass:
   * `graft_minhash_sig(text)` → array<bigint> (the 16-hash MinHash
   * signature) and `graft_shingles(text)` → array<string> (distinct sorted
-  * word 3-shingles). Both replace the typed `Dataset.map` formulation in
-  * [[graft.operators.DedupOps.docShingles]], which paid an encoder round
-  * trip (InternalRow → case class → InternalRow) per document and broke
-  * the whole-stage codegen span; as expressions they are one static call
-  * inside generated code, so the sketch pass runs at scan speed with full
-  * column pruning — the same move [[SimHashExpr]] made for SimHash.
+  * word 3-shingles). A typed `Dataset.map` computing the same sketch
+  * pays an encoder round trip (InternalRow → case class → InternalRow)
+  * per document and breaks the whole-stage codegen span; as expressions
+  * they are one static call inside generated code, so the sketch pass
+  * runs at scan speed with full column pruning — the same move
+  * [[SimHashExpr]] made for SimHash.
   *
   * Semantics are bit-identical to the kernel path (same
   * [[graft.operators.DedupOps.shingles]]/`minhashSig`), so the DuckDB

@@ -527,8 +527,8 @@ object TextGates {
       embeddingPairsOracleSql(0L +: (0 until DedupOps.EmbBandBits).map(1L << _))),
 
     // Incremental dedup over a REAL 3-micro-batch ingestion: each batch's
-    // band keys probe the accumulated committed index (never a history
-    // re-scan), pairs commit idempotently per batch, flood tails degrade
+    // band keys meet per-bucket state in Spark's state store (count, rep,
+    // first ≤ cap members; never a history re-scan), flood tails degrade
     // to a representative star under the streaming prefix cap. The
     // oracle replays arrival-order (= doc_id-order) prefix semantics.
     Gate("dedup_stream", overDocs(graft.streaming.StreamDedup.streamingMinhashPairs(_, _)),

@@ -56,9 +56,6 @@ object DedupOps {
     */
   val MaxDf = 128
 
-  final case class DocShingles(doc_id: Long, shingles: Array[String],
-                               sig: Array[Long])
-
   /** One cache slot per operator: each invocation releases the PREVIOUS
     * invocation's persisted sketch (non-blocking) before persisting its
     * own, so a long-lived session (bench reruns each query, plus retries)
@@ -132,23 +129,17 @@ object DedupOps {
     sig
   }
 
-  /** Per-doc shingle sets (distinct, sorted for determinism) + minhash
-    * signatures. One narrow pass over `documents`.
+  /** (bk, doc_id) LSH band keys of a frame of `doc_id` and its MinHash
+    * `sig`: per band, md5 of the comma-joined signature slice —
+    * string-identical to the DuckDB reconstruction
+    * (CAST(bigint AS STRING) = Long.toString).
     */
-  def docShingles(spark: SparkSession, docs: DataFrame): Dataset[DocShingles] = {
-    import spark.implicits._
-    docs.select("doc_id", "text").as[(Long, String)].map { case (id, text) =>
-      val sh = shingles(text).distinct.sorted
-      DocShingles(id, sh, minhashSig(sh))
-    }
-  }
-
-  /** Band key: md5 of the band's 4 signature values, comma-joined —
-    * string-identical to the DuckDB reconstruction.
-    */
-  def bandKey(sig: Array[Long], band: Int): String =
-    Hashing.md5hex((0 until RowsPerBand)
-      .map(r => sig(band * RowsPerBand + r)).mkString(","))
+  private[graft] def bandKeys(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), explode(expr(
+        s"transform(sequence(0, ${Bands - 1}), b -> " +
+          s"md5(concat_ws(',', transform(slice(sig, b*$RowsPerBand+1, " +
+          s"$RowsPerBand), x -> CAST(x AS STRING)))))")).as("bk"))
+      .select(col("bk"), col("doc_id"))
 
   /** Candidate pairs from band buckets with the `MaxBucket` skew cap:
     * buckets ≤ cap emit all pairs; larger buckets emit the linear star
@@ -187,21 +178,13 @@ object DedupOps {
     graft.functions.MinHashSigExpr.register(spark)
     // The sketch pass rides the NATIVE graft_shingles/graft_minhash_sig
     // expressions (codegen'd static calls — no typed-map encoder round
-    // trip; semantics identical to docShingles). Persist it: referenced
-    // three times below (band explode + both sides of the verification
-    // join); recomputing the shingle/signature pass per reference would
-    // triple the dominant cost. At corpus scale this materializes to a
-    // sketch table instead.
+    // trip). Persist it: referenced three times below (band explode +
+    // both sides of the verification join); recomputing the
+    // shingle/signature pass per reference would triple the dominant
+    // cost. At corpus scale this materializes to a sketch table instead.
     val ds = persistSlot("minhash", docs.selectExpr("doc_id",
       "graft_shingles(text) AS shingles", "graft_minhash_sig(text) AS sig"))
-    // band key entirely in SQL: md5 of the comma-joined band slice —
-    // string-identical to bandKey (CAST(bigint AS STRING) = Long.toString)
-    val bands = ds.select($"doc_id", explode(expr(
-        s"transform(sequence(0, ${Bands - 1}), b -> " +
-          s"md5(concat_ws(',', transform(slice(sig, b*$RowsPerBand+1, " +
-          s"$RowsPerBand), x -> CAST(x AS STRING)))))")).as("bk"))
-      .select($"bk", $"doc_id")
-    val cand = bandCandidates(bands, maxBucket)
+    val cand = bandCandidates(bandKeys(ds), maxBucket)
     verifyJaccard(spark, cand, ds.select($"doc_id", $"shingles"),
       numerator = 10, denominator = 7)
   }

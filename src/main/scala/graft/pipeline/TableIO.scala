@@ -666,7 +666,7 @@ object TableIO {
                 asOfSnapshot: Long = Long.MaxValue): Dataset[ExtractedRow] =
     typed(readTableDf(spark, outDir, asOfSnapshot))
 
-  private def deleteRecursively(p: Path): Unit =
+  private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       Using.resource(Files.walk(p)) { st =>
         st.sorted(java.util.Comparator.reverseOrder[Path]())

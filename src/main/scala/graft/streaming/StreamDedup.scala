@@ -1,24 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.DedupOps
-import graft.pipeline.NioLocalFileSystem
 
 /** Incremental (streaming) MinHash+LSH near-duplicate detection —
-  * continuous-ingestion dedup, the shape a 100 TB training-data pipeline
-  * actually runs: documents arrive as micro-batches, each batch's LSH
-  * band keys are checked against the ACCUMULATED band index of everything
-  * already ingested, newly-discovered candidate pairs are committed
-  * per-batch (idempotent overwrite, the TableIO pattern), and the batch's
-  * bands are appended to the index. No re-scan of history: a batch's cost
-  * is its own size times the index probe, exactly like the reference's
-  * incremental decode loop never re-reads committed context
-  * (ref crates/core/src/transformer/cache.rs:204-258 append-only KV;
-  * server/src/stream.rs:239-260 monotonic emission).
+  * continuous-ingestion dedup: documents arrive as micro-batches, and
+  * each batch's LSH band keys meet the bands of everything already
+  * ingested through Spark's versioned state store. One
+  * `flatMapGroupsWithState` keyed by band key keeps per bucket only
+  * (member count, representative, first ≤ cap members), so a batch's cost
+  * is its own size times a bounded state probe, never a re-scan of
+  * history (ref crates/core/src/transformer/cache.rs:204-258 append-only
+  * KV; server/src/stream.rs:239-260 monotonic emission). A replayed
+  * micro-batch k restores state version k − 1, so it re-emits exactly the
+  * pairs its first attempt did: no pair table, no index table, no listing.
   *
   * Skew guard — the streaming analog of [[DedupOps.MaxBucket]] is a
   * PREFIX CAP: arrival order is doc_id order (range-staged batches), and
@@ -39,89 +37,52 @@ import graft.pipeline.NioLocalFileSystem
   */
 object StreamDedup {
 
-  /** (bk, doc_id) band keys from raw text. The projection boundary after
-    * `graft_minhash_sig` makes the signature compute once per row; the
-    * band explode then slices the materialized array — same key strings
-    * as [[DedupOps.minhashPairs]] (md5 of the comma-joined band slice).
+  final case class BandMember(bk: String, doc_id: Long)
+  /** A band bucket's state: members seen, min doc_id, and the members at
+    * arrival positions ≤ cap (the only ones a later member pairs with).
     */
-  private[graft] def bandKeys(docs: DataFrame): DataFrame = {
-    graft.functions.MinHashSigExpr.register(docs.sparkSession)
-    docs.selectExpr("doc_id", "graft_minhash_sig(text) AS sig")
-      .selectExpr("doc_id",
-        s"explode(transform(sequence(0, ${DedupOps.Bands - 1}), b -> " +
-          s"md5(concat_ws(',', transform(slice(sig, b*${DedupOps.RowsPerBand}+1, " +
-          s"${DedupOps.RowsPerBand}), x -> CAST(x AS STRING)))))) AS bk")
-      .select(col("bk"), col("doc_id"))
-  }
+  final case class Bucket(n: Long, rep: Long, first: Seq[Long])
+  final case class Pair(doc_a: Long, doc_b: Long)
 
-  private val idxSchema = new StructType()
-    .add("bk", StringType, nullable = false)
-    .add("doc_id", LongType, nullable = false)
-  private val pairSchema = new StructType()
-    .add("doc_a", LongType, nullable = false)
-    .add("doc_b", LongType, nullable = false)
-
-  /** Read every committed per-batch dir under `root`; explicit schema so
-    * the no-batches / empty-batch cases read as a typed empty frame.
+  /** One bucket's members of one micro-batch, numbered p = n + rank in
+    * doc_id order: p ≤ cap pairs with every earlier member, p > cap with
+    * the representative.
     */
-  private def readAccumulated(spark: SparkSession, root: String,
-                              schema: StructType): DataFrame = {
-    val dirs = {
-      val p = java.nio.file.Paths.get(root)
-      if (!java.nio.file.Files.exists(p)) Seq.empty[String]
-      else scala.util.Using.resource(java.nio.file.Files.list(p)) { st =>
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala.map(_.toString)
-          .filter(_.matches(".*/batch=\\d+$")).toSeq.sorted
-      }
+  private def bucketPairs(cap: Int)(bk: String, rows: Iterator[BandMember],
+      state: GroupState[Bucket]): Iterator[Pair] = {
+    val ids = rows.map(_.doc_id).toArray.sorted
+    val prev = state.getOption.getOrElse(Bucket(0L, Long.MaxValue, Vector.empty))
+    val rep = math.min(prev.rep, ids.head)
+    val first = prev.first.toBuffer
+    val pairs = Vector.newBuilder[Pair]
+    ids.indices.foreach { i =>
+      val d = ids(i)
+      if (prev.n + i + 1 <= cap) {
+        first.foreach(e => if (e != d) pairs += Pair(e, d))
+        first += d
+      } else pairs += Pair(rep, d)
     }
-    if (dirs.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(dirs: _*)
+    state.update(Bucket(prev.n + ids.length, rep, first.toSeq))
+    pairs.result().iterator
   }
 
-  /** One micro-batch of the incremental index: emit this batch's new
-    * candidate pairs under the prefix cap, then append its bands.
-    * Both writes are idempotent per-batch overwrites (replay-safe).
+  /** Candidate pairs of a (streaming) frame of `doc_id`, `text` under the
+    * prefix cap, each emitted once in the micro-batch of its later member.
     */
-  private[graft] def processBatch(spark: SparkSession, batch: DataFrame,
-      batchId: Long, idxDir: String, pairDir: String, cap: Int): Unit = {
-    val newBands = bandKeys(batch)
-    val idx = readAccumulated(spark, idxDir, idxSchema)
-    // arrival position p = |bucket members already indexed| + rank of the
-    // new member within its bucket (doc_id order == arrival order);
-    // representative = bucket min over index ∪ this batch
-    val prev = idx.groupBy(col("bk"))
-      .agg(count(lit(1)).as("pn"), min(col("doc_id")).as("prev_rep"))
-    val pos = newBands
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("bk")).orderBy(col("doc_id"))))
-      .withColumn("min_new", min(col("doc_id")).over(Window.partitionBy(col("bk"))))
-      .join(prev, Seq("bk"), "left")
-      .withColumn("p", coalesce(col("pn"), lit(0L)) + col("r"))
-      .withColumn("rep",
-        least(coalesce(col("prev_rep"), lit(Long.MaxValue)), col("min_new")))
-    val toIndex = pos.filter(col("p") <= cap).as("n")
-      .join(idx.as("i"), col("n.bk") === col("i.bk"))
-      .select(col("i.doc_id").as("doc_a"), col("n.doc_id").as("doc_b"))
-    val inBatch = pos.as("a").join(pos.as("b"),
-        col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id") &&
-          col("b.p") <= cap)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    // rep has p = 1 ≤ cap, so p > cap implies doc_id ≠ rep
-    val stars = pos.filter(col("p") > cap)
-      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-    toIndex.union(inBatch).union(stars).distinct()
-      .write.mode(SaveMode.Overwrite).options(NioLocalFileSystem.WriterOptions)
-      .parquet(s"$pairDir/batch=$batchId")
-    newBands.write.mode(SaveMode.Overwrite).options(NioLocalFileSystem.WriterOptions)
-      .parquet(s"$idxDir/batch=$batchId")
+  private[graft] def prefixCapPairs(docs: DataFrame, cap: Int): Dataset[Pair] = {
+    import docs.sparkSession.implicits._
+    graft.functions.MinHashSigExpr.register(docs.sparkSession)
+    DedupOps.bandKeys(docs.selectExpr("doc_id", "graft_minhash_sig(text) AS sig"))
+      .as[BandMember]
+      .groupByKey(_.bk)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        bucketPairs(cap))
   }
 
   /** Driver-verify entry: stage `docs` as `nBatches` contiguous doc_id
-    * ranges (arrival order == id order), run the incremental index as a
-    * REAL foreachBatch streaming execution (AvailableNow, one file per
-    * trigger), then exact-verify the accumulated candidate pairs.
+    * ranges (arrival order == id order), stream them one file per trigger
+    * through [[prefixCapPairs]] into a memory sink, then exact-verify the
+    * candidate pairs.
     */
   def streamingMinhashPairs(spark: SparkSession, docs: DataFrame,
       nBatches: Int = 3, maxBucket: Int = DedupOps.MaxBucket): DataFrame = {
@@ -136,25 +97,11 @@ object StreamDedup {
       val hi = if (i == nBatches - 1) maxId + 1 else (maxId + 1) * (i + 1) / nBatches
       slim.filter(col("doc_id") >= lo && col("doc_id") < hi)
     }
-    val src = StreamingExtract.stageOrderedParts(spark, parts)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-sdedup-idx").toString
-    val pairDir = java.nio.file.Files.createTempDirectory("graft-sdedup-pair").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sdedup-ck").toString
-    val schema = spark.read.parquet(src).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId, idxDir, pairDir, maxBucket)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.functions.MinHashSigExpr.register(spark)
+    val pairs = StreamingExtract.runToMemory(spark,
+      StreamingExtract.stageOrderedParts(spark, parts), 1, OutputMode.Append())(
+      prefixCapPairs(_, maxBucket))
     val sets = slim.selectExpr("doc_id", "graft_shingles(text) AS shingles")
-    DedupOps.verifyJaccard(spark,
-      readAccumulated(spark, pairDir, pairSchema).distinct(),
-      sets, numerator = 10, denominator = 7)
+    DedupOps.verifyJaccard(spark, pairs.distinct(), sets,
+      numerator = 10, denominator = 7)
   }
 }

@@ -6,7 +6,7 @@ import graft.schema.{Doc, ExtractedSpan, HtmlDoc}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 import scala.util.Using
@@ -49,20 +49,23 @@ object StreamingExtract {
   /** Run `query` over a file stream of the parquet files staged in `src`
     * (`maxFilesPerTrigger` per micro-batch) into a fresh memory-sink table
     * in `mode`, with 8 state partitions (see [[withStatePartitions]]),
-    * until Trigger.AvailableNow has drained the source; returns the table.
+    * until Trigger.AvailableNow has drained the source; then deletes
+    * `src` (the sink holds the rows) and returns the table.
     */
-  private def runToMemory(spark: SparkSession, src: String, maxFilesPerTrigger: Int,
+  private[graft] def runToMemory(spark: SparkSession, src: String, maxFilesPerTrigger: Int,
       mode: OutputMode)(query: DataFrame => Dataset[_]): DataFrame = {
     val name = s"graft_stream_${System.nanoTime()}"
-    val in = spark.readStream.schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString).parquet(src)
-    withStatePartitions(spark, 8) {
-      query(in).writeStream.format("memory").queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    }
+    try {
+      val in = spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger.toString).parquet(src)
+      withStatePartitions(spark, 8) {
+        query(in).writeStream.format("memory").queryName(name)
+          .outputMode(mode)
+          .trigger(Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+      }
+    } finally TableIO.deleteRecursively(Paths.get(src))
     spark.table(name)
   }
 
@@ -156,6 +159,8 @@ object StreamingExtract {
     * content — the guard must detect the existing manifest and no-op; if
     * it overwrote, batch 0's docs would vanish and the oracle hash-fails.
     * (Ref analog: idempotent finalize, server/src/stream.rs:287-355.)
+    * The rows are materialized before the staged, table and checkpoint
+    * dirs are deleted.
     */
   private def streamCounts[T <: Product : TypeTag](spark: SparkSession,
       docs: Dataset[T], part: Column, idOf: T => String,
@@ -164,13 +169,16 @@ object StreamingExtract {
     val src = stageOrderedParts(spark, (0 until 3).map(i => df.filter(part === i)))
     val out = Files.createTempDirectory("graft-stream-out").toString
     val ckpt = Files.createTempDirectory("graft-stream-ck").toString
-    extractStreamWith(spark, src, out, ckpt, idOf, kernel,
-      maxFilesPerTrigger = 1, availableNow = true).awaitTermination()
-    val poison = Extraction.extractRowsWith(docs.filter(lit(false)), idOf, kernel, StreamBuckets)
-    require(!TableIO.appendBatchIdempotent(poison, out, 0L),
-      "batch 0 replay must be detected as already committed")
-    TableIO.readCommittedBatches(spark, out)
-      .select(col("doc_id"), col("span_count").cast("long").as("n_spans"))
+    try {
+      extractStreamWith(spark, src, out, ckpt, idOf, kernel,
+        maxFilesPerTrigger = 1, availableNow = true).awaitTermination()
+      val poison = Extraction.extractRowsWith(docs.filter(lit(false)), idOf, kernel, StreamBuckets)
+      require(!TableIO.appendBatchIdempotent(poison, out, 0L),
+        "batch 0 replay must be detected as already committed")
+      TableIO.readCommittedBatches(spark, out)
+        .select(col("doc_id"), col("span_count").cast("long").as("n_spans"))
+        .localCheckpoint()
+    } finally Seq(src, out, ckpt).foreach(d => TableIO.deleteRecursively(Paths.get(d)))
   }
 
   /** Stage each frame as one parquet file with strictly increasing

@@ -2,19 +2,18 @@ package graft
 
 import graft.operators.MediaOps
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
 
 /** S1 source coverage: media payloads round-trip through the
   * `binaryFile` DataSource (the lake-side analog of the reference's
   * per-image file scan, cli/app.rs:95-101) and feed the decode kernel.
   */
-class BinarySourceSpec extends AnyFunSuite {
+class BinarySourceSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkSuite.spark
 
   test("binaryFile round-trip: files written, scanned, headers decoded") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-bin")
+    val dir = tempDir("graft-bin")
     val docs = Seq((2L, "x"), (4L, "y")).toDF("doc_id", "text")
     val items = MediaOps.mediaItems(spark, docs).collect()
     val meta = MediaOps.binaryFileRoundTrip(spark, docs, dir.toString).collect()
@@ -30,8 +29,6 @@ class BinarySourceSpec extends AnyFunSuite {
     // filename mapping is a clean inverse
     items.foreach { it =>
       assert(MediaOps.refOfFileName(MediaOps.fileName(it)) == it.media_ref)
-      Files.deleteIfExists(dir.resolve(MediaOps.fileName(it)))
     }
-    val _ = Paths.get(dir.toString) // keep import used
   }
 }

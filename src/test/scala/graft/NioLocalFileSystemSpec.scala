@@ -13,7 +13,7 @@ import java.nio.file.attribute.PosixFilePermission
   * forked `chmod`, checksummed like Hadoop's LocalFileSystem, and reached
   * only through the writer options.
   */
-class NioLocalFileSystemSpec extends AnyFunSuite {
+class NioLocalFileSystemSpec extends AnyFunSuite with TempDirs {
   private val conf = new Configuration()
   private def initialized[F <: RawLocalFileSystem](fs: F): F = {
     fs.initialize(URI.create("file:///"), conf); fs
@@ -31,7 +31,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
   }
 
   test("setPermission: the rwx modes Hadoop's RawLocalFileSystem sets on a sibling path") {
-    val root = Files.createTempDirectory("graft-niofs")
+    val root = tempDir("graft-niofs")
     for (mode <- Seq("644", "755", "600", "700"); dir <- Seq(false, true)) {
       val kind = if (dir) "dir" else "file"
       val mine = fresh(root.resolve(s"nio-$kind-$mode"), dir)
@@ -51,7 +51,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
   test("writer options: a checksummed FS of this class, bypassing the cache") {
     val withOpts = new Configuration(conf)
     NioLocalFileSystem.WriterOptions.foreach { case (k, v) => withOpts.set(k, v) }
-    val root = Files.createTempDirectory("graft-niofs-rw")
+    val root = tempDir("graft-niofs-rw")
     val file = hpath(root.resolve("f.bin"))
     val fs = file.getFileSystem(withOpts)
     assert(fs.isInstanceOf[NioLocalFileSystem])

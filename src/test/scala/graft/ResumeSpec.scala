@@ -12,15 +12,12 @@ import scala.util.Using
   * (SURVEY.md §7.4 risk 3): a run that dies mid-write must resume from the
   * last committed bucket and converge to the exact single-run output.
   */
-class ResumeSpec extends AnyFunSuite {
+class ResumeSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSuite.spark
   private val sf = "/root/testdata/sf0.001"
   private val Buckets = 8
 
-  private def tmpDir(): String = {
-    val d = Files.createTempDirectory("graft-resume").toString
-    d
-  }
+  private def tmpDir(): String = tempDir("graft-resume").toString
 
   private def rows = Extraction.extractRows(CorpusDerive.derive(spark, sf), Buckets)
 

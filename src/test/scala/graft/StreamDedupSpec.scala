@@ -1,12 +1,17 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 import graft.operators.DedupOps
-import graft.streaming.StreamDedup
+import graft.streaming.{StreamDedup, StreamingExtract}
 
-class StreamDedupSpec extends AnyFunSuite {
+class StreamDedupSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkSuite.spark
 
@@ -66,13 +71,39 @@ class StreamDedupSpec extends AnyFunSuite {
 
   test("per-batch commits are replay-idempotent") {
     import spark.implicits._
-    val docs = docsDF((0L until 12L).map(i => (i, s"shared body text $i")))
-    val idxDir = java.nio.file.Files.createTempDirectory("sd-idx").toString
-    val pairDir = java.nio.file.Files.createTempDirectory("sd-pair").toString
-    val b0 = docs.filter($"doc_id" < 6)
-    StreamDedup.processBatch(spark, b0, 0L, idxDir, pairDir, DedupOps.MaxBucket)
-    val idxOnce = spark.read.parquet(s"$idxDir/batch=0").count()
-    StreamDedup.processBatch(spark, b0, 0L, idxDir, pairDir, DedupOps.MaxBucket)
-    assert(spark.read.parquet(s"$idxDir/batch=0").count() == idxOnce)
+    // three groups of four identical docs, two of each in either batch;
+    // cap 3, so batch 1 emits full pairs and representative stars alike
+    val words = Seq("alpha beta gamma delta", "red green blue cyan",
+      "north south east west")
+    val docs = docsDF((0L until 12L).map(i => (i, words((i % 3).toInt))))
+    val src = track(Paths.get(StreamingExtract.stageOrderedParts(spark,
+      Seq(docs.filter($"doc_id" < 6), docs.filter($"doc_id" >= 6))))).toString
+    val ckpt = tempDir("graft-sdedup-ck")
+    val pairs = TrieMap.empty[Long, Set[(Long, Long)]]
+    /** Run the stream to the end of its source; the batch ids it ran. */
+    def run(): Seq[Long] = {
+      val ran = new ConcurrentLinkedQueue[Long]()
+      val in = spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+      StreamDedup.prefixCapPairs(in, cap = 3).writeStream
+        .foreachBatch { (batch: Dataset[StreamDedup.Pair], id: Long) =>
+          ran.add(id)
+          pairs(id) = batch.collect().map(p => (p.doc_a, p.doc_b)).toSet
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+      ran.asScala.toSeq
+    }
+    assert(run() == Seq(0L, 1L))
+    val clean = pairs.toMap
+    assert(clean(0L) == Set((0L, 3L), (1L, 4L), (2L, 5L)))
+    assert(clean(1L) == Set((0L, 6L), (3L, 6L), (0L, 9L), (1L, 7L), (4L, 7L), (1L, 10L),
+      (2L, 8L), (5L, 8L), (2L, 11L)))
+    // the JVM died after batch 1's output but before its offset commit
+    Files.delete(ckpt.resolve("commits/1"))
+    Files.delete(ckpt.resolve("commits/.1.crc"))
+    assert(run() == Seq(1L))
+    assert(pairs.toMap == clean)
   }
 }

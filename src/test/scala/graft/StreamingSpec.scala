@@ -14,13 +14,13 @@ import scala.util.Using
   * the batch results (the analog of the reference's monotonic-stream ==
   * final-decode equality, crates/server/src/stream.rs:239-355).
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkSuite.spark
   // FileStreamSource requires a directory; re-emit the single-file test
   // parquet into one (2 files → 2 micro-batches at maxFilesPerTrigger=1).
   private lazy val eventsDir: String = {
-    val dir = "/tmp/graft-stream-events"
+    val dir = tempDir("graft-stream-events").resolve("events").toString
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .repartition(2).write.mode("overwrite").parquet(dir)
     dir
@@ -133,9 +133,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stateful query restart recovers state from checkpoint (ST5/resume analog)") {
     import spark.implicits._
-    import java.nio.file.Files
-    val src = Files.createTempDirectory("graft-ckpt-src").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val src = tempDir("graft-ckpt-src").toString
+    val ckpt = tempDir("graft-ckpt").toString
     val min = 60L * 1000000L
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[UserSessions]()
     def start() = {
@@ -171,11 +170,10 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming extraction: continuous kernel ingestion == batch extraction; batch replay is idempotent") {
     import spark.implicits._
-    import java.nio.file.Files
     import graft.pipeline.{Extraction, TableIO}
-    val src = Files.createTempDirectory("graft-sx-src").toString
-    val out = Files.createTempDirectory("graft-sx-out").toString
-    val ckpt = Files.createTempDirectory("graft-sx-ckpt").toString
+    val src = tempDir("graft-sx-src").toString
+    val out = tempDir("graft-sx-out").toString
+    val ckpt = tempDir("graft-sx-ckpt").toString
     val all = graft.corpus.CorpusDerive.derive(spark, "/root/testdata/sf0.001")
     // arrival in two waves
     val (w1, w2) = (all.filter(_.doc_id < "d0000000500"),
@@ -221,13 +219,13 @@ class StreamingSpec extends AnyFunSuite {
       Using.resource(Files.list(dir))(_.iterator().asScala.map(_.getFileName.toString).toList)
     def partDirs = names(tmp).count(_.startsWith("graft-stream-part"))
     val parts = (0 until 16).map(i => Seq(i.toLong).toDF("v"))
-    StreamingExtract.stageOrderedParts(spark, parts.take(1)) // warm the write path
+    track(Paths.get(StreamingExtract.stageOrderedParts(spark, parts.take(1)))) // warm the write path
     val dirsBefore = partDirs
     val fdsBefore = os.getOpenFileDescriptorCount
-    val src = StreamingExtract.stageOrderedParts(spark, parts)
+    val src = track(Paths.get(StreamingExtract.stageOrderedParts(spark, parts)))
     val fdsAfter = os.getOpenFileDescriptorCount
     assert(fdsAfter - fdsBefore < 16, s"open fds $fdsBefore -> $fdsAfter")
     assert(partDirs == dirsBefore, "a staged part left its temp dir behind")
-    assert(names(Paths.get(src)).sorted == (0 until 16).map(i => f"batch-$i%03d.parquet"))
+    assert(names(src).sorted == (0 until 16).map(i => f"batch-$i%03d.parquet"))
   }
 }
