@@ -14,9 +14,9 @@ import scala.collection.immutable.ListMap
   *  1. per-query wall times for every SparkEntry query at
   *     `SPARK_GRAFT_CPUS` (default 32) — the driver's headline numbers;
   *  2. the north-rule scaling evidence: the SAME extraction job (corpus
-  *     derivation → salt → repartitionByRange → kernel → span totals) run
-  *     at local[N] and local[4N] (default N=4) on the SAME amplified
-  *     input, reporting docs/sec at both plus
+  *     derivation → kernel → salt + range key → one RangeRouter-routed
+  *     exchange → span totals) run at local[N] and local[4N] (default
+  *     N=4) on the SAME amplified input, reporting docs/sec at both plus
   *     efficiency = (docs/s@4N) / (4 × docs/s@N).
   *
   * The corpus is amplified deterministically (each doc replicated

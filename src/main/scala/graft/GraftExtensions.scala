@@ -1,41 +1,56 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.functions._
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Single SparkSessionExtensions entry point for the whole engine:
   *
   *   --conf spark.sql.extensions=graft.GraftExtensions
   *
-  * injects the native codegen'd scalar expressions
-  * ([[graft.functions.NormalizeText]], [[graft.functions.SimHashExpr]])
-  * and the whole-operator TopKPerKey rewrite
-  * ([[graft.plans.TopKPerKeyPlans]]: optimizer rule + planner strategy).
-  * Sessions built without the conf (the driver-owned ones) use the
-  * idempotent per-object `register`/`install` helpers instead.
+  * injects every native codegen'd SQL function of
+  * [[GraftExtensions.Functions]] and the whole-operator TopKPerKey
+  * rewrite ([[graft.plans.TopKPerKeyPlans]]: optimizer rule + planner
+  * strategy). Sessions built without the conf (the driver-owned ones)
+  * register the same functions with [[GraftExtensions.registerFunctions]]
+  * and the rewrite with `TopKPerKeyExtension.install`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_normalize_text"),
-      graft.functions.NormalizeText.info,
-      (children: Seq[Expression]) => graft.functions.NormalizeText(children.head)))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      graft.functions.SimHashExpr.info,
-      (children: Seq[Expression]) => graft.functions.SimHashExpr(children.head)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      graft.functions.MinHashSigExpr.info,
-      (children: Seq[Expression]) => graft.functions.MinHashSigExpr(children.head)))
-    ext.injectFunction((FunctionIdentifier("graft_shingles"),
-      graft.functions.MinHashSigExpr.shinglesInfo,
-      (children: Seq[Expression]) => graft.functions.ShinglesExpr(children.head)))
-    ext.injectFunction((FunctionIdentifier("graft_lsh_sketch"),
-      graft.functions.LshSketchExpr.info,
-      (children: Seq[Expression]) => graft.functions.LshSketchExpr(children.head)))
-    ext.injectFunction((FunctionIdentifier("graft_md5i"),
-      graft.functions.Md5iExpr.info,
-      (children: Seq[Expression]) => graft.functions.Md5iExpr(children.head)))
+    GraftExtensions.descriptions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.TopKPerKeyPlans.TopKRewriteRule)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyPlans.TopKStrategy)
+  }
+}
+
+object GraftExtensions {
+
+  /** The one registry of native SQL functions: (name, expression class,
+    * builder). Each name is its expression's `prettyName`.
+    */
+  private[graft] val Functions
+      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("graft_normalize_text", classOf[NormalizeText], c => NormalizeText(c.head)),
+    ("graft_simhash", classOf[SimHashExpr], c => SimHashExpr(c.head)),
+    ("graft_minhash_sig", classOf[MinHashSigExpr], c => MinHashSigExpr(c.head)),
+    ("graft_shingles", classOf[ShinglesExpr], c => ShinglesExpr(c.head)),
+    ("graft_shingle_keys", classOf[ShingleKeysExpr], c => ShingleKeysExpr(c(0), c(1))),
+    ("graft_lsh_sketch", classOf[LshSketchExpr], c => LshSketchExpr(c.head)),
+    ("graft_md5i", classOf[Md5iExpr], c => Md5iExpr(c.head)))
+
+  private def descriptions =
+    Functions.map { case (name, cls, build) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+    }
+
+  /** Idempotent per-session registration of [[Functions]], for sessions
+    * built without the extensions conf.
+    */
+  def registerFunctions(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    descriptions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
   }
 }

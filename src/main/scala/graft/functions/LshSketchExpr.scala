@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
@@ -50,7 +48,7 @@ case class LshSketchExpr(child: Expression) extends UnaryExpression {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
       TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_lsh_sketch requires ARRAY<FLOAT|DOUBLE>, got $other")
+      s"$prettyName requires ARRAY<FLOAT|DOUBLE>, got $other")
   }
   override def prettyName: String = "graft_lsh_sketch"
 
@@ -66,16 +64,4 @@ case class LshSketchExpr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): LshSketchExpr =
     copy(child = newChild)
-}
-
-object LshSketchExpr {
-  val info = new ExpressionInfo(classOf[LshSketchExpr].getName, "graft_lsh_sketch")
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("graft_lsh_sketch")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id, info, (children: Seq[Expression]) => LshSketchExpr(children.head))
-  }
 }

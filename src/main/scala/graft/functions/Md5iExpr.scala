@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,7 +24,7 @@ case class Md5iExpr(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"graft_md5i requires STRING, got ${child.dataType}")
+      s"$prettyName requires STRING, got ${child.dataType}")
   override def prettyName: String = "graft_md5i"
 
   override protected def nullSafeEval(input: Any): Any =
@@ -37,16 +35,4 @@ case class Md5iExpr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Md5iExpr =
     copy(child = newChild)
-}
-
-object Md5iExpr {
-  val info = new ExpressionInfo(classOf[Md5iExpr].getName, "graft_md5i")
-
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("graft_md5i")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id, info, (children: Seq[Expression]) => Md5iExpr(children.head))
-  }
-
 }

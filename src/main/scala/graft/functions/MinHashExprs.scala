@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -65,7 +63,7 @@ case class ShingleKeysExpr(left: Expression, right: Expression)
     if (left.dataType == StringType && right.dataType == StringType)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"graft_shingle_keys requires (STRING, STRING), got " +
+      s"$prettyName requires (STRING, STRING), got " +
         s"(${left.dataType}, ${right.dataType})")
   override def prettyName: String = "graft_shingle_keys"
 
@@ -87,7 +85,7 @@ case class MinHashSigExpr(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"graft_minhash_sig requires STRING, got ${child.dataType}")
+      s"$prettyName requires STRING, got ${child.dataType}")
   override def prettyName: String = "graft_minhash_sig"
 
   override protected def nullSafeEval(input: Any): Any =
@@ -105,7 +103,7 @@ case class ShinglesExpr(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"graft_shingles requires STRING, got ${child.dataType}")
+      s"$prettyName requires STRING, got ${child.dataType}")
   override def prettyName: String = "graft_shingles"
 
   override protected def nullSafeEval(input: Any): Any =
@@ -116,27 +114,4 @@ case class ShinglesExpr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): ShinglesExpr =
     copy(child = newChild)
-}
-
-object MinHashSigExpr {
-  val info = new ExpressionInfo(classOf[MinHashSigExpr].getName, "graft_minhash_sig")
-  val shinglesInfo = new ExpressionInfo(classOf[ShinglesExpr].getName, "graft_shingles")
-  val shingleKeysInfo = new ExpressionInfo(classOf[ShingleKeysExpr].getName, "graft_shingle_keys")
-
-  /** Idempotent per-session registration of both expressions. */
-  def register(spark: SparkSession): Unit = {
-    val sid = FunctionIdentifier("graft_minhash_sig")
-    if (!spark.sessionState.functionRegistry.functionExists(sid))
-      spark.sessionState.functionRegistry.registerFunction(
-        sid, info, (children: Seq[Expression]) => MinHashSigExpr(children.head))
-    val shid = FunctionIdentifier("graft_shingles")
-    if (!spark.sessionState.functionRegistry.functionExists(shid))
-      spark.sessionState.functionRegistry.registerFunction(
-        shid, shinglesInfo, (children: Seq[Expression]) => ShinglesExpr(children.head))
-    val skid = FunctionIdentifier("graft_shingle_keys")
-    if (!spark.sessionState.functionRegistry.functionExists(skid))
-      spark.sessionState.functionRegistry.registerFunction(
-        skid, shingleKeysInfo,
-        (children: Seq[Expression]) => ShingleKeysExpr(children(0), children(1)))
-  }
 }

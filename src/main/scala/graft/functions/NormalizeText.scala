@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -15,9 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * This is the preferred extension tier when built-ins don't compose: a
   * real `Expression` with `doGenCode` stays inside whole-stage codegen
   * (one virtual-free static call per row), where a Scala UDF would break
-  * the codegen span and pay SerDe per call. Registered either through
-  * [[graft.GraftExtensions]] (`spark.sql.extensions=graft.GraftExtensions`)
-  * or imperatively with [[NormalizeText.register]].
+  * the codegen span and pay SerDe per call. Registered, like every
+  * native function, from the one list in [[graft.GraftExtensions]]:
+  * through `spark.sql.extensions=graft.GraftExtensions`, or per session
+  * with `GraftExtensions.registerFunctions`.
   */
 case class NormalizeText(child: Expression) extends UnaryExpression {
 
@@ -28,7 +27,7 @@ case class NormalizeText(child: Expression) extends UnaryExpression {
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_normalize_text requires STRING, got ${child.dataType}")
+        s"$prettyName requires STRING, got ${child.dataType}")
   }
   override def prettyName: String = "graft_normalize_text"
 
@@ -43,19 +42,4 @@ case class NormalizeText(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): NormalizeText =
     copy(child = newChild)
-}
-
-object NormalizeText {
-  val info = new ExpressionInfo(classOf[NormalizeText].getName,
-    "graft_normalize_text")
-
-  /** Idempotent per-session registration (for sessions built without the
-    * extensions conf, e.g. the driver-owned ones in SparkEntry).
-    */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("graft_normalize_text")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id, info, (children: Seq[Expression]) => NormalizeText(children.head))
-  }
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,7 +24,7 @@ case class SimHashExpr(child: Expression) extends UnaryExpression {
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_simhash requires STRING, got ${child.dataType}")
+        s"$prettyName requires STRING, got ${child.dataType}")
   }
   override def prettyName: String = "graft_simhash"
 
@@ -39,16 +37,4 @@ case class SimHashExpr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): SimHashExpr =
     copy(child = newChild)
-}
-
-object SimHashExpr {
-  val info = new ExpressionInfo(classOf[SimHashExpr].getName, "graft_simhash")
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("graft_simhash")
-    if (!spark.sessionState.functionRegistry.functionExists(id))
-      spark.sessionState.functionRegistry.registerFunction(
-        id, info, (children: Seq[Expression]) => SimHashExpr(children.head))
-  }
 }

@@ -4,7 +4,7 @@ import graft.corpus.CorpusDerive
 import graft.extract.{Html, Warc}
 import graft.gates.Gate._
 import graft.pipeline.Extraction
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Extraction gates: the span pipeline (ext_*), its front doors (HTML,
@@ -432,12 +432,24 @@ object ExtractionGates {
     // Progress-callback / bench-recorder surface (SURVEY §2.10) under the
     // hash gate: doc/span totals — n_docs, spans_in (derived spans
     // entering the kernel), spans_out (spans surviving boilerplate
-    // strip), dropped (= the nav+footer pair/doc). The gated row is a
-    // plan-level aggregation (exactly-once under retries); the named
-    // LongAccumulators are updated in the same kernel loop as the live
-    // observability surface (at-least-once — see Extraction.Metrics).
-    Gate("ext_metrics", (s, dir) =>
-      Extraction.metricsRow(CorpusDerive.derive(s, dir), Some(Extraction.metrics(s))),
+    // strip), dropped (= the nav+footer pair/doc). The totals are
+    // observed (Dataset.observe) on the one-stage extraction as a noop
+    // write runs it: n_docs and spans_in on the kernel's input, spans_out
+    // on its output. There is no exchange, so both sit in the result
+    // stage, where Spark merges each partition's update exactly once.
+    Gate("ext_metrics", (s, dir) => {
+      import s.implicits._
+      val (in, out) = (Observation(), Observation())
+      val spans = coalesce(sum(size($"spans")), lit(0L))
+      Extraction.extractDs(CorpusDerive.derive(s, dir)
+          .observe(in, count(lit(1)).as("n_docs"), spans.as("spans_in")))
+        .observe(out, spans.as("spans_out"))
+        .write.format("noop").mode("overwrite").save()
+      def got(o: Observation, k: String) = o.get(k).asInstanceOf[Long]
+      val (si, so) = (got(in, "spans_in"), got(out, "spans_out"))
+      Seq((got(in, "n_docs"), si, so, si - so))
+        .toDF("n_docs", "spans_in", "spans_out", "dropped")
+    },
       s"""SELECT count(*)::BIGINT AS n_docs,
          |       CAST(sum(2 + ${keptSpansSql("doc_id")}) AS BIGINT) AS spans_in,
          |       CAST(sum(${keptSpansSql("doc_id")}) AS BIGINT) AS spans_out,
@@ -458,10 +470,9 @@ object ExtractionGates {
     // schema_version == 1 — baselines/README.md:20-21), and digested
     // per doc. The DuckDB oracle recomputes the digest from raw
     // documents, so any corruption in the JSON round-trip hash-fails.
-    Gate("fix_roundtrip", (s, dir) => {
+    Gate("fix_roundtrip", (s, dir) => inFreshDir("fixtures") { out =>
       import s.implicits._
       import org.apache.spark.sql.types._
-      val out = freshDir("fixtures")
       Extraction.extractDs(CorpusDerive.derive(s, dir))
         .select($"doc_id", $"spans", lit(1).as("schema_version"))
         .write.mode("overwrite").json(out)
@@ -491,7 +502,7 @@ object ExtractionGates {
     // clean original — oracle is simply the original column.
     Gate("ext_normalize_expr", (s, dir) => {
       import s.implicits._
-      graft.functions.NormalizeText.register(s)
+      graft.GraftExtensions.registerFunctions(s)
       t(s, dir, "documents").select($"doc_id",
         expr("graft_normalize_text(concat('  ', text, '\r\n', " +
              "'<｜end▁of▁sentence｜>'))").as("norm"))

@@ -42,10 +42,14 @@ object Gate {
     t(s, dir, "documents").select($"doc_id").as[Long]
   }
 
-  /** A new empty directory per run, so every execution of a gate that
-    * writes a table or files starts from nothing. */
-  private[gates] def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+  /** `body` over a new empty directory, so every execution of a gate that
+    * writes a table or files starts from nothing. The body's rows are
+    * materialized (`localCheckpoint`) before the directory is deleted. */
+  private[gates] def inFreshDir(tag: String)(body: String => DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-$tag")
+    try body(dir.toString).localCheckpoint()
+    finally graft.pipeline.TableIO.deleteRecursively(dir)
+  }
 
   private[gates] def md5iSql(e: String): String =
     graft.functions.Hashing.md5iSql(e)

@@ -504,8 +504,9 @@ object MediaGates {
     // S1 source end-to-end: media items materialized as real image files
     // (PNG/JPEG/GIF headers), scanned back via the binaryFile DataSource,
     // dims parsed from the scanned bytes.
-    Gate("bin_source", (s, dir) =>
-      MediaOps.binaryFileRoundTrip(s, t(s, dir, "documents"), freshDir("bin-source")).toDF(),
+    Gate("bin_source", (s, dir) => inFreshDir("bin-source") { out =>
+      MediaOps.binaryFileRoundTrip(s, t(s, dir, "documents"), out).toDF()
+    },
       headerMetaOracleSql),
   )
 }

@@ -45,8 +45,7 @@ object TableGates {
     // End-to-end resumable-write round-trip: extract → bucketed manifest
     // write (TableIO) → read back COMMITTED buckets only → per-bucket
     // stats.
-    Gate("tio_roundtrip", (s, dir) => {
-      val out = freshDir("tio-verify")
+    Gate("tio_roundtrip", (s, dir) => inFreshDir("tio-verify") { out =>
       TableIO.writeResumable(rows16(s, dir), out)
       bucketTotals(TableIO.readCommitted(s, out))
     }, bucketTotalsOracleSql(keptSpansSql("doc_id"))),
@@ -58,9 +57,8 @@ object TableGates {
     // buckets are monotone in doc_id, so the read set is the buckets
     // whose [min,max] id bounds intersect the middle-fifth range; row
     // totals are the plain filter.
-    Gate("tio_prune", (s, dir) => {
+    Gate("tio_prune", (s, dir) => inFreshDir("tio-prune") { out =>
       import s.implicits._
-      val out = freshDir("tio-prune")
       val maxId = t(s, dir, "documents").agg(max($"doc_id")).as[Long].head()
       val rows = Extraction.extractRowsWith(CorpusDerive.derive(s, dir),
         (_: Doc).doc_id, Kernel.extractSpans, buckets = 16,
@@ -100,8 +98,7 @@ object TableGates {
     // bit-for-bit from the raw documents, probes the spec id set, and
     // predicts buckets_read EXACTLY, FPs included, plus the exact row
     // totals of the matched ids.
-    Gate("tio_prune_hash", (s, dir) => {
-      val out = freshDir("tio-prune-hash")
+    Gate("tio_prune_hash", (s, dir) => inFreshDir("tio-prune-hash") { out =>
       TableIO.writeResumable(rows16(s, dir), out)
       val (pruned, read, total) =
         TableIO.readCommittedPrunedByIds(s, out, PruneHashProbeIds)
@@ -147,9 +144,8 @@ object TableGates {
     // batch-id time travel, and the compactMerged fixpoint all asserted
     // in-query. The oracle: upserted keys count exactly 1 span;
     // everything else keeps the tio_roundtrip closed form.
-    Gate("tio_upsert", (s, dir) => {
+    Gate("tio_upsert", (s, dir) => inFreshDir("tio-upsert") { out =>
       import s.implicits._
-      val out = freshDir("tio-upsert")
       val rows = rows16(s, dir)
       require(TableIO.appendBatchIdempotent(rows, out, 0L))
       val upd = rows
@@ -176,8 +172,7 @@ object TableGates {
     // asserted at every stage in-query; the returned per-bucket totals
     // must still match the same closed form as tio_roundtrip, so any
     // row lost or duplicated across the rewrites hash-fails.
-    Gate("tio_compact", (s, dir) => {
-      val out = freshDir("tio-compact")
+    Gate("tio_compact", (s, dir) => inFreshDir("tio-compact") { out =>
       val rows = rows16(s, dir)
       val slice = (i: Int) =>
         rows.filter(expr(s"CAST(substring(doc_id, 2) AS BIGINT) % 100 = $i"))
@@ -233,8 +228,7 @@ object TableGates {
     // totals make v1 rows surface as NULL-lang ('none') and v2 rows
     // carry their written values — any loss of the column across the
     // rewrite, or evolved values bleeding into old rows, hash-fails.
-    Gate("tio_evolve", (s, dir) => {
-      val out = freshDir("tio-evolve")
+    Gate("tio_evolve", (s, dir) => inFreshDir("tio-evolve") { out =>
       val rows = rows16(s, dir)
       val idNum = expr("CAST(substring(doc_id, 2) AS BIGINT)")
       TableIO.appendBatchDf(rows.filter(idNum % 2 === 0).toDF(), out, 0L)

@@ -175,7 +175,7 @@ object DedupOps {
   def minhashPairs(spark: SparkSession, docs: DataFrame,
                    maxBucket: Int = MaxBucket): DataFrame = {
     import spark.implicits._
-    graft.functions.MinHashSigExpr.register(spark)
+    graft.GraftExtensions.registerFunctions(spark)
     // The sketch pass rides the NATIVE graft_shingles/graft_minhash_sig
     // expressions (codegen'd static calls — no typed-map encoder round
     // trip). Persist it: referenced three times below (band explode +
@@ -222,7 +222,7 @@ object DedupOps {
   def ngramJaccardPairs(spark: SparkSession, docs: DataFrame,
                         maxDf: Int = MaxDf): DataFrame = {
     import spark.implicits._
-    graft.functions.MinHashSigExpr.register(spark)
+    graft.GraftExtensions.registerFunctions(spark)
     val ds = persistSlot("ngram",
       docs.selectExpr("doc_id", "graft_shingles(text) AS sh",
         "graft_shingle_keys(source, text) AS ks"))
@@ -263,7 +263,7 @@ object DedupOps {
   def ngramJaccardPairsBanded(spark: SparkSession, docs: DataFrame,
       maxDf: Int = MaxDf, bandBits: Int = BandBits): DataFrame = {
     import spark.implicits._
-    graft.functions.MinHashSigExpr.register(spark)
+    graft.GraftExtensions.registerFunctions(spark)
     val ds = persistSlot("ngram_banded",
       docs.selectExpr("doc_id", "graft_shingles(text) AS sh",
         "graft_shingle_keys(source, text) AS ks"))
@@ -338,7 +338,7 @@ object DedupOps {
     * encoder round trip; the sketch column runs at scan speed).
     */
   def simhashDf(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.SimHashExpr.register(spark)
+    graft.GraftExtensions.registerFunctions(spark)
     docs.selectExpr("doc_id", "graft_simhash(text) AS simhash")
   }
 

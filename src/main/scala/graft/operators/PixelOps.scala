@@ -107,7 +107,7 @@ object PixelOps {
   private def px16(ref: String, geo: String)(decode: (Int, Int) => Rgb): Seq[PixelPart] = {
     val (rw, rh) = ratio(geo, ref)
     parts(ref, decode(TileSize * rw, TileSize * rh), TileSize, BaseSize, rw, rh,
-      PixelKernel.pixelChecksum, PixelKernel.normChecksum)
+      PixelKernel.pixelChecksum(_), PixelKernel.normChecksum(_))
   }
 
   /** REAL PNG round trip: compressed IDAT, all five row filters. */
@@ -142,7 +142,7 @@ object PixelOps {
   val RefBase = 1024
   val RefTile = 640
   /** Row-slice stride for the full-geometry checksums (see
-    * [[graft.vision.PixelKernel.pixelChecksumRows]]). Divides both the
+    * [[graft.vision.PixelKernel.pixelChecksum]]). Divides both the
     * 1024 canvas and the 256-aligned letterbox offsets, so sampled
     * canvas rows land exactly on sampled resize-output rows.
     */
@@ -166,8 +166,8 @@ object PixelOps {
 
   /** [[refGeom]] with row-slice checksums (stride [[RowStride]]). */
   def processRefGeom(ref: String): Seq[PixelPart] =
-    refGeom(ref, PixelKernel.pixelChecksumRows(_, RowStride),
-      PixelKernel.normChecksumRows(_, RowStride))
+    refGeom(ref, PixelKernel.pixelChecksum(_, RowStride),
+      PixelKernel.normChecksum(_, RowStride))
 
   /** [[refGeom]] with EVERY-PIXEL gating: the order-free modular
     * checksums ([[PixelKernel.pixelChecksumFull]]) close the row-slice

@@ -118,7 +118,7 @@ object SimilarityOps {
     * sketches land in the same ANN candidate bucket.
     */
   def lshSketch(spark: SparkSession, emb: DataFrame): DataFrame = {
-    graft.functions.LshSketchExpr.register(spark)
+    graft.GraftExtensions.registerFunctions(spark)
     // native codegen'd expression — no typed-map encoder round trip; the
     // sketch column is one static call inside the scan's generated code
     emb.selectExpr("vec_id", "graft_lsh_sketch(embedding) AS sketch")

@@ -2,16 +2,14 @@ package graft.pipeline
 
 import graft.extract.Kernel
 import graft.schema.{Doc, ExtractedDoc, ExtractedSpan}
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.types.{MetadataBuilder, StructType}
 
 /** Spark wiring of the extraction kernel (SURVEY.md §7.1 module 4).
   *
-  * Dataset-only, no RDDs: read → salt column for skewed hosts/doc-size
-  * buckets → repartitionByRange(salt, doc_id) for shuffle balance →
-  * mapPartitions(Kernel.extract) → (optionally) resumable bucketed write
-  * via [[TableIO]].
+  * Dataset-only, no RDDs: read → mapPartitions(kernel) → salt + range
+  * key per doc → one exchange routed by [[RangeRouter]] → markdown
+  * render; or kernel → resumable bucketed write via [[TableIO]].
   *
   * Scale notes (designed for 1000 executors / 100 TB, tested on local[32]):
   *  - The kernel is a narrow per-row map: zero cross-row dependencies,
@@ -44,59 +42,6 @@ object Extraction {
   def extractDs(docs: Dataset[Doc]): Dataset[ExtractedDoc] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[ExtractedDoc]
     docs.mapPartitions(_.map(Kernel.extract))
-  }
-
-  /** Live task-side metrics — the analog of the reference's injected
-    * progress callback + bench recorder (model/mod.rs:96,1405-1407;
-    * benchmark.rs:83-176): named LongAccumulators updated inside the
-    * kernel loop, visible on the driver while the job runs (and in the
-    * Spark UI / listener bus on a real cluster).
-    *
-    * OBSERVABILITY-ONLY: Spark guarantees exactly-once accumulator
-    * updates only in actions; updates inside a transformation (this
-    * mapPartitions) are at-least-once under task retries / speculative
-    * execution on a real cluster. Use [[metricsRow]] — an aggregation
-    * over the data itself — for any value that must be exact (the
-    * ext_metrics hash gate does).
-    */
-  final case class Metrics(docs: org.apache.spark.util.LongAccumulator,
-                           spansIn: org.apache.spark.util.LongAccumulator,
-                           spansOut: org.apache.spark.util.LongAccumulator) {
-    def dropped: Long = spansIn.value - spansOut.value
-  }
-
-  def metrics(spark: SparkSession): Metrics = Metrics(
-    spark.sparkContext.longAccumulator("graft.docs"),
-    spark.sparkContext.longAccumulator("graft.spans_in"),
-    spark.sparkContext.longAccumulator("graft.spans_out"))
-
-  /** Exact metric totals as a plan-level aggregation over the data
-    * itself — retry-safe (exactly-once) where the accumulator surface
-    * is at-least-once. Runs the kernel once in the same narrow pass and
-    * folds (docs, spans_in, spans_out) map-side; only three longs per
-    * partition cross the wire. The optional accumulators are updated in
-    * the same loop so the live-progress surface still works.
-    */
-  def metricsRow(docs: Dataset[Doc],
-                 m: Option[Metrics] = None): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.mapPartitions { it =>
-      var n = 0L; var si = 0L; var so = 0L
-      it.foreach { d =>
-        val out = Kernel.extract(d)
-        n += 1L; si += d.spans.size.toLong; so += out.spans.size.toLong
-        m.foreach { mm =>
-          mm.docs.add(1L); mm.spansIn.add(d.spans.size.toLong)
-          mm.spansOut.add(out.spans.size.toLong)
-        }
-      }
-      Iterator.single((n, si, so))
-    }.toDF("n", "si", "so")
-      .agg(org.apache.spark.sql.functions.sum($"n").cast("long").as("n_docs"),
-           org.apache.spark.sql.functions.sum($"si").cast("long").as("spans_in"),
-           org.apache.spark.sql.functions.sum($"so").cast("long").as("spans_out"))
-      .withColumn("dropped", $"spans_in" - $"spans_out")
   }
 
   /** Full pipeline with explicit salt + range rebalance (north rule).
@@ -208,8 +153,8 @@ object Extraction {
   }
 
   /** Extraction + bucket/stats columns for [[TableIO.writeResumable]].
-    * `buckets` is the resume granularity: bucket = xxhash-style stable hash
-    * of doc_id mod buckets, computed in the kernel so it survives any
+    * `buckets` is the resume granularity: bucket = md5i(doc_id) mod
+    * buckets ([[bucketOf]]), computed in the kernel so it survives any
     * repartitioning.
     */
   def extractRows(docs: Dataset[Doc], buckets: Int): Dataset[ExtractedRow] =

@@ -71,7 +71,7 @@ object StreamDedup {
     */
   private[graft] def prefixCapPairs(docs: DataFrame, cap: Int): Dataset[Pair] = {
     import docs.sparkSession.implicits._
-    graft.functions.MinHashSigExpr.register(docs.sparkSession)
+    graft.GraftExtensions.registerFunctions(docs.sparkSession)
     DedupOps.bandKeys(docs.selectExpr("doc_id", "graft_minhash_sig(text) AS sig"))
       .as[BandMember]
       .groupByKey(_.bk)

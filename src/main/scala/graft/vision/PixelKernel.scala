@@ -532,25 +532,14 @@ object PixelKernel {
   val FpMod = 1000000007L
 
   /** Polynomial fold over interleaved row-major RGB bytes — verifies the
-    * decoded/resampled pixel VALUES in storage order.
+    * decoded/resampled pixel VALUES in storage order — over rows
+    * `y % stride == 0`. The full-geometry queries gate a deterministic
+    * row slice so the DuckDB replay stays tractable (a full 1024² fold is
+    * ~6 s per image in SQL); the sampled rows are computed by the same
+    * convolution as the rest, and the 16-px oracle gates every byte
+    * (stride 1) at small geometry.
     */
-  def pixelChecksum(img: Rgb): Long = {
-    var acc = 0L
-    var i = 0
-    while (i < img.data.length) {
-      acc = (acc * 31 + (img.data(i) & 0xffL)) % FpMod
-      i += 1
-    }
-    acc
-  }
-
-  /** [[pixelChecksum]] restricted to rows `y % stride == 0` — the
-    * full-geometry queries gate a deterministic row slice so the DuckDB
-    * replay stays tractable (a full 1024² fold is ~6 s per image in
-    * SQL); the sampled rows are computed by the same convolution as the
-    * rest, and the 16-px oracle gates every byte at small geometry.
-    */
-  def pixelChecksumRows(img: Rgb, stride: Int): Long = {
+  def pixelChecksum(img: Rgb, stride: Int = 1): Long = {
     var acc = 0L
     var y = 0
     while (y < img.h) {
@@ -567,10 +556,14 @@ object PixelKernel {
     acc
   }
 
-  /** [[normChecksum]] restricted to rows `y % stride == 0` (CHW order
-    * over the sampled rows).
+  /** Polynomial fold over the NORMALIZED tensor in CHW planar order,
+    * over rows `y % stride == 0`, using exact integer numerators:
+    * (v/255 − 0.5)/0.5 = (2v − 255)/255, folded as the non-negative 2v
+    * (offset +255 cancels the constant) — verifies P9 normalization AND
+    * the channel-major tensor layout (model/mod.rs:1743-1761), in an
+    * order distinct from [[pixelChecksum]].
     */
-  def normChecksumRows(img: Rgb, stride: Int): Long = {
+  def normChecksum(img: Rgb, stride: Int = 1): Long = {
     var acc = 0L
     var c = 0
     while (c < 3) {
@@ -629,31 +622,6 @@ object PixelKernel {
           val u = 2L * (img.data((y * img.w + x) * 3 + c) & 0xffL)
           acc = (acc + (p + 1L) * (((u + 1L) * (u + 31L)) % FpMod)) % FpMod
           p += 1
-          x += 1
-        }
-        y += 1
-      }
-      c += 1
-    }
-    acc
-  }
-
-  /** Polynomial fold over the NORMALIZED tensor in CHW planar order,
-    * using exact integer numerators: (v/255 − 0.5)/0.5 = (2v − 255)/255,
-    * folded as the non-negative 2v (offset +255 cancels the constant) —
-    * verifies P9 normalization AND the channel-major tensor layout
-    * (model/mod.rs:1743-1761), in an order distinct from pixelChecksum.
-    */
-  def normChecksum(img: Rgb): Long = {
-    var acc = 0L
-    var c = 0
-    while (c < 3) {
-      var y = 0
-      while (y < img.h) {
-        var x = 0
-        while (x < img.w) {
-          val v = img.data((y * img.w + x) * 3 + c) & 0xffL
-          acc = (acc * 31 + (2 * v)) % FpMod
           x += 1
         }
         y += 1

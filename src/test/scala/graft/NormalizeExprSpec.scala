@@ -1,7 +1,6 @@
 package graft
 
 import graft.extract.Kernel
-import graft.functions.NormalizeText
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Native-expression parity + codegen placement. */
@@ -11,7 +10,7 @@ class NormalizeExprSpec extends AnyFunSuite {
 
   test("graft_normalize_text == Kernel.normalizeText, row for row") {
     import spark.implicits._
-    NormalizeText.register(spark)
+    GraftExtensions.registerFunctions(spark)
     val samples = Seq("a\r\nb", s"  x${Kernel.EosSentinel}  ", "", "plain",
       s"m\r\n${Kernel.EosSentinel}\r\n", "\ttab\t")
     val out = samples.toDF("s")
@@ -21,7 +20,7 @@ class NormalizeExprSpec extends AnyFunSuite {
 
   test("expression runs inside whole-stage codegen (not a UDF)") {
     import spark.implicits._
-    NormalizeText.register(spark)
+    GraftExtensions.registerFunctions(spark)
     // non-literal source so the projection survives constant folding
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("graft_normalize_text(concat(text, '\r\n')) AS n")
@@ -41,7 +40,7 @@ class SimHashExprSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("graft_simhash == DedupOps.simhash, null-safe, codegen'd") {
     import spark.implicits._
-    graft.functions.SimHashExpr.register(spark)
+    GraftExtensions.registerFunctions(spark)
     val texts = Seq("alpha beta gamma", "", "one two one two", "x")
     val got = texts.toDF("t").selectExpr("graft_simhash(t)")
       .as[Long].collect().toSeq

@@ -61,9 +61,11 @@ class PixelRefGeomSpec extends AnyFunSuite {
     assert(byPart("global").pix_fp != sliced("global").pix_fp)
   }
 
-  test("row-slice checksums at stride 1 equal the full folds") {
-    assert(PixelKernel.pixelChecksumRows(dec, 1) == PixelKernel.pixelChecksum(dec))
-    assert(PixelKernel.normChecksumRows(dec, 1) == PixelKernel.normChecksum(dec))
+  test("whole-frame and row-slice folds at 800x600 are pinned") {
+    assert(PixelKernel.pixelChecksum(dec) == 664722046L)
+    assert(PixelKernel.normChecksum(dec) == 180981840L)
+    assert(PixelKernel.pixelChecksum(dec, PixelOps.RowStride) == 519732038L)
+    assert(PixelKernel.normChecksum(dec, PixelOps.RowStride) == 794210758L)
   }
 
   test("processRefGeom covers all four tile grids with ref-geometry parts") {

@@ -95,8 +95,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the sketch projections must not contain DeserializeToObject /
     // SerializeFromObject pairs (the encoder round trip the native
     // expressions deleted)
-    graft.functions.MinHashSigExpr.register(spark)
-    graft.functions.LshSketchExpr.register(spark)
+    graft.GraftExtensions.registerFunctions(spark)
     val sk = spark.read.parquet(s"$sf/documents.parquet")
       .selectExpr("doc_id", "graft_minhash_sig(text) AS sig",
         "graft_shingles(text) AS sh")

@@ -27,7 +27,7 @@ object QuickTime {
           // string-keyed ngram variant (pre-round-3 shape) for A/B
           import s.implicits._
           import org.apache.spark.sql.functions._
-          graft.functions.MinHashSigExpr.register(s)
+          graft.GraftExtensions.registerFunctions(s)
           val ds = s.read.parquet(s"$dir/documents.parquet")
             .selectExpr("doc_id", "source", "graft_shingles(text) AS sh")
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -56,7 +56,7 @@ object QuickTime {
           // two exchanges of kept. Bucket size bounded by MaxDf=128.
           import s.implicits._
           import org.apache.spark.sql.functions._
-          graft.functions.MinHashSigExpr.register(s)
+          graft.GraftExtensions.registerFunctions(s)
           val ds = s.read.parquet(s"$dir/documents.parquet")
             .selectExpr("doc_id", "graft_shingles(text) AS sh",
               "graft_shingle_keys(source, text) AS ks")
@@ -91,7 +91,7 @@ object QuickTime {
           // semantics (see ROUND_NOTES).
           import s.implicits._
           import org.apache.spark.sql.functions._
-          graft.functions.MinHashSigExpr.register(s)
+          graft.GraftExtensions.registerFunctions(s)
           val b = 3
           val ds = s.read.parquet(s"$dir/documents.parquet")
             .selectExpr("doc_id", "graft_shingles(text) AS sh",
@@ -125,7 +125,7 @@ object QuickTime {
           // candidate-generation subplan of dedup_ngram, for profiling
           import s.implicits._
           import org.apache.spark.sql.functions._
-          graft.functions.MinHashSigExpr.register(s)
+          graft.GraftExtensions.registerFunctions(s)
           val ds = s.read.parquet(s"$dir/documents.parquet")
             .selectExpr("doc_id", "source", "graft_shingles(text) AS sh")
           val inv = ds.select($"doc_id", $"source", explode($"sh").as("s"))
