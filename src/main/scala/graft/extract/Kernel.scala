@@ -54,16 +54,6 @@ object Kernel {
     out.result()
   }
 
-  /** Fraction of whitespace tokens that are `[bracketed]` link tokens —
-    * the text-density/link-density boilerplate heuristic (north rule).
-    * Empty text scores 0.
-    */
-  def linkDensity(text: String): Double = {
-    val toks = wsTokens(text)
-    if (toks.isEmpty) 0.0
-    else toks.count(t => t.startsWith("[") && t.endsWith("]")).toDouble / toks.length
-  }
-
   private val BoilerplateWords =
     Set("nav", "navigation", "footer", "copyright", "cookie", "cookies",
         "subscribe", "advertisement", "sponsored")
@@ -92,7 +82,9 @@ object Kernel {
   }
 
   /** Boilerplate predicate over a normalized raw span. Markup spans whose
-    * link density crosses 0.5, or that lead with a nav/footer/ads keyword,
+    * link density (the share of whitespace tokens that are `[bracketed]`
+    * link tokens — the text-density/link-density heuristic of the north
+    * rule) is at least 0.5, or that hold a nav/footer/ads keyword,
     * are stripped (analog of the reference's mask filtering + normalize —
     * model/mod.rs:1259-1266, inference.rs:178-183).
     */

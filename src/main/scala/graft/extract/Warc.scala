@@ -22,7 +22,21 @@ object Warc {
 
   private val Crlf = "\r\n"
 
-  /** Serialize records: minimal conformant header set per record. */
+  /** The `WARC-Date` of every record built here: fixed, so an archive's
+    * bytes depend only on its records.
+    */
+  private val Date = "2026-01-01T00:00:00Z"
+
+  /** A record's `WARC-Record-ID`: the name-based UUID of its type and URI,
+    * so a rebuild of the same record carries the same id.
+    */
+  private def recordId(recordType: String, uri: String): String =
+    s"<urn:uuid:${java.util.UUID.nameUUIDFromBytes(s"$recordType\n$uri".getBytes("UTF-8"))}>"
+
+  /** Serialize records with the four headers ISO 28500 makes mandatory
+    * (`WARC-Record-ID`, `Content-Length`, `WARC-Date`, `WARC-Type`) and
+    * the target URI.
+    */
   def build(records: Seq[Record]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     records.foreach { r =>
@@ -36,6 +50,8 @@ object Warc {
       val header =
         s"WARC/1.0$Crlf" +
         s"WARC-Type: ${r.recordType}$Crlf" +
+        s"WARC-Record-ID: ${recordId(r.recordType, r.uri)}$Crlf" +
+        s"WARC-Date: $Date$Crlf" +
         s"WARC-Target-URI: ${r.uri}$Crlf" +
         s"Content-Length: ${r.payload.length}$Crlf" +
         Crlf

@@ -231,18 +231,18 @@ object TableGates {
     Gate("tio_evolve", (s, dir) => inFreshDir("tio-evolve") { out =>
       val rows = rows16(s, dir)
       val idNum = expr("CAST(substring(doc_id, 2) AS BIGINT)")
-      TableIO.appendBatchDf(rows.filter(idNum % 2 === 0).toDF(), out, 0L)
+      TableIO.appendBatchIdempotent(rows.filter(idNum % 2 === 0), out, 0L)
       val preSnap = TableIO.currentSnapshot(out)
       val evoSnap = TableIO.evolveAddColumn(out, "lang", "string")
       require(evoSnap > preSnap, "evolution must advance the snapshot")
       val v2 = rows.filter(idNum % 2 === 1).toDF()
         .withColumn("lang", when(idNum % 3 === 0, lit("en")).otherwise(lit("xx")))
-      TableIO.appendBatchDf(v2, out, 1L)
+      TableIO.appendBatchIdempotent(v2, out, 1L)
       require(!TableIO.readTableDf(s, out, asOfSnapshot = preSnap)
         .columns.contains("lang"),
         "time travel to pre-evolution snapshot must keep the old schema")
       require(scala.util.Try(
-        TableIO.appendBatchDf(rows.limit(1).toDF(), out, 9L)).isFailure,
+        TableIO.appendBatchIdempotent(rows.limit(1), out, 9L)).isFailure,
         "post-evolution write missing the evolved column must be rejected")
       TableIO.compact(s, out)
       val df = TableIO.readTableDf(s, out)

@@ -22,7 +22,7 @@ import scala.util.Using
   *
   * Layout under `outDir` — three table kinds, one protocol:
   *   data/bucket=<i>/               — resumable buckets ([[writeResumable]])
-  *   data/batch=<id>/bucket=<i>/    — idempotent micro-batches ([[appendBatchDf]])
+  *   data/batch=<id>/bucket=<i>/    — idempotent micro-batches ([[appendBatchIdempotent]])
   *   compacted/snap-<s>/bucket=<i>/ — compaction snapshots ([[compact]])
   *   manifests/bucket-<i>.json      — a resumable bucket's DATA FILE LIST,
   *                                    counts, bytes, checksum, key bounds,
@@ -41,9 +41,7 @@ import scala.util.Using
   * or journal lists its file. Readers consume exactly the listed files — a
   * bucket dir whose manifest never committed (a run that died between data
   * write and commit) and stray files from a dead task attempt are
-  * invisible. No directory listing governs visibility. (Batch manifests and
-  * journals written before they listed their files are read by listing
-  * their dir's `bucket=<i>` subdirs, the listing a write takes.)
+  * invisible. No directory listing governs visibility.
   *
   * Iceberg-fidelity properties:
   *  - SNAPSHOT TIME TRAVEL: every manifest carries the snapshot id of the
@@ -54,12 +52,15 @@ import scala.util.Using
   *  - SCHEMA VERSIONING: every metadata file embeds `schema_version`;
   *    readers REJECT files written by a NEWER schema than they understand
   *    (forward-incompatibility fails loudly, the Iceberg format-version
-  *    discipline) and accept older ones.
+  *    discipline). A version has one format: the reader reads only keys
+  *    its writers always write.
   *
   * One codec ([[Meta]]) writes and reads all metadata: bucket and batch
   * manifests, compaction journals, evolve records and `_SUCCESS.json`.
-  * Metadata that does not parse, or lacks a required field, raises
+  * Metadata that does not parse, or lacks a field, raises
   * IllegalStateException naming the file; it never reads as a default.
+  * The one optional key is a bucket manifest's `buckets`, which rows
+  * that do not declare their bucket count leave out.
   * One reader ([[readListed]]) reads all data: the listed files, under the
   * known row schema (evolved columns included), so building a read runs
   * no inference job and no listing.
@@ -136,7 +137,7 @@ object TableIO {
       def string(key: String): String = asString(key, field(key))
       def longs(key: String): Seq[Long] = array(key).map(asLong(key, _))
       def strings(key: String): Seq[String] = array(key).map(asString(key, _))
-      /** A field older writers left out: `get(key)` when present. */
+      /** A field some writes leave out: `get(key)` when present. */
       def opt[A](key: String)(get: String => A): Option[A] =
         if (node.has(key)) Some(get(key)) else None
     }
@@ -178,24 +179,19 @@ object TableIO {
   }
 
   /** Parsed committed manifest: (bucket, snapshot, schema_version,
-    * data-file relative paths, key bounds, Bloom words). Manifests written
-    * before the stats existed carry no bounds or words: empty here.
+    * data-file relative paths, key bounds, Bloom words, declared bucket
+    * count).
     */
   final case class CommittedManifest(bucket: Int, snapshot: Long,
-      schemaVersion: Int, files: Seq[String],
-      minDoc: String = "", maxDoc: String = "",
-      bloom: IndexedSeq[Long] = IndexedSeq.empty,
-      buckets: Option[Int] = None)
+      schemaVersion: Int, files: Seq[String], minDoc: String, maxDoc: String,
+      bloom: IndexedSeq[Long], buckets: Option[Int])
 
   def committedManifests(outDir: String): Seq[CommittedManifest] =
     listNames(manifestDir(outDir), "bucket-", ".json").sorted.map { name =>
       val m = Meta.read(manifestDir(outDir).resolve(name))
       CommittedManifest(m.long("bucket").toInt, m.long("snapshot"),
-        m.long("schema_version").toInt, m.strings("files"),
-        m.opt("min_doc")(m.string).getOrElse(""),
-        m.opt("max_doc")(m.string).getOrElse(""),
-        m.opt("bloom")(m.longs).getOrElse(Nil).toIndexedSeq,
-        m.opt("buckets")(m.long).map(_.toInt))
+        m.long("schema_version").toInt, m.strings("files"), m.string("min_doc"),
+        m.string("max_doc"), m.longs("bloom").toIndexedSeq, m.opt("buckets")(m.long).map(_.toInt))
     }
 
   private def dataDir(outDir: String): String = s"$outDir/data"
@@ -209,14 +205,6 @@ object TableIO {
       s"bucket $b: $dir/bucket=$b holds no data files")
     files.map(f => s"bucket=$b/$f")
   }
-
-  /** The file list of a batch or compaction committed before its metadata
-    * listed files: every `bucket=<i>` subdir of `dir`, listed as a write
-    * lists the buckets it wrote.
-    */
-  private def listedFiles(dir: String): Seq[String] =
-    listNames(Paths.get(dir), "bucket=", "").map(_.stripPrefix("bucket=").toInt)
-      .sorted.flatMap(bucketFiles(dir, _))
 
   /** One bucket's manifest stats, as the write observed them: lineage
     * counts, an order-insensitive checksum (XOR of per-doc FNV
@@ -348,8 +336,8 @@ object TableIO {
       val byPath = statuses.map(f => f.getPath -> Array(f)).toMap
       val listed = new FileStatusCache {
         override def getLeafFiles(p: HPath): Option[Array[FileStatus]] = byPath.get(p)
-        def putLeafFiles(p: HPath, l: Array[FileStatus]): Unit = ()
-        def invalidateAll(): Unit = ()
+        override def putLeafFiles(p: HPath, l: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
       }
       val index = new InMemoryFileIndex(spark, statuses.map(_.getPath),
         Map("basePath" -> base), Some(schema), listed)
@@ -460,12 +448,30 @@ object TableIO {
     * foreachBatch exactly-once recipe: checkpointed source offsets +
     * idempotent batch-keyed sink.
     *
+    * Evolution-aware: `rows` must carry exactly the CURRENT table
+    * schema's columns (writers evolve first, then write), and the batch
+    * manifest records the table-schema version it was written under.
+    *
     * Layout: data/batch=<id>/bucket=<i>/ + manifests/batch-<id>.json.
     * Returns false when the batch was already committed (no-op replay).
     */
-  def appendBatchIdempotent(rows: Dataset[ExtractedRow], outDir: String,
-                            batchId: Long): Boolean =
-    appendBatchDf(rows.toDF(), outDir, batchId)
+  def appendBatchIdempotent(rows: Dataset[_], outDir: String, batchId: Long): Boolean = {
+    val schema = tableSchemaAt(outDir)
+    require(rows.columns.toSeq == schema.fieldNames.toSeq,
+      s"batch columns ${rows.columns.mkString(",")} != table schema " +
+      s"${schema.fieldNames.mkString(",")} — evolve the table first, " +
+      "then write with the full current schema")
+    val mpath = manifestDir(outDir).resolve(s"batch-$batchId.json")
+    if (Files.exists(mpath)) return false
+    // replay-safe: the batch dir is replaced whole, never appended to
+    val written = writeBuckets(rows.toDF(), s"${dataDir(outDir)}/batch=$batchId")
+    val stats = written.map(_._1)
+    Meta.write(mpath, "table_schema" -> currentTableSchemaVersion(outDir),
+      "batch" -> batchId, "doc_count" -> stats.map(_.getAs[Long]("doc_count")).sum,
+      "span_count" -> stats.map(_.getAs[Long]("span_count")).sum,
+      "files" -> written.flatMap(_._2.map(f => s"batch=$batchId/$f")))
+    true
+  }
 
   /** Each committed micro-batch's id and data files (relative to data/),
     * in id order.
@@ -473,9 +479,7 @@ object TableIO {
   private def batchManifests(outDir: String): Seq[(Long, Seq[String])] =
     listNames(manifestDir(outDir), "batch-", ".json").map { name =>
       val m = Meta.read(manifestDir(outDir).resolve(name))
-      val id = m.long("batch")
-      id -> m.opt("files")(m.strings).getOrElse(
-        listedFiles(s"${dataDir(outDir)}/batch=$id").map(f => s"batch=$id/$f"))
+      m.long("batch") -> m.strings("files")
     }.sortBy(_._1)
 
   def committedBatches(outDir: String): Set[Long] =
@@ -486,12 +490,6 @@ object TableIO {
       keep: Long => Boolean, schema: StructType): DataFrame =
     readListed(spark, dataDir(outDir), schema,
       batchManifests(outDir).filter(b => keep(b._1)).flatMap(_._2))
-
-  /** Read rows of manifest-committed micro-batches only; empty Dataset
-    * (with the proper schema) before any batch commits.
-    */
-  def readCommittedBatches(spark: SparkSession, outDir: String): Dataset[ExtractedRow] =
-    readBatches(spark, outDir, _ => true, baseSchema).as(rowEncoder)
 
   // ------------------------------------------------------------------
   // Upsert: MERGE-on-read (the Iceberg MoR equality-delete analog).
@@ -556,20 +554,12 @@ object TableIO {
   private def compactionPath(outDir: String, snapshot: Long): Path =
     manifestDir(outDir).resolve(s"compaction-$snapshot.json")
 
-  def compactions(outDir: String): Seq[Compaction] = {
-    val raw = listNames(manifestDir(outDir), "compaction-", ".json").map { name =>
+  def compactions(outDir: String): Seq[Compaction] =
+    listNames(manifestDir(outDir), "compaction-", ".json").map { name =>
       val j = Meta.read(manifestDir(outDir).resolve(name))
-      val snap = j.long("snapshot")
-      (snap, j.longs("superseded"), j.opt("superseded_snapshots")(j.longs),
-        j.opt("files")(j.strings).getOrElse(listedFiles(compactedDir(outDir, snap).toString)))
-    }.sortBy(_._1)
-    raw.map { case (snap, batches, snaps, files) =>
-      // legacy journals (pre-binpack) lack superseded_snapshots; their
-      // full-rewrite semantics superseded every earlier compaction
-      Compaction(snap, batches,
-        snaps.getOrElse(raw.map(_._1).filter(_ < snap)), files)
-    }
-  }
+      Compaction(j.long("snapshot"), j.longs("superseded"),
+        j.longs("superseded_snapshots"), j.strings("files"))
+    }.sortBy(_.snapshot)
 
   /** Compactions visible as of `asOf`: not superseded by a later
     * compaction that is itself ≤ asOf.
@@ -654,13 +644,14 @@ object TableIO {
     Some(snapshot)
   }
 
-  /** Table state as of `asOfSnapshot`: every visible compacted snapshot
-    * (one after a full [[compact]]; possibly several after [[compactSmall]]
-    * binpacks) plus every committed batch no compaction ≤ asOfSnapshot
-    * superseded. Before any compaction this is exactly
-    * [[readCommittedBatches]]. (Batch commits are snapshot-less: time
-    * travel is exact with respect to compactions, while batches committed
-    * after the requested snapshot remain visible — same contract as before.)
+  /** The one read of a batch table: its state as of `asOfSnapshot` —
+    * every visible compacted snapshot (one after a full [[compact]];
+    * possibly several after [[compactSmall]] binpacks) plus every
+    * committed batch no compaction ≤ asOfSnapshot superseded. Before any
+    * compaction this is every committed batch; before any commit, an
+    * empty Dataset with the row schema. (Batch commits are snapshot-less:
+    * time travel is exact with respect to compactions, while batches
+    * committed after the requested snapshot remain visible.)
     */
   def readTable(spark: SparkSession, outDir: String,
                 asOfSnapshot: Long = Long.MaxValue): Dataset[ExtractedRow] =
@@ -796,30 +787,6 @@ object TableIO {
       .reduce(_ unionByName _)
   }
 
-  /** Evolution-aware idempotent batch append: rows must carry exactly
-    * the CURRENT table schema's columns (writers evolve first, then
-    * write). The batch manifest records the table-schema version it was
-    * written under. Same replay-safe protocol as
-    * [[appendBatchIdempotent]].
-    */
-  def appendBatchDf(rows: DataFrame, outDir: String, batchId: Long): Boolean = {
-    val schema = tableSchemaAt(outDir)
-    require(rows.columns.toSeq == schema.fieldNames.toSeq,
-      s"batch columns ${rows.columns.mkString(",")} != table schema " +
-      s"${schema.fieldNames.mkString(",")} — evolve the table first, " +
-      "then write with the full current schema")
-    val mpath = manifestDir(outDir).resolve(s"batch-$batchId.json")
-    if (Files.exists(mpath)) return false
-    // replay-safe: the batch dir is replaced whole, never appended to
-    val written = writeBuckets(rows, s"${dataDir(outDir)}/batch=$batchId")
-    val stats = written.map(_._1)
-    Meta.write(mpath, "table_schema" -> currentTableSchemaVersion(outDir),
-      "batch" -> batchId, "doc_count" -> stats.map(_.getAs[Long]("doc_count")).sum,
-      "span_count" -> stats.map(_.getAs[Long]("span_count")).sum,
-      "files" -> written.flatMap(_._2.map(f => s"batch=$batchId/$f")))
-    true
-  }
-
   /** Read back only manifest-committed data, as of `asOfSnapshot`
     * (default: latest). The reader consumes the manifests' FILE LISTS —
     * uncommitted bucket dirs, partial writes, and buckets committed after
@@ -837,16 +804,13 @@ object TableIO {
     * narrow predicate touches a few buckets instead of the table — at
     * 100 TB this is the difference between a point-lookup job and a full
     * scan. Doc ids are fixed-width zero-padded, so lexicographic bound
-    * comparison equals numeric comparison. Manifests written before the
-    * stats existed carry empty bounds and are conservatively always
-    * read. Returns (exact-filtered rows, buckets read, buckets total).
+    * comparison equals numeric comparison. Every manifest carries its
+    * bounds. Returns (exact-filtered rows, buckets read, buckets total).
     */
   def readCommittedPruned(spark: SparkSession, outDir: String,
                           loDoc: String, hiDoc: String):
       (Dataset[ExtractedRow], Int, Int) =
-    readManifested(spark, outDir,
-      m => m.minDoc.isEmpty || m.maxDoc.isEmpty ||
-        (m.minDoc <= hiDoc && m.maxDoc >= loDoc),
+    readManifested(spark, outDir, m => m.minDoc <= hiDoc && m.maxDoc >= loDoc,
       col("doc_id").between(loDoc, hiDoc))
 
   /** Manifest-Bloom scan pruning for POINT / bounded-id-set predicates —
@@ -854,8 +818,7 @@ object TableIO {
     * see [[Extraction.rangeBucketOf]] for the trade). A bucket is read iff
     * its manifest Bloom maybe-contains at least one queried id; false
     * positives cost an extra bucket read, never a missed row, and are
-    * deterministic (the oracle replays them). Manifests without Bloom
-    * words (pre-upgrade) are conservatively always read. The Bloom is
+    * deterministic (the oracle replays them). The Bloom is
     * constant-size per bucket ([[graft.operators.SketchOps.BloomWords]]
     * longs — a TEST-scale parameter; a production table sizes bits to the
     * bucket's expected key count, exactly like Iceberg sizes puffin
@@ -865,7 +828,6 @@ object TableIO {
                                ids: Seq[String]):
       (Dataset[ExtractedRow], Int, Int) =
     readManifested(spark, outDir,
-      m => m.bloom.isEmpty ||
-        ids.exists(id => graft.operators.SketchOps.bloomMaybeContains(m.bloom, id)),
+      m => ids.exists(id => graft.operators.SketchOps.bloomMaybeContains(m.bloom, id)),
       col("doc_id").isin(ids: _*))
 }

@@ -143,7 +143,7 @@ object StreamingExtract {
 
   /** Driver query for the continuous DOCUMENT-ingestion path end-to-end
     * (the ev_stream_* queries cover the events pipeline; this one puts
-    * extractStream → appendBatchIdempotent → readCommittedBatches under
+    * extractStream → appendBatchIdempotent → readTable under
     * the hash gate), through the SAME kernel as the batch pipeline (see
     * [[streamCounts]]).
     */
@@ -175,7 +175,7 @@ object StreamingExtract {
       val poison = Extraction.extractRowsWith(docs.filter(lit(false)), idOf, kernel, StreamBuckets)
       require(!TableIO.appendBatchIdempotent(poison, out, 0L),
         "batch 0 replay must be detected as already committed")
-      TableIO.readCommittedBatches(spark, out)
+      TableIO.readTable(spark, out)
         .select(col("doc_id"), col("span_count").cast("long").as("n_spans"))
         .localCheckpoint()
     } finally Seq(src, out, ckpt).foreach(d => TableIO.deleteRecursively(Paths.get(d)))

@@ -1,10 +1,14 @@
 package graft
 
 import graft.corpus.CorpusDerive
+import graft.extract.Kernel
 import graft.pipeline.{Extraction, TableIO}
+import graft.schema.{Doc, ExtractedSpan}
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.PosixFilePermissions
+import java.util.concurrent.TimeUnit
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
@@ -131,7 +135,6 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     val batches = tmpDir()
     assert(TableIO.appendBatchIdempotent(rows, batches, 0L))
     addStray(Path.of(batches, "data", "batch=0"))
-    assert(sortedRows(TableIO.readCommittedBatches(spark, batches)) == before)
     assert(sortedRows(TableIO.readTable(spark, batches)) == before)
     val snap = TableIO.compact(spark, batches)
     addStray(Path.of(batches, "compacted", s"snap-$snap"))
@@ -171,7 +174,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
   test("empty table reads: no manifests -> empty Dataset with schema, not a crash") {
     val out = tmpDir()
     assert(TableIO.readCommitted(spark, out).count() == 0L)
-    assert(TableIO.readCommittedBatches(spark, out).count() == 0L)
+    assert(TableIO.readTable(spark, out).count() == 0L)
     assert(TableIO.readCommitted(spark, out).schema.fieldNames.contains("doc_id"))
   }
 
@@ -203,19 +206,10 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
       .collect().map(r => (r.doc_id, r.spans, r.markdown)).sortBy(_._1).toSeq
     assert(travel == before)
 
-    // a table whose batch manifests and journal predate their file lists
-    // reads the same rows: each lists its dir's buckets instead
-    val files = TableIO.visibleDataFiles(out)
-    Files.list(Path.of(out, "manifests")).iterator().asScala
+    // every batch manifest and journal lists its files
+    Using.resource(Files.list(Path.of(out, "manifests")))(_.iterator().asScala
       .filter(_.getFileName.toString.matches("(batch|compaction)-.*\\.json"))
-      .foreach { m =>
-        val json = Files.readString(m)
-        assert(json.contains("\"files\":["), s"$m lists no files")
-        Files.writeString(m, json.replaceAll(",\"files\":\\[[^\\]]*\\]", ""))
-      }
-    assert(sortedRows(TableIO.readTable(spark, out)) == before)
-    assert(sortedRows(TableIO.readTable(spark, out, asOfSnapshot = snap - 1)) == before)
-    assert(TableIO.visibleDataFiles(out).sorted == files.sorted)
+      .foreach(m => assert(Files.readString(m).contains("\"files\":["), s"$m lists no files")))
 
     // a post-compaction batch stays visible alongside the compacted base
     val extra = all.filter(r =>
@@ -299,7 +293,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     val out = tmpDir()
     val idNum = expr("CAST(substring(doc_id, 2) AS BIGINT)")
     // v1: half the docs under the base schema
-    assert(TableIO.appendBatchDf(rows.filter(idNum % 2 === 0).toDF(), out, 0L))
+    assert(TableIO.appendBatchIdempotent(rows.filter(idNum % 2 === 0), out, 0L))
     assert(TableIO.currentTableSchemaVersion(out) == 1)
     val preSnap = TableIO.currentSnapshot(out)
     val evoSnap = TableIO.evolveAddColumn(out, "lang", "string")
@@ -312,10 +306,10 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     assert(TableIO.currentTableSchemaVersion(out) == 2, "failed evolve must not commit")
     // post-evolution writers must carry the full current schema
     assertThrows[IllegalArgumentException](
-      TableIO.appendBatchDf(rows.limit(1).toDF(), out, 9L))
+      TableIO.appendBatchIdempotent(rows.limit(1), out, 9L))
     val v2 = rows.filter(idNum % 2 === 1).toDF()
       .withColumn("lang", when(idNum % 3 === 0, lit("en")).otherwise(lit("xx")))
-    assert(TableIO.appendBatchDf(v2, out, 1L))
+    assert(TableIO.appendBatchIdempotent(v2, out, 1L))
     // time travel: pre-evolution snapshot has the old shape, even though
     // newer files physically contain the column
     assert(!TableIO.readTableDf(spark, out, asOfSnapshot = preSnap)
@@ -407,10 +401,18 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
       assert(e.getMessage.contains(path.toString), e.getMessage)
       Files.writeString(path, saved)
     }
+    /** `json` without its `key` field (a string or an array value). */
+    def without(json: String, key: String): String = {
+      val stripped = json.replaceAll(",\"" + key + "\":(\"[^\"]*\"|\\[[^\\]]*\\])", "")
+      assert(stripped != json, s"no $key in $json")
+      stripped
+    }
+    // a bucket manifest lacking any key its writer writes (but `buckets`)
+    // is rejected: it is never read as unbounded, Bloom-less or unlisted
     val bucket = Path.of(out, "manifests", "bucket-0.json")
     val manifest = Files.readString(bucket)
-    rejects(bucket, manifest.replaceAll(",\"files\":\\[[^\\]]*\\]", ""))(
-      TableIO.readCommitted(spark, out))
+    Seq("files", "min_doc", "max_doc", "bloom").foreach(key =>
+      rejects(bucket, without(manifest, key))(TableIO.readCommitted(spark, out)))
     rejects(bucket, manifest.replace("\"snapshot\":1,", "\"snapshot\":\"1\","))(
       TableIO.readCommitted(spark, out))
 
@@ -422,11 +424,17 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     TableIO.evolveAddColumn(batches, quoted, "string")
     assert(TableIO.evolutions(batches).map(_.name) == Seq(quoted))
     assert(TableIO.tableSchemaAt(batches).fieldNames.last == quoted)
-    rejects(Path.of(batches, "manifests", "batch-0.json"), "batch 0 committed")(
-      TableIO.readCommittedBatches(spark, batches))
+    val batch = Path.of(batches, "manifests", "batch-0.json")
+    rejects(batch, "batch 0 committed")(TableIO.readTable(spark, batches))
+    // a batch manifest or journal without its file list is rejected, not
+    // read by listing its dir (which would make stray files visible)
+    rejects(batch, without(Files.readString(batch), "files"))(TableIO.readTable(spark, batches))
     val journal = Path.of(batches, "manifests", s"compaction-$snap.json")
-    rejects(journal, Files.readString(journal).replaceAll("\"superseded\":\\[[^\\]]*\\],", ""))(
+    val journalJson = Files.readString(journal)
+    rejects(journal, journalJson.replaceAll("\"superseded\":\\[[^\\]]*\\],", ""))(
       TableIO.readTable(spark, batches))
+    Seq("superseded_snapshots", "files").foreach(key =>
+      rejects(journal, without(journalJson, key))(TableIO.readTable(spark, batches)))
     val evolve = Path.of(batches, "schemas", "evolve-2.json")
     rejects(evolve, Files.readString(evolve).replaceAll("\"active_from\":\\d+,", ""))(
       TableIO.tableSchemaAt(batches))
@@ -445,13 +453,55 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
       spark, table, "d0000000000", "d0000000099")) == 0, "readCommittedPruned")
     assert(jobsToBuild(TableIO.readCommittedPrunedByIds(
       spark, table, Seq("d0000000007"))) == 0, "readCommittedPrunedByIds")
-    assert(jobsToBuild(TableIO.readCommittedBatches(spark, batches)) == 0, "readCommittedBatches")
+    assert(jobsToBuild(TableIO.readTable(spark, batches)) == 0, "readTable")
     assert(jobsToBuild(TableIO.readMerged(spark, batches)) == 0, "readMerged")
   }
 
+  test("real kill: a JVM killed mid-write resumes only its uncommitted buckets to one clean run") {
+    val clean = tmpDir()
+    TableIO.writeResumable(rows, clean)
+    val expected = readAll(clean)
+
+    val work = tempDir("graft-kill")
+    val out = work.resolve("table").toString
+    val marker = work.resolve("stalled")
+    val log = work.resolve("child.log")
+    // the child's temp and Spark local dirs live under `work`, so the
+    // files a killed JVM cannot clean up go with the suite's dirs
+    val childTmp = Files.createDirectory(work.resolve("tmp"))
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(_.startsWith("--add-opens"))
+    val pb = new ProcessBuilder((Seq(Path.of(System.getProperty("java.home"), "bin", "java").toString) ++
+      opens ++ Seq("-Xmx1g", s"-Djava.io.tmpdir=$childTmp", "-Dspark.ui.enabled=false",
+        "-cp", System.getProperty("java.class.path"), KillChild.getClass.getName.stripSuffix("$"),
+        sf, out, marker.toString)): _*)
+      .directory(work.toFile).redirectErrorStream(true).redirectOutput(log.toFile)
+    Seq("_JAVA_OPTIONS", "SPARK_LOCAL_DIRS").foreach(pb.environment().remove)
+    val child = pb.start()
+    val manifests = (0 until 3).map(b => Path.of(out, "manifests", s"bucket-$b.json"))
+    val committed = try {
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(120)
+      while (!Files.exists(marker) && child.isAlive && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      assert(Files.exists(marker), s"the child never stalled in its kernel:\n${Files.readString(log)}")
+      manifests.map(Files.readAllBytes(_).toSeq)
+    } finally {
+      val descendants = child.descendants().iterator().asScala.toSeq
+      (descendants :+ child.toHandle).foreach(_.destroyForcibly())
+      assert(child.waitFor(60, TimeUnit.SECONDS), "the killed child did not exit")
+      descendants.foreach(_.onExit().get(60, TimeUnit.SECONDS))
+      assert(!child.isAlive && descendants.forall(!_.isAlive))
+    }
+
+    // only the 3 buckets committed before the kill are visible; the resume
+    // writes the other 5 and leaves the committed manifests as they were
+    assert(TableIO.committedBuckets(out) == Set(0, 1, 2))
+    assert(TableIO.writeResumable(rows, out) == Buckets - 3)
+    assert(manifests.map(Files.readAllBytes(_).toSeq) == committed)
+    assert(readAll(out) == expected, "resumed output differs from one clean run")
+  }
+
   test("real fault: a run whose kernel throws commits nothing; a clean rerun equals one clean run") {
-    import graft.extract.Kernel
-    import graft.schema.{Doc, ExtractedSpan}
     val clean = tmpDir()
     TableIO.writeResumable(rows, clean)
     val expected = readAll(clean)
@@ -525,7 +575,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
       append.head.contains("CollectMetrics"), append.head)
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Path.of(batches, "manifests", "batch-0.json").toFile)
-    val back = TableIO.readCommittedBatches(spark, batches).collect()
+    val back = TableIO.readTable(spark, batches).collect()
     assert(m.get("doc_count").asLong == back.length)
     assert(m.get("span_count").asLong == back.map(_.span_count.toLong).sum)
   }
@@ -563,7 +613,6 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
   }
 
   test("write path: the bucket count survives filters and repartitions; undeclared rows run the query") {
-    import graft.schema.{Doc, ExtractedSpan}
     import spark.implicits._
     val input = rows
     Seq(input, input.filter(_.bucket < 3), input.toDF().as[Extraction.ExtractedRow],
@@ -602,7 +651,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     assert(marker.has("last_run_wall_ms"))
     // a bucket function outside the declared range fails the row
     val e = intercept[Exception](Extraction.extractRowsWith(CorpusDerive.derive(spark, sf),
-      (_: Doc).doc_id, graft.extract.Kernel.extractSpans, Buckets, (_, n) => n).collect())
+      (_: Doc).doc_id, Kernel.extractSpans, Buckets, (_, n) => n).collect())
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains(s"outside [0, $Buckets)")), e)
   }
@@ -629,7 +678,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
       rows.filter(_.bucket == 3).count())
   }
 
-  test("manifest blooms: point reads skip buckets, never rows; legacy manifests read conservatively") {
+  test("manifest blooms: point reads skip buckets, never rows") {
     val out = tmpDir()
     TableIO.writeResumable(rows, out)
     // every manifest carries the full word vector
@@ -650,13 +699,41 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
       .filter(org.apache.spark.sql.functions.col("bucket") === m0.bucket)
       .head().doc_id
     assert(graft.operators.SketchOps.bloomMaybeContains(m0.bloom, anyDoc))
-    // legacy manifest (bloom field stripped) is conservatively always read
-    val mPath = java.nio.file.Paths.get(out, "manifests", s"bucket-${m0.bucket}.json")
-    val stripped = Files.readString(mPath)
-      .replaceAll("\"bloom\":\\[[^\\]]*\\],", "")
-    Files.writeString(mPath, stripped)
-    val (_, readLegacy, totalLegacy) =
-      TableIO.readCommittedPrunedByIds(spark, out, Seq("d9999999998"))
-    assert(readLegacy >= 1 && totalLegacy == Buckets)
+  }
+}
+
+/** The child JVM of ResumeSpec's kill test: commits buckets 0-2 of
+  * [[KillChild.Buckets]] of the corpus at `sfDir` into `outDir`, then
+  * starts the full write with a kernel that, on one doc of an uncommitted
+  * bucket, creates `marker` and sleeps until the JVM is killed (at most
+  * 5 minutes, then the JVM halts).
+  * Run: `KillChild <sfDir> <outDir> <marker>`
+  */
+object KillChild {
+  val Buckets = 8
+
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outDir, marker) = args
+    val spark = SparkSession.builder().master("local[2]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val docs = CorpusDerive.derive(spark, sfDir)
+    val committed = TableIO.writeResumable(
+      Extraction.extractRows(docs, Buckets).filter(_.bucket < 3), outDir)
+    require(committed == 3, s"committed $committed buckets, not 3")
+    import spark.implicits._
+    val victim = docs.map(_.doc_id).collect().sorted
+      .find(Extraction.bucketOf(_, Buckets) >= 3).get
+    val stall: Doc => IndexedSeq[ExtractedSpan] = d => {
+      if (d.doc_id == victim) {
+        Files.writeString(Path.of(marker), victim)
+        Thread.sleep(TimeUnit.MINUTES.toMillis(5))
+        Runtime.getRuntime.halt(3)
+      }
+      Kernel.extractSpans(d)
+    }
+    TableIO.writeResumable(Extraction.extractRowsWith(docs, (_: Doc).doc_id, stall, Buckets), outDir)
   }
 }

@@ -185,7 +185,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       w2.repartition(1).write.mode("append").parquet(src)
       q.processAllAvailable()
     } finally q.stop()
-    val streamed = TableIO.readCommittedBatches(spark, out)
+    val streamed = TableIO.readTable(spark, out)
       .collect().map(r => (r.doc_id, r.spans, r.markdown)).toSet
     val batch = Extraction.extractDs(all)
       .collect().map(d => (d.doc_id, d.spans, d.markdown)).toSet
@@ -194,7 +194,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     val firstBatch = TableIO.committedBatches(out).min
     val replay = Extraction.extractRows(w1, buckets = 16)
     assert(!TableIO.appendBatchIdempotent(replay, out, firstBatch))
-    assert(TableIO.readCommittedBatches(spark, out).count() == batch.size)
+    assert(TableIO.readTable(spark, out).count() == batch.size)
   }
 
   test("sessionize batch kernel == window-function ev_sessions query") {

@@ -76,6 +76,33 @@ class WarcSpec extends AnyFunSuite {
     }
   }
 
+  test("every record carries the mandatory headers; distinct URIs get distinct record ids") {
+    val records = Seq(rec("http://h/1", "a"), rec("http://h/2", "b"),
+      Record("metadata", "http://h/1", "c".getBytes("UTF-8")))
+    def ids = records.map { r =>
+      val raw = new String(Warc.build(Seq(r)), "UTF-8")
+      val headers = raw.substring(0, raw.indexOf("\r\n\r\n")).split("\r\n").toSeq
+      assert(headers.head == "WARC/1.0")
+      val fields = headers.tail.map { h =>
+        val i = h.indexOf(": ")
+        h.substring(0, i) -> h.substring(i + 2)
+      }.toMap
+      assert(Set("WARC-Record-ID", "Content-Length", "WARC-Date", "WARC-Type")
+        .subsetOf(fields.keySet), fields)
+      assert(fields("WARC-Type") == r.recordType)
+      assert(fields("Content-Length") == r.payload.length.toString)
+      assert(fields("WARC-Date").matches("\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}Z"))
+      val id = fields("WARC-Record-ID")
+      assert(id.matches("<urn:uuid:[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}>"), id)
+      id
+    }
+    // one id per (type, URI), and the same id on every build
+    val first = ids
+    assert(first.distinct.size == records.size)
+    assert(ids == first)
+    assert(Warc.parse(Warc.build(records)).map(_.uri) == records.map(_.uri))
+  }
+
   test("header values with CR/LF are rejected at build (framing injection)") {
     intercept[IllegalArgumentException] {
       Warc.build(Seq(rec("http://a/1\r\nWARC-Type: injected", "x")))
