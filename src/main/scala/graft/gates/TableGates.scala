@@ -141,9 +141,10 @@ object TableGates {
     // Upsert / MERGE-on-read (Iceberg v2 equality-delete analog): base
     // batch + an upsert batch rewriting every doc_id % 3 == 0 row down
     // to one span; latest-batch-wins read, poisoned-replay no-op,
-    // batch-id time travel, and the compactMerged fixpoint all asserted
-    // in-query. The oracle: upserted keys count exactly 1 span;
-    // everything else keeps the tio_roundtrip closed form.
+    // batch-id time travel, and a merged view that compaction + expiry
+    // leave unchanged all asserted in-query. The oracle: upserted keys
+    // count exactly 1 span; everything else keeps the tio_roundtrip
+    // closed form.
     Gate("tio_upsert", (s, dir) => inFreshDir("tio-upsert") { out =>
       import s.implicits._
       val rows = rows16(s, dir)
@@ -160,8 +161,16 @@ object TableGates {
       val post = TableIO.readMerged(s, out)
         .agg(sum($"span_count")).as[Long].head()
       require(pre > post, s"upsert must shrink span totals ($pre -> $post)")
-      // merge-compaction must be a fixpoint of the merged view
-      TableIO.compactMerged(s, out)
+      // compaction keeps every batch version: the merged view and its
+      // batch-id time travel survive compact + expiry unchanged
+      val merged = bucketTotals(TableIO.readMerged(s, out)).collect().toSet
+      TableIO.compact(s, out)
+      TableIO.expireSnapshots(out)
+      require(TableIO.readMerged(s, out, asOfBatch = 0L)
+        .agg(sum($"span_count")).as[Long].head() == pre,
+        "time travel to batch 0 must survive compaction")
+      require(bucketTotals(TableIO.readMerged(s, out)).collect().toSet == merged,
+        "compaction must not change the merged view")
       bucketTotals(TableIO.readMerged(s, out))
     }, bucketTotalsOracleSql(s"CASE WHEN doc_id % 3 = 0 THEN 1 ELSE ${keptSpansSql("doc_id")} END")),
 
@@ -186,15 +195,7 @@ object TableGates {
       // threshold = the bulk batch's on-disk size: strictly-smaller (the
       // tiny commits) folds, the bulk batch itself does not — robust to
       // the sf under test
-      val bulkBytes = {
-        val p = java.nio.file.Paths.get(out, "data", "batch=3")
-        scala.util.Using.resource(java.nio.file.Files.walk(p)) { st =>
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala
-            .filter(java.nio.file.Files.isRegularFile(_))
-            .map(java.nio.file.Files.size).sum
-        }
-      }
+      val bulkBytes = TableIO.dirBytes(java.nio.file.Paths.get(out, "data", "batch=3"))
       val snap1 = TableIO.compactSmall(s, out, smallBytes = bulkBytes)
         .getOrElse(sys.error("binpack found no small tail to fold"))
       val folded = TableIO.compactions(out)

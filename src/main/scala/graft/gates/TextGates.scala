@@ -563,9 +563,11 @@ object TextGates {
          |  (count(*) OVER (PARTITION BY cluster))::BIGINT AS csize
          |FROM lab""".stripMargin),
 
-    Gate("ann_topk", (s, dir) =>
+    Gate("ann_topk", (s, dir) => {
+      TopKPerKeyExtension.install(s)
       SimilarityOps.bruteForceTopK(s, t(s, dir, "embeddings"), nQueries = 8, k = 5)
-        .withColumnRenamed("rank", "rnk"),
+        .withColumnRenamed("rank", "rnk")
+    },
       s"""WITH n AS (
          |  SELECT vec_id, q, list_sum(list_transform(q, x -> x*x))::BIGINT AS nsq
          |  FROM (SELECT vec_id, $quantSql AS q FROM embeddings)),
@@ -588,10 +590,12 @@ object TextGates {
 
     // IVF coarse-quantizer scale path: 16 cells, one integer-exact Lloyd
     // step, 4-cell probe funnel — the oracle replays build+probe+rank.
-    Gate("ann_ivf", (s, dir) =>
+    Gate("ann_ivf", (s, dir) => {
+      TopKPerKeyExtension.install(s)
       SimilarityOps.ivfTopK(s, t(s, dir, "embeddings"), nCentroids = 16,
           nProbe = 4, nQueries = 8, k = 5)
-          .withColumnRenamed("rank", "rnk"),
+          .withColumnRenamed("rank", "rnk")
+    },
       s"""WITH nn AS (
          |  SELECT vec_id, q, list_sum(list_transform(q, x -> x*x))::BIGINT AS nsq
          |  FROM (SELECT vec_id, $quantSql AS q FROM embeddings)),

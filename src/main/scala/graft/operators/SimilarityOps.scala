@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: the query set is tiny relative to the corpus, so the
   * brute-force path is a BROADCAST join of queries against the corpus —
-  * one scan, partial top-k per partition (TakeOrderedAndProject after the
-  * window/filter), no corpus shuffle. The LSH path replaces the cross
-  * join with a narrow sketch projection + an exchange keyed by sketch.
+  * one scan, partial top-k per partition (the TopKPerKey rank filter),
+  * no corpus shuffle. The LSH path replaces the cross join with a narrow
+  * sketch projection + an exchange keyed by sketch.
   *
   * Numeric portability: embeddings are quantized to integers once
   * (q = floor(1000·v), exact for float inputs in any IEEE engine), and
@@ -42,13 +42,11 @@ object SimilarityOps {
     * dot, na, nb) — rank by (cos desc, neighbor_id) for determinism.
     *
     * Scale shape: queries broadcast against one corpus scan (no corpus
-    * shuffle); the top-k runs as a PER-PARTITION bounded heap inside
-    * mapPartitions — each scan task emits at most nQueries×k rows — and
-    * only that tiny candidate set (partitions × nQueries × k) crosses the
-    * wire into the final exact rank. A plain `row_number` window here
-    * would funnel the full N×nQueries pair stream into nQueries reducer
-    * partitions; the heap keeps the reduction distributed (same output:
-    * every partition retains a superset of its global-top-k rows).
+    * shuffle); with [[graft.plans.TopKPerKeyPlans.TopKPerKeyExtension]]
+    * installed the top-k runs as a PER-PARTITION bounded heap — each
+    * scan task emits at most nQueries×k rows — and only that tiny
+    * candidate set (partitions × nQueries × k) crosses the wire into the
+    * final exact rank.
     */
   def bruteForceTopK(spark: SparkSession, emb: DataFrame, nQueries: Int,
                      k: Int): DataFrame = {
@@ -61,50 +59,23 @@ object SimilarityOps {
         dot($"qv", $"q").as("dot"), $"na", $"nsq".as("nb"))
       .withColumn("cos",
         $"dot".cast("double") / sqrt($"na".cast("double") * $"nb"))
-    rankTopK(spark, pairs, k)
+    rankTopK(pairs, k)
   }
 
-  /** Distributed exact top-k finisher shared by the brute-force and IVF
-    * paths. `pairs` columns: (query_id, neighbor_id, dot, na, nb, cos).
-    * Per-partition bounded heaps cap each scan task's emission at
-    * nQueries×k rows; only that candidate superset crosses the wire into
-    * the final exact rank (a plain window here would funnel the full pair
-    * stream into nQueries reducer partitions).
+  /** Exact top-k finisher shared by the brute-force and IVF paths.
+    * `pairs` columns: (query_id, neighbor_id, dot, na, nb, cos). The
+    * `row_number() <= k` rank filter is the shape
+    * [[graft.plans.TopKPerKeyPlans]] re-plans as a bounded heap per scan
+    * partition (each task emits ≤ nQueries×k rows) and one hash exchange
+    * into the final exact rank; Spark's own plan returns the same rows.
     */
-  private def rankTopK(spark: SparkSession, pairs: DataFrame, k: Int): DataFrame = {
-    import spark.implicits._
-    // candidate tuple: (query_id, neighbor_id, dot, na, nb, cos);
-    // priority head = WORST retained candidate (lowest cos, then highest
-    // neighbor id) so a better arrival evicts it in O(log k)
-    val worstFirst: Ordering[(Long, Long, Long, Long, Long, Double)] =
-      Ordering.by((c: (Long, Long, Long, Long, Long, Double)) => (-c._6, c._2))
-    val partial = pairs
-      .select($"query_id", $"neighbor_id", $"dot", $"na", $"nb", $"cos")
-      .as[(Long, Long, Long, Long, Long, Double)]
-      .mapPartitions { it =>
-      val heaps = scala.collection.mutable.Map.empty[Long,
-        scala.collection.mutable.PriorityQueue[(Long, Long, Long, Long, Long, Double)]]
-      it.foreach { c =>
-        val h = heaps.getOrElseUpdate(c._1, scala.collection.mutable
-          .PriorityQueue.empty[(Long, Long, Long, Long, Long, Double)](worstFirst))
-        if (h.size < k) h.enqueue(c)
-        else {
-          val w = h.head
-          if (c._6 > w._6 || (c._6 == w._6 && c._2 < w._2)) {
-            h.dequeue(); h.enqueue(c)
-          }
-        }
-      }
-      heaps.valuesIterator.flatMap(_.iterator)
-    }.toDF("query_id", "neighbor_id", "dot", "na", "nb", "cos")
-    // exact final rank over ≤ partitions × nQueries × k surviving rows
-    partial
+  private def rankTopK(pairs: DataFrame, k: Int): DataFrame =
+    pairs
       .withColumn("rank", row_number().over(
-        Window.partitionBy($"query_id")
-          .orderBy($"cos".desc, $"neighbor_id")).cast("long"))
-      .filter($"rank" <= k)
-      .select($"query_id", $"neighbor_id", $"rank", $"dot", $"na", $"nb")
-  }
+        Window.partitionBy(col("query_id"))
+          .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
+      .filter(col("rank") <= k)
+      .select("query_id", "neighbor_id", "rank", "dot", "na", "nb")
 
   val Planes = 16 // sketch bits
 
@@ -160,7 +131,7 @@ object SimilarityOps {
     * (cell,dim)-keyed aggregate whose output is C·dims tiny rows — no
     * corpus shuffle anywhere; the candidate stage is a broadcast join of
     * the ≤ nQueries·nProbe probe rows against the cell-tagged scan,
-    * finished by the shared bounded-heap top-k.
+    * finished by the shared top-k rank filter.
     *
     * Build: seeds = the `nCentroids` lowest vec_ids (deterministic), one
     * Lloyd step — assign to nearest seed by integer L2, recompute each
@@ -229,6 +200,6 @@ object SimilarityOps {
         dot($"qv", $"q").as("dot"), $"na", $"nsq".as("nb"))
       .withColumn("cos",
         $"dot".cast("double") / sqrt($"na".cast("double") * $"nb"))
-    rankTopK(spark, pairs, k)
+    rankTopK(pairs, k)
   }
 }

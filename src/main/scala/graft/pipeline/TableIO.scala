@@ -23,7 +23,9 @@ import scala.util.Using
   * Layout under `outDir` — three table kinds, one protocol:
   *   data/bucket=<i>/               — resumable buckets ([[writeResumable]])
   *   data/batch=<id>/bucket=<i>/    — idempotent micro-batches ([[appendBatchIdempotent]])
-  *   compacted/snap-<s>/bucket=<i>/ — compaction snapshots ([[compact]])
+  *   compacted/snap-<s>/bucket=<i>/ — compaction snapshots ([[compact]]);
+  *                                    each row keeps its `batch` id as a
+  *                                    data column
   *   manifests/bucket-<i>.json      — a resumable bucket's DATA FILE LIST,
   *                                    counts, bytes, checksum, key bounds,
   *                                    Bloom words, snapshot id, wall ms
@@ -63,7 +65,9 @@ import scala.util.Using
   * that do not declare their bucket count leave out.
   * One reader ([[readListed]]) reads all data: the listed files, under the
   * known row schema (evolved columns included), so building a read runs
-  * no inference job and no listing.
+  * no inference job and no listing. Every read of a batch table
+  * ([[readTable]], [[readMerged]], [[compact]]) reads the files
+  * [[visibleFiles]] lists.
   *
   * One write ([[writeBuckets]]) lands all data, and it is ONE query: the
   * rows clustered by bucket, with every bucket's stats (counts, bytes,
@@ -167,9 +171,6 @@ object TableIO {
         .filter(n => n.startsWith(prefix) && n.endsWith(suffix))
         .toSeq
     }
-
-  def committedBuckets(outDir: String): Set[Int] =
-    committedManifests(outDir).map(_.bucket).toSet
 
   private def writeAtomic(path: Path, content: String): Unit = {
     Files.createDirectories(path.getParent)
@@ -485,49 +486,36 @@ object TableIO {
   def committedBatches(outDir: String): Set[Long] =
     batchManifests(outDir).map(_._1).toSet
 
-  /** Rows of the committed micro-batches `keep` selects, under `schema`. */
-  private def readBatches(spark: SparkSession, outDir: String,
-      keep: Long => Boolean, schema: StructType): DataFrame =
-    readListed(spark, dataDir(outDir), schema,
-      batchManifests(outDir).filter(b => keep(b._1)).flatMap(_._2))
+  /** `schema` plus every batch row's `batch` id: the `batch=<id>` dir of
+    * a live batch file, a data column of a compaction snapshot's files.
+    */
+  private def withBatch(schema: StructType): StructType = schema.add("batch", "long")
 
   // ------------------------------------------------------------------
   // Upsert: MERGE-on-read (the Iceberg MoR equality-delete analog).
   // The WRITE side is appendBatchIdempotent unchanged — an upsert batch
   // is an ordinary idempotent batch commit; the merge semantics live
-  // entirely at READ time: within the committed batch stream, the
-  // highest batch id wins per doc_id, i.e. every batch acts as an
-  // equality delete of older same-key rows plus an insert. This is how
-  // Iceberg v2 upserts behave before compaction — readers pay a per-key
-  // merge — and compactMerged() is the rewrite that clears the debt.
+  // entirely at READ time: among the visible rows, the highest batch id
+  // wins per doc_id, i.e. every batch acts as an equality delete of
+  // older same-key rows plus an insert. Compaction keeps every version
+  // with its batch id, so the merge (and batch-id time travel) reads the
+  // same rows before and after it; readers always pay the per-key merge.
   // ------------------------------------------------------------------
 
-  /** MERGE-on-read view of the batch stream: the latest committed batch
-    * ≤ `asOfBatch` wins per doc_id (time travel by batch id). Scale
+  /** MERGE-on-read view of the batch table: among the rows [[readTable]]
+    * reads, the one of the latest batch ≤ `asOfBatch` wins per doc_id
+    * (time travel by batch id, across compaction and expiry). Scale
     * shape: ONE hash exchange on doc_id with a map-side
     * WindowGroupLimit — per-key state is one row, never the key's
     * history; the wire carries each surviving version once.
     */
   def readMerged(spark: SparkSession, outDir: String,
                  asOfBatch: Long = Long.MaxValue): Dataset[ExtractedRow] =
-    typed(readBatches(spark, outDir, _ <= asOfBatch, baseSchema.add("batch", "long"))
+    typed(readVisible(spark, outDir, Long.MaxValue, withBatch(baseSchema))
+      .filter(col("batch") <= asOfBatch)
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("batch").desc)))
       .filter(col("__rn") === 1))
-
-  /** Materialize the merged view as ONE new batch (next monotone id) —
-    * the Iceberg rewrite that converts merge-on-read debt back to plain
-    * scans. Older batches stay on disk, so batch-id time travel still
-    * works; re-merging after compaction is a fixpoint (the compacted
-    * batch outranks everything it merged). Returns the new batch id.
-    */
-  def compactMerged(spark: SparkSession, outDir: String): Long = {
-    val done = committedBatches(outDir)
-    require(done.nonEmpty, "compactMerged on an empty table")
-    val next = done.max + 1
-    appendBatchIdempotent(readMerged(spark, outDir), outDir, next)
-    next
-  }
 
   // ------------------------------------------------------------------
   // Compaction + snapshot expiry (the Iceberg rewrite_data_files /
@@ -598,9 +586,10 @@ object TableIO {
 
   /** FULL rewrite: every currently-visible row (all visible compacted
     * snapshots plus all live batches) lands in ONE bucket-clustered
-    * layout under a new snapshot id, superseding them all. Readers
-    * observe identical rows before and after; the data-file count drops
-    * from O(batches × buckets) to O(buckets). Returns the new snapshot.
+    * layout under a new snapshot id, superseding them all. Every row
+    * keeps its batch id, so [[readTable]] and [[readMerged]] observe
+    * identical rows before and after; the data-file count drops from
+    * O(batches × buckets) to O(buckets). Returns the new snapshot.
     */
   def compact(spark: SparkSession, outDir: String): Long = {
     require(committedBatches(outDir).nonEmpty || compactions(outDir).nonEmpty,
@@ -608,13 +597,15 @@ object TableIO {
     val snapshot = currentSnapshot(outDir) + 1
     // evolution-aware read: rewrite under the LATEST schema so evolved
     // columns survive compaction (null-filled for pre-evolution rows)
-    writeCompaction(outDir, snapshot, readTableDf(spark, outDir),
+    writeCompaction(outDir, snapshot,
+      readVisible(spark, outDir, Long.MaxValue, withBatch(tableSchemaAt(outDir))),
       committedBatches(outDir).diff(deadBatches(outDir)).toSeq,
       visibleCompactions(outDir).map(_.snapshot))
     snapshot
   }
 
-  private def dirBytes(p: Path): Long =
+  /** Bytes of the regular files under `p` (0 when absent). */
+  private[graft] def dirBytes(p: Path): Long =
     if (!Files.exists(p)) 0L
     else Using.resource(Files.walk(p)) { st =>
       st.iterator().asScala.filter(Files.isRegularFile(_))
@@ -640,7 +631,9 @@ object TableIO {
     val snapshot = currentSnapshot(outDir) + 1
     // evolution-aware: binpack under the latest schema (see compact)
     writeCompaction(outDir, snapshot,
-      readBatches(spark, outDir, small.toSet, tableSchemaAt(outDir)), small, Seq.empty)
+      readListed(spark, dataDir(outDir), withBatch(tableSchemaAt(outDir)),
+        batchManifests(outDir).filter(b => small.contains(b._1)).flatMap(_._2)),
+      small, Seq.empty)
     Some(snapshot)
   }
 
@@ -704,6 +697,13 @@ object TableIO {
       (dataDir(outDir) -> batchManifests(outDir).filterNot(b => dead(b._1)).flatMap(_._2))
   }
 
+  /** Rows of the files [[visibleFiles]] lists as of `asOf`, under `schema`. */
+  private def readVisible(spark: SparkSession, outDir: String, asOf: Long,
+      schema: StructType): DataFrame =
+    visibleFiles(outDir, asOf)
+      .map { case (base, files) => readListed(spark, base, schema, files) }
+      .reduce(_ unionByName _)
+
   /** All data-file paths currently visible through [[readTable]] — used
     * by tests to assert the compaction file-count drop.
     */
@@ -755,13 +755,15 @@ object TableIO {
 
   /** Commit an add-column evolution. The new column is nullable (rows
     * written earlier read as NULL); the table snapshot advances so time
-    * travel to any pre-evolution snapshot keeps the old shape. Returns
-    * the activation snapshot.
+    * travel to any pre-evolution snapshot keeps the old shape. `batch` is
+    * reserved: batch tables name their rows' batch id so. Returns the
+    * activation snapshot.
     */
   def evolveAddColumn(outDir: String, name: String, ddl: String): Long = {
     val current = tableSchemaAt(outDir)
     require(!current.fieldNames.contains(name),
       s"column '$name' already exists in table schema")
+    require(name != "batch", "column name 'batch' is reserved for batch ids")
     // validate the DDL parses before committing anything
     DataType.fromDDL(ddl)
     val version = currentTableSchemaVersion(outDir) + 1
@@ -780,12 +782,8 @@ object TableIO {
     * them.
     */
   def readTableDf(spark: SparkSession, outDir: String,
-      asOfSnapshot: Long = Long.MaxValue): DataFrame = {
-    val schema = tableSchemaAt(outDir, asOfSnapshot)
-    visibleFiles(outDir, asOfSnapshot)
-      .map { case (base, files) => readListed(spark, base, schema, files) }
-      .reduce(_ unionByName _)
-  }
+      asOfSnapshot: Long = Long.MaxValue): DataFrame =
+    readVisible(spark, outDir, asOfSnapshot, tableSchemaAt(outDir, asOfSnapshot))
 
   /** Read back only manifest-committed data, as of `asOfSnapshot`
     * (default: latest). The reader consumes the manifests' FILE LISTS —

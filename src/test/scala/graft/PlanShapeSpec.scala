@@ -29,9 +29,11 @@ class PlanShapeSpec extends AnyFunSuite {
     val p = plan("ann_topk")
     assert(p.contains("BroadcastExchange"))
     // exactly one hash exchange — the tiny partial top-k set into the
-    // final window; the N×queries pair stream itself never shuffles
+    // final rank; the N×queries pair stream itself never shuffles
     assert(countOf(p, "Exchange hashpartitioning") == 1, p)
-    assert(p.contains("MapPartitions"))
+    // TopKPerKeyExec renders as "TopKPerKey <k>": the map-side heap
+    // partial below the exchange, the final rank above it
+    assert(countOf(p, "TopKPerKey ") == 2, p)
   }
 
   test("ann_ivf: broadcast probe join + ONE shuffle of heap-reduced partials") {
@@ -42,6 +44,9 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("BroadcastExchange"), p.linesIterator.take(3).mkString("|"))
     assert(countOf(p, "Exchange hashpartitioning") == 1, p)
     assert(p.contains("MapPartitions"))
+    // TopKPerKeyExec renders as "TopKPerKey <k>": the map-side heap
+    // partial below the exchange, the final rank above it
+    assert(countOf(p, "TopKPerKey ") == 2, p)
     assert(!p.contains("SortMergeJoin"), "corpus must never sort-merge")
   }
 

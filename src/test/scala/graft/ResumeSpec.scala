@@ -27,6 +27,9 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
 
   private def readAll(out: String) = sortedRows(TableIO.readCommitted(spark, out))
 
+  private def committedBuckets(out: String): Set[Int] =
+    TableIO.committedManifests(out).map(_.bucket).toSet
+
   private def sortedRows(ds: org.apache.spark.sql.Dataset[Extraction.ExtractedRow]) =
     ds.collect().sortBy(_.doc_id).map(r => (r.doc_id, r.spans, r.markdown)).toSeq
 
@@ -64,7 +67,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     val nioBytes = nioStats.getBytesWritten
     val written = TableIO.writeResumable(rows, out)
     assert(written == Buckets)
-    assert(TableIO.committedBuckets(out) == (0 until Buckets).toSet)
+    assert(committedBuckets(out) == (0 until Buckets).toSet)
     assert(nioStats.getBytesWritten > nioBytes)
     // the table's files land with the modes and `.crc` sidecars a plain
     // partitioned write leaves under the session's default FS
@@ -97,11 +100,11 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     val mdir = Path.of(killed, "manifests")
     val all = Files.list(mdir).iterator().asScala.toSeq.sortBy(_.toString)
     all.drop(3).foreach(Files.delete) // un-commit 5 buckets
-    assert(TableIO.committedBuckets(killed).size == 3)
+    assert(committedBuckets(killed).size == 3)
 
     val resumed = TableIO.writeResumable(rows, killed)
     assert(resumed == Buckets - 3)
-    assert(TableIO.committedBuckets(killed).size == Buckets)
+    assert(committedBuckets(killed).size == Buckets)
     assert(readAll(killed) == expected, "resumed output differs from single-run output")
   }
 
@@ -339,6 +342,54 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
       .count().as[(String, Long)].collect().sortBy(_._1).toSeq == langTotals)
   }
 
+  test("upserts: the merged view and its batch time travel survive binpack, compaction and expiry") {
+    import spark.implicits._
+    val out = tmpDir()
+    val all = rows.collect().toSeq
+    def idOf(r: Extraction.ExtractedRow) = java.lang.Long.parseLong(r.doc_id.stripPrefix("d"))
+    def key(r: Extraction.ExtractedRow) = (r.doc_id, r.spans, r.markdown)
+    /** `rs` rewritten to at most `n` spans. */
+    def cut(rs: Seq[Extraction.ExtractedRow], n: Int) =
+      rs.map(r => r.copy(spans = r.spans.take(n), span_count = math.min(n, r.span_count)))
+    // batch 0: every doc; batch 1: one-span upserts; batch 2: a small tail
+    assert(TableIO.appendBatchIdempotent(all.toDS(), out, 0L))
+    assert(TableIO.appendBatchIdempotent(cut(all.filter(idOf(_) % 3 == 0), 1).toDS(), out, 1L))
+    assert(TableIO.appendBatchIdempotent(cut(all.filter(idOf(_) % 10 == 1), 0).toDS(), out, 2L))
+    def merged(asOf: Long) = sortedRows(TableIO.readMerged(spark, out, asOf))
+    val (latest, base) = (merged(Long.MaxValue), merged(0L))
+    assert(base == all.map(key).sortBy(_._1) && latest != base)
+    def unchanged(step: String): Unit = {
+      assert(merged(Long.MaxValue) == latest, s"latest merged view changed by $step")
+      assert(merged(0L) == base, s"batch-0 time travel changed by $step")
+    }
+
+    val small = TableIO.compactSmall(spark, out,
+      TableIO.dirBytes(Path.of(out, "data", "batch=0")))
+    assert(small.nonEmpty &&
+      TableIO.compactions(out).last.supersededBatches.sorted == Seq(1L, 2L))
+    unchanged("binpack")
+    TableIO.compact(spark, out)
+    unchanged("compaction")
+    assert(TableIO.expireSnapshots(out) > 0 && TableIO.committedBatches(out).isEmpty)
+    unchanged("expiry")
+    // a batch appended after expiry outranks the compacted versions
+    val more = cut(all.filter(idOf(_) % 10 == 2), 0)
+    assert(TableIO.appendBatchIdempotent(more.toDS(), out, 3L))
+    val moreIds = more.map(_.doc_id).toSet
+    assert(merged(Long.MaxValue) ==
+      (latest.filterNot(r => moreIds(r._1)) ++ more.map(key)).sortBy(_._1))
+    assert(merged(2L) == latest && merged(0L) == base)
+  }
+
+  test("evolveAddColumn rejects the reserved column name batch and commits nothing") {
+    val out = tmpDir()
+    assert(TableIO.appendBatchIdempotent(rows, out, 0L))
+    val before = (TableIO.currentSnapshot(out), TableIO.currentTableSchemaVersion(out))
+    assertThrows[IllegalArgumentException](TableIO.evolveAddColumn(out, "batch", "long"))
+    assert((TableIO.currentSnapshot(out), TableIO.currentTableSchemaVersion(out)) == before)
+    assert(TableIO.evolutions(out).isEmpty)
+  }
+
   test("manifest stats: doc/span counts and checksum match recomputation") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -368,7 +419,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
       }
     // manifests parsed independently of TableIO's reader
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
-    val got = TableIO.committedBuckets(out).toSeq.sorted.map { b =>
+    val got = committedBuckets(out).toSeq.sorted.map { b =>
       val m = json.readTree(Path.of(out, "manifests", s"bucket-$b.json").toFile)
       b -> ((b, m.get("doc_count").asLong, m.get("span_count").asLong,
         m.get("bytes").asLong, m.get("span_checksum").asLong,
@@ -455,6 +506,10 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
       spark, table, Seq("d0000000007"))) == 0, "readCommittedPrunedByIds")
     assert(jobsToBuild(TableIO.readTable(spark, batches)) == 0, "readTable")
     assert(jobsToBuild(TableIO.readMerged(spark, batches)) == 0, "readMerged")
+    // a compaction snapshot is one more listed read
+    TableIO.compact(spark, batches)
+    assert(jobsToBuild(TableIO.readTable(spark, batches)) == 0, "compacted readTable")
+    assert(jobsToBuild(TableIO.readMerged(spark, batches)) == 0, "compacted readMerged")
   }
 
   test("real kill: a JVM killed mid-write resumes only its uncommitted buckets to one clean run") {
@@ -495,7 +550,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
 
     // only the 3 buckets committed before the kill are visible; the resume
     // writes the other 5 and leaves the committed manifests as they were
-    assert(TableIO.committedBuckets(out) == Set(0, 1, 2))
+    assert(committedBuckets(out) == Set(0, 1, 2))
     assert(TableIO.writeResumable(rows, out) == Buckets - 3)
     assert(manifests.map(Files.readAllBytes(_).toSeq) == committed)
     assert(readAll(out) == expected, "resumed output differs from one clean run")
@@ -516,11 +571,11 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
       out))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("injected fault")))
-    assert(TableIO.committedBuckets(out).isEmpty)
+    assert(committedBuckets(out).isEmpty)
     assert(TableIO.currentSnapshot(out) == 0L, "a failed run must not advance the snapshot")
 
     assert(TableIO.writeResumable(rows, out) == Buckets)
-    assert(TableIO.committedBuckets(out) == (0 until Buckets).toSet)
+    assert(committedBuckets(out) == (0 until Buckets).toSet)
     assert(TableIO.currentSnapshot(out) == 1L)
     assert(readAll(out) == expected, "rerun after a fault differs from a single clean run")
 
@@ -531,7 +586,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     intercept[Exception](TableIO.writeResumable(
       Extraction.extractRowsWith(CorpusDerive.derive(spark, sf), (_: Doc).doc_id, faulty, Buckets),
       partial))
-    assert(TableIO.committedBuckets(partial) == Set(0, 1, 2))
+    assert(committedBuckets(partial) == Set(0, 1, 2))
     assert(TableIO.writeResumable(rows, partial) == Buckets - 3)
     assert(readAll(partial) == expected)
   }
@@ -605,7 +660,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
       Files.writeString(p, Files.readString(p).replace(s""","buckets":$Buckets""", ""))
     })
     assert(TableIO.committedManifests(out).forall(_.buckets.isEmpty))
-    assert(TableIO.committedBuckets(out) == Set(0, 1, 2))
+    assert(committedBuckets(out) == Set(0, 1, 2))
     import spark.implicits._
     assert(TableIO.writeResumable(rows.map(identity), out) == Buckets - 3)
     assert(TableIO.committedManifests(out).forall(_.buckets.isEmpty))
@@ -665,7 +720,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     Files.delete(Path.of(out, "manifests", "bucket-3.json"))
     assert(Files.isDirectory(Path.of(out, "data", "bucket=3")))
     assert(TableIO.writeResumable(rows.filter(_.bucket != 3), out) == 0)
-    assert(TableIO.committedBuckets(out) == (0 until Buckets).toSet - 3)
+    assert(committedBuckets(out) == (0 until Buckets).toSet - 3)
     assert(readAll(out) == expected)
     val marker = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Path.of(out, "_SUCCESS.json").toFile)
@@ -673,7 +728,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     assert(marker.get("last_run_buckets").asInt == 0)
     // a run with rows for bucket 3 rewrites and commits it whole
     assert(TableIO.writeResumable(rows, out) == 1)
-    assert(TableIO.committedBuckets(out) == (0 until Buckets).toSet)
+    assert(committedBuckets(out) == (0 until Buckets).toSet)
     assert(readAll(out).size == expected.size +
       rows.filter(_.bucket == 3).count())
   }
