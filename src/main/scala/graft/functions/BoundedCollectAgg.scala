@@ -11,41 +11,32 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** `graft_bounded_collect(id, cap)` — collect a key's LONG ids into a
-  * sorted array, but NEVER buffer more than `cap` of them: the moment an
-  * update or merge would exceed the cap, the buffer flips to `overflow`
-  * and discards its contents, and the aggregate evaluates to NULL.
+/** `graft_bounded_collect(id, cap)` — collect a key's DISTINCT long ids
+  * into a sorted array, but NEVER buffer more than `cap` of them: the
+  * moment an update or merge would add a distinct id past the cap, the
+  * buffer flips to `overflow` and discards its contents, and the
+  * aggregate evaluates to NULL. Duplicates collapse in the buffer and
+  * never count toward the cap, so overflow fires iff the group's
+  * distinct member count exceeds `cap`, whatever the input order or
+  * partial-merge tree.
   *
   * This is the skew-safe primitive behind the inverted-index candidate
-  * stage of [[graft.operators.DedupOps.ngramJaccardPairs]]: a group-by
-  * bucket expansion needs each bucket's member list, but a viral
-  * boilerplate shingle at corpus scale has millions of postings, and a
-  * plain `collect_list` would materialize all of them in ONE aggregation
-  * buffer before any size filter runs — the classic flood OOM. Capping
-  * inside the aggregate bounds every buffer at `cap` longs while keeping
-  * the df-cut EXACT: postings are unique per key (shingle sets are
-  * distinct per doc), so as long as no buffer has overflowed each partial
-  * size is a true partial count, and overflow fires iff the key's total
-  * df exceeds `cap` — precisely the viral-shingle drop the two-pass
-  * count+anti-join formulation computed, now in a single exchange.
+  * stages of [[graft.operators.DedupOps]]: a group-by bucket expansion
+  * needs each bucket's member list, but a viral boilerplate shingle at
+  * corpus scale has millions of postings, and a plain `collect_list`
+  * would materialize all of them in ONE aggregation buffer before any
+  * size filter runs — the classic flood OOM. Capping inside the
+  * aggregate bounds every buffer at `cap` longs while keeping the df-cut
+  * EXACT — precisely the viral-shingle drop the two-pass count+anti-join
+  * formulation computed, now in a single exchange.
   *
   * The reference's analog is its bounded-structure discipline in the
   * decode cache (ref crates/core/src/transformer/cache.rs:78-118): fixed
   * capacity decided up front, never input-dependent growth.
-  *
-  * CONTRACT — DISTINCT INPUTS PER KEY: the buffer never deduplicates, so
-  * the exact "overflow iff group size > cap" semantics (and the exact
-  * df-cut above) hold only when each key's input values are distinct, as
-  * they are for per-doc shingle postings. Fed duplicate inputs, a group
-  * with ≤ cap distinct members can still overflow (duplicates count
-  * toward the cap) and silently evaluate to NULL. Dedupe upstream (e.g.
-  * `.distinct()` or distinct-by-construction) before reusing this
-  * aggregate for any other candidate stage.
   */
 case class BoundedCollectAgg(
     child: Expression,
     cap: Int,
-    dedup: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[BoundedCollectAgg.Buf]
@@ -55,8 +46,7 @@ case class BoundedCollectAgg(
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
-  override def prettyName: String =
-    if (dedup) "graft_bounded_collect_set" else "graft_bounded_collect"
+  override def prettyName: String = "graft_bounded_collect"
 
   override def createAggregationBuffer(): BoundedCollectAgg.Buf =
     new BoundedCollectAgg.Buf(overflow = false, n = 0,
@@ -66,10 +56,7 @@ case class BoundedCollectAgg(
                       input: InternalRow): BoundedCollectAgg.Buf = {
     if (!buf.overflow) {
       val v = child.eval(input)
-      if (v != null) {
-        if (dedup) buf.appendDistinct(v.asInstanceOf[Long], cap)
-        else buf.append(v.asInstanceOf[Long], cap)
-      }
+      if (v != null) buf.add(v.asInstanceOf[Long], cap)
     }
     buf
   }
@@ -79,29 +66,16 @@ case class BoundedCollectAgg(
     if (buf.overflow || other.overflow) {
       buf.overflow = true
       buf.n = 0
-    } else if (dedup) {
-      // set union with the same overflow-iff-distinct-size>cap contract
-      var i = 0
-      while (i < other.n && !buf.overflow) {
-        buf.appendDistinct(other.ids(i), cap); i += 1
-      }
-    } else if (buf.n.toLong + other.n.toLong > cap) {
-      buf.overflow = true
-      buf.n = 0
     } else {
       var i = 0
-      while (i < other.n) { buf.append(other.ids(i), cap); i += 1 }
+      while (i < other.n && !buf.overflow) { buf.add(other.ids(i), cap); i += 1 }
     }
     buf
   }
 
   override def eval(buf: BoundedCollectAgg.Buf): Any =
     if (buf.overflow) null
-    else {
-      val out = java.util.Arrays.copyOf(buf.ids, buf.n)
-      if (!dedup) java.util.Arrays.sort(out) // dedup buffers stay sorted
-      new GenericArrayData(out)
-    }
+    else new GenericArrayData(java.util.Arrays.copyOf(buf.ids, buf.n))
 
   override def serialize(buf: BoundedCollectAgg.Buf): Array[Byte] = {
     val bb = ByteBuffer.allocate(1 + 4 + 8 * buf.n)
@@ -136,22 +110,8 @@ object BoundedCollectAgg {
     * `overflow` is set the contents are discarded and stay discarded.
     */
   final class Buf(var overflow: Boolean, var n: Int, var ids: Array[Long]) {
-    def append(v: Long, cap: Int): Unit = {
-      if (overflow) return
-      if (n == cap) { overflow = true; n = 0; ids = Array.emptyLongArray; return }
-      if (n == ids.length)
-        ids = java.util.Arrays.copyOf(ids, math.min(cap, ids.length * 2))
-      ids(n) = v
-      n += 1
-    }
-
-    /** Sorted-unique insert: duplicates are NO-OPs (they never count
-      * toward the cap), so overflow fires iff the DISTINCT member count
-      * exceeds cap — the contract that lets callers feed non-distinct
-      * inputs (e.g. banded buckets where one doc posts several shingles
-      * of the same band).
-      */
-    def appendDistinct(v: Long, cap: Int): Unit = {
+    /** Sorted-unique insert: a duplicate is a no-op. */
+    def add(v: Long, cap: Int): Unit = {
       if (overflow) return
       val pos = java.util.Arrays.binarySearch(ids, 0, n, v)
       if (pos >= 0) return
@@ -165,20 +125,10 @@ object BoundedCollectAgg {
     }
   }
 
-  /** DataFrame aggregation column: NULL when the group exceeds `cap`
-    * members, otherwise the sorted member array. Requires distinct
-    * inputs per key (see the class contract).
+  /** DataFrame aggregation column: NULL when the group has more than
+    * `cap` distinct members, otherwise its sorted distinct members.
     */
   def column(c: Column, cap: Int): Column =
     ColumnBridge.column(
       BoundedCollectAgg(ColumnBridge.expression(c), cap).toAggregateExpression())
-
-  /** Set variant: duplicates collapse in-buffer, overflow fires iff the
-    * group's DISTINCT member count exceeds `cap` — no distinct-input
-    * precondition.
-    */
-  def setColumn(c: Column, cap: Int): Column =
-    ColumnBridge.column(
-      BoundedCollectAgg(ColumnBridge.expression(c), cap, dedup = true)
-        .toAggregateExpression())
 }

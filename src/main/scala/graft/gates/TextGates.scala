@@ -468,10 +468,11 @@ object TextGates {
 
     // banded candidate stage (8× fewer reduce groups, in-buffer doc
     // dedup, band-granular viral cut — ~20% faster measured; see
-    // DedupOps.ngramJaccardPairsBanded)
+    // DedupOps.ngramJaccardPairs' bandBits)
     // band-granular replay: bands = shingle key >> BandBits, the cap
     // counts DISTINCT docs per band (the engine's in-buffer set dedup)
-    Gate("dedup_ngram_banded", overDocs(DedupOps.ngramJaccardPairsBanded(_, _)),
+    Gate("dedup_ngram_banded",
+      overDocs(DedupOps.ngramJaccardPairs(_, _, bandBits = DedupOps.BandBits)),
       ngramPairsOracleSql(DedupOps.BandBits)),
 
     // ExactSubstr dedup (Lee et al. 2022): every maximal ≥8-word run
@@ -523,8 +524,8 @@ object TextGates {
     // values, recovering near-threshold pairs banding misses; exact
     // cosine verification unchanged (extra probes add recall only).
     Gate("dedup_embedding_mp", (s, dir) =>
-      DedupOps.embeddingNearDupPairsProbed(s, t(s, dir, "embeddings")),
-      embeddingPairsOracleSql(0L +: (0 until DedupOps.EmbBandBits).map(1L << _))),
+      DedupOps.embeddingNearDupPairs(s, t(s, dir, "embeddings"), DedupOps.EmbProbes),
+      embeddingPairsOracleSql(DedupOps.EmbProbes)),
 
     // Incremental dedup over a REAL 3-micro-batch ingestion: each batch's
     // band keys meet per-bucket state in Spark's state store (count, rep,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Hashing
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 
 /** Real byte-pair-encoding tokenizer — the Spark re-expression of the
   * reference's HF `tokenizer.json` BPE load + encode/decode
@@ -142,16 +142,24 @@ object BpeOps {
   lazy val fixtureVocab: Map[String, Int] =
     vocab(FixtureAlphabet, fixtureMerges)
 
-  /** Per-doc fixture-BPE encode with exact-id-sequence fingerprint and
-    * lossless decode gate. One narrow scan, broadcast ranks,
-    * per-partition word memo.
+  /** One doc's encode: its word count, token count, order-sensitive id
+    * fingerprint and decoded text.
     */
-  def encodeDocs(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val bMerges = spark.sparkContext.broadcast(fixtureMerges)
-    val bVocab = spark.sparkContext.broadcast(fixtureVocab)
+  private final case class Encoded(nWords: Long, nTokens: Long, fp: Long, decoded: String)
+
+  /** Encode every doc of (`doc_id`, `text`) under broadcast ranks in one
+    * narrow scan with a per-partition word → (ids, decoded) memo, and
+    * build each doc's output row with `row`.
+    */
+  private def encodeEach[T: Encoder](docs: DataFrame,
+      merges: Vector[(String, String)], vocab: Map[String, Int])(
+      row: (Long, String, Encoded) => T): Dataset[T] = {
+    import docs.sparkSession.implicits._
+    val sc = docs.sparkSession.sparkContext
+    val bMerges = sc.broadcast(merges)
+    val bVocab = sc.broadcast(vocab)
     docs.select("doc_id", "text").as[(Long, String)].mapPartitions { it =>
-      val merges = bMerges.value
+      val ms = bMerges.value
       val v = bVocab.value
       val memo = scala.collection.mutable.HashMap.empty[String, (Array[Int], String)]
       it.map { case (id, text) =>
@@ -162,7 +170,10 @@ object BpeOps {
         var i = 0
         while (i < ws.length) {
           val (ids, dec) = memo.getOrElseUpdate(ws(i), {
-            val toks = encodeWord(ws(i), merges)
+            val toks = encodeWord(ws(i), ms)
+            // every token must be in-vocab or a single (fallback) char —
+            // the invariant that makes decode lossless
+            require(toks.forall(t => v.contains(t) || t.length == 1))
             (toks.map(t => v.getOrElse(t, -1)).toArray, toks.mkString)
           })
           var j = 0
@@ -174,9 +185,18 @@ object BpeOps {
           decodedWords(i) = dec
           i += 1
         }
-        val decoded = decodedWords.mkString(" ")
-        (f"d$id%010d", n, fp, if (decoded == text) 1L else 0L)
+        row(id, text, Encoded(ws.length.toLong, n, fp, decodedWords.mkString(" ")))
       }
+    }
+  }
+
+  /** Per-doc fixture-BPE encode with exact-id-sequence fingerprint and
+    * lossless decode gate.
+    */
+  def encodeDocs(spark: SparkSession, docs: DataFrame): DataFrame = {
+    import spark.implicits._
+    encodeEach(docs, fixtureMerges, fixtureVocab) { (id, text, e) =>
+      (f"d$id%010d", e.nTokens, e.fp, if (e.decoded == text) 1L else 0L)
     }.toDF("doc_id", "n_tokens", "fp", "exact")
   }
 
@@ -212,40 +232,9 @@ object BpeOps {
     val wc = corpusWordCounts(docs, LearnVocabCap)
     val merges = learnMerges(wc, LearnNumMerges)
     val alphabet = wc.flatMap(_._1).distinct.sorted
-    val v = vocab(alphabet, merges)
-    val bMerges = spark.sparkContext.broadcast(merges)
-    val bVocab = spark.sparkContext.broadcast(v)
-    docs.select("doc_id", "text").as[(Long, String)].mapPartitions { it =>
-      val ms = bMerges.value
-      val vv = bVocab.value
-      val memo = scala.collection.mutable.HashMap.empty[String, (Array[Int], String)]
-      it.map { case (id, text) =>
-        val ws = text.split(" ")
-        var n = 0L
-        var fp = 0L
-        val decodedWords = new Array[String](ws.length)
-        var i = 0
-        while (i < ws.length) {
-          val (ids, dec) = memo.getOrElseUpdate(ws(i), {
-            val toks = encodeWord(ws(i), ms)
-            // every token must be in-vocab or a single (fallback) char —
-            // the invariant that makes decode lossless
-            require(toks.forall(t => vv.contains(t) || t.length == 1))
-            (toks.map(t => vv.getOrElse(t, -1)).toArray, toks.mkString)
-          })
-          var j = 0
-          while (j < ids.length) {
-            fp = (fp * 31 + (ids(j).toLong + Hashing.FpMod)) % Hashing.FpMod
-            j += 1
-          }
-          n += ids.length
-          decodedWords(i) = dec
-          i += 1
-        }
-        val decoded = decodedWords.mkString(" ")
-        (f"d$id%010d", ws.length.toLong, n, fp,
-          if (decoded == text) 1L else 0L, Hashing.md5hex(decoded))
-      }
+    encodeEach(docs, merges, vocab(alphabet, merges)) { (id, text, e) =>
+      (f"d$id%010d", e.nWords, e.nTokens, e.fp,
+        if (e.decoded == text) 1L else 0L, Hashing.md5hex(e.decoded))
     }.toDF("doc_id", "n_words", "n_tokens", "fp", "exact", "digest")
   }
 

@@ -189,6 +189,11 @@ object DedupOps {
       numerator = 10, denominator = 7)
   }
 
+  /** Band width (bits dropped from the shingle key) of the BANDED
+    * candidate stage: 2^3 hash-adjacent shingles share one reduce group.
+    */
+  val BandBits = 3
+
   /** n-gram Jaccard via an INVERTED SHINGLE INDEX with a df cap: explode
     * distinct shingles, drop shingles with per-source document frequency
     * above `maxDf` (viral boilerplate — the skew guard), expand candidate
@@ -218,60 +223,32 @@ object DedupOps {
     * exact-set verification then judges — and the oracle mirrors the same
     * hash space, so parity is exact even in the astronomically-unlikely
     * collision case.
+    *
+    * `bandBits > 0` BANDS the candidate stage: postings group by the
+    * shingle key with the low `bandBits` bits dropped ([[BandBits]] = 3:
+    * 8× fewer reduce groups for the same exchange rows, measured ~20% off
+    * the full query wall at sf0.1, interleaved A/B both orders). A doc
+    * posting several same-band shingles counts once (the collect is a
+    * set), so the cap counts DISTINCT docs per band; it scales with the
+    * band (maxDf << bandBits) to keep the viral cut calibrated per
+    * shingle on average. The df-cut is then band-granular (a viral band
+    * drops all its shingles together) — a deliberate variant the oracle
+    * replays exactly; final pairs still pass the same exact-Jaccard
+    * verification.
     */
   def ngramJaccardPairs(spark: SparkSession, docs: DataFrame,
-                        maxDf: Int = MaxDf): DataFrame = {
+                        maxDf: Int = MaxDf, bandBits: Int = 0): DataFrame = {
     import spark.implicits._
     graft.GraftExtensions.registerFunctions(spark)
-    val ds = persistSlot("ngram",
+    val ds = persistSlot(s"ngram>>$bandBits",
       docs.selectExpr("doc_id", "graft_shingles(text) AS sh",
         "graft_shingle_keys(source, text) AS ks"))
     val inv = ds.select($"doc_id", explode($"ks").as("k"))
     // ids is sorted ascending by the aggregate, so ids[i] < ids[j] for
     // i < j — pair structs come out already in (doc_a < doc_b) order
-    val cand = inv.groupBy($"k")
-      .agg(graft.functions.BoundedCollectAgg.column($"doc_id", maxDf).as("ids"))
-      .filter($"ids".isNotNull && size($"ids") >= 2)
-      .select(explode(expr(
-        """flatten(transform(sequence(0, size(ids)-2), i ->
-          |  transform(sequence(i+1, size(ids)-1), j ->
-          |    struct(ids[i] AS doc_a, ids[j] AS doc_b))))""".stripMargin))
-        .as("p"))
-      .select($"p.doc_a", $"p.doc_b")
-      .distinct()
-    verifyJaccard(spark, cand, ds.select($"doc_id", $"sh".as("shingles")),
-      numerator = 10, denominator = 3)
-  }
-
-  /** Band width (bits dropped from the shingle key) for the BANDED
-    * candidate stage: 2^3 hash-adjacent shingles share one reduce group.
-    */
-  val BandBits = 3
-
-  /** [[ngramJaccardPairs]] with a BANDED candidate stage: postings group
-    * by the shingle key with the low [[BandBits]] bits dropped — 8×
-    * fewer reduce groups for the same exchange rows (measured ~20% off
-    * the full query wall at sf0.1, interleaved A/B both orders). A doc
-    * posting several same-band shingles dedups IN-BUFFER via the
-    * bounded-collect SET variant, so the cap counts DISTINCT docs per
-    * band; it scales with the band (maxDf << bandBits) to keep the
-    * viral cut calibrated per shingle on average. The df-cut semantics
-    * are band-granular (a viral band drops all its shingles together) —
-    * a deliberate, documented variant the oracle replays exactly;
-    * final pairs still pass the same exact-Jaccard verification.
-    */
-  def ngramJaccardPairsBanded(spark: SparkSession, docs: DataFrame,
-      maxDf: Int = MaxDf, bandBits: Int = BandBits): DataFrame = {
-    import spark.implicits._
-    graft.GraftExtensions.registerFunctions(spark)
-    val ds = persistSlot("ngram_banded",
-      docs.selectExpr("doc_id", "graft_shingles(text) AS sh",
-        "graft_shingle_keys(source, text) AS ks"))
-    val inv = ds.select($"doc_id", explode($"ks").as("k0"))
-      .select($"doc_id", shiftright($"k0", bandBits).as("k"))
-    val cand = inv.groupBy($"k")
+    val cand = inv.groupBy(shiftright($"k", bandBits).as("k"))
       .agg(graft.functions.BoundedCollectAgg
-        .setColumn($"doc_id", maxDf << bandBits).as("ids"))
+        .column($"doc_id", maxDf << bandBits).as("ids"))
       .filter($"ids".isNotNull && size($"ids") >= 2)
       .select(explode(expr(
         """flatten(transform(sequence(0, size(ids)-2), i ->
@@ -346,16 +323,30 @@ object DedupOps {
   val EmbBandBits = 4
   val EmbBands: Int = SimilarityOps.Planes / EmbBandBits
 
+  /** MULTIPROBE masks (Lv et al., "Multi-Probe LSH", VLDB 2007): the
+    * exact band value plus every Hamming-1 neighbor (xor with each
+    * single-bit mask). Two sketches whose band values differ by ≤ 2 bits
+    * then share at least one key (for distance 2, the middle value
+    * reached by flipping one differing bit on each side), so
+    * near-threshold pairs that plain banding misses become candidates.
+    */
+  val EmbProbes: Seq[Long] = 0L +: (0 until EmbBandBits).map(1L << _)
+
   /** Embedding-cosine near-duplicate pairs. CANDIDATES come from a BANDED
     * random-hyperplane LSH sketch ([[SimilarityOps.lshSketch]], Charikar
     * '02): the 16-bit sketch splits into 4 bands of 4 bits, and a pair is
-    * a candidate when it shares ANY band value within its `label` block —
+    * a candidate when it shares ANY band key within its `label` block —
     * exactly the minhash band discipline, including the [[MaxBucket]]
-    * star-cap on skewed buckets. The exchange is keyed by
-    * (band, value, label) buckets, never all-pairs-per-label: a hot label
-    * spreads over 4×16 buckets, a near-identical flood collapses into one
-    * bucket and gets the linear star. VERIFICATION is the same exact
-    * integer cosine as before:
+    * star-cap on skewed buckets. A band key is (band, band value xor a
+    * probe mask, label), one per mask in `probes`: `Seq(0L)` is plain
+    * banding, [[EmbProbes]] the multiprobe recall fix at a fixed
+    * ×(1+bits) key multiplier (5×) on the candidate exchange — bounded
+    * and scan-shaped, unlike widening the bands (which squares bucket
+    * sizes) or dropping to all-pairs. The exchange is keyed by band
+    * buckets, never all-pairs-per-label: a hot label spreads over 4×16
+    * buckets, a near-identical flood collapses into one bucket and gets
+    * the linear star. VERIFICATION is exact integer cosine, so extra
+    * probes only add recall, never false positives:
     * embeddings quantized q = floor(1000*v) (exact in both engines);
     * threshold t = 0.4 tested in EXACT integer arithmetic:
     *   cos ≥ t  ⟺  dot > 0 ∧ 25·dot² ≥ 4·na·nb      (t² = 4/25)
@@ -363,62 +354,22 @@ object DedupOps {
     * (dim 64, |q| ≤ ~530 ⇒ 25·dot² < 2^63). No float compare anywhere;
     * the oracle reproduces the sketch bit-for-bit (planeCoef is
     * md5i-derived). Banded LSH is probabilistic recall by design: pairs
-    * near the 0.4 threshold may miss every band (the trade for never
-    * scanning all pairs); identical/near-identical vectors always collide.
+    * near the 0.4 threshold may miss every probed key (the trade for
+    * never scanning all pairs); identical/near-identical vectors always
+    * collide.
     */
   def embeddingNearDupPairs(spark: SparkSession, emb: DataFrame,
-                            maxBucket: Int = MaxBucket): DataFrame = {
+      probes: Seq[Long] = Seq(0L), maxBucket: Int = MaxBucket): DataFrame = {
     import spark.implicits._
     val q = persistSlot("embedding", SimilarityOps.quantized(emb))
     val sk = SimilarityOps.lshSketch(spark, emb)
       .join(q.select($"vec_id", $"label"), "vec_id")
-    val bands = sk
-      .select($"vec_id", $"label", $"sketch",
-        explode(sequence(lit(0), lit(EmbBands - 1))).as("b"))
-      .select(concat($"b", lit("|"),
-          expr(s"shiftright(sketch, b * $EmbBandBits) % ${1 << EmbBandBits}"),
-          lit("|"), $"label").as("bk"),
-        $"vec_id".as("doc_id"))
-    val cand = bandCandidates(bands, maxBucket)
-      .select($"doc_a".as("vec_a"), $"doc_b".as("vec_b"))
-    cand
-      .join(q.select($"vec_id".as("vec_a"), $"q".as("qa"), $"nsq".as("na")), "vec_a")
-      .join(q.select($"vec_id".as("vec_b"), $"q".as("qb"), $"nsq".as("nb")), "vec_b")
-      .select($"vec_a", $"vec_b",
-        SimilarityOps.dot($"qa", $"qb").as("dot"), $"na", $"nb")
-      .filter($"dot" > 0L && lit(25L) * $"dot" * $"dot" >= lit(4L) * $"na" * $"nb")
-  }
-
-  /** MULTIPROBE variant of [[embeddingNearDupPairs]] — the standard
-    * recall fix for banded sketch LSH (Lv et al., "Multi-Probe LSH",
-    * VLDB 2007): each vector emits, per band, its exact 4-bit value AND
-    * every Hamming-1 neighbor (xor with each single-bit mask). Two
-    * sketches whose band values differ by ≤ 2 bits then share at least
-    * one key (for distance 2, the middle value reached by flipping one
-    * differing bit on each side), so near-threshold pairs that banding
-    * misses become candidates. Emitted VALUES are unchanged — the exact
-    * integer-cosine verification still gates every pair, so extra probes
-    * only add recall, never false positives.
-    *
-    * Cost is a fixed ×(1+bits) key multiplier (5× here) on the candidate
-    * exchange — bounded and scan-shaped, unlike widening the bands
-    * (which squares bucket sizes) or dropping to all-pairs. The
-    * MaxBucket star-cap applies per probe key exactly as before.
-    */
-  def embeddingNearDupPairsProbed(spark: SparkSession, emb: DataFrame,
-                                  maxBucket: Int = MaxBucket): DataFrame = {
-    import spark.implicits._
-    val q = persistSlot("embedding", SimilarityOps.quantized(emb))
-    val sk = SimilarityOps.lshSketch(spark, emb)
-      .join(q.select($"vec_id", $"label"), "vec_id")
-    val masks = 0L +: (0 until EmbBandBits).map(b => (1L << b))
     val bands = sk
       .select($"vec_id", $"label", $"sketch",
         explode(sequence(lit(0), lit(EmbBands - 1))).as("b"))
       .select($"vec_id", $"label", $"b",
-        expr(s"shiftright(sketch, b * $EmbBandBits) % ${1 << EmbBandBits}").as("bv"))
-      .select($"vec_id", $"label", $"b", $"bv",
-        explode(array(masks.map(lit): _*)).as("m"))
+        expr(s"shiftright(sketch, b * $EmbBandBits) % ${1 << EmbBandBits}").as("bv"),
+        explode(array(probes.map(lit): _*)).as("m"))
       .select(concat($"b", lit("|"), expr("bv ^ m"), lit("|"), $"label").as("bk"),
         $"vec_id".as("doc_id"))
     val cand = bandCandidates(bands, maxBucket)
@@ -458,7 +409,7 @@ object DedupOps {
     * groups postings by window key under the bounded collect (buffers
     * capped at [[SubstrMaxOcc]] longs even under a boilerplate flood,
     * overflow ⇒ NULL ⇒ dropped — the [[graft.functions.BoundedCollectAgg]]
-    * df-cut, exact because (doc,pos) postings are distinct per key);
+    * df-cut over the key's distinct (doc,pos) postings);
     * keys held by ≥ 2 distinct docs explode back to duplicated
     * positions; a per-doc window pass (exchange keyed by doc_id —
     * doc-sized partitions) merges overlapping/adjacent windows

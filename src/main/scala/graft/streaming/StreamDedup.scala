@@ -82,24 +82,29 @@ object StreamDedup {
   /** Driver-verify entry: stage `docs` as `nBatches` contiguous doc_id
     * ranges (arrival order == id order), stream them one file per trigger
     * through [[prefixCapPairs]] into a memory sink, then exact-verify the
-    * candidate pairs.
+    * candidate pairs. An empty frame stages nothing and has no pairs.
     */
   def streamingMinhashPairs(spark: SparkSession, docs: DataFrame,
       nBatches: Int = 3, maxBucket: Int = DedupOps.MaxBucket): DataFrame = {
+    import spark.implicits._
+    graft.GraftExtensions.registerFunctions(spark)
     // staging reads slim 4x (max-id + three range filters) and the final
     // verify twice more — cache it in a managed slot (same fix that cut
     // the ev_stream_* staging walls; the slot unpersists on re-invoke)
     val slim = DedupOps.persistSlot("stream_slim",
       docs.select(col("doc_id").cast("long").as("doc_id"), col("text")))
-    val maxId = slim.agg(max(col("doc_id"))).head().getLong(0)
-    val parts = (0 until nBatches).map { i =>
-      val lo = (maxId + 1) * i / nBatches
-      val hi = if (i == nBatches - 1) maxId + 1 else (maxId + 1) * (i + 1) / nBatches
-      slim.filter(col("doc_id") >= lo && col("doc_id") < hi)
+    val top = slim.agg(max(col("doc_id"))).head()
+    val pairs = if (top.isNullAt(0)) spark.emptyDataset[Pair].toDF() else {
+      val maxId = top.getLong(0)
+      val parts = (0 until nBatches).map { i =>
+        val lo = (maxId + 1) * i / nBatches
+        val hi = if (i == nBatches - 1) maxId + 1 else (maxId + 1) * (i + 1) / nBatches
+        slim.filter(col("doc_id") >= lo && col("doc_id") < hi)
+      }
+      StreamingExtract.runToMemory(spark,
+        StreamingExtract.stageOrderedParts(spark, parts), 1, OutputMode.Append())(
+        prefixCapPairs(_, maxBucket))
     }
-    val pairs = StreamingExtract.runToMemory(spark,
-      StreamingExtract.stageOrderedParts(spark, parts), 1, OutputMode.Append())(
-      prefixCapPairs(_, maxBucket))
     val sets = slim.selectExpr("doc_id", "graft_shingles(text) AS shingles")
     DedupOps.verifyJaccard(spark, pairs.distinct(), sets,
       numerator = 10, denominator = 7)

@@ -166,7 +166,7 @@ class OpsSpec extends AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     val banded = pairs(DedupOps.embeddingNearDupPairs(spark, emb))
-    val probed = pairs(DedupOps.embeddingNearDupPairsProbed(spark, emb))
+    val probed = pairs(DedupOps.embeddingNearDupPairs(spark, emb, DedupOps.EmbProbes))
     // exact ground truth: all within-label pairs through the same
     // integer-cosine gate (quantized q, 25·dot² >= 4·na·nb)
     val q = SimilarityOps.quantized(emb)
@@ -274,22 +274,18 @@ class OpsSpec extends AnyFunSuite {
   test("bounded collect SET: duplicates never count toward the cap") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    // 100 distinct ids, each posted 20 times, across 64 partitions: the
-    // plain variant overflows (2000 postings > cap), the set variant
-    // collapses duplicates in-buffer and across partial merges
+    // 100 distinct ids, each posted 20 times, across 64 partitions: 2000
+    // postings > cap, but duplicates collapse in-buffer and across
+    // partial merges
     val dup = spark.range(0, 2000).repartition(64)
       .select(lit(1L).as("k"), ($"id" % 100).as("id"))
-    val plain = dup.groupBy($"k")
+    val set = dup.groupBy($"k")
       .agg(graft.functions.BoundedCollectAgg.column($"id", 150).as("ids"))
       .select($"ids").as[Option[Seq[Long]]].head()
-    assert(plain.isEmpty, "duplicates trip the plain cap")
-    val set = dup.groupBy($"k")
-      .agg(graft.functions.BoundedCollectAgg.setColumn($"id", 150).as("ids"))
-      .select($"ids").as[Option[Seq[Long]]].head()
-    assert(set.contains((0L until 100L).toSeq), "set variant: sorted distinct")
-    // overflow still fires on DISTINCT size > cap
+    assert(set.contains((0L until 100L).toSeq), "sorted distinct members")
+    // overflow fires on DISTINCT size > cap
     val over = dup.groupBy($"k")
-      .agg(graft.functions.BoundedCollectAgg.setColumn($"id", 99).as("ids"))
+      .agg(graft.functions.BoundedCollectAgg.column($"id", 99).as("ids"))
       .select($"ids").as[Option[Seq[Long]]].head()
     assert(over.isEmpty, "100 distinct with cap 99 must overflow")
   }
@@ -304,10 +300,28 @@ class OpsSpec extends AnyFunSuite {
       .toDF("doc_id", "source", "text")
     val a = DedupOps.ngramJaccardPairs(spark, docs)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val b = DedupOps.ngramJaccardPairsBanded(spark, docs)
+    val b = DedupOps.ngramJaccardPairs(spark, docs, bandBits = DedupOps.BandBits)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(a.nonEmpty && a == b,
       "band-granular cut must agree when no band is viral")
+  }
+
+  test("every pair-emitting dedup operator returns no rows on an empty frame") {
+    import spark.implicits._
+    val docs = Seq.empty[(Long, String, String)].toDF("doc_id", "source", "text")
+    val emb = Seq.empty[(Long, Array[Float], Int)].toDF("vec_id", "embedding", "label")
+    val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "minhashPairs" -> (() => DedupOps.minhashPairs(spark, docs)),
+      "ngramJaccardPairs" -> (() => DedupOps.ngramJaccardPairs(spark, docs)),
+      "ngramJaccardPairs banded" -> (() =>
+        DedupOps.ngramJaccardPairs(spark, docs, bandBits = DedupOps.BandBits)),
+      "embeddingNearDupPairs" -> (() => DedupOps.embeddingNearDupPairs(spark, emb)),
+      "embeddingNearDupPairs probed" -> (() =>
+        DedupOps.embeddingNearDupPairs(spark, emb, DedupOps.EmbProbes)),
+      "exactSubstrSpans" -> (() => DedupOps.exactSubstrSpans(spark, docs)),
+      "streamingMinhashPairs" -> (() =>
+        graft.streaming.StreamDedup.streamingMinhashPairs(spark, docs)))
+    for ((name, op) <- ops) assert(op().count() == 0L, name)
   }
 
   test("lsh sketch: identical vectors identical sketch, deterministic coef") {

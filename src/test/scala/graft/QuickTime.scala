@@ -83,44 +83,6 @@ object QuickTime {
               size(array_intersect($"sh_a", $"sh_b")).cast("long").as("jacc_i"),
               size(array_union($"sh_a", $"sh_b")).cast("long").as("jacc_u"))
             .filter($"jacc_i" * 10 >= $"jacc_u" * 3)
-        } else if (name == "x_ngram_banded") { (s, dir) =>
-          // BANDED candidate stage experiment: group by the shingle hash
-          // with the low `b` bits dropped (8× fewer reduce groups), cap
-          // scaled by 2^b. Duplicate (band, doc) postings make the cap
-          // approximate — measurement ceiling only, NOT the shipped
-          // semantics (see ROUND_NOTES).
-          import s.implicits._
-          import org.apache.spark.sql.functions._
-          graft.GraftExtensions.registerFunctions(s)
-          val b = 3
-          val ds = s.read.parquet(s"$dir/documents.parquet")
-            .selectExpr("doc_id", "graft_shingles(text) AS sh",
-              "graft_shingle_keys(source, text) AS ks")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val inv = ds.select($"doc_id", explode($"ks").as("k0"))
-            .select($"doc_id", shiftright($"k0", b).as("k"))
-          val cand = inv.groupBy($"k")
-            .agg(graft.functions.BoundedCollectAgg
-              .column($"doc_id", graft.operators.DedupOps.MaxDf << b).as("ids"))
-            .filter($"ids".isNotNull && size($"ids") >= 2)
-            .select(explode(expr(
-              """flatten(transform(sequence(0, size(ids)-2), i ->
-                |  transform(sequence(i+1, size(ids)-1), j ->
-                |    struct(ids[i] AS doc_a, ids[j] AS doc_b))))""".stripMargin))
-              .as("p"))
-            .select($"p.doc_a", $"p.doc_b")
-            .filter($"doc_a" =!= $"doc_b")
-            .distinct()
-          val sides = cand.select($"doc_a", $"doc_b",
-            explode(array($"doc_a", $"doc_b")).as("doc_id"))
-          sides.join(ds.select($"doc_id", $"sh"), "doc_id")
-            .groupBy($"doc_a", $"doc_b")
-            .agg(first(when($"doc_id" === $"doc_a", $"sh"), ignoreNulls = true).as("sh_a"),
-                 first(when($"doc_id" === $"doc_b", $"sh"), ignoreNulls = true).as("sh_b"))
-            .select($"doc_a", $"doc_b",
-              size(array_intersect($"sh_a", $"sh_b")).cast("long").as("jacc_i"),
-              size(array_union($"sh_a", $"sh_b")).cast("long").as("jacc_u"))
-            .filter($"jacc_i" * 10 >= $"jacc_u" * 3)
         } else if (name == "x_ngram_cand") { (s, dir) =>
           // candidate-generation subplan of dedup_ngram, for profiling
           import s.implicits._
