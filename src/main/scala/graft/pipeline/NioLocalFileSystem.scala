@@ -11,7 +11,7 @@ import java.nio.file.attribute.PosixFilePermission
   *
   * Without libhadoop, `RawLocalFileSystem.setPermission` forks `chmod`
   * for every file and dir a write creates: 3 per written bucket (the
-  * task-attempt `bucket=<i>` dir, the data file and its `.crc`). Here the
+  * `bucket=<i>` dir, the data file and its `.crc`). Here the
   * nine rwx bits are set in-process, to the same mode. Any other bit
   * (sticky) takes Hadoop's own path. Where NativeIO is loaded, Hadoop
   * already chmods in-process, and this changes nothing but the call.
@@ -38,12 +38,13 @@ object NioLocalFileSystem {
     perms
   }
 
-  /** Writer options that put a write's `file:` paths on this FS. Spark
-    * adds a file source's writer options to the write job's Hadoop conf;
-    * the cache bypass is required, because Hadoop caches a FileSystem by
-    * scheme, authority and user, never by conf, and would hand back the
-    * session's cached LocalFileSystem. Reads, the session conf and other
-    * schemes are untouched.
+  /** Hadoop conf entries that put a write's `file:` paths on this FS.
+    * TableIO's table writer adds them to the session's Hadoop conf for
+    * the conf its files are written under; the cache bypass is required,
+    * because Hadoop caches a FileSystem by scheme, authority and user,
+    * never by conf, and would hand back the session's cached
+    * LocalFileSystem. Reads, the session conf and other schemes are
+    * untouched.
     */
   val WriterOptions: Map[String, String] = Map(
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,

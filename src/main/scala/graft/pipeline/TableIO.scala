@@ -4,13 +4,19 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectM
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.pipeline.Extraction.ExtractedRow
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, TableCapability}
+import org.apache.spark.sql.connector.distributions.Distributions
+import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
+import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources._
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
@@ -69,17 +75,22 @@ import scala.util.Using
   * ([[readTable]], [[readMerged]], [[compact]]) reads the files
   * [[visibleFiles]] lists.
   *
-  * One write ([[writeBuckets]]) lands all data, and it is ONE query: the
-  * rows clustered by bucket, with every bucket's stats (counts, bytes,
-  * checksum, key bounds, Bloom words) observed by `Dataset.observe` as they
-  * stream into the writer. Nothing re-reads the written files; a listing
-  * of each written bucket's dir supplies the metadata's file list.
+  * One write ([[writeBuckets]]) lands all data, and it is ONE query: a
+  * DSv2 append into a write-only table ([[BucketTable]]) that requires
+  * its rows clustered and sorted by bucket. Each task writes each of its
+  * buckets to one file in place and counts the bucket's stats (counts,
+  * bytes, checksum, key bounds, Bloom words) from the rows it writes; its
+  * commit message carries the files and stats to the driver. Nothing
+  * re-reads or lists the written files, and nothing stages or renames
+  * them.
   *
-  * Resume = anti-filter of input buckets against committed manifests; the
-  * write uses dynamic partition overwrite so a bucket interrupted between
-  * data-append and manifest-commit is rewritten whole on the next run
-  * (partial files never double-count). Only buckets the run wrote rows to
-  * are committed: a stale bucket dir it wrote nothing to stays invisible.
+  * Resume = anti-filter of input buckets against committed manifests.
+  * A bucket interrupted between data write and manifest commit is
+  * rewritten whole on the next run that writes rows to it: the write
+  * deletes every entry of the bucket's dir but its new file, so partial
+  * files of a killed run, whose names no manifest lists, never
+  * double-count. Only buckets the run wrote rows to are committed: a
+  * stale bucket dir it wrote nothing to stays invisible.
   * Rows from [[Extraction.extractRowsWith]] declare their bucket count n
   * in the `bucket` field's metadata; each manifest records it, a run with
   * another n is rejected before it writes, and a run whose buckets 0..n-1
@@ -92,7 +103,7 @@ import scala.util.Using
   * 64-bucket commit). The files, modes and `.crc` sidecars are the same;
   * reads use the session's FS. At cluster scale the same protocol runs
   * over any Hadoop FileSystem with atomic rename (HDFS) — the seam is this
-  * object, and the writer options touch only `file:` paths.
+  * object, and the writer conf touches only `file:` paths.
   */
 object TableIO {
 
@@ -197,107 +208,119 @@ object TableIO {
 
   private def dataDir(outDir: String): String = s"$outDir/data"
 
-  /** The data files of `dir/bucket=<b>`, relative to `dir`, in name order.
-    * None raises: a dir is listed only after a write put rows in it.
+  /** One bucket's manifest stats, counted by the task that writes it:
+    * its one data file (relative to the write's dir), lineage counts, an
+    * order-insensitive checksum (XOR of per-doc FNV checksums), doc_id key
+    * bounds (the Iceberg column-stats analog [[readCommittedPruned]] skips
+    * buckets by) and doc_id Bloom words (the puffin-blob analog
+    * [[readCommittedPrunedByIds]] skips buckets by, even under the hash
+    * layout, where bounds can't prune). The words share the 64×63-bit
+    * format and hash family of the bloom_semijoin filter, so the DuckDB
+    * oracle replays membership bit for bit.
     */
-  private def bucketFiles(dir: String, b: Int): Seq[String] = {
-    val files = listNames(Paths.get(dir, s"bucket=$b"), "", ".parquet").sorted
-    if (files.isEmpty) throw new IllegalStateException(
-      s"bucket $b: $dir/bucket=$b holds no data files")
-    files.map(f => s"bucket=$b/$f")
-  }
+  private[pipeline] final case class BucketStats(bucket: Int, file: String, var docCount: Long = 0L,
+      var spanCount: Long = 0L, var bytes: Long = 0L, var spanChecksum: Long = 0L,
+      var minDoc: UTF8String = null, var maxDoc: UTF8String = null,
+      bloom: Array[Long] = new Array[Long](graft.operators.SketchOps.BloomWords))
 
-  /** One bucket's manifest stats, as the write observed them: lineage
-    * counts, an order-insensitive checksum (XOR of per-doc FNV
-    * checksums), doc_id key bounds (the Iceberg column-stats analog
-    * [[readCommittedPruned]] skips buckets by) and doc_id Bloom words (the
-    * puffin-blob analog [[readCommittedPrunedByIds]] skips buckets by,
-    * even under the hash layout, where bounds can't prune). The words
-    * share the 64×63-bit format and hash family of the bloom_semijoin
-    * filter, so the DuckDB oracle replays membership bit for bit. Field
-    * names are the manifest keys.
+  /** A write task's commit message: the stats of each bucket it wrote. */
+  private final case class Written(buckets: Seq[BucketStats]) extends WriterCommitMessage
+
+  /** The task side of [[BucketTable]]. Rows arrive sorted by bucket; each
+    * bucket's rows go, without the `bucket` column, to one parquet file
+    * `bucket=<b>/part-<partition>-<write id>-<task attempt id><ext>` written in
+    * place under `dir`, one open file at a time, while the bucket's
+    * [[BucketStats]] are counted from the same rows. Null doc_ids set no
+    * bound and no bit, like Spark's `min`/`max` and
+    * [[graft.operators.SketchOps.bloomBuild]]; bounds compare as UTF-8
+    * bytes, the order of Spark's string `min`/`max`. An aborted attempt
+    * deletes its files.
     */
-  private[pipeline] final case class BucketStats(bucket: Int, var doc_count: Long,
-      var span_count: Long, var bytes: Long, var span_checksum: Long,
-      var min_doc: String, var max_doc: String, bloom: Array[Long])
+  private final case class BucketWriters(dir: String, writeId: String, schema: StructType,
+      conf: org.apache.spark.util.SerializableConfiguration, files: OutputWriterFactory)
+      extends DataWriterFactory {
+    def createWriter(partition: Int, taskId: Long): DataWriter[InternalRow] =
+      new DataWriter[InternalRow] {
+        private val Seq(bucketAt, spansAt, bytesAt, sumAt, idAt) =
+          Seq("bucket", "span_count", "bytes", "checksum", "doc_id").map(schema.fieldIndex)
+        private val data = ProjectingInternalRow(dataSchema(schema), schema.indices.diff(Seq(bucketAt)))
+        private val context = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+          conf.value, new org.apache.hadoop.mapreduce.TaskAttemptID())
+        private val name = s"part-$partition-$writeId-$taskId${files.getFileExtension(context)}"
+        private val done = scala.collection.mutable.ArrayBuffer.empty[BucketStats]
+        private lazy val fs = new HPath(dir).getFileSystem(conf.value)
+        private var out: OutputWriter = null
 
-  /** `a` before `b` in UTF-8 byte order (code-point order), the order of
-    * Spark's string `min`/`max`: a surrogate (a code point above U+FFFF)
-    * sorts after every other UTF-16 unit.
-    */
-  private def utf8Before(a: String, b: String): Boolean = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
-    if (i == n) a.length < b.length
-    else {
-      val (x, y) = (a.charAt(i), b.charAt(i))
-      if (Character.isSurrogate(x) == Character.isSurrogate(y)) x < y
-      else Character.isSurrogate(y)
-    }
-  }
-
-  /** Every bucket's [[BucketStats]] as one typed aggregate over
-    * (bucket, span_count, bytes, checksum, doc_id) rows. The buffer is
-    * indexed by bucket id (null = no row yet); the output lists the
-    * buckets seen, in bucket order. Null doc_ids set no bound and no bit,
-    * like Spark's `min`/`max` and [[graft.operators.SketchOps.bloomBuild]].
-    */
-  private object BucketStatsAgg extends Aggregator[(Int, Int, Long, Long, String),
-      Array[BucketStats], Array[BucketStats]] {
-    private type In = (Int, Int, Long, Long, String)
-    def zero: Array[BucketStats] = Array.empty
-
-    /** Widen `s`'s doc_id bounds to take in [lo, hi] (null: no id). */
-    private def widen(s: BucketStats, lo: String, hi: String): Unit = {
-      if (lo != null && (s.min_doc == null || utf8Before(lo, s.min_doc))) s.min_doc = lo
-      if (hi != null && (s.max_doc == null || utf8Before(s.max_doc, hi))) s.max_doc = hi
-    }
-
-    /** `buf` with a slot for bucket `b`. */
-    private def slotFor(buf: Array[BucketStats], b: Int): Array[BucketStats] = {
-      if (b < 0) throw new IllegalArgumentException(s"bucket $b: bucket ids are >= 0")
-      if (b < buf.length) buf else java.util.Arrays.copyOf(buf, b + 1)
-    }
-
-    def reduce(buf: Array[BucketStats], r: In): Array[BucketStats] = {
-      val (b, spans, bytes, checksum, id) = r
-      val out = slotFor(buf, b)
-      if (out(b) == null) out(b) = BucketStats(b, 0L, 0L, 0L, 0L, null, null,
-        new Array[Long](graft.operators.SketchOps.BloomWords))
-      val s = out(b)
-      s.doc_count += 1; s.span_count += spans; s.bytes += bytes
-      s.span_checksum ^= checksum
-      if (id != null) {
-        widen(s, id, id)
-        graft.operators.SketchOps.bloomAdd(s.bloom, id)
-      }
-      out
-    }
-
-    def merge(a: Array[BucketStats], b: Array[BucketStats]): Array[BucketStats] = {
-      val out = if (b.length > a.length) slotFor(a, b.length - 1) else a
-      b.indices.foreach { i =>
-        val (x, y) = (out(i), b(i))
-        if (x == null) out(i) = y
-        else if (y != null) {
-          x.doc_count += y.doc_count; x.span_count += y.span_count
-          x.bytes += y.bytes; x.span_checksum ^= y.span_checksum
-          widen(x, y.min_doc, y.max_doc)
-          var w = 0
-          while (w < x.bloom.length) { x.bloom(w) |= y.bloom(w); w += 1 }
+        def write(row: InternalRow): Unit = {
+          val b = row.getInt(bucketAt)
+          if (done.isEmpty || done.last.bucket != b) {
+            close(); done += BucketStats(b, s"bucket=$b/$name")
+            out = files.newInstance(s"$dir/bucket=$b/$name", data.schema, context)
+          }
+          val s = done.last
+          s.docCount += 1; s.spanCount += row.getInt(spansAt); s.bytes += row.getLong(bytesAt)
+          s.spanChecksum ^= row.getLong(sumAt)
+          if (!row.isNullAt(idAt)) {
+            val id = row.getUTF8String(idAt)
+            if (s.minDoc == null || id.binaryCompare(s.minDoc) < 0) s.minDoc = id.clone()
+            if (s.maxDoc == null || id.binaryCompare(s.maxDoc) > 0) s.maxDoc = id.clone()
+            graft.operators.SketchOps.bloomAdd(s.bloom, id.toString)
+          }
+          data.project(row); out.write(data)
         }
-      }
-      out
-    }
 
-    def finish(buf: Array[BucketStats]): Array[BucketStats] = buf.filter(_ != null)
-    def bufferEncoder: Encoder[Array[BucketStats]] = ExpressionEncoder[Array[BucketStats]]()
-    def outputEncoder: Encoder[Array[BucketStats]] = ExpressionEncoder[Array[BucketStats]]()
+        def commit(): WriterCommitMessage = { close(); Written(done.toSeq) }
+        def abort(): Unit = { close(); done.foreach(s => fs.delete(new HPath(dir, s.file), false)) }
+        def close(): Unit = if (out != null) { out.close(); out = null }
+      }
   }
 
-  private lazy val bucketStats =
-    udaf(BucketStatsAgg, Encoders.product[(Int, Int, Long, Long, String)])
+  /** `schema` without the `bucket` column: a data file's schema. */
+  private def dataSchema(schema: StructType) = StructType(schema.filterNot(_.name == "bucket"))
+
+  /** The one data write, as a DSv2 table over `dir`: rows of `schema`
+    * land under `dir/bucket=<b>/`. The write requires its rows clustered
+    * and sorted by bucket, so Spark plans one exchange and a per-task
+    * sort, every bucket lands in one task, and each task writes one file
+    * per bucket ([[BucketWriters]]). The files' Hadoop conf is the
+    * session's plus [[NioLocalFileSystem.WriterOptions]]. [[commit]] takes
+    * the tasks' messages: `written` is every bucket's stats, in bucket
+    * order. Then each written bucket's dir loses every entry but its new
+    * file and `.crc`: the files of a killed or failed earlier attempt at
+    * the bucket, which no manifest lists (the Iceberg `remove_orphan_files`
+    * analog).
+    */
+  private final class BucketTable(spark: SparkSession, dir: String, override val schema: StructType)
+      extends SupportsWrite with WriteBuilder with RequiresDistributionAndOrdering with BatchWrite {
+    private var written = Seq.empty[BucketStats]
+    def append(rows: DataFrame): Seq[BucketStats] = { ColumnBridge.append(this, rows); written }
+    def name: String = dir
+    def capabilities = java.util.EnumSet.of(TableCapability.BATCH_WRITE)
+    def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = this
+    override def build: Write = this
+    override def toBatch: BatchWrite = this
+    def requiredDistribution = Distributions.clustered(Array(Expressions.column("bucket")))
+    def requiredOrdering = Array(Expressions.sort(Expressions.column("bucket"), SortDirection.ASCENDING))
+
+    def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+      val format = new ParquetFileFormat
+      val job = org.apache.hadoop.mapreduce.Job.getInstance(
+        format.getHadoopConf(spark, NioLocalFileSystem.WriterOptions))
+      val files = format.prepareWrite(spark, job, Map.empty, dataSchema(schema))
+      BucketWriters(dir, java.util.UUID.randomUUID.toString, schema,
+        new org.apache.spark.util.SerializableConfiguration(job.getConfiguration), files)
+    }
+
+    def commit(messages: Array[WriterCommitMessage]): Unit = {
+      written = messages.toSeq.flatMap { case Written(s) => s }.sortBy(_.bucket)
+      require(written.map(_.bucket).distinct.size == written.size, s"$dir: a bucket in two messages")
+      for (s <- written; f = Paths.get(dir, s.file); n <- listNames(f.getParent, "", "")
+           if n.stripPrefix(".").stripSuffix(".crc") != f.getFileName.toString)
+        deleteRecursively(f.resolveSibling(n))
+    }
+
+    def abort(messages: Array[WriterCommitMessage]): Unit = ()
+  }
 
   private lazy val rowEncoder = Encoders.product[ExtractedRow]
   private def baseSchema: StructType = rowEncoder.schema
@@ -360,36 +383,25 @@ object TableIO {
     (df.filter(rows).as(rowEncoder), live.size, manifests.size)
   }
 
-  /** The one data write: `rows` clustered by bucket into parquet under
-    * `dir/bucket=<i>/`, overwriting `dir` (with `dynamic`, only the buckets
-    * written). Clustering BEFORE partitionBy makes each task write whole
-    * buckets; unclustered, every task opens a writer per bucket (tasks ×
-    * buckets tiny files — a small-file explosion at scale). Each bucket's
-    * [[BucketStats]] are observed on the rows as they stream into the
-    * writer. The observe sits after the exchange, in the write job's result
-    * stage, where Spark merges each partition's update exactly once: a
-    * failed or retried task attempt never counts. Files and dirs land
-    * through [[NioLocalFileSystem]]: the same modes and `.crc` sidecars,
-    * with no `chmod` forked per file. Returns each written bucket's stats
-    * with its files (relative to `dir`), in bucket order.
+  /** The one data write: `rows` as one DSv2 append into a
+    * [[BucketTable]] over `dir`, one query. Each bucket's rows land in one
+    * file, written in place under `dir/bucket=<i>/` while its
+    * [[BucketStats]] are counted from the same rows; the tasks' commit
+    * messages, not a listing or a re-read, say which files and stats the
+    * write made. A failed task attempt deletes its files; a retried one
+    * names its files with its own attempt, and only the committed
+    * attempt's message counts. Returns each written bucket's stats, in
+    * bucket order.
     */
-  private def writeBuckets(rows: DataFrame, dir: String,
-      dynamic: Boolean = false): Seq[(Row, Seq[String])] = {
-    val observed = Observation()
-    rows.repartition(col("bucket"))
-      .observe(observed, bucketStats(col("bucket"), col("span_count"), col("bytes"),
-        col("checksum"), col("doc_id")).as("stats"))
-      .write.mode(SaveMode.Overwrite)
-      .options(NioLocalFileSystem.WriterOptions)
-      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
-      .partitionBy("bucket")
-      .parquet(dir)
-    observed.get("stats").asInstanceOf[Seq[Row]]
-      .map(s => s -> bucketFiles(dir, s.getAs[Int]("bucket")))
-  }
+  private def writeBuckets(rows: DataFrame, dir: String): Seq[BucketStats] =
+    new BucketTable(rows.sparkSession, dir, rows.schema).append(rows)
 
   /** Resumable bucketed write. Returns the number of buckets written this
     * run (0 on a fully-committed rerun — idempotent no-op).
+    *
+    * The rows of uncommitted buckets go through the one [[writeBuckets]]
+    * query; then each written bucket's manifest (its file and stats, as
+    * its task's commit message carried them) and last the marker land.
     *
     * When `rows` declare their bucket count n ([[Extraction.bucketCount]]),
     * every manifest written records it, and rows whose n differs from a
@@ -412,27 +424,24 @@ object TableIO {
       throw new IllegalArgumentException(s"$outDir: the rows hold $k buckets, but " +
         s"bucket ${m.bucket} was committed with ${m.buckets.get}; resume with ${m.buckets.get}")
     val t0 = System.nanoTime()
-    // The one query, unless no row can be written. Dynamic partition
-    // overwrite replaces only buckets present in `todo`; committed
-    // buckets' data is untouched. Only buckets the write observed get a
-    // manifest; a stale dir of a killed run that this run wrote no row to
-    // stays uncommitted.
+    // The one query, unless no row can be written. It writes only buckets
+    // present in `todo`; committed buckets' dirs are untouched. Only
+    // buckets the write wrote rows to get a manifest; a stale dir of a
+    // killed run that this run wrote no row to stays uncommitted.
     val written =
       if (n.exists(k => (0 until k).forall(done))) Seq.empty
       else {
         val todo = if (done.isEmpty) rows
                    else rows.filter(!col("bucket").isin(done.toSeq: _*))
-        writeBuckets(todo.toDF(), dataDir(outDir), dynamic = true)
+        writeBuckets(todo.toDF(), dataDir(outDir))
       }
     val wallMs = (System.nanoTime() - t0) / 1000000
-    written.foreach { case (s, files) =>
-      val b = s.getAs[Int]("bucket")
-      Meta.write(manifestPath(outDir, b), Seq("snapshot" -> snapshot, "bucket" -> b,
-        "doc_count" -> s.getAs[Long]("doc_count"), "span_count" -> s.getAs[Long]("span_count"),
-        "bytes" -> s.getAs[Long]("bytes"), "wall_ms" -> wallMs,
-        "span_checksum" -> s.getAs[Long]("span_checksum"),
-        "min_doc" -> s.getAs[String]("min_doc"), "max_doc" -> s.getAs[String]("max_doc"),
-        "bloom" -> s.getAs[Seq[Long]]("bloom"), "files" -> files) ++
+    written.foreach { s =>
+      Meta.write(manifestPath(outDir, s.bucket), Seq("snapshot" -> snapshot, "bucket" -> s.bucket,
+        "doc_count" -> s.docCount, "span_count" -> s.spanCount, "bytes" -> s.bytes,
+        "wall_ms" -> wallMs, "span_checksum" -> s.spanChecksum,
+        "min_doc" -> Option(s.minDoc).map(_.toString), "max_doc" -> Option(s.maxDoc).map(_.toString),
+        "bloom" -> s.bloom, "files" -> Seq(s.file)) ++
         n.map("buckets" -> _): _*)
     }
     // `todo` holds no committed bucket, so the two sets are disjoint
@@ -464,13 +473,13 @@ object TableIO {
       "then write with the full current schema")
     val mpath = manifestDir(outDir).resolve(s"batch-$batchId.json")
     if (Files.exists(mpath)) return false
-    // replay-safe: the batch dir is replaced whole, never appended to
+    // replay-safe: a replay's files replace a dead attempt's in each
+    // bucket it writes, and the manifest lists only the replay's
     val written = writeBuckets(rows.toDF(), s"${dataDir(outDir)}/batch=$batchId")
-    val stats = written.map(_._1)
     Meta.write(mpath, "table_schema" -> currentTableSchemaVersion(outDir),
-      "batch" -> batchId, "doc_count" -> stats.map(_.getAs[Long]("doc_count")).sum,
-      "span_count" -> stats.map(_.getAs[Long]("span_count")).sum,
-      "files" -> written.flatMap(_._2.map(f => s"batch=$batchId/$f")))
+      "batch" -> batchId, "doc_count" -> written.map(_.docCount).sum,
+      "span_count" -> written.map(_.spanCount).sum,
+      "files" -> written.map(s => s"batch=$batchId/${s.file}"))
     true
   }
 
@@ -576,10 +585,9 @@ object TableIO {
     */
   private def writeCompaction(outDir: String, snapshot: Long, rows: DataFrame,
       batches: Seq[Long], snaps: Seq[Long]): Unit = {
-    val written = writeBuckets(rows, compactedDir(outDir, snapshot).toString)
+    val files = writeBuckets(rows, compactedDir(outDir, snapshot).toString).map(_.file)
     Meta.write(compactionPath(outDir, snapshot), "snapshot" -> snapshot,
-      "superseded" -> batches.sorted, "superseded_snapshots" -> snaps.sorted,
-      "files" -> written.flatMap(_._2))
+      "superseded" -> batches.sorted, "superseded_snapshots" -> snaps.sorted, "files" -> files)
     Meta.write(markerPath(outDir), "snapshot" -> snapshot,
       "compacted_batches" -> batches.length)
   }

@@ -44,6 +44,48 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     Files.copy(real, bucket.resolve("part-stray-attempt.c000.parquet"))
   }
 
+  /** Entries under `out`'s data dir that are neither a data file some
+    * bucket manifest lists, its `.crc`, nor a dir on the path to one.
+    */
+  private def strays(out: String): Seq[Path] = {
+    val data = Path.of(out, "data")
+    val listed = TableIO.committedManifests(out).flatMap(_.files).map(data.resolve)
+    val keep = listed.flatMap(f => Seq(f, f.resolveSibling(s".${f.getFileName}.crc")) ++
+      Iterator.iterate(f.getParent)(_.getParent).takeWhile(_.startsWith(data))).toSet
+    Using.resource(Files.walk(data))(_.iterator().asScala.filterNot(keep).toSeq.sorted)
+  }
+
+  /** Each bucket manifest of `out` as JSON, without its wall and with its
+    * file count for its file names (which carry a per-write id).
+    */
+  private def manifestStats(out: String): Map[Int, String] =
+    TableIO.committedManifests(out).map { m =>
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      val node = json.readTree(Path.of(out, "manifests", s"bucket-${m.bucket}.json").toFile)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      node.remove("wall_ms")
+      node.put("files", m.files.size)
+      m.bucket -> node.toString
+    }.toMap
+
+  /** Start `main` (an object of the test sources) in a child JVM with the
+    * test JVM's classpath and `--add-opens`; its temp dir lives under
+    * `work`, so the files a killed JVM cannot clean up go with the suite's
+    * dirs, and its output goes to `work/child.log`.
+    */
+  private def forkChild(work: Path, main: Any, args: String*): Process = {
+    val childTmp = Files.createDirectory(work.resolve("tmp"))
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(_.startsWith("--add-opens"))
+    val pb = new ProcessBuilder((Seq(Path.of(System.getProperty("java.home"), "bin", "java").toString) ++
+      opens ++ Seq("-Xmx1g", s"-Djava.io.tmpdir=$childTmp", "-Dspark.ui.enabled=false",
+        "-cp", System.getProperty("java.class.path"), main.getClass.getName.stripSuffix("$")) ++
+      args): _*)
+      .directory(work.toFile).redirectErrorStream(true).redirectOutput(work.resolve("child.log").toFile)
+    Seq("_JAVA_OPTIONS", "SPARK_LOCAL_DIRS").foreach(pb.environment().remove)
+    pb.start()
+  }
+
   /** Every path under `dir` by kind (data file, its `.crc`, other file,
     * dir) with its mode.
     */
@@ -521,18 +563,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     val out = work.resolve("table").toString
     val marker = work.resolve("stalled")
     val log = work.resolve("child.log")
-    // the child's temp and Spark local dirs live under `work`, so the
-    // files a killed JVM cannot clean up go with the suite's dirs
-    val childTmp = Files.createDirectory(work.resolve("tmp"))
-    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
-      .asScala.filter(_.startsWith("--add-opens"))
-    val pb = new ProcessBuilder((Seq(Path.of(System.getProperty("java.home"), "bin", "java").toString) ++
-      opens ++ Seq("-Xmx1g", s"-Djava.io.tmpdir=$childTmp", "-Dspark.ui.enabled=false",
-        "-cp", System.getProperty("java.class.path"), KillChild.getClass.getName.stripSuffix("$"),
-        sf, out, marker.toString)): _*)
-      .directory(work.toFile).redirectErrorStream(true).redirectOutput(log.toFile)
-    Seq("_JAVA_OPTIONS", "SPARK_LOCAL_DIRS").foreach(pb.environment().remove)
-    val child = pb.start()
+    val child = forkChild(work, KillChild, sf, out, marker.toString)
     val manifests = (0 until 3).map(b => Path.of(out, "manifests", s"bucket-$b.json"))
     val committed = try {
       val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(120)
@@ -554,6 +585,29 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     assert(TableIO.writeResumable(rows, out) == Buckets - 3)
     assert(manifests.map(Files.readAllBytes(_).toSeq) == committed)
     assert(readAll(out) == expected, "resumed output differs from one clean run")
+    assert(strays(out).isEmpty, strays(out).mkString("\n"))
+  }
+
+  test("retried write task: an attempt that fails after writing a file leaves none; " +
+       "its retry commits one clean run") {
+    val clean = tmpDir()
+    TableIO.writeResumable(rows, clean)
+    val work = tempDir("graft-retry")
+    val out = work.resolve("table").toString
+    val child = forkChild(work, RetryChild, sf, out)
+    val log = work.resolve("child.log")
+    try assert(child.waitFor(180, TimeUnit.SECONDS), s"the child did not exit:\n${Files.readString(log)}")
+    finally child.destroyForcibly()
+    assert(child.exitValue == 0, Files.readString(log))
+    // the failed attempt had written a data file; its abort deleted it
+    val failed = Files.readString(log).linesIterator.collectFirst {
+      case l if l.startsWith("FAILED_AFTER ") => Path.of(l.stripPrefix("FAILED_AFTER "))
+    }
+    assert(failed.exists(_.startsWith(Path.of(out, "data"))), Files.readString(log))
+    assert(!Files.exists(failed.get) && !Files.exists(failed.get.resolveSibling(s".${failed.get.getFileName}.crc")))
+    assert(manifestStats(out) == manifestStats(clean))
+    assert(readAll(out) == readAll(clean), "a retried write differs from one clean run")
+    assert(strays(out).isEmpty, strays(out).mkString("\n"))
   }
 
   test("real fault: a run whose kernel throws commits nothing; a clean rerun equals one clean run") {
@@ -599,14 +653,15 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     }
     val input = rows
     val out = tmpDir()
-    val (written, fresh) = queries(TableIO.writeResumable(input, out))
+    val (written, fresh, freshJobs) = CommitProbe.counted(spark)(TableIO.writeResumable(input, out))
     assert(written == Buckets)
     assert(fresh.size == 1, fresh.mkString("\n---\n"))
     val write = fresh.head
-    assert(write.contains("InsertIntoHadoopFsRelationCommand"))
-    // the stats are observed above the exchange, in the write's result stage
-    val observe = write.indexOf("CollectMetrics")
-    assert(observe >= 0 && observe < write.indexOf("RepartitionByExpression"), write)
+    // one DSv2 append; its tasks count the stats, nothing observes the plan.
+    // Its jobs: the exchange's map stage (adaptive execution submits it as
+    // a job of its own) and the write
+    assert(write.startsWith("AppendData") && !write.contains("CollectMetrics"), write)
+    assert(freshJobs == 2)
     // every bucket the rows can hold is committed: the rerun runs nothing
     val (again, rerun, rerunJobs) = CommitProbe.counted(spark)(TableIO.writeResumable(input, out))
     assert(again == 0)
@@ -617,17 +672,17 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     lost.foreach(b => Files.delete(Path.of(out, "manifests", s"bucket-$b.json")))
     val (resumed, resume) = queries(TableIO.writeResumable(input, out))
     assert(resumed == lost.size)
-    assert(resume.size == 1 && resume.head.contains("InsertIntoHadoopFsRelationCommand"),
+    assert(resume.size == 1 && resume.head.startsWith("AppendData"),
       resume.mkString("\n---\n"))
     assert(TableIO.committedManifests(out).filter(_.snapshot == 3L).map(_.bucket).toSet == lost)
-    // a micro-batch append is the one observed write too: its manifest
-    // counts come from the write, not from re-reading the batch
+    // a micro-batch append is the one write too: its manifest counts come
+    // from the write's tasks, not from re-reading the batch
     val batches = tmpDir()
     val (appended, append) = queries(TableIO.appendBatchIdempotent(input, batches, 0L))
     assert(appended)
     assert(append.size == 1, append.mkString("\n---\n"))
-    assert(append.head.contains("InsertIntoHadoopFsRelationCommand") &&
-      append.head.contains("CollectMetrics"), append.head)
+    assert(append.head.startsWith("AppendData") &&
+      !append.head.contains("CollectMetrics"), append.head)
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Path.of(batches, "manifests", "batch-0.json").toFile)
     val back = TableIO.readTable(spark, batches).collect()
@@ -684,7 +739,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     // nothing, and leaves every manifest as it was
     val (again, plans, _) = CommitProbe.counted(spark)(TableIO.writeResumable(undeclared, out))
     assert(again == 0)
-    assert(plans.size == 1 && plans.head.contains("InsertIntoHadoopFsRelationCommand"),
+    assert(plans.size == 1 && plans.head.startsWith("AppendData"),
       plans.mkString("\n---\n"))
     assert(TableIO.committedManifests(out) == manifests)
     assert(TableIO.currentSnapshot(out) == 2L)
@@ -731,6 +786,7 @@ class ResumeSpec extends AnyFunSuite with TempDirs {
     assert(committedBuckets(out) == (0 until Buckets).toSet)
     assert(readAll(out).size == expected.size +
       rows.filter(_.bucket == 3).count())
+    assert(strays(out).isEmpty, strays(out).mkString("\n"))
   }
 
   test("manifest blooms: point reads skip buckets, never rows") {
@@ -790,5 +846,59 @@ object KillChild {
       Kernel.extractSpans(d)
     }
     TableIO.writeResumable(Extraction.extractRowsWith(docs, (_: Doc).doc_id, stall, Buckets), outDir)
+  }
+}
+
+/** The child JVM of ResumeSpec's retried-task test: writes the corpus at
+  * `sfDir` as a [[KillChild.Buckets]]-bucket table into `outDir` under
+  * `local[4,2]` (a failed task is retried once), with adaptive execution
+  * off and 8 shuffle partitions. Parquet's per-file encryption hook
+  * ([[FailSecondFile]]) fails the first write-task attempt 0 that opens a
+  * second data file, so the attempt fails after it has written one; the
+  * child prints `FAILED_AFTER <that file>`.
+  * Run: `RetryChild <sfDir> <outDir>`
+  */
+object RetryChild {
+  val failedAfter = new java.util.concurrent.atomic.AtomicReference[Path]()
+
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outDir) = args
+    val spark = SparkSession.builder().master("local[4,2]")
+      .config("spark.sql.adaptive.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.hadoop.parquet.crypto.factory.class", classOf[FailSecondFile].getName)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    TableIO.writeResumable(Extraction.extractRows(CorpusDerive.derive(spark, sfDir), KillChild.Buckets),
+      outDir)
+    require(failedAfter.get != null, "no write task attempt opened a second file")
+    println(s"FAILED_AFTER ${failedAfter.get}")
+    spark.stop()
+  }
+}
+
+/** Parquet calls the crypto factory as it opens each file it writes (and
+  * reads: the one key names both factories). This one encrypts and
+  * decrypts nothing; it fails the first attempt 0 of a task that has
+  * already written a file (a file of the same name under another bucket
+  * dir), remembering that file in [[RetryChild.failedAfter]].
+  */
+final class FailSecondFile extends org.apache.parquet.crypto.EncryptionPropertiesFactory
+    with org.apache.parquet.crypto.DecryptionPropertiesFactory {
+  def getFileDecryptionProperties(conf: org.apache.hadoop.conf.Configuration,
+      file: org.apache.hadoop.fs.Path): org.apache.parquet.crypto.FileDecryptionProperties = null
+
+  def getFileEncryptionProperties(conf: org.apache.hadoop.conf.Configuration,
+      file: org.apache.hadoop.fs.Path, context: org.apache.parquet.hadoop.api.WriteSupport.WriteContext)
+      : org.apache.parquet.crypto.FileEncryptionProperties = {
+    val data = Path.of(file.getParent.toUri.getPath).getParent
+    lazy val written = if (!Files.exists(data)) None
+      else Using.resource(Files.list(data))(_.iterator().asScala
+        .map(_.resolve(file.getName)).find(Files.exists(_)))
+    if (org.apache.spark.TaskContext.get.attemptNumber == 0 && written.nonEmpty &&
+        RetryChild.failedAfter.compareAndSet(null, written.get))
+      throw new java.io.IOException(s"injected write fault after ${written.get}")
+    null
   }
 }
