@@ -165,21 +165,6 @@ object Bench {
       "flood_uncapped_pairs" -> uncappedPairs.toDouble)
   }
 
-  /** Skew scenario: a "hot host" whose pages sit CONSECUTIVE in doc_id
-    * space gets `hot`× the spans per doc. The hot runs must EXCEED the
-    * partition granularity for range placement to feel them (a web-scale
-    * host's id block dwarfs one partition): ids with base % 5000 < 250
-    * give 5% of bases in contiguous runs of ~200k amplified rows ≈ one
-    * full shuffle partition of pure hot-cost rows. Row-count-balanced
-    * range boundaries cannot see the cost → stragglers; the salt term
-    * scatters them uniformly.
-    *
-    * Measurement discipline (round-3 verdict item 1): interleaved
-    * min-of-k within ONE session, BOTH orders (S,U,S,U then U,S,U,S
-    * after a two-sided warm), every raw rep reported — the same
-    * treatment the scaling ratio gets, so one steal-stolen window can't
-    * invert the committed ordering. Returns (summary-mins, raw-walls).
-    */
   /** The skew dataset + interleave pattern, shared with the standalone
     * [[graft.SkewProbe]] diagnostic so the probe can never measure a
     * different scenario than the official bench.
@@ -198,6 +183,28 @@ object Bench {
   /** Both orders: S,U,S,U then U,S,U,S (64 = salted, 1 = unsalted). */
   private[graft] val SkewPattern = Seq(64, 1, 64, 1, 1, 64, 1, 64)
 
+  /** Skew scenario: a "hot host" whose pages sit CONSECUTIVE in doc_id
+    * space gets `hot`× the spans per doc. The hot runs must EXCEED the
+    * partition granularity for range placement to feel them (a web-scale
+    * host's id block dwarfs one partition): ids with base % 5000 < 250
+    * give 5% of bases in contiguous runs of ~200k amplified rows ≈ one
+    * full shuffle partition of pure hot-cost rows. Row-count-balanced
+    * range boundaries cannot see the cost → stragglers; the salt term
+    * scatters them uniformly.
+    *
+    * Measurement discipline (round-3 verdict item 1): interleaved
+    * min-of-k within ONE session, BOTH orders (S,U,S,U then U,S,U,S
+    * after a two-sided warm), every raw rep reported — the same
+    * treatment the scaling ratio gets, so one steal-stolen window can't
+    * invert the committed ordering. Returns (summary-mins, raw-walls).
+    *
+    * The two sides differ in boundary source as well as salt. With
+    * shuffle partitions ≤ 64 (the scaling session's 64) the salted side
+    * takes salt-edge boundaries and runs no sample job, while the
+    * unsalted side (S = 1) still runs [[graft.pipeline.RangeRouter.sample]]
+    * over the skewed input. So the salted-vs-unsalted wall gap includes
+    * that sample job, not only the salt's scattering of hot runs.
+    */
   private def skewTimes(spark: SparkSession, sfDir: String, factor: Int,
       hot: Int): (Map[String, Double], Map[String, Seq[Double]]) = {
     import spark.implicits._

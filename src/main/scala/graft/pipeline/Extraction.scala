@@ -54,12 +54,15 @@ object Extraction {
     * spreads any hot doc_id range; the range layout keeps output
     * clustered by (salt, doc_id) for downstream locality.
     *
-    * Range placement uses [[RangeRouter]] (sketch boundaries from a
-    * narrow key-only pass, then ONE hash shuffle with exact partition
-    * routing) instead of `repartitionByRange`, whose RangePartitioner
-    * sampling re-executes the entire upstream — including the extraction
-    * kernel — a second time. At 100 TB that double scan is the
-    * difference between one pass and two.
+    * Range placement uses [[RangeRouter]] (range boundaries, then ONE
+    * hash shuffle with exact partition routing) instead of
+    * `repartitionByRange`, whose RangePartitioner sampling re-executes
+    * the entire upstream — including the extraction kernel — a second
+    * time. At 100 TB that double scan is the difference between one pass
+    * and two. With shufflePartitions ≤ saltBuckets the boundaries are salt
+    * edges ([[RangeRouter.saltBounds]]) and building the Dataset runs no
+    * Spark job; above it a sample job over the input (kernel not run)
+    * places boundaries inside salts.
     */
   def pipeline(docs: Dataset[Doc], shufflePartitions: Int = 0,
                saltBuckets: Int = 64): Dataset[ExtractedDoc] =
@@ -77,7 +80,7 @@ object Extraction {
 
   /** The span pipeline over raw HTML documents: the [[graft.extract.Html]]
     * streaming tokenizer + link-density boilerplate strip is the kernel,
-    * everything else (salt, sketch-routed range placement, single
+    * everything else (salt, range placement, single
     * exchange, post-shuffle markdown render) is shared with [[pipeline]].
     * This is the north star's "boilerplate stripping over a streaming DOM
     * tokenizer" as a DISTRIBUTED path, not just a per-row kernel.
@@ -97,7 +100,7 @@ object Extraction {
     *    exchange (isolates scan+derive cost / input health);
     *  - `kernel`: narrow kernel applied, NO exchange (isolates kernel cost
     *    from shuffle cost — the per-layer timing analog);
-    *  - `route`: kernel + the one sketch-routed exchange, markdown NOT
+    *  - `route`: kernel + the one range-routed exchange, markdown NOT
     *    rendered (isolates shuffle placement);
     *  - `all` (default): the full pipeline.
     * Controlled by the session conf `spark.graft.stages` so a debugging
@@ -109,8 +112,11 @@ object Extraction {
 
   /** Generic pipeline body: any document type, any narrow span kernel.
     * The plan shape is IDENTICAL for every instantiation — kernel first
-    * (narrow), one sketch-routed exchange, markdown rendered post-shuffle
+    * (narrow), one range-routed exchange, markdown rendered post-shuffle
     * (PlanShapeSpec pins it). Honors [[StagesConf]] (partial execution).
+    * Boundaries: salt edges when n ≤ `saltBuckets` (no job, no
+    * broadcast), else [[RangeRouter.sample]] + [[RangeRouter.boundaries]]
+    * (one sample job while building the Dataset).
     */
   def pipelineWith[T](docs: Dataset[T], idOf: T => String,
                       kernel: T => IndexedSeq[ExtractedSpan],
@@ -128,17 +134,20 @@ object Extraction {
       return docs.mapPartitions(_.map(d => ExtractedDoc(idOf(d), Seq.empty, "")))
     if (stage == "kernel")
       return docs.mapPartitions(_.map(d => ExtractedDoc(idOf(d), kernel(d), "")))
-    // narrow key-only sketch pass: derivation runs, kernel does NOT;
+    // n <= S: salt edges, no job. n > S: a sample job that derives and
+    // deserializes each whole T (kernel NOT run) to split inside a salt;
     // driver collect bounded by RangeRouter.SampleBudget at any split count
-    val keys = RangeRouter.sample(docs, (d: T) => RangeRouter.key(idOf(d), saltBuckets))
-    val bounds = RangeRouter.boundaries(keys, n)
+    val bounds =
+      if (n <= saltBuckets) RangeRouter.saltBounds(n, saltBuckets)
+      else RangeRouter.boundaries(
+        RangeRouter.sample(docs, (d: T) => RangeRouter.key(idOf(d), saltBuckets)), n)
     val tokens = RangeRouter.hashTokens(n)
-    val bBounds = spark.sparkContext.broadcast(bounds)
+    // bounds ride in the task binary, which Spark already broadcasts
     val routed = docs
       .mapPartitions(_.map { d =>
         val id = idOf(d)
         val k = RangeRouter.key(id, saltBuckets)
-        (tokens(RangeRouter.bucket(bBounds.value, k)), id, kernel(d))
+        (tokens(RangeRouter.bucket(bounds, k)), id, kernel(d))
       })
       .toDF("route", "doc_id", "spans")
       .repartition(n, $"route")

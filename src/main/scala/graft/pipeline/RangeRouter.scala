@@ -12,8 +12,11 @@ import scala.reflect.ClassTag
   * the extraction kernel) once for sampling and once for the real
   * shuffle. This router splits the two concerns:
   *
-  *   1. boundaries come from a cheap key-only reservoir pass (kernel not
-  *      run) collected to the driver and broadcast;
+  *   1. boundaries need no data while the partition count n is at most
+  *      the salt domain S: the salt leads the key and is a uniform hash,
+  *      so the count quantiles fall on salt edges ([[saltBounds]]). Only
+  *      n > S (splits inside one salt) runs a reservoir pass over the
+  *      input, kernel not run, collected to the driver ([[sample]]);
   *   2. each row computes its range bucket by binary search and is placed
   *      EXACTLY into that partition through one ordinary hash shuffle,
   *      using a precomputed token v_t with pmod(murmur3(v_t, 42), n) == t
@@ -21,7 +24,8 @@ import scala.reflect.ClassTag
   *
   * The output keeps true range clustering (partition i holds a
   * contiguous (salt, doc_id) key interval, intervals ordered by i) at
-  * the cost of one narrow pass — instead of a full double execution.
+  * the cost of no pass (n ≤ S) or one narrow pass (n > S) — instead of
+  * a full double execution.
   * This mirrors how table formats sketch write distributions at scale.
   */
 object RangeRouter {
@@ -109,6 +113,18 @@ object RangeRouter {
       // sample × partition-count product passes 2^31
       sorted(math.min(sorted.length - 1L, i.toLong * sorted.length / n).toInt)
     }.distinct.toArray
+  }
+
+  /** n-1 ascending boundaries on salt edges, for n ≤ `saltBuckets`:
+    * boundary i is (ceil(i·S/n), ""), so partition t owns the salts
+    * [ceil(t·S/n), ceil((t+1)·S/n)), at least one each. The salt is a
+    * uniform hash of the id, so these are the count quantiles of any
+    * input without reading it (equal-probability strata need no sample
+    * to place their edges).
+    */
+  def saltBounds(n: Int, saltBuckets: Int): Array[Key] = {
+    require(n >= 1 && n <= saltBuckets, s"salt edges need 1 <= n <= $saltBuckets, got $n")
+    Array.tabulate(n - 1)(j => (((j + 1).toLong * saltBuckets + n - 1) / n, ""))
   }
 
   /** Range bucket: number of boundaries <= key (binary search). */

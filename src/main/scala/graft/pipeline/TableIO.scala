@@ -239,7 +239,7 @@ object TableIO {
   private final case class BucketWriters(dir: String, writeId: String, schema: StructType,
       conf: org.apache.spark.util.SerializableConfiguration, files: OutputWriterFactory)
       extends DataWriterFactory {
-    def createWriter(partition: Int, taskId: Long): DataWriter[InternalRow] =
+    override def createWriter(partition: Int, taskId: Long): DataWriter[InternalRow] =
       new DataWriter[InternalRow] {
         private val Seq(bucketAt, spansAt, bytesAt, sumAt, idAt) =
           Seq("bucket", "span_count", "bytes", "checksum", "doc_id").map(schema.fieldIndex)
@@ -295,14 +295,14 @@ object TableIO {
     private var written = Seq.empty[BucketStats]
     def append(rows: DataFrame): Seq[BucketStats] = { ColumnBridge.append(this, rows); written }
     def name: String = dir
-    def capabilities = java.util.EnumSet.of(TableCapability.BATCH_WRITE)
-    def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = this
+    override def capabilities = java.util.EnumSet.of(TableCapability.BATCH_WRITE)
+    override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = this
     override def build: Write = this
     override def toBatch: BatchWrite = this
-    def requiredDistribution = Distributions.clustered(Array(Expressions.column("bucket")))
-    def requiredOrdering = Array(Expressions.sort(Expressions.column("bucket"), SortDirection.ASCENDING))
+    override def requiredDistribution = Distributions.clustered(Array(Expressions.column("bucket")))
+    override def requiredOrdering = Array(Expressions.sort(Expressions.column("bucket"), SortDirection.ASCENDING))
 
-    def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
       val format = new ParquetFileFormat
       val job = org.apache.hadoop.mapreduce.Job.getInstance(
         format.getHadoopConf(spark, NioLocalFileSystem.WriterOptions))

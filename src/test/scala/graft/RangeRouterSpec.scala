@@ -3,6 +3,8 @@ package graft
 import graft.corpus.CorpusDerive
 import graft.pipeline.{Extraction, RangeRouter}
 import graft.schema.Doc
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Encoder
 import org.scalatest.funsuite.AnyFunSuite
 import scala.reflect.ClassTag
@@ -30,24 +32,76 @@ class RangeRouterSpec extends AnyFunSuite {
       assert(RangeRouter.bucket(bounds, k) == linear(k), s"key $k")
   }
 
+  /** Spark jobs this thread starts while `body` runs: a job listener (as
+    * in [[CommitProbe.counted]]) that counts only the jobs of a fresh job
+    * group, so no other thread's job is counted.
+    */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"range-router-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "RangeRouterSpec")
+    try {
+      body
+      ListenerBusDrain(sc)
+      jobs.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("pipeline: building the Dataset runs no job at n <= saltBuckets, the sample job above") {
+    val docs = CorpusDerive.derive(spark, "/root/testdata/sf0.001")
+    assert(jobsOf(Extraction.pipeline(docs, shufflePartitions = 8)) == 0)
+    assert(jobsOf(Extraction.pipeline(docs, shufflePartitions = 96)) >= 1)
+  }
+
   test("pipeline: partitions hold disjoint, ordered key intervals") {
     import spark.implicits._
     val docs = CorpusDerive.derive(spark, "/root/testdata/sf0.001")
-    val out = Extraction.pipeline(docs, shufflePartitions = 8)
-    val intervals = out.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val keys = it.map(d => RangeRouter.key(d.doc_id, 64)).toArray
-      if (keys.isEmpty) Iterator.empty
-      else Iterator.single((pid, keys.min, keys.max))
-    }.collect().sortBy(_._1)
-    assert(intervals.nonEmpty)
-    // consecutive non-empty partitions: max(i) < min(i+1) in key order
-    val ord = Ordering.Tuple2(Ordering.Long, Ordering.String)
-    intervals.sliding(2).foreach {
-      case Array((p1, _, max1), (p2, min2, _)) =>
-        assert(ord.lt(max1, min2), s"overlap between partitions $p1 and $p2")
-      case _ =>
+    // salt-edge bounds (8 <= 64) and sampled bounds (96 > 64)
+    for (n <- Seq(8, 96)) {
+      val out = Extraction.pipeline(docs, shufflePartitions = n)
+      val intervals = out.mapPartitions { it =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        val keys = it.map(d => RangeRouter.key(d.doc_id, 64)).toArray
+        if (keys.isEmpty) Iterator.empty
+        else Iterator.single((pid, keys.min, keys.max))
+      }.collect().sortBy(_._1)
+      assert(intervals.nonEmpty)
+      // consecutive non-empty partitions: max(i) < min(i+1) in key order
+      val ord = Ordering.Tuple2(Ordering.Long, Ordering.String)
+      intervals.sliding(2).foreach {
+        case Array((p1, _, max1), (p2, min2, _)) =>
+          assert(ord.lt(max1, min2), s"n=$n: overlap between partitions $p1 and $p2")
+        case _ =>
+      }
     }
+  }
+
+  test("saltBounds: salt-edge partitions stay within 1.2x the mean on sf0.1's ids") {
+    // sf0.1's documents.parquet holds doc_id 0..4999
+    val keys = (0L until 5000L).map(i => RangeRouter.key(CorpusDerive.docIdStr(i), 64))
+    for (n <- Seq(4, 7, 8)) {
+      val bounds = RangeRouter.saltBounds(n, 64)
+      assert(bounds.length == n - 1)
+      // strictly increasing salts in [1, 63]: every partition owns >= 1 salt
+      assert(bounds.map(_._1).toSeq == bounds.map(_._1).distinct.sorted.toSeq)
+      assert(bounds.forall(b => b._1 >= 1 && b._1 <= 63 && b._2.isEmpty))
+      val sizes = keys.groupBy(k => RangeRouter.bucket(bounds, k)).values.map(_.length)
+      val mean = keys.length.toDouble / n
+      assert(sizes.size == n && sizes.max <= 1.2 * mean, s"n=$n: max ${sizes.max} vs mean $mean")
+    }
+    assert(RangeRouter.saltBounds(1, 64).isEmpty)
+    assert(RangeRouter.saltBounds(64, 64).map(_._1).toSeq == (1L to 63L))
   }
 
   test("sampleKeys: driver collect bounded at any split count; boundaries stay balanced") {
@@ -82,10 +136,13 @@ class RangeRouterSpec extends AnyFunSuite {
   test("pipeline output == plain kernel output (router is placement-only)") {
     import spark.implicits._
     val docs = CorpusDerive.derive(spark, "/root/testdata/sf0.001")
-    val viaPipeline = Extraction.pipeline(docs, shufflePartitions = 8)
-      .collect().map(d => (d.doc_id, d.spans, d.markdown)).toSet
     val viaKernel = Extraction.extractDs(docs)
       .collect().map(d => (d.doc_id, d.spans, d.markdown)).toSet
-    assert(viaPipeline == viaKernel)
+    // salt-edge bounds (8 <= 64) and sampled bounds (96 > 64)
+    for (n <- Seq(8, 96)) {
+      val viaPipeline = Extraction.pipeline(docs, shufflePartitions = n)
+        .collect().map(d => (d.doc_id, d.spans, d.markdown)).toSet
+      assert(viaPipeline == viaKernel, s"n=$n")
+    }
   }
 }
